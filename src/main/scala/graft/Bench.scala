@@ -65,44 +65,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs  = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
-    // The generated-class cache (static conf, default 100 entries) is far
-    // too small for a 195-plan suite visited round-robin: every plan's
-    // WholeStageCodegen classes are LRU-evicted between two visits of the
-    // same query, so EVERY timed sample pays a fresh Janino compile — a
-    // flat per-query floor that grew with the suite (r10 measured it at
-    // ~+0.08 s/query vs the 119-query r8 suite; raising the cache removes
-    // it). A real deployment runs ONE plan repeatedly — the small cache is
-    // a harness artifact, not a production cost.
-    val codegenCache = sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", codegenCache)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // measure alternate chunk-numbering strategies (ChunkIds.ConfKey)
-    // without touching the default: SPARK_GRAFT_CHUNK_NUMBERING=sampled
-    sys.env.get("SPARK_GRAFT_CHUNK_NUMBERING")
-      .foreach(m => spark.conf.set(graft.operators.ChunkIds.ConfKey, m))
-    // A/B the reuse-pin storage (Reuse.ConfKey): SPARK_GRAFT_REUSE=checkpoint
-    sys.env.get("SPARK_GRAFT_REUSE")
-      .foreach(m => spark.conf.set(graft.operators.Reuse.ConfKey, m))
-    // A/B the scan fanout (Graft.FanoutConfKey): SPARK_GRAFT_FANOUT=off
-    sys.env.get("SPARK_GRAFT_FANOUT")
-      .foreach(m => spark.conf.set(graft.core.Graft.FanoutConfKey, m))
-    // generic runtime-conf A/B hook: SPARK_GRAFT_EXTRA_CONF="k=v;k=v"
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(';').foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.nonEmpty => spark.conf.set(k.trim, v.trim)
-        case _ =>
-      }
-    })
+    val spark = graft.core.Graft.session("graft-bench")
+    val cpus  = spark.sparkContext.defaultParallelism
+    val codegenCache = spark.conf.get("spark.sql.codegen.cache.maxEntries")
 
     val meter = new ByteMeter
     spark.sparkContext.addSparkListener(meter)
@@ -134,7 +100,7 @@ object Bench {
           -1.0
         }
       // Release reuse-pin storage deterministically (untimed). Two layers:
-      // CacheManager entries (the Reuse persist pins) must be DROPPED, not
+      // CacheManager entries (persist pins, e.g. VectorIndex) must be DROPPED, not
       // just have their blocks freed — a surviving entry would serve the
       // NEXT timed sample of the same plan from cache and fake its time —
       // and localCheckpoint blocks are freed only after a GC notices dead
@@ -251,9 +217,11 @@ object Bench {
     // stamp the RESOLVED strategy, not the raw conf: 'auto' on local and
     // explicit 'checkpoint' behave identically and must stamp identically
     val chunkMode = graft.operators.ChunkIds.resolvedStrategy(spark)
-    val reuseMode = spark.conf.get(graft.operators.Reuse.ConfKey, "cut")
     val harness =
-      s""""codegen_cache":$codegenCache,"warmup_passes":$warmupPasses,"chunk_numbering":"$chunkMode","reuse":"$reuseMode","cpus":$cpus"""
+      s""""codegen_cache":$codegenCache,"warmup_passes":$warmupPasses,"chunk_numbering":"$chunkMode","cpus":$cpus"""
+    // keyed by (sf, cpus): one full-suite run must not overwrite another
+    // scale's or core count's artifact
+    val lastPath = s"bench_results/bench_last_${java.nio.file.Paths.get(sfDir).getFileName}_c$cpus.json"
     val line =
       s"""{"metric":"total","value":${num(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","runs":$runs,"audit_total_sec":${num(auditTotal)},$harness}"""
     println(line)
@@ -265,7 +233,7 @@ object Bench {
     // tail) pointing at the committed per-query artifact; the full line
     // stays for humans and for captures big enough to hold it.
     val compact =
-      s"""{"metric":"total","value":${num(total)},"unit":"sec","sf":"$sfDir","runs":$runs,"n_queries":${names.size},"audit_total_sec":${num(auditTotal)},"cpus":$cpus,"queries_file":"bench_results/bench_last.json"}"""
+      s"""{"metric":"total","value":${num(total)},"unit":"sec","sf":"$sfDir","runs":$runs,"n_queries":${names.size},"audit_total_sec":${num(auditTotal)},"cpus":$cpus,"queries_file":"$lastPath"}"""
     println(compact)
     // the stdout line rides a log capture that has truncated its tail in
     // past rounds; ALSO write the complete per-query artifact (medians +
@@ -293,12 +261,13 @@ object Bench {
       val artifact =
         s"""{"total_sec":${num(total)},"audit_total_sec":${num(auditTotal)},"sf":"$sfDir","runs":$runs,"n_queries":${names.size},$harness,"queries":$perQuery}""" + "\n"
       java.nio.file.Files.writeString(outPath, artifact)
-      // stable well-known path the compact stdout line points the driver
-      // at — full-suite runs only, so a subset probe can't masquerade as
-      // the suite artifact
-      if (only.isEmpty)
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get("bench_results/bench_last.json"), artifact)
+      // the (sf, cpus) path the compact stdout line points at —
+      // full-suite runs only, so a subset probe can't masquerade as the
+      // suite artifact
+      if (only.isEmpty) {
+        java.nio.file.Files.createDirectories(java.nio.file.Paths.get("bench_results"))
+        java.nio.file.Files.writeString(java.nio.file.Paths.get(lastPath), artifact)
+      }
     }
     spark.stop()
   }

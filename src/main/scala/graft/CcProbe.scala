@@ -1,24 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch probe: round count + per-phase wall of the connected-components
   * queries (builder tool, not part of the driver contract).
   */
 object CcProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Graft.session("graft-cc-probe")
     import org.apache.spark.sql.functions._
 
     // embed side

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
@@ -46,19 +45,7 @@ object OptProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    sys.env.get("SPARK_GRAFT_FANOUT")
-      .foreach(m => spark.conf.set(graft.core.Graft.FanoutConfKey, m))
+    val spark = graft.core.Graft.session("graft-opt-probe")
     val meter = new StageMeter
     spark.sparkContext.addSparkListener(meter)
     // The noop save runs its OWN QueryExecution (a write command wrapping

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic 10× inflation of a testdata scale factor for the scale
@@ -49,14 +49,7 @@ object ScaleGen {
     val src      = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out      = if (args.length > 1) args(1) else "/root/repo/testdata_sf1"
     val replicas = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPLICAS", "10").toInt
-    val cpus     = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark    = graft.core.Graft.session("graft-scale-gen")
 
     val B = 1000000000L // bigint key stride per replica
     val R = broadcast(spark.range(replicas).select(col("id").cast("int").as("r")))

@@ -42,7 +42,8 @@ object Service {
   def defaultServiceId: String =
     s"${java.net.InetAddress.getLocalHost.getHostName}:${ProcessHandle.current().pid()}"
 
-  /** Cluster-hygiene session defaults, applied by [[main]]'s builder and
+  /** Cluster-hygiene session defaults, applied by the one session builder
+    * ([[graft.core.Graft.session]], behind [[main]] and every tool) and
     * skipped per-key when the deployment already sets the key
     * (`--conf` / system property — spark-submit confs land in system
     * properties before the builder runs, so a present property means an
@@ -60,17 +61,21 @@ object Service {
     *    blast radius if a caller composes around them. Static SQL conf —
     *    must ride the context-creating builder, which is why it lives
     *    here and not in a post-hoc `spark.conf.set`.
-    *  - `spark.sql.codegen.cache.maxEntries=2000`: the per-trigger
+    *  - `spark.sql.codegen.cache.maxEntries=5000`: the per-trigger
     *    working set of a multi-schema streaming job exceeds the default
     *    100-entry compiled-class LRU, so every trigger re-Janino-compiles
     *    most of its stages — measured 65 compiles/trigger (≈30% of the
     *    per-trigger fixed cost) at default vs 2 once sized (round 12,
-    *    CodegenMetrics). Static SQL conf, builder-only, ~KBs per entry.
+    *    CodegenMetrics). 5000 also holds the whole 197-plan query suite,
+    *    which Bench visits round-robin: at 100 entries every plan's
+    *    classes are evicted between two visits and EVERY timed sample
+    *    pays a fresh compile (~+0.08 s/query, round 10). Static SQL conf,
+    *    builder-only, ~KBs per entry.
     */
   val clusterHygiene: Seq[(String, String)] = Seq(
     "spark.cleaner.referenceTracking.cleanCheckpoints" -> "true",
     "spark.sql.maxPlanStringLength" -> (8 * 1024 * 1024).toString,
-    "spark.sql.codegen.cache.maxEntries" -> "2000")
+    "spark.sql.codegen.cache.maxEntries" -> "5000")
 
   /** Applies [[clusterHygiene]] to a session builder, key-by-key
     * overridable via system property (see [[clusterHygiene]] doc).
@@ -229,15 +234,7 @@ object Service {
       case Right(cfg) if cfg.printVersion =>
         println("graft-service 0.1")
       case Right(cfg) =>
-        val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-        val spark = withClusterHygiene(SparkSession.builder()
-          .master(s"local[$cpus]")
-          .appName(s"graft-service ${cfg.serviceName}")
-          .config("spark.sql.shuffle.partitions", cpus)
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.ui.enabled", "false"))
-          .getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
+        val spark = graft.core.Graft.session(s"graft-service ${cfg.serviceName}")
         run(spark, cfg, transportFactory(cfg))
     }
 }

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Deterministic hot-key corpus for the skew rehearsal (SCALE.md): remaps a
@@ -21,15 +20,7 @@ object SkewGen {
     val src    = args.headOption.getOrElse("/root/repo/testdata_sf1")
     val out    = if (args.length > 1) args(1) else "/root/repo/testdata_skew"
     val hotPct = sys.env.getOrElse("SPARK_GRAFT_SKEW_PCT", "10").toInt
-    val cpus   = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark  = graft.core.Graft.session("graft-skew-gen")
 
     spark.read.parquet(s"$src/events.parquet")
       .withColumn("user_id",

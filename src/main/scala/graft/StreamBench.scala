@@ -73,29 +73,14 @@ object StreamBench {
     }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val batches = sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCHES", "10").toInt
     // derive every count from the GENERATED total (truncating division)
     val msgsPerBatch = sys.env.getOrElse("SPARK_GRAFT_STREAM_MSGS", "100000").toInt / batches
     val msgs = msgsPerBatch * batches
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // static conf, default 100: the per-trigger working set of a
-      // multi-schema streaming job exceeds it and the LRU thrashes —
-      // measured 65 Janino compiles/trigger at default vs 0 once sized
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // A/B legs flip the bounded-collect append bypass through
+    // SPARK_GRAFT_EXTRA_CONF=spark.graft.stream.localAppend.maxRows=-1
+    val spark = graft.core.Graft.session("graft-stream-bench")
     import spark.implicits._
-
-    // bench-only override: lets interleaved A/B legs flip the
-    // bounded-collect append bypass without code swaps (-1 disables;
-    // never set by the driver)
-    sys.env.get("SPARK_GRAFT_LOCALAPPEND_MAXROWS").foreach(v =>
-      spark.conf.set("spark.graft.stream.localAppend.maxRows", v))
 
     // SPARK_GRAFT_STREAM_ONLY=scalar|wire|wide|decode|stateful narrows to
     // one bench for profiling runs (never set by the driver)

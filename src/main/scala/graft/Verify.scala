@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,19 +9,10 @@ object Verify {
     // iteration on one query (the driver always calls with two args).
     val only: String => Boolean =
       if (args.length > 2) args(2).split(",").toSet else (_ => true)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // builder-side alternate-strategy gate runs (never set by the driver):
-    // SPARK_GRAFT_CHUNK_NUMBERING=sampled re-runs the chunk+stitch
-    // queries under the sampled numbering for an oracle-exact check
-    sys.env.get("SPARK_GRAFT_CHUNK_NUMBERING")
-      .foreach(m => spark.conf.set(graft.operators.ChunkIds.ConfKey, m))
+    // alternate-strategy gate runs go through SPARK_GRAFT_EXTRA_CONF, e.g.
+    // spark.graft.chunkNumbering=sampled re-runs the chunk+stitch queries
+    // under the sampled numbering for an oracle-exact check
+    val spark = graft.core.Graft.session("graft-verify")
     new java.io.File(outDir).mkdirs()
     // Schema-drift canary: print each driver table's physical schema up
     // front and fail fast (readable observed-vs-expected message) if the

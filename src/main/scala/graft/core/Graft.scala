@@ -10,14 +10,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Graft {
 
-  /** Build a local session tuned for the test harness (local[N], AQE on,
+  /** The one session builder behind every graft `main`: `local[N]` with
+    * N = `SPARK_GRAFT_CPUS` (default: the JVM's available processors),
     * shuffle partitions sized to cores — NOT the 200 default, which at
-    * local scale just multiplies task overhead; on a real cluster this
-    * is set per deployment).
+    * local scale just multiplies task overhead; on a real cluster this is
+    * set per deployment — AQE on, UTC, the cluster hygiene of
+    * [[graft.Service.withClusterHygiene]], and finally the entries of
+    * `SPARK_GRAFT_EXTRA_CONF` (`k=v;k=v`, see [[parseExtraConf]]), the
+    * one A/B hook for every main. The extra confs ride the builder, so
+    * static confs (the codegen cache) are overridable there too.
     */
-  def session(appName: String = "graft", cpus: String = "32"): SparkSession = {
-    val spark = SparkSession
-      .builder()
+  def session(appName: String = "graft"): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    val extra = parseExtraConf(sys.env.getOrElse("SPARK_GRAFT_EXTRA_CONF", ""))
+    val builder = graft.Service.withClusterHygiene(SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cpus)
@@ -28,11 +35,27 @@ object Graft {
       // (/root/reference/src/Stream/SourceFilter.cpp:68-71)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+      .config("spark.ui.enabled", "false"))
+    val spark = extra.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** Parses `SPARK_GRAFT_EXTRA_CONF` (`k=v;k=v`). Blank entries (a
+    * trailing `;`) are skipped; an entry without `=` or with an empty key
+    * or value throws, naming the entry — a typo such as
+    * `spark.graft.chunkNumbering:sampled` must not silently run (and be
+    * measured as) the default arm.
+    */
+  def parseExtraConf(raw: String): Seq[(String, String)] =
+    raw.split(';').toSeq.map(_.trim).filter(_.nonEmpty).map { kv =>
+      kv.split("=", 2).map(_.trim) match {
+        case Array(k, v) if k.nonEmpty && v.nonEmpty => k -> v
+        case _ => throw new IllegalArgumentException(
+          s"SPARK_GRAFT_EXTRA_CONF: malformed entry '$kv' (expected key=value)")
+      }
+    }
 
   /** Read one of the driver-provided parquet tables. Defensively sets the
     * nanos-as-long flag so this also works on sessions the harness created
@@ -47,17 +70,12 @@ object Graft {
     * fanout pays is a property of the OPERATOR, not of the table or its
     * size, so the map-heavy call sites opt in explicitly via
     * [[fannedTable]] / [[documentsFanned]] / [[embeddingsFanned]] /
-    * [[eventsFanned]] and everything else reads plain.
-    * `spark.graft.scan.fanout=all` restores the r14 fan-everything policy
-    * for A/B probes.
+    * [[eventsFanned]] and everything else reads plain. The same-window
+    * three-arm A/B on all 197 queries (32 cores, sf0.1) measured this
+    * opt-in policy at 86.8 s against 98.6 s fanning every read and
+    * 101.0 s fanning none (`bench_results/bench_opt_r15_*.json`).
     */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = rawTable(spark, dir, name)
-    if (fanoutMode(spark) == "all") scanFanout(spark, df, s"$dir/$name.parquet")
-    else df
-  }
-
-  private def rawTable(spark: SparkSession, dir: String, name: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.read.parquet(s"$dir/$name.parquet")
   }
@@ -76,37 +94,23 @@ object Graft {
     * should read through this (see [[table]]).
     */
   def fannedTable(spark: SparkSession, dir: String, name: String): DataFrame =
-    scanFanout(spark, rawTable(spark, dir, name), s"$dir/$name.parquet")
+    scanFanout(spark, table(spark, dir, name), s"$dir/$name.parquet")
 
-  /** Fanout policy conf: `auto` (default — fan out at the opt-in call
-    * sites) | `off` (never fan) | `all` (fan EVERY table read — the r14
-    * policy, kept for A/B probes) | a positive integer (explicit fanout
-    * width at the opt-in sites, for width sweeps). Any other value is
-    * reported once and treated as `auto`.
+  /** Minimum compressed input bytes funding one fanned-out task: parquet
+    * decompresses ~4×, so a task gets ≥ ~64 KiB of rows to chew on; below
+    * that the per-task overhead outweighs the parallelism.
     */
-  val FanoutConfKey = "spark.graft.scan.fanout"
+  private val FanoutMinBytesPerTask = 16384L
 
-  private val badModeWarned = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  private def fanoutMode(spark: SparkSession): String = {
-    val raw = spark.conf.get(FanoutConfKey, "auto")
-    raw match {
-      case "auto" | "off" | "all" => raw
-      case n if n.nonEmpty && n.forall(_.isDigit) => raw
-      case other =>
-        if (badModeWarned.add(other))
-          System.err.println(
-            s"[graft] $FanoutConfKey='$other' is not auto|off|all|<width>; treating as auto")
-        "auto"
-    }
-  }
-
-  /** Minimum compressed input bytes funding one fanned-out task (conf:
-    * `spark.graft.scan.fanout.minBytesPerTask`, default 16 KiB — parquet
-    * decompresses ~4×, so a task gets ≥ ~64 KiB of rows to chew on;
-    * below that the per-task overhead outweighs the parallelism).
+  /** Fanout width cap = cores / this, NOT all cores: contract queries
+    * hang several independent branches off one table and AQE runs those
+    * query stages CONCURRENTLY, so a per-stage width of cores/4 already
+    * saturates the machine while full-width stages oversubscribe it —
+    * measured on a 14-query subset (min-of-5 each, same window): width
+    * 8 = 18.5 s, 16 = 19.4 s, 32 = 22.6 s, no fanout = 24.3 s on 32
+    * cores.
     */
-  val FanoutMinBytesKey = "spark.graft.scan.fanout.minBytesPerTask"
+  private val FanoutDivisor = 4
 
   // per-path listing cache: the suite re-reads each table thousands of
   // times and HDFS-API listing, while cheap locally, is a remote call on
@@ -126,8 +130,6 @@ object Graft {
     * after-files: PushedFilters unchanged vs the un-fanned plans).
     */
   private def scanFanout(spark: SparkSession, df: DataFrame, path: String): DataFrame = {
-    val mode = fanoutMode(spark)
-    if (mode == "off") return df
     val bytes = sizeCache.computeIfAbsent(path, p => {
       val hp = new org.apache.hadoop.fs.Path(p)
       val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -142,23 +144,10 @@ object Graft {
     // row groups may make even this an over-estimate, never an under-)
     val plannedScanTasks = math.max(1L, (bytes + maxPartitionBytes - 1) / maxPartitionBytes)
     if (plannedScanTasks >= cores) return df // cluster regime: scan already parallel
-    val minBytesPerTask = spark.conf.get(FanoutMinBytesKey, "16384").toLong
-    // auto cap = cores / divisor (default 4), NOT all cores: contract
-    // queries hang several independent branches off one table and AQE
-    // runs those query stages CONCURRENTLY, so a per-stage width of
-    // cores/4 already saturates the machine while full-width stages
-    // oversubscribe it — measured on a 14-query subset (min-of-5 each,
-    // same window): width 8 = 18.5 s, 16 = 19.4 s, 32 = 22.6 s,
-    // no fanout = 24.3 s on 32 cores.
-    val divisor = spark.conf.get(FanoutDivisorKey, "4").toInt
-    val cap = if (mode == "auto" || mode == "all") math.max(2L, (cores / divisor).toLong)
-              else mode.toLong // explicit width for A/B probes
-    val target = math.min(cap, bytes / math.max(1L, minBytesPerTask)).toInt
+    val cap = math.max(2L, (cores / FanoutDivisor).toLong)
+    val target = math.min(cap, bytes / FanoutMinBytesPerTask).toInt
     if (target <= plannedScanTasks) df else df.repartition(target)
   }
-
-  /** Fanout width divisor for `auto` (conf, default 4): cap = cores/divisor. */
-  val FanoutDivisorKey = "spark.graft.scan.fanout.divisor"
 
   /** The events table with `ts` normalized to the engine's i64 ns-since-epoch
     * contract (the reference's timestamp model,

@@ -8,17 +8,14 @@ import org.apache.spark.storage.StorageLevel
   * Many operators materialize an intermediate frame once because several
   * plan branches consume it (a shingle frame feeding a signature pass and
   * two verify joins; a per-key aggregate feeding both a max and the
-  * equality join back). Every such pin routes through here, classified
-  * [[corpus]] (corpus-sized) or [[slim]] (key-domain-bounded) at the call
-  * site, so the pin policy is ONE decision instead of thirty.
+  * equality join back). Every such pin is a [[lineageCut]]: eager
+  * `localCheckpoint` on a local master, upgraded automatically to a
+  * RELIABLE `checkpoint()` when the session has a checkpoint dir
+  * (`sc.setCheckpointDir`) — the cluster deployment shape, where the cut
+  * blocks are replicated files and an executor loss costs nothing.
   *
-  * The default pin is a lineage cut: eager `localCheckpoint` on a local
-  * master, upgraded automatically to a RELIABLE `checkpoint()` when the
-  * session has a checkpoint dir (`sc.setCheckpointDir`) — the cluster
-  * deployment shape, where the cut blocks are replicated files and an
-  * executor loss costs nothing. The obvious-seeming alternative — a
-  * recomputable `persist(DISK_ONLY)` — was built and MEASURED in round
-  * 11, and it loses, for a mechanism worth recording:
+  * There is deliberately no recomputable `persist` arm. It was built and
+  * MEASURED in round 11, and it loses, for a mechanism worth recording:
   *
   *  - AQE's exchange/stage reuse does not cross cached-table scans. The
   *    LSH families hang a band self-join over one exchange; over a
@@ -36,48 +33,17 @@ import org.apache.spark.storage.StorageLevel
   *    reports its child's size ESTIMATE, so downstream joins planned
   *    against the pin flip broadcast → sort-merge.
   *
-  * `spark.graft.reuseStorage` = `disk` | `memory` selects the
-  * recomputable persist anyway (eagerly materialized, for the stats
-  * reason above) for deployments whose operators don't lean on exchange
-  * reuse and that prefer recompute-on-loss over replicated checkpoints;
-  * `cut` (default) is the measured choice.
-  *
-  * [[lineageCut]] is the pin for sites where severed lineage is
-  * SEMANTICALLY required, not just faster: iterative algorithms
-  * (connected components, BPE merge rounds) must truncate a growing
-  * lineage or round N re-evaluates rounds 0..N-1; read-your-own-writes
-  * barriers (incremental dedup's index append) must pin the result
-  * because a recompute after the write would observe the write; and
-  * composed pipelines (TrainingDataPipeline) must cut at stage
+  * Some sites need severed lineage SEMANTICALLY, not just for speed:
+  * iterative algorithms (connected components, BPE merge rounds) must
+  * truncate a growing lineage or round N re-evaluates rounds 0..N-1;
+  * read-your-own-writes barriers (incremental dedup's index append) must
+  * pin the result because a recompute after the write would observe the
+  * write; and composed pipelines (TrainingDataPipeline) must cut at stage
   * boundaries or diamond references multiply plan subtrees
   * combinatorially (measured: 37 min of driver CPU in
   * `TreeNode.generateTreeString` on the uncut six-stage plan).
   */
 object Reuse {
-
-  /** Session conf: pin mode. `cut` (default) | `disk` | `memory`. */
-  val ConfKey = "spark.graft.reuseStorage"
-
-  /** Pin a corpus-sized frame for multiple consumers (see object doc). */
-  def corpus(df: DataFrame): DataFrame =
-    df.sparkSession.conf.get(ConfKey, "cut") match {
-      case "memory" => eager(df.persist(StorageLevel.MEMORY_AND_DISK))
-      case "disk"   => eager(df.persist(StorageLevel.DISK_ONLY))
-      case _        => lineageCut(df, eager = true)
-    }
-
-  /** Pin a key-domain-bounded (slim) frame for multiple consumers. */
-  def slim(df: DataFrame): DataFrame =
-    df.sparkSession.conf.get(ConfKey, "cut") match {
-      case "memory" | "disk" => eager(df.persist(StorageLevel.MEMORY_AND_DISK))
-      case _                 => lineageCut(df, eager = true)
-    }
-
-  /** Eager materialization of a persist pin: a lazy InMemoryRelation
-    * reports its child's size estimate until blocks exist, flipping
-    * downstream broadcasts to sort-merge (see object doc).
-    */
-  private def eager(df: DataFrame): DataFrame = { df.count(); df }
 
   /** Severed-lineage pin: reliable `checkpoint` when the session has a
     * checkpoint dir (cluster deployment — replicated, block-loss

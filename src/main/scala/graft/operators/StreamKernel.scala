@@ -70,15 +70,14 @@ object StreamKernel {
       // Here only (source, offset, ts) ride the window (~24 B/row); the
       // drop set (consecutive repeats — rare by construction) anti-joins
       // back keyed on (source, offset), which hash-distributes the payload
-      // EVENLY instead of funneling it, and under AQE the near-empty drop
-      // side broadcasts at runtime — pair the opt-in with
-      // spark.graft.stream.aqe=keep, or the streaming batch window's
-      // AQE-off default leaves the anti-join a sort-merge. NOT the
-      // default: below that ceiling the funnel WINS — measured
-      // interleaved 1.2-1.4× at 160 MB/trigger (the anti-join
-      // sort-merges the payload, costing more than the one-task sort it
-      // avoids; bench_results/stream_ab_r12b.json) — so callers opt in
-      // per deployment (spark.graft.stream.dedup=slim). Kept-row
+      // EVENLY instead of funneling it (inside the streaming batch
+      // window AQE is off, so the anti-join is a sort-merge). Below that
+      // ceiling the funnel WINS — measured interleaved 1.2-1.4× at
+      // 160 MB/trigger (the anti-join sort-merges the payload, costing
+      // more than the one-task sort it avoids;
+      // bench_results/stream_ab_r12b.json) — so StreamingJob picks this
+      // form per trigger only once the previous trigger's payload
+      // estimate passes spark.graft.stream.dedup.slimBytes. Kept-row
       // semantics are IDENTICAL to the default form including the
       // null-ts corner (drop ⇔ prev non-null ∧ (ts null ∨ prev = ts) —
       // the exact complement of the keep predicate) and the

@@ -80,7 +80,7 @@ object TrainingDataPipeline {
 
     // 3 — near-dedup: verified pair frame ONCE, persisted, then the
     // lower-quality member of every pair dropped
-    val pairs = Reuse.corpus(DocQueries.minhashLshPairs(exact))
+    val pairs = Reuse.lineageCut(DocQueries.minhashLshPairs(exact))
     val q = exact
       .select(col("doc_id"), graft.functions.TextFunctions.tokens(col("text")).as("tk"))
       .select(col("doc_id"),

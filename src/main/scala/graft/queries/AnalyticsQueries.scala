@@ -747,7 +747,7 @@ object AnalyticsQueries {
         .groupBy("l_suppkey")
         .agg(sum(cents(col("l_extendedprice")) * (lit(100) - cents(col("l_discount"))))
           .as("rev_c"))
-        .transform(Reuse.slim)
+        .transform(Reuse.lineageCut(_))
       val top = rev.agg(max("rev_c").as("max_c"))
       rev.join(broadcast(top), col("rev_c") === col("max_c"))
         .join(broadcast(Graft.supplier(s, dir)), col("l_suppkey") === col("s_suppkey"))
@@ -822,7 +822,7 @@ object AnalyticsQueries {
         .join(broadcast(euroSupp.select("s_suppkey")), col("l_suppkey") === col("s_suppkey"))
         .groupBy(col("l_partkey"), col("l_suppkey"))
         .agg(min(unitC).as("unit_c"))
-        .transform(Reuse.slim)
+        .transform(Reuse.lineageCut(_))
       val best = cost.groupBy(col("l_partkey").as("bp_key")).agg(min("unit_c").as("best_c"))
       cost.join(best, col("l_partkey") === col("bp_key") && col("unit_c") === col("best_c"))
         .join(broadcast(Graft.part(s, dir).filter(col("p_size") === 15)),
@@ -870,7 +870,7 @@ object AnalyticsQueries {
         .join(broadcast(natSupp), col("l_suppkey") === col("s_suppkey"), "left_semi")
         .groupBy(col("l_partkey").as("ps_partkey"))
         .agg(sum(cents(col("l_extendedprice"))).as("val_c"))
-        .transform(Reuse.slim)
+        .transform(Reuse.lineageCut(_))
       val total = value.agg(sum("val_c").as("total_c"))
       value.crossJoin(broadcast(total))
         .filter(col("val_c") * 1000 > col("total_c"))
@@ -940,7 +940,7 @@ object AnalyticsQueries {
           col("l_orderkey") === col("o_orderkey"))
         .select(col("l_orderkey"), col("l_suppkey"),
           (col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 365 DAYS")).as("late"))
-        .transform(Reuse.corpus)
+        .transform(Reuse.lineageCut(_))
       val perOrder = li.groupBy(col("l_orderkey").as("po_key"))
         .agg(countDistinct("l_suppkey").as("n_supp"),
           countDistinct(when(col("late"), col("l_suppkey"))).as("n_late"))

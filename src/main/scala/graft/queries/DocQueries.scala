@@ -134,7 +134,7 @@ object DocQueries {
         .select(col("doc_id"),
           transform(sequence(lit(1), size(col("tk")) - (n - 1)),
             i => concat_ws(" ", slice(col("tk"), i, lit(n)))).as("gs"))
-        .transform(Reuse.corpus)
+        .transform(Reuse.lineageCut(_))
       val grams = garr.select(col("doc_id"), explode(col("gs")).as("g"))
       val gdf = grams.distinct().groupBy("g").agg(count(lit(1)).as("gdf"))
       grams.join(gdf, "g")
@@ -414,7 +414,7 @@ object DocQueries {
       val ths = Seq(0.1, 0.3, 0.5, 0.7, 0.9)
       val thArr = array(ths.map(lit): _*)
       val pairs = minhashLshPairs(docsFanned(s, dir), minJac = 0.0)
-        .transform(Reuse.corpus) // feeds the pair count AND the flagged-doc count
+        .transform(Reuse.lineageCut(_)) // feeds the pair count AND the flagged-doc count
       val byT = pairs
         .select(col("doc_a"), col("doc_b"), explode(thArr).as("threshold"),
           col("jac"))
@@ -514,7 +514,7 @@ object DocQueries {
     "dedup_minhash_estimate" -> { (s, dir) =>
       // the signature frame feeds band build + both estimate joins;
       // materialize the (tokenize → shingle → minhash) pipeline once
-      val sig = Reuse.corpus(minhashSigs(shingled(docsFanned(s, dir))))
+      val sig = Reuse.lineageCut(minhashSigs(shingled(docsFanned(s, dir))))
       val cand = minhashBandCands(sig, graft.operators.LshJoins.DefaultMaxBucket,
         "minhash_est_cap")
       minhashEstimateFromSigs(sig, cand)
@@ -562,9 +562,9 @@ object DocQueries {
     // both scorers here — half the corpus scans of composing the two
     // standalone queries.
     "dedup_estimate_vs_exact" -> { (s, dir) =>
-      val sh   = Reuse.corpus(shingled(docsFanned(s, dir)))
-      val sig  = Reuse.corpus(minhashSigs(sh))
-      val cand = Reuse.corpus(minhashBandCands(sig, graft.operators.LshJoins.DefaultMaxBucket,
+      val sh   = Reuse.lineageCut(shingled(docsFanned(s, dir)))
+      val sig  = Reuse.lineageCut(minhashSigs(sh))
+      val cand = Reuse.lineageCut(minhashBandCands(sig, graft.operators.LshJoins.DefaultMaxBucket,
         "est_vs_exact_cap"))
       val exact = minhashLshPairsFromShingles(sh, cand, 0.4).select("doc_a", "doc_b")
       val est   = minhashEstimateFromSigs(sig, cand).select("doc_a", "doc_b")
@@ -1160,10 +1160,10 @@ object DocQueries {
       // feeds BOTH the band join and the per-doc set aggregation —
       // pin the slim (doc_id, fp) frame (Reuse) so it runs once
       val fps = winnowFingerprints(docsFanned(s, dir)).select("doc_id", "fp")
-        .distinct().transform(Reuse.corpus)
+        .distinct().transform(Reuse.lineageCut(_))
       val sets = fps.groupBy("doc_id")
         .agg(sort_array(collect_list(col("fp"))).as("fset"))
-        .transform(Reuse.corpus) // feeds both re-attach joins
+        .transform(Reuse.lineageCut(_)) // feeds both re-attach joins
       val cand = graft.operators.LshJoins
         .cappedBandPairs(fps, Seq("fp"), "doc_id", "doc_a", "doc_b", tag = "winnow_cap")
         .select("doc_a", "doc_b")
@@ -1346,7 +1346,7 @@ object DocQueries {
         .filter(size(col("tk")) >= 2)
         .select(explode(transform(sequence(lit(1), size(col("tk")) - lit(1)),
           i => concat_ws(" ", slice(col("tk"), i, lit(2))))).as("g2"))
-        .transform(Reuse.corpus) // three consumers: N, sketch, exact counts
+        .transform(Reuse.lineageCut(_)) // three consumers: N, sketch, exact counts
       val eps   = 0.0002
       val total = grams.count()
       // 1-row fixed-size binary — the bloom-sketch collect pattern
@@ -1465,7 +1465,7 @@ object DocQueries {
     "bpe_encode_stats" -> { (s, dir) =>
       import graft.operators.BpeVocab
       val d  = docs(s, dir)
-      val wf = Reuse.slim(BpeVocab.wordFrequencies(d))
+      val wf = Reuse.lineageCut(BpeVocab.wordFrequencies(d))
       val ranks = BpeVocab.learn(wf, BpeMerges)
         .map(m => (m.left, m.right) -> m.rank).toMap
       val nSyms = udf((w: String) => BpeVocab.encodeWord(ranks, w).size.toLong)
@@ -1750,7 +1750,7 @@ object DocQueries {
         .select(col("doc_id"),
           array_distinct(transform(sequence(lit(1), size(col("tk")) - (n - 1)),
             i => concat_ws(" ", slice(col("tk"), i, lit(n))))).as("gs"))
-        .transform(Reuse.corpus)
+        .transform(Reuse.lineageCut(_))
       val grams  = garr.select(col("doc_id"), explode(col("gs")).as("g"))
       val firsts = grams.groupBy("g").agg(min("doc_id").as("first_doc"))
       grams.join(firsts, "g")
@@ -1822,7 +1822,7 @@ object DocQueries {
   def dsirWeights(d: DataFrame): DataFrame = {
     // the count frame feeds the bucket-model agg AND the scoring join;
     // materialize once (same pattern as containmentPairs)
-    val perDoc = Reuse.corpus(dsirBucketCounts(d))
+    val perDoc = Reuse.lineageCut(dsirBucketCounts(d))
     val isTgt  = col("source") === DsirTarget
     val bucket = perDoc.groupBy("b").agg(
       sum(when(isTgt, col("c")).otherwise(0L)).as("tc"),
@@ -1953,7 +1953,7 @@ object DocQueries {
       .filter(size(col("tk")) >= 5)
       .select(col("source"), explode(shingles(col("tk"), 5)).as("g"))
       .distinct()
-      .transform(Reuse.corpus)
+      .transform(Reuse.lineageCut(_))
     val sk = grams.groupBy("source")
       .agg(hll_sketch_agg(col("g"), 14).as("sk"), count(lit(1)).as("n"))
     val est = sk.select(col("source").as("src_a"), col("sk").as("ska"), col("n").as("n_a"))
@@ -2078,7 +2078,7 @@ object DocQueries {
     // sides, two verify joins); materialize it once (Reuse pin) — unpinned, each
     // branch re-runs tokenize+shingle+distinct over the corpus (measured
     // 9.4 s → 3.4 s at sf0.1). Same pattern as ConnectedComponents.
-    val sh = Reuse.corpus(shingled(d))
+    val sh = Reuse.lineageCut(shingled(d))
     // Candidate generation runs entirely on 64-bit gram HASHES: the string
     // shingle never rides a shuffle or the pinned order arrays. The
     // per-row array_distinct collapses any intra-doc collision BEFORE the
@@ -2107,7 +2107,7 @@ object DocQueries {
         transform(col("o"), x => x.getField("gh")).as("gs"),
         size(col("o")).as("n"),
         col("ns"))
-      .transform(Reuse.corpus)
+      .transform(Reuse.lineageCut(_))
     val probes = ordered.select(
       col("doc_id").as("doc_a"), col("n").as("na"),
       posexplode(slice(
@@ -2254,7 +2254,7 @@ object DocQueries {
       minJac: Double = 0.4): DataFrame = {
     // the shingle frame feeds THREE branches (signature pass + both
     // verify joins); materialize once, same pattern as containmentPairs
-    val sh   = Reuse.corpus(shingled(d))
+    val sh   = Reuse.lineageCut(shingled(d))
     val cand = minhashBandCands(minhashSigs(sh), maxBucket, "minhash_lsh_cap")
     minhashLshPairsFromShingles(sh, cand, minJac)
   }
@@ -2492,7 +2492,7 @@ object DocQueries {
     // queries derive it from the documents-table count — see
     // `dedup_simhash_pairs` — so engine and oracle provably use one
     // number; ADVICE r10), `sh` has a single consumer and needs no pin.
-    val shc = if (blockBits.isDefined) sh else Reuse.corpus(sh)
+    val shc = if (blockBits.isDefined) sh else Reuse.lineageCut(sh)
     val bb = blockBits.getOrElse(simhashBlockBits(shc.count()))
     val rotBlocks = (0 until 4).map { r =>
       val rot = 8 * r

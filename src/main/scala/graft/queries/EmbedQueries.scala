@@ -138,7 +138,7 @@ object EmbedQueries {
           mat_vec_affine(transform(col("embedding"), _.cast("double")), vall, vmu)
             .as("v"))
           .withColumn("nrm", l2_norm(col("v")))
-          .transform(Reuse.corpus)
+          .transform(Reuse.lineageCut(_))
     }
   }
 
@@ -620,7 +620,7 @@ object EmbedQueries {
     "embed_cluster_sample" -> { (s, dir) =>
       // two consumers (centroid build + the scored cross join) — run the
       // scan + widening + l2_norm pipeline once
-      val e = Reuse.corpus(withNorm(emb(s, dir)))
+      val e = Reuse.lineageCut(withNorm(emb(s, dir)))
       val cents = e
         .select(col("label"), posexplode(col("v")).as(Seq("pos", "e")))
         .groupBy("label", "pos")
@@ -688,7 +688,7 @@ object EmbedQueries {
     // aggregates; the full vectors re-attach to the shortlist through one
     // keyed join on slim (query_id, neighbor_id) candidates.
     "embed_mrl_rerank_knn" -> { (s, dir) =>
-      val e = Reuse.corpus(withNorm(emb(s, dir)))
+      val e = Reuse.lineageCut(withNorm(emb(s, dir)))
       val t = e.select(col("vec_id"), slice(col("v"), 1, MrlDim).as("tv"))
         .withColumn("tn", l2_norm(col("tv")))
       val q = t.filter(col("vec_id") < NumQueries)
@@ -799,7 +799,7 @@ object EmbedQueries {
       val edges = topKPerQuery(directed, "cosine", GraphK)
         .select(col("query_id").as("vec_id"), col("neighbor_id").as("nbr_id"),
           col("cosine"), col("rank"))
-        .transform(Reuse.corpus) // feeds both sides of the mutuality join
+        .transform(Reuse.lineageCut(_)) // feeds both sides of the mutuality join
       edges
         .join(edges.select(col("vec_id").as("nbr_id"), col("nbr_id").as("vec_id"),
           lit(1L).as("__m")), Seq("vec_id", "nbr_id"), "left")
@@ -817,7 +817,7 @@ object EmbedQueries {
     // shape this runs at 100 TB, where bench = the eval suites.
     "embed_decontaminate" -> { (s, dir) =>
       // bench + corpus split from one scan/widen/norm pass
-      val e = Reuse.corpus(withNorm(emb(s, dir)))
+      val e = Reuse.lineageCut(withNorm(emb(s, dir)))
       val bench = e.filter(col("vec_id") % DecontamMod === 0)
         .select(col("vec_id").as("neighbor_id"), col("v").as("bv"),
           col("nrm").as("bn"))
@@ -1825,7 +1825,7 @@ object EmbedQueries {
     // the pin serves exactly two consumers — the adaptive-geometry count
     // and the banded pass; with explicit params there is ONE consumer and
     // no pin is needed (the simhashPairs discipline)
-    val ec = if (params.isDefined) e else Reuse.corpus(e)
+    val ec = if (params.isDefined) e else Reuse.lineageCut(e)
     val (r, b) = params.getOrElse(rpParams(ec.count()))
     val planes = dyadicPlanes(b * r, 64)
     // The vector payload rides THROUGH the band shuffle (corpus × bands —

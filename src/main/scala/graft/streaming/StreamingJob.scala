@@ -239,14 +239,12 @@ class StreamingJob(
     * 40+ jobs/trigger and ~2.5 s fixed cost per trigger at 1k-msg
     * triggers (stream_bench.jsonl, r11). Disabled for the micro-batch
     * window and restored after; `processBatch` holds the job monitor so
-    * the window is exclusive within this job. The flip is session-visible
-    * — a deployment sharing the writer's session with concurrent
-    * interactive analytics (not the reference's shape: its file-writer is
-    * a dedicated process) can opt out with spark.graft.stream.aqe=keep.
+    * the window is exclusive within this job. The flip is session-visible,
+    * which fits the reference's shape: its file-writer is a dedicated
+    * process, not a session shared with interactive analytics.
     */
   private def withBatchConf[T](f: => T): T =
-    if (spark.conf.get("spark.graft.stream.aqe", "off") == "keep") f
-    else StreamingJob.sessionConfLock.synchronized {
+    StreamingJob.sessionConfLock.synchronized {
       // Shuffle width for the per-trigger jobs: the kernel's only wide
       // dependencies key on source_name (≤ a handful of live keys per
       // schema) and the scalar aggregates reduce to one row, so the
@@ -263,8 +261,7 @@ class StreamingJob(
       val priorAqe   = spark.conf.get("spark.sql.adaptive.enabled", "true")
       val priorParts = spark.conf.get("spark.sql.shuffle.partitions")
       spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.shuffle.partitions",
-        spark.conf.get("spark.graft.stream.shufflePartitions", "8"))
+      spark.conf.set("spark.sql.shuffle.partitions", "8")
       try f
       finally {
         spark.conf.set("spark.sql.adaptive.enabled", priorAqe)
@@ -366,20 +363,19 @@ class StreamingJob(
     // back, which distributes the payload but costs a payload sort-merge
     // — measured interleaved, the funnel WINS 1.2-1.4x at any payload a
     // task comfortably holds (160 MB/trigger, stream_ab_r12b.json) and
-    // the slim form wins past that ceiling. `auto` (default) picks per
+    // the slim form wins past that ceiling. The form is picked per
     // trigger from the PREVIOUS trigger's fused element total — the same
     // byte-hint mechanism the append renumber (Rows) uses — flipping to
     // slim once the estimated per-source payload exceeds
     // spark.graft.stream.dedup.slimBytes (default 512 MB: comfortably
     // past the measured funnel-wins regime, comfortably before a one-task
     // sort starts spilling). First trigger of a stream has no history and
-    // takes the funnel. `window`/`slim` force a form.
+    // takes the funnel.
     // !acceptRepeats: dedupConsecutive is a no-op for ev44 — latching a
     // form choice there would make the dedup_slim counter report a form
     // that never ran
     val slim = module.elementCountCol.isDefined && !module.acceptRepeats &&
       StreamingJob.slimDedup(
-      spark.conf.get("spark.graft.stream.dedup", "auto"),
       state.lastBytesEst,
       spark.conf.get("spark.graft.stream.dedup.slimBytes",
         StreamingJob.DefaultSlimBytes.toString).toLong)
@@ -757,13 +753,11 @@ class StreamingJob(
     // light executeCollect replaces the write job) are written by the
     // driver directly. Dense tables only: their rows carry global row
     // ids already, so no renumber pass sits between transform and write.
-    // Counters come from the rows themselves. Opt out via
-    // spark.graft.stream.localAppend=off; the collect bound is
+    // Counters come from the rows themselves. The collect bound is
     // spark.graft.stream.localAppend.maxRows (128).
     def localAppend(table: String, out0: DataFrame): Option[Outcome] =
       try {
-        if (!module.denseRowTables.contains(table) ||
-          spark.conf.get("spark.graft.stream.localAppend", "on") == "off") None
+        if (!module.denseRowTables.contains(table)) None
         else {
           val schema = out0.schema
           if (!graft.sinks.LocalParquet.supports(schema)) None
@@ -891,13 +885,8 @@ class StreamingJob(
         }
       })
     val live = tables.toSeq.filter { case (t, out0) => !provablyEmpty(t, out0) }
-    // spark.graft.stream.parallelAppends=off serializes the per-table
-    // appends (debug/attribution escape hatch; outcome application is
-    // order-identical either way)
-    val parallel =
-      spark.conf.get("spark.graft.stream.parallelAppends", "on") != "off"
     val outcomes: Seq[Outcome] =
-      if (live.sizeIs <= 1 || !parallel)
+      if (live.sizeIs <= 1)
         live.map { case (t, o) => appendOne(t, o) }
       else {
         import scala.concurrent.{Await, Promise}
@@ -985,17 +974,12 @@ object StreamingJob {
     */
   private[streaming] val DefaultSlimBytes: Long = 512L << 20
 
-  /** The dedup-form decision, separated for direct spec coverage:
-    * `window`/`slim` force a form; `auto` flips on the previous trigger's
-    * byte estimate (−1 = no history yet → funnel).
+  /** The dedup-form decision, separated for direct spec coverage: flips
+    * on the previous trigger's byte estimate (−1 = no history yet →
+    * funnel).
     */
-  private[streaming] def slimDedup(
-      conf: String, lastBytesEst: Long, thresholdBytes: Long): Boolean =
-    conf match {
-      case "slim"   => true
-      case "window" => false
-      case _        => lastBytesEst > thresholdBytes
-    }
+  private[streaming] def slimDedup(lastBytesEst: Long, thresholdBytes: Long): Boolean =
+    lastBytesEst > thresholdBytes
 
   /** Driver-side pool for concurrent per-table appends (see `write`):
     * one stream writes at most events+index+cue concurrently, so a small
@@ -1042,7 +1026,7 @@ object StreamingJob {
     var appendsCollect: Long = 0L
     var appendsSpark: Long = 0L
     /** Previous trigger's in-window payload byte estimate (elements × 8),
-      * feeding the auto dedup-form choice; −1 = no history. Transient —
+      * feeding the dedup-form choice; −1 = no history. Transient —
       * deliberately NOT in the state checkpoint (a heuristic hint, and
       * keeping it out preserves the on-disk state format).
       */

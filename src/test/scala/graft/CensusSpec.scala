@@ -1,0 +1,42 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Knob and tool census of `src/main`: every `spark.graft.*` key the
+  * engine reads is documented in README's "Deployment confs" table (and
+  * nothing else is), and every main builds its session through the one
+  * builder in `Graft.session`. Run from the repository root.
+  */
+class CensusSpec extends AnyFunSuite {
+
+  private def mainSources: Seq[(Path, String)] =
+    scala.util.Using.resource(Files.walk(Paths.get("src/main/scala"))) { walk =>
+      walk.iterator.asScala.filter(_.toString.endsWith(".scala"))
+        .map(p => p -> Files.readString(p)).toList
+    }
+
+  test("the spark.graft.* keys read in src/main are exactly README's conf table") {
+    val inCode = mainSources.flatMap { case (_, src) =>
+      "\"(spark\\.graft\\.[A-Za-z0-9_.]+)".r.findAllMatchIn(src).map(_.group(1))
+    }.toSet
+    val readme = Files.readString(Paths.get("README.md"))
+    val section = readme.linesIterator
+      .dropWhile(!_.startsWith("## Deployment confs"))
+      .drop(1).takeWhile(!_.startsWith("## ")).toList
+    val inTable = section.flatMap(l =>
+      "^\\| `(spark\\.graft\\.[A-Za-z0-9_.]+)`".r.findFirstMatchIn(l).map(_.group(1))).toSet
+    assert(inCode.nonEmpty)
+    assert(inCode == inTable,
+      s"undocumented: ${inCode -- inTable}; documented but unread: ${inTable -- inCode}")
+  }
+
+  test("SparkSession.builder appears in exactly one src/main file") {
+    val builders = mainSources.collect {
+      case (p, src) if src.contains("SparkSession.builder") => p.toString
+    }
+    assert(builders == Seq("src/main/scala/graft/core/Graft.scala"), builders)
+  }
+}

@@ -25,7 +25,7 @@ class ServiceHygieneSpec extends SparkSpec {
     val opts = optionsOf(Service.withClusterHygiene(SparkSession.builder()))
     assert(opts("spark.cleaner.referenceTracking.cleanCheckpoints") == "true")
     assert(opts("spark.sql.maxPlanStringLength") == (8 * 1024 * 1024).toString)
-    assert(opts("spark.sql.codegen.cache.maxEntries") == "2000")
+    assert(opts("spark.sql.codegen.cache.maxEntries") == "5000")
   }
 
   test("an explicit system-property conf wins over the default, per key") {
@@ -48,6 +48,6 @@ class ServiceHygieneSpec extends SparkSpec {
       .get("spark.cleaner.referenceTracking.cleanCheckpoints") == "true")
     assert(spark.conf.get("spark.sql.maxPlanStringLength") ==
       (8 * 1024 * 1024).toString)
-    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == "2000")
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == "5000")
   }
 }

@@ -6,12 +6,11 @@ import graft.SparkSpec
 
 /** Scan-fanout policy (r14 optimization, gated per call site in r15): a
   * table whose file layout plans far fewer scan tasks than the session has
-  * cores is round-robin fanned out to cores/divisor partitions — but ONLY
-  * at the opt-in call sites ([[Graft.fannedTable]] and friends), because
-  * the r14 suite A/B showed the exchange taxes scan-light queries 10-150%.
-  * [[Graft.table]] is a plain read unless the conf mode is `all` (the r14
-  * fan-everything policy, kept for A/B probes). Tiny tables and the `off`
-  * conf leave the plan untouched; results are row-identical either way.
+  * cores is round-robin fanned out to cores/4 partitions — but ONLY at the
+  * opt-in call sites ([[Graft.fannedTable]] and friends), because the r14
+  * suite A/B showed the exchange taxes scan-light queries 10-150%.
+  * [[Graft.table]] is a plain read. Tiny tables are left untouched;
+  * results are row-identical either way.
   */
 class ScanFanoutSpec extends SparkSpec {
 
@@ -33,51 +32,18 @@ class ScanFanoutSpec extends SparkSpec {
     df.rdd.getNumPartitions
 
   test("plain table read does NOT fan out by default (opt-in policy)") {
-    spark.conf.unset(Graft.FanoutConfKey)
     val df = Graft.table(spark, dir, "documents")
     assert(scanPartitions(df) == 1)
     assert(!df.queryExecution.optimizedPlan.toString.contains("Repartition"))
   }
 
   test("fannedTable fans an under-parallelized scan out to cores/divisor") {
-    spark.conf.unset(Graft.FanoutConfKey)
     val df = Graft.fannedTable(spark, dir, "documents")
     // local[4] / divisor 4 → cap max(2, 1) = 2
     assert(scanPartitions(df) == 2)
     assert(df.queryExecution.optimizedPlan.toString.contains("Repartition"))
-  }
-
-  test("mode=all restores the r14 fan-everything policy on plain reads") {
-    spark.conf.set(Graft.FanoutConfKey, "all")
-    try {
-      assert(scanPartitions(Graft.table(spark, dir, "documents")) == 2)
-    } finally spark.conf.unset(Graft.FanoutConfKey)
-  }
-
-  test("fanout off leaves the single-split scan alone") {
-    spark.conf.set(Graft.FanoutConfKey, "off")
-    try {
-      val df = Graft.fannedTable(spark, dir, "documents")
-      assert(scanPartitions(df) == 1)
-      assert(!df.queryExecution.optimizedPlan.toString.contains("Repartition"))
-    } finally spark.conf.unset(Graft.FanoutConfKey)
-  }
-
-  test("explicit width is honored and bounded by the funding floor") {
-    spark.conf.set(Graft.FanoutConfKey, "3")
-    try {
-      assert(scanPartitions(Graft.fannedTable(spark, dir, "documents")) == 3)
-      // 2-row table is far below minBytesPerTask — no fanout
-      assert(scanPartitions(Graft.fannedTable(spark, dir, "tiny")) == 1)
-    } finally spark.conf.unset(Graft.FanoutConfKey)
-  }
-
-  test("a garbage conf mode falls back to auto instead of throwing") {
-    spark.conf.set(Graft.FanoutConfKey, "definitely-not-a-mode")
-    try {
-      assert(scanPartitions(Graft.fannedTable(spark, dir, "documents")) == 2)
-      assert(scanPartitions(Graft.table(spark, dir, "documents")) == 1)
-    } finally spark.conf.unset(Graft.FanoutConfKey)
+    // 2-row table is far below the 16 KiB/task funding floor — no fanout
+    assert(scanPartitions(Graft.fannedTable(spark, dir, "tiny")) == 1)
   }
 
   test("byte-suffixed maxPartitionBytes parses instead of throwing") {
@@ -88,14 +54,12 @@ class ScanFanoutSpec extends SparkSpec {
   }
 
   test("fanned and un-fanned reads hold identical rows") {
-    spark.conf.unset(Graft.FanoutConfKey)
     val fanned = Graft.fannedTable(spark, dir, "documents")
     val plain  = Graft.table(spark, dir, "documents")
     assert(fanned.exceptAll(plain).isEmpty && plain.exceptAll(fanned).isEmpty)
   }
 
   test("filters still push to the parquet scan below the fanout exchange") {
-    spark.conf.unset(Graft.FanoutConfKey)
     val df = Graft.fannedTable(spark, dir, "documents").filter("doc_id > 10")
     val scanLine = df.queryExecution.executedPlan.toString
       .linesIterator.find(_.contains("FileScan")).getOrElse("")

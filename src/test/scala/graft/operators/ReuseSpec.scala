@@ -1,63 +1,16 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
-/** The Reuse pins must (1) change nothing about results in ANY mode,
-  * (2) default to the lineage cut (the measured choice — AQE exchange
-  * reuse does not cross cached-table scans, see Reuse's Scaladoc), and
-  * (3) keep the recomputable persist modes working behind the conf,
-  * eagerly materialized and on the storage tier their class names.
+/** The Reuse pin is a lineage cut: `localCheckpoint` on a local master,
+  * a reliable checkpoint once the session has a checkpoint dir — and the
+  * two forms must not change a query's results.
   */
 class ReuseSpec extends SparkSpec {
   import spark.implicits._
 
   private def df = (1 to 1000).map(i => (i.toLong, s"doc $i word$i"))
     .toDF("doc_id", "text")
-
-  private def withMode[A](mode: String)(body: => A): A = {
-    spark.conf.set(Reuse.ConfKey, mode)
-    try body finally spark.conf.unset(Reuse.ConfKey)
-  }
-
-  test("default: corpus pin is a lineage cut (localCheckpoint without a dir)") {
-    val pinned = Reuse.corpus(df.withColumn("n", length(col("text"))))
-    // severed lineage shows as an RDD scan — the shape whose exchanges
-    // downstream self-joins can reuse (the measured r11 decision)
-    assert(pinned.queryExecution.analyzed.toString.contains("LogicalRDD"))
-    assert(pinned.count() == 1000)
-  }
-
-  test("disk mode: results identical, lineage recomputable, DISK_ONLY, eager") {
-    withMode("disk") {
-      val pinned = Reuse.corpus(df.withColumn("n", length(col("text"))))
-      try {
-        assert(!pinned.queryExecution.analyzed.toString.contains("LogicalRDD"),
-          "persist pin must keep recomputable lineage")
-        assert(pinned.storageLevel == StorageLevel.DISK_ONLY)
-        val plain = df.withColumn("n", length(col("text")))
-        assert(pinned.count() == plain.count())
-        assert(pinned.agg(sum("n")).head.getLong(0) ==
-          plain.agg(sum("n")).head.getLong(0))
-        // blocks dropped + recomputed still agree (the lost-executor path)
-        pinned.unpersist(blocking = true)
-        assert(pinned.agg(sum("n")).head.getLong(0) ==
-          plain.agg(sum("n")).head.getLong(0))
-      } finally pinned.unpersist(blocking = true)
-    }
-  }
-
-  test("memory mode: slim pin is MEMORY_AND_DISK, recomputable") {
-    withMode("memory") {
-      val pinned = Reuse.slim(df.groupBy(col("doc_id") % 10).count())
-      try {
-        assert(pinned.storageLevel == StorageLevel.MEMORY_AND_DISK)
-        assert(!pinned.queryExecution.analyzed.toString.contains("LogicalRDD"))
-        assert(pinned.count() == 10)
-      } finally pinned.unpersist(blocking = true)
-    }
-  }
 
   test("cluster mode: a pin-heavy query under a reliable checkpoint dir " +
     "matches the local-mode output exactly") {

@@ -343,13 +343,10 @@ class StreamingJobSpec extends SparkSpec {
   }
 
   test("dedup form auto-flips to slim on the previous trigger's byte estimate") {
-    // the decision function: auto flips strictly past the threshold;
-    // explicit forms override regardless of the estimate
-    assert(!StreamingJob.slimDedup("auto", -1L, 100))  // no history → funnel
-    assert(!StreamingJob.slimDedup("auto", 100L, 100)) // at threshold → funnel
-    assert(StreamingJob.slimDedup("auto", 101L, 100))  // past it → slim
-    assert(StreamingJob.slimDedup("slim", -1L, 100))
-    assert(!StreamingJob.slimDedup("window", Long.MaxValue, 100))
+    // the decision function flips strictly past the threshold
+    assert(!StreamingJob.slimDedup(-1L, 100))  // no history → funnel
+    assert(!StreamingJob.slimDedup(100L, 100)) // at threshold → funnel
+    assert(StreamingJob.slimDedup(101L, 100))  // past it → slim
 
     // end-to-end with the threshold floored: trigger 1 has no history
     // (funnel), trigger 2 sees trigger 1's element total and flips —
