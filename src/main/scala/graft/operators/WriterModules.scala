@@ -351,10 +351,13 @@ object WriterModules {
         else 1L
       val interval = requested.max(floor)
       Ev44.lastCueInterval = interval
+      // sorted on the driver: the collect is already bounded by the
+      // clamp above, and a Spark orderBy would add a range-sampling job
+      // and a shuffle stage to every trigger
       val cand = proj.filter(
         intDiv(col("ea") - 1 - stableLit(L0), stableLit(interval)) >
           intDiv(col("ea_prev") - 1 - stableLit(L0), stableLit(interval)))
-        .orderBy("row").collect()
+        .collect().sortBy(_.getLong(0)) // column 0 = row
       Ev44.lastCueCandidates  = cand.length
       Ev44.lastCueFallbacks   = 0
       Ev44.lastWalkPartitions = 0

@@ -2,7 +2,7 @@ package graft.streaming
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -20,10 +20,16 @@ import graft.sinks.NexusSink
   * One micro-batch pass decodes once and demuxes to every configured stream
   * (the reference's SrcToDst map, R1) inside `foreachBatch` — Spark won't
   * share scans across independent queries, so the decode-once structure is
-  * ours to enforce by caching the batch.
+  * ours to enforce by caching the batch. The demux is ONE keyed pass per
+  * schema, not a loop over streams: route to every configured
+  * `(topic, source_name)` pair at once, dedup in a window partitioned by
+  * that key, and `groupBy` the same key for the fused per-stream scalars,
+  * so a trigger's kernel cost is one Spark job per schema whatever its
+  * stream count; the driver then applies each stream's state from its
+  * key's row ([[processSchema]]).
   *
   * Scale stance: batch rows stay distributed end-to-end; the only values
-  * collected to the driver are per-stream scalars (boundary timestamp, the
+  * collected to the driver are per-key scalars (boundary timestamp, the
   * strict-finish cutoff offset, append counters) and the rows of the
   * single buffered pre-start message — the same per-stream state the
   * reference keeps in SourceFilter fields.
@@ -84,6 +90,9 @@ class StreamingJob(
   private val states         = mutable.Map.empty[String, StreamState]
   private val processedBatch = mutable.Map.empty[String, Long]
   private var autoBatchId    = -1L
+  // wall ms of each schema's last processed batch (observability only:
+  // transient, not in the checkpoint or the x5f2 `metrics` snapshot)
+  private val lastBatchMs    = mutable.Map.empty[String, Long]
 
   sink.create(plan)
   loadState()
@@ -108,7 +117,10 @@ class StreamingJob(
     * whole map for each would be quadratic in the surface).
     */
   def counter(stream: String, name: String): Long = synchronized {
-    states.get(stream) match {
+    if (name == "last_batch_ms")
+      plan.streams.find(s => streamKey(s) == stream)
+        .flatMap(s => lastBatchMs.get(s.module)).getOrElse(0L)
+    else states.get(stream) match {
       case None => 0L
       case Some(st) => name match {
         case "events_written" => st.eventsWritten
@@ -212,16 +224,15 @@ class StreamingJob(
       if (relevant.isEmpty) return
       val id = if (batchId >= 0) batchId else { autoBatchId += 1; autoBatchId }
       if (processedBatch.get(schemaId).exists(_ >= id)) return // replay → skip
+      val t0 = System.nanoTime()
       batch.persist() // decode once, demux to N streams
       try withBatchConf {
-        relevant.foreach { s =>
-          WriterModules.registry.get(s.module).foreach(processStream(s, _, batch))
-          crashHook(s"batch:stream:${streamKey(s)}") // torn multi-stream batch
-        }
+        WriterModules.registry.get(schemaId).foreach(processSchema(relevant, _, batch))
       } finally batch.unpersist()
       crashHook("batch:appended") // appends committed, cursors not yet saved
       processedBatch(schemaId) = id
       saveState() // restart-safe cursor checkpoint
+      lastBatchMs(schemaId) = (System.nanoTime() - t0) / 1000000L
     }
 
   /** Test-only crash-injection seam (RestartMatrixSpec): invoked at the
@@ -245,11 +256,12 @@ class StreamingJob(
     */
   private def withBatchConf[T](f: => T): T =
     StreamingJob.sessionConfLock.synchronized {
-      // Shuffle width for the per-trigger jobs: the kernel's only wide
-      // dependencies key on source_name (≤ a handful of live keys per
-      // schema) and the scalar aggregates reduce to one row, so the
-      // session width (sized for corpus analytics) buys nothing here and
-      // costs ~2 ms of empty-task launch per partition per stage. The
+      // Shuffle width for the per-trigger jobs: the kernel's one wide
+      // dependency keys on (topic, source_name) — ≤ a handful of live
+      // keys per schema; the dedup window and the keyed aggregate share
+      // that exchange and reduce to one row per key — so the session
+      // width (sized for corpus analytics) buys nothing here and costs
+      // ~2 ms of empty-task launch per partition per stage. The
       // renumber exchanges — the one per-trigger shuffle whose width
       // should track DATA size — size themselves from the batch hint
       // (Rows.indexedCounted) and ignore this narrow default.
@@ -346,17 +358,34 @@ class StreamingJob(
       }
     }
 
-  private def processStream(
-      s: NexusPlan.Stream,
+  /** One keyed pass for every unfinished stream of a schema — R1, the
+    * reference's GROUP-BY-key fan-out (one poll feeds one `SrcToDst` map
+    * that hands each message to its writer modules,
+    * `src/Stream/Partition.cpp:15-48`). The batch is routed to all the
+    * configured `(topic, source_name)` pairs at once, the consecutive
+    * dedup window is partitioned by that key, and the fused aggregate runs
+    * as `groupBy(topic, source_name)`: window and aggregate cluster on the
+    * same keys, so the plan has one exchange, and the trigger runs one
+    * kernel job whatever its stream count. A key's row depends on the
+    * batch alone, never on stream state, so the driver then walks the
+    * streams in plan order and applies each one's cross-batch state from
+    * its key's row ([[applyStream]]); two streams on one key (one source
+    * under two paths) each take a copy, and a key with no row is a stream
+    * with no message this trigger.
+    */
+  private def processSchema(
+      streams: Seq[NexusPlan.Stream],
       module: WriterModules.WriterModule,
       batch: DataFrame
   ): Unit = {
-    val key   = streamKey(s)
-    val state = states.getOrElseUpdate(key, StreamState())
-    if (state.finished) return
+    val open = streams.filterNot(s =>
+      states.getOrElseUpdate(streamKey(s), StreamState()).finished)
+    if (open.isEmpty) return
+    val openStates = open.map(s => states(streamKey(s)))
+    val keys = open.map(s => (s.topic, s.source)).distinct
+    def isKey(k: (String, String)): Column =
+      col("topic") === k._1 && col("source_name") === k._2
 
-    val routed = StreamKernel
-      .routeSource(batch, "topic" -> s.topic, "source_name" -> s.source)
     // Dedup form: the default window form funnels each source's whole
     // trigger payload through ONE task's sort; the slim form keys only
     // (source, offset, ts) through the window and anti-joins the drops
@@ -364,52 +393,55 @@ class StreamingJob(
     // — measured interleaved, the funnel WINS 1.2-1.4x at any payload a
     // task comfortably holds (160 MB/trigger, stream_ab_r12b.json) and
     // the slim form wins past that ceiling. The form is picked per
-    // trigger from the PREVIOUS trigger's fused element total — the same
+    // trigger from the PREVIOUS trigger's fused element totals — the same
     // byte-hint mechanism the append renumber (Rows) uses — flipping to
-    // slim once the estimated per-source payload exceeds
+    // slim once any stream's estimated payload exceeds
     // spark.graft.stream.dedup.slimBytes (default 512 MB: comfortably
     // past the measured funnel-wins regime, comfortably before a one-task
-    // sort starts spilling). First trigger of a stream has no history and
-    // takes the funnel.
+    // sort starts spilling). Kept rows are identical on both forms, so
+    // one decision serves the whole schema. Streams with no history take
+    // the funnel.
     // !acceptRepeats: dedupConsecutive is a no-op for ev44 — latching a
     // form choice there would make the dedup_slim counter report a form
     // that never ran
-    val slim = module.elementCountCol.isDefined && !module.acceptRepeats &&
-      StreamingJob.slimDedup(
-      state.lastBytesEst,
-      spark.conf.get("spark.graft.stream.dedup.slimBytes",
-        StreamingJob.DefaultSlimBytes.toString).toLong)
-    state.lastDedupSlim = slim
+    val slim = module.elementCountCol.isDefined && !module.acceptRepeats && {
+      val threshold = spark.conf.get("spark.graft.stream.dedup.slimBytes",
+        StreamingJob.DefaultSlimBytes.toString).toLong
+      openStates.exists(st => StreamingJob.slimDedup(st.lastBytesEst, threshold))
+    }
+    openStates.foreach(_.lastDedupSlim = slim)
     val deduped = StreamKernel
-      .dedupConsecutive(routed, Seq("source_name"), "offset", "ts",
+      .dedupConsecutive(batch.filter(keys.map(isKey).reduce(_ || _)),
+        Seq("topic", "source_name"), "offset", "ts",
         acceptRepeats = module.acceptRepeats,
         slimPayload = slim)
 
-    // ONE driver round-trip per stream per batch in steady state: the
-    // strict-finish cutoff offset AND every per-stream scalar (batch
-    // head/tail, in-window count, the buffered pre-start candidate row,
-    // the ev44 in-window event count) — the scalars computed under the
-    // no-cutoff assumption, which is every batch except the one that
-    // crosses stop. That crossing batch pays one extra pass with the
-    // cutoff substituted as a literal — semantics identical to the old
-    // two-pass shape, jobs halved on the hot path (the judge-named
-    // 2.5 s/trigger fixed cost, r11 §6). All aggregates are plain
-    // parallel map-side-combined jobs over the cached batch (no
-    // single-partition stage). struct-max ordering = (ts, offset) so the
-    // buffered candidate is max-ts with latest-arrival tie-break; nulls
-    // (non-live or out-of-condition rows) are ignored by min/max.
+    // ONE driver round-trip per schema per batch in steady state: per
+    // key, the strict-finish cutoff offset AND every per-stream scalar
+    // (batch head/tail, in-window count, the buffered pre-start candidate
+    // row, the ev44 in-window event count) — the scalars computed under
+    // the no-cutoff assumption, which is every batch except the one that
+    // crosses stop. That crossing batch pays one extra pass with each
+    // key's cutoff substituted as a literal — semantics identical to the
+    // old two-pass shape, jobs halved on the hot path (the judge-named
+    // 2.5 s/trigger fixed cost, r11 §6). struct-max ordering = (ts,
+    // offset) so the buffered candidate is max-ts with latest-arrival
+    // tie-break; nulls (non-live or out-of-condition rows) are ignored by
+    // min/max.
     val payload = struct(deduped.columns.map(col): _*)
     val inWin   = col("ts") >= startNs && col("ts") <= stopNs
     // Fused payload (tiny-trigger job elimination): when the PREVIOUS
-    // trigger was small, the in-window payload rides back inside this
-    // same aggregate as ≤ 4×maxRows serialized rows — the write path then
-    // starts from a LocalRelation and the dense appends run with ZERO
-    // further jobs (Rows' driver numbering + ConvertToLocalRelation +
-    // LocalParquet). The gate can be wrong (burst after an idle trigger):
-    // BoundedRowsAgg's buffer never holds more than the bound — it
-    // latches overflow, evaluates to null, and the trigger takes the
-    // distributed path. Scoped to modules whose data table is dense
-    // (flat transforms; exploding modules gain nothing from local input).
+    // trigger was small for any stream of the schema, each key's
+    // in-window payload rides back inside this same aggregate as
+    // ≤ 4×maxRows serialized rows — the write path then starts from a
+    // LocalRelation and the dense appends run with ZERO further jobs
+    // (Rows' driver numbering + ConvertToLocalRelation + LocalParquet).
+    // The gate can be wrong (burst after an idle trigger, or a key
+    // busier than the armed one): BoundedRowsAgg's buffer never holds
+    // more than the bound per group — it latches overflow, evaluates to
+    // null, and that stream takes the distributed path. Scoped to modules
+    // whose data table is dense (flat transforms; exploding modules gain
+    // nothing from local input).
     val fuseBound = spark.conf
       .get("spark.graft.stream.localAppend.maxRows", "128").toLong
     // 4× hint-lie tolerance, capped so a huge conf value can't overflow
@@ -419,8 +451,8 @@ class StreamingJob(
       (math.min(math.max(fuseBound, 0L), 1L << 18) * 4).toInt
     val wantPayload = module.denseRowTables.contains("data") &&
       spark.conf.get("spark.graft.stream.fusedPayload", "on") != "off" &&
-      fuseBound > 0 && state.lastMsgs >= 0 && state.lastMsgs <= fuseBound
-    def scalarAggs(liveCond: org.apache.spark.sql.Column) = (if (wantPayload) Seq(
+      fuseBound > 0 && openStates.exists(st => st.lastMsgs >= 0 && st.lastMsgs <= fuseBound)
+    def scalarAggs(liveCond: Column) = (if (wantPayload) Seq(
       graft.functions.BoundedRowsAgg.bounded_rows(
         when(liveCond && inWin, payload), aggBound).as("payload_rows"))
       else Nil) ++ (if (module.emitBuffered) Seq(
@@ -442,20 +474,56 @@ class StreamingJob(
       module.elementCountCol
         .map(c => coalesce(sum(when(liveCond && inWin, c)), lit(0L)))
         .getOrElse(lit(0L)).as("ev_window"))
-    val fused = Seq(
+    def byKey(aggs: Seq[Column]): Map[(String, String), Row] =
+      deduped.groupBy("topic", "source_name").agg(aggs.head, aggs.tail: _*)
+        .collect()
+        .map(r => (r.getAs[String]("topic"), r.getAs[String]("source_name")) -> r)
+        .toMap
+    val pre = byKey(Seq(
       count(lit(1)).as("n_all"),
       min("offset").as("min_off"),
       min(when(col("ts") > stopNs, col("offset"))).as("cutoff")) ++
-      scalarAggs(lit(true))
-    val preRow = deduped.agg(fused.head, fused.tail: _*).collect()(0)
-    if (preRow.getAs[Long]("n_all") == 0L) return
-    val cutoffOpt = Option(preRow.getAs[java.lang.Long]("cutoff")).map(_.toLong)
-    val aggRow = cutoffOpt match {
-      case None => preRow // no cutoff ⇒ the fused scalars are the truth
-      case Some(c) =>
-        val re = scalarAggs(col("offset") < lit(c))
-        deduped.agg(re.head, re.tail: _*).collect()(0)
+      scalarAggs(lit(true)))
+    val cutoffs = pre.toSeq.flatMap { case (k, r) =>
+      Option(r.getAs[java.lang.Long]("cutoff")).map(c => k -> c.toLong)
     }
+    val post = cutoffs match {
+      case Seq() => pre // no cutoff ⇒ the fused scalars are the truth
+      case (k0, c0) +: rest =>
+        // null for keys that did not cross stop: all their rows stay live
+        val cutoffOf = rest.foldLeft(when(isKey(k0), c0)) {
+          case (w, (k, c)) => w.when(isKey(k), c)
+        }
+        byKey(scalarAggs(cutoffOf.isNull || col("offset") < cutoffOf))
+    }
+    streams.foreach { s =>
+      val state = states(streamKey(s))
+      val k     = (s.topic, s.source)
+      if (!state.finished) pre.get(k).foreach { preRow =>
+        applyStream(s, module, state, deduped.filter(isKey(k)), preRow, post(k),
+          wantPayload)
+      }
+      crashHook(s"batch:stream:${streamKey(s)}") // torn multi-stream batch
+    }
+  }
+
+  /** Applies one stream's cross-batch state from its key's rows of the
+    * keyed pass ([[processSchema]]): `preRow` is the no-cutoff aggregate
+    * (carrying `min_off` and `cutoff`), `aggRow` the same scalars with the
+    * key's cutoff substituted (the same row when the key did not cross
+    * stop); `frame` is the deduplicated batch of this stream's key.
+    */
+  private def applyStream(
+      s: NexusPlan.Stream,
+      module: WriterModules.WriterModule,
+      state: StreamState,
+      frame: DataFrame,
+      preRow: Row,
+      aggRow: Row,
+      wantPayload: Boolean
+  ): Unit = {
+    val key       = streamKey(s)
+    val cutoffOpt = Option(preRow.getAs[java.lang.Long]("cutoff")).map(_.toLong)
     // byte estimate feeding the NEXT trigger's dedup-form choice: the
     // fused in-window element total × 8 B (the payloads are numeric
     // arrays). Transient by design — a restarted stream's first trigger
@@ -479,8 +547,8 @@ class StreamingJob(
     if (cutoffOpt.isDefined) state.finished = true
     val live = {
       val base = cutoffOpt match {
-        case Some(c) => deduped.filter(col("offset") < c)
-        case None    => deduped
+        case Some(c) => frame.filter(col("offset") < c)
+        case None    => frame
       }
       if (boundary) base.filter(col("offset") =!= minOff)
       else base
@@ -505,17 +573,17 @@ class StreamingJob(
       // row (ClassCastException, or a silently wrong comparison)
       val storedTs = state.buffered.map { b =>
         b.head.getLong(
-          (if (state.schema != null) state.schema else deduped.schema)
+          (if (state.schema != null) state.schema else frame.schema)
             .fieldIndex("ts"))
       }
       if (!isBoundaryRow &&
         storedTs.forall(_ <= cand.getAs[Long]("ts"))) {
         state.buffered = Some(
           if (module.multiRowMessages)
-            deduped.filter(col("offset") === cand.getAs[Long]("offset"))
+            frame.filter(col("offset") === cand.getAs[Long]("offset"))
               .collect().toSeq
           else Seq(cand.getAs[Row]("p")))
-        state.schema = deduped.schema
+        state.schema = frame.schema
       }
     }
 
@@ -528,7 +596,7 @@ class StreamingJob(
     val localPayload: Option[Seq[Row]] =
       if (!wantPayload) None
       else try Option(aggRow.getAs[scala.collection.Seq[Array[Byte]]]("payload_rows")).map { blobs =>
-        val rows = graft.functions.BoundedRowsAgg.decode(blobs, deduped.schema)
+        val rows = graft.functions.BoundedRowsAgg.decode(blobs, frame.schema)
         val kept = if (boundary) rows.filterNot(_.getAs[Long]("offset") == minOff)
                    else rows
         kept.sortBy(_.getAs[Long]("offset"))
@@ -550,8 +618,8 @@ class StreamingJob(
         localPayload match {
           // schemas must agree exactly to concatenate rows (the frame
           // path tolerates drift via unionByName)
-          case Some(rows) if state.schema == deduped.schema =>
-            bufferedDf(b ++ rows, deduped.schema)
+          case Some(rows) if state.schema == frame.schema =>
+            bufferedDf(b ++ rows, frame.schema)
           // allowMissingColumns: drift can ADD or REMOVE columns, not just
           // reorder — strict unionByName would crash-loop the query on a
           // buffered message from the pre-drift schema; null-filling the
@@ -560,7 +628,7 @@ class StreamingJob(
             .unionByName(inWindow, allowMissingColumns = true)
         }
       } else localPayload match {
-        case Some(rows) => bufferedDf(rows, deduped.schema)
+        case Some(rows) => bufferedDf(rows, frame.schema)
         case None       => inWindow
       }
     if (nInWindow > 0 || emitBuffered) {
@@ -694,7 +762,7 @@ class StreamingJob(
     * has no cross-directory transaction, just as the reference's HDF5
     * appends have none) — cursors that must stay in LOCKSTEP with a
     * specific table's content gate on that table's success (the ev44
-    * event cursor, see processStream).
+    * event cursor, see applyStream).
     */
   private def write(
       key: String,
@@ -968,7 +1036,7 @@ object StreamingJob {
 
   /** Auto dedup-form flip point: estimated per-source trigger payload
     * above which the one-partition funnel gives way to the slim
-    * anti-join form (see processStream). 512 MB — past the measured
+    * anti-join form (see applyStream). 512 MB — past the measured
     * funnel-wins regime (160 MB/trigger, round 12b), below where a
     * one-task sort starts spilling.
     */

@@ -201,6 +201,126 @@ class MessageGrainFuzzSpec extends SparkSpec {
       })
   )
 
+  private val MultiSources = Seq("s0", "s1", "s2")
+
+  /** Multi-source timeline: three f144 sources interleaved on ONE topic
+    * (topic-global offsets in arrival order, timestamps on a 100 ms grid
+    * so they tie across sources), four triggers. `s0` owns more than half
+    * the rows; every source starts pre-start (a buffer per source); each
+    * crosses stop in its own trigger, at a random place in it, followed by
+    * stragglers; `s2` is absent from trigger 1. Every trigger also carries
+    * rows of an unconfigured source and rows with a null `source_name`.
+    * Returns the triggers as (source, message) in arrival order.
+    */
+  private def multiTimeline(seed: Int): Seq[Seq[(String, M)]] = {
+    val rnd = new scala.util.Random(seed)
+    val perBatch = Map(
+      "s0" -> Seq(8, 8, 8, 8), "s1" -> Seq(3, 2, 2, 2), "s2" -> Seq(2, 0, 3, 3))
+    // the trigger each source crosses stop in: three distinct triggers
+    // (s2 never in trigger 1, where it has no message)
+    val crossAt = Seq(Map("s0" -> 3, "s1" -> 1, "s2" -> 2),
+      Map("s0" -> 2, "s1" -> 3, "s2" -> 0),
+      Map("s0" -> 1, "s1" -> 2, "s2" -> 3))(rnd.nextInt(3))
+    val logical = MultiSources.map { s =>
+      var ts = 8000L + 100L * rnd.nextInt(10)
+      var crossed = false
+      s -> perBatch(s).zipWithIndex.map { case (n, b) =>
+        // never a source's first message: each one buffers pre-start
+        val crossPos =
+          if (b != crossAt(s)) -1
+          else if (b == 0) 1 + rnd.nextInt(n - 1)
+          else rnd.nextInt(n)
+        (0 until n).map { i =>
+          if (crossed)
+            9000L + 100L * rnd.nextInt(81) // straggler: any ts, dropped
+          else if (i == crossPos) {
+            crossed = true
+            StopMs + 100L * (1 + rnd.nextInt(5))
+          } else {
+            val t = ts
+            ts = math.min(StopMs,
+              ts + (if (rnd.nextDouble() < 0.25) 0L else 100L * (1 + rnd.nextInt(4))))
+            t
+          }
+        }
+      }
+    }.toMap
+    var offset = 0L
+    (0 until 4).map { b =>
+      val queues = (MultiSources.map(s => s -> logical(s)(b)) ++ Seq(
+        "zz" -> Seq.fill(1 + rnd.nextInt(2))(9000L + 100L * rnd.nextInt(70)),
+        (null: String) -> Seq(10000L + 100L * rnd.nextInt(50))))
+        .map { case (s, q) => (s, scala.collection.mutable.Queue(q: _*)) }
+      val out = scala.collection.mutable.ArrayBuffer.empty[(String, M)]
+      while (queues.exists(_._2.nonEmpty)) {
+        val live = queues.filter(_._2.nonEmpty)
+        val (s, q) = live(rnd.nextInt(live.size))
+        out += (s -> M(offset, q.dequeue())); offset += 1
+      }
+      out.toSeq
+    }
+  }
+
+  test("multi-source keyed pass: every stream matches its own sub-timeline") {
+    // four streams of one schema: s0..s2 under g/<source>, plus s1 again
+    // under h — two paths on one (topic, source) key
+    val streams = MultiSources.map(s => s"g/$s" -> s) :+ ("h" -> "s1")
+    def node(s: String) =
+      s"""{ "module": "f144", "config": { "source": "$s", "topic": "tp" } }"""
+    val template =
+      s"""{ "children": [
+         |  { "name": "g", "type": "group", "children": [
+         |${MultiSources.map(s => s"""{ "name": "$s", "type": "group",
+         |  "children": [ ${node(s)} ] }""".stripMargin).mkString(",\n")} ] },
+         |  { "name": "h", "type": "group", "children": [ ${node("s1")} ] }
+         |] }""".stripMargin
+    for (seed <- Seq(5, 23, 71, 202)) {
+      val batches = multiTimeline(seed)
+      val sub = MultiSources.map(s =>
+        s -> batches.map(_.filter(_._1 == s).map(_._2))).toMap
+      // the generator covers what it promises
+      assert(sub("s2")(1).isEmpty, "s2 must be absent from trigger 1")
+      assert(MultiSources.forall(s => sub(s).flatten.head.tsMs < StartMs),
+        "every source must start pre-start")
+      val crossing = MultiSources.map(s =>
+        sub(s).indexWhere(_.exists(_.tsMs > StopMs)))
+      assert(crossing.distinct.size == 3 && !crossing.contains(-1),
+        s"seed=$seed: sources must cross stop in distinct triggers: $crossing")
+      assert(sub("s0").map(_.size).sum * 2 > batches.map(_.size).sum,
+        "s0 must own more than half the rows")
+      assert(batches.forall(b => b.exists(_._1 == null) && b.exists(_._1 == "zz")))
+
+      // both write paths: the fused payload (every trigger after the
+      // first) and the per-key frame it replaces when off
+      for (fused <- Seq("on", "off")) {
+        val out = Files.createTempDirectory("graft-fuzz-multi").toString
+        val job = new StreamingJob(spark, NexusPlan.parse(template), out, StartMs, StopMs)
+        spark.conf.set("spark.graft.stream.fusedPayload", fused)
+        try batches.zipWithIndex.foreach { case (b, i) =>
+          job.processBatch("f144", b.map { case (s, m) =>
+            F144Msg("tp", s, m.offset, m.tsMs, m.tsNs, m.offset + 0.5)
+          }.toDF(), i.toLong)
+        } finally spark.conf.unset("spark.graft.stream.fusedPayload")
+        job.finish()
+        streams.foreach { case (path, s) =>
+          val exp = expectedSurvivors(sub(s), acceptRepeats = false, emitBuffered = true)
+            .map(m => (m.tsNs, m.offset))
+          // (time, offset) — the value carries the offset, so a row leaking
+          // in from another source with a tied timestamp is caught too
+          val got = spark.read.parquet(s"$out/data/$path/data").orderBy("row")
+            .select("time", "value").collect()
+            .map(r => (r.getLong(0), (r.getDouble(1) - 0.5).toLong)).toSeq
+          assert(got == exp,
+            s"$path seed=$seed fusedPayload=$fused: surviving messages diverge\n" +
+              s"  timeline: ${sub(s).map(_.map(m => s"${m.offset}@${m.tsMs}"))}\n" +
+              s"  expected: $exp\n  got:      $got")
+          assert(job.counter(path, "data") == exp.size.toLong, s"$path row counter")
+          assert(job.counter(path, "finished") == 1L, s"$path must have finished")
+        }
+      }
+    }
+  }
+
   test("every module's kernel decisions are message-atomic on fuzzed timelines") {
     for (seed <- Seq(11, 37, 101); h <- harnesses) {
       val batches = timeline(seed)

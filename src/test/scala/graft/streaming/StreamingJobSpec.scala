@@ -387,72 +387,109 @@ class StreamingJobSpec extends SparkSpec {
   }
 
   test("fused payload: a tiny steady-state trigger runs ONE Spark job total") {
-    // production f144 shape (slow EPICS source, a few messages per 10 s
+    // production f144 shape (slow EPICS sources, a few messages per 10 s
     // trigger): after the first trigger arms the gate, the payload rides
     // the fused aggregate and the data AND cue appends are driver-side —
-    // the whole trigger is exactly one Spark job (the fused aggregate
-    // itself; the cue's Filter+Project over the local frame folds via
-    // ConvertToLocalRelation)
-    val cueTemplate =
-      """{ "children": [
-        |  { "name": "entry", "type": "group", "children": [
-        |    { "name": "speed", "type": "group", "children": [
-        |      { "module": "f144",
-        |        "config": { "source": "speed", "topic": "tp",
-        |                    "cue_interval": 2,
-        |                    "enable_epics_con_info": false,
-        |                    "enable_alarm_info": false } } ] } ] } ] }""".stripMargin
-    val out = Files.createTempDirectory("graft-fused").toString
-    val job = new StreamingJob(spark, NexusPlan.parse(cueTemplate), out, 0, 1L << 40)
-    def msgs(from: Long, n: Int) = (from until from + n).map(o =>
-      f144(o, 1000 + o, o.toDouble)).toDF()
-    job.processBatch("f144", msgs(0, 2)) // arms the gate (no history yet)
-    var jobs = 0
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = jobs += 1
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      job.processBatch("f144", msgs(2, 3))
-      // listener delivery is async: wait until the count is stable
-      var prev = -1; var stable = 0
-      while (stable < 3) {
-        Thread.sleep(100)
-        if (jobs == prev) stable += 1 else { prev = jobs; stable = 0 }
+    // the whole trigger is exactly one Spark job (the keyed fused
+    // aggregate itself, one per schema whatever its PV count; the cue's
+    // Filter+Project over the local frame folds via
+    // ConvertToLocalRelation), and the trigger crossing stop adds only
+    // the one cutoff-substituted recompute. Two inputs: one PV with a cue
+    // grid, and three PVs interleaved on one topic.
+    def f144Plan(pvs: Seq[String], cue: String) =
+      s"""{ "children": [
+         |  { "name": "entry", "type": "group", "children": [""".stripMargin +
+        pvs.map(pv =>
+          s"""    { "name": "$pv", "type": "group", "children": [
+             |      { "module": "f144",
+             |        "config": { "source": "$pv", "topic": "tp"$cue,
+             |                    "enable_epics_con_info": false,
+             |                    "enable_alarm_info": false } } ] }""".stripMargin)
+          .mkString(",\n") + "\n  ] } ] }"
+    def jobsDuring(body: => Unit): Int = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
       }
-      assert(jobs == 1, s"steady-state tiny trigger should be 1 job, saw $jobs")
-    } finally spark.sparkContext.removeSparkListener(l)
-    // the band decision is observable: trigger 2's data+cue appends were
-    // served from the fused LocalRelation payload (x5f2 appends_fused)
-    assert(job.counter("entry/speed", "appends_fused") == 2L,
-      "fused trigger must count its data and cue appends as fused")
-    // the arming trigger (no fused payload yet, but tiny) was served by
-    // the bounded driver collect — also visible
-    assert(job.counter("entry/speed", "appends_collect") >= 1L,
-      "the arming trigger's appends ran via the bounded collect")
-    job.finish()
-    val d = spark.read.parquet(s"$out/data/entry/speed/data").orderBy("row")
-    assert(d.select("value").collect().map(_.getDouble(0)).toSeq ==
-      (0 until 5).map(_.toDouble))
-    assert(job.counter("entry/speed", "data") == 5L)
-    // the cue grid fired inside the job-free trigger too (gw 2 and 4)
-    val cues = spark.read.parquet(s"$out/data/entry/speed/cue").orderBy("row")
-    assert(cues.select("cue_index").collect().map(_.getLong(0)).toSeq ==
-      Seq(1L, 3L))
+      spark.sparkContext.addSparkListener(l)
+      try {
+        body
+        // listener delivery is async: wait until the count is stable
+        var prev = -1; var stable = 0
+        while (stable < 3) {
+          Thread.sleep(100)
+          if (jobs.get == prev) stable += 1 else { prev = jobs.get; stable = 0 }
+        }
+        jobs.get
+      } finally spark.sparkContext.removeSparkListener(l)
+    }
+    val StopMs = 100000L
+    for ((pvs, cue) <- Seq(Seq("speed") -> """, "cue_interval": 2""",
+        Seq("a", "b", "c") -> "")) {
+      val template = f144Plan(pvs, cue)
+      // message o of every PV, interleaved on one topic (unique offsets,
+      // timestamps tied across PVs); `beyond` adds each PV's first
+      // message past stop
+      def msgs(from: Long, n: Int, beyond: Boolean = false) = {
+        val ts = (from until from + n).map(o => (o, 1000 + o)) ++
+          (if (beyond) Seq((from + n, StopMs + 1)) else Nil)
+        ts.flatMap { case (o, tsMs) => pvs.zipWithIndex.map { case (pv, i) =>
+          F144Msg("tp", pv, o * pvs.size + i, tsMs, tsMs * 1000000L, o.toDouble)
+        } }.toDF()
+      }
+      val out = Files.createTempDirectory("graft-fused").toString
+      val job = new StreamingJob(spark, NexusPlan.parse(template), out, 0, StopMs)
+      job.processBatch("f144", msgs(0, 2)) // arms the gate (no history yet)
+      val steady = jobsDuring(job.processBatch("f144", msgs(2, 3)))
+      assert(steady == 1,
+        s"${pvs.size} PV(s): steady-state tiny trigger should be 1 job, saw $steady")
+      val keys = pvs.map(pv => s"entry/$pv")
+      // the band decision is observable: trigger 2's data (+ cue) appends
+      // were served from the fused LocalRelation payload (x5f2
+      // appends_fused), and the arming trigger (no fused payload yet, but
+      // tiny) by the bounded driver collect
+      keys.foreach { k =>
+        assert(job.counter(k, "appends_fused") == (if (cue.nonEmpty) 2L else 1L),
+          s"$k: fused trigger must count its data (and cue) appends as fused")
+        assert(job.counter(k, "appends_collect") >= 1L,
+          s"$k: the arming trigger's appends ran via the bounded collect")
+      }
+      val crossing = jobsDuring(job.processBatch("f144", msgs(5, 2, beyond = true)))
+      assert(crossing == 2,
+        s"${pvs.size} PV(s): the trigger crossing stop should be 2 jobs, saw $crossing")
+      keys.foreach(k => assert(job.counter(k, "finished") == 1L, s"$k not finished"))
+      job.finish()
+      keys.foreach { k =>
+        val d = spark.read.parquet(s"$out/data/$k/data").orderBy("row")
+        assert(d.select("value").collect().map(_.getDouble(0)).toSeq ==
+          (0 until 7).map(_.toDouble), s"$k data")
+        assert(job.counter(k, "data") == 7L)
+      }
+      // the cue grid fired inside the job-free triggers too (gw 2, 4, 6)
+      if (cue.nonEmpty) {
+        val cues = spark.read.parquet(s"$out/data/entry/speed/cue").orderBy("row")
+        assert(cues.select("cue_index").collect().map(_.getLong(0)).toSeq ==
+          Seq(1L, 3L, 5L))
+      }
 
-    // parity: the same stream with the fusion off is byte-identical
-    val out2 = Files.createTempDirectory("graft-fusedoff").toString
-    spark.conf.set("spark.graft.stream.fusedPayload", "off")
-    try {
-      val job2 = new StreamingJob(spark, NexusPlan.parse(cueTemplate), out2, 0, 1L << 40)
-      job2.processBatch("f144", msgs(0, 2))
-      job2.processBatch("f144", msgs(2, 3))
-      job2.finish()
-    } finally spark.conf.unset("spark.graft.stream.fusedPayload")
-    val a = spark.read.parquet(s"$out/data/entry/speed/data").orderBy("row").collect()
-    val b = spark.read.parquet(s"$out2/data/entry/speed/data").orderBy("row").collect()
-    assert(a.map(_.toString).toSeq == b.map(_.toString).toSeq)
+      // parity: the same streams with the fusion off are byte-identical
+      val out2 = Files.createTempDirectory("graft-fusedoff").toString
+      spark.conf.set("spark.graft.stream.fusedPayload", "off")
+      try {
+        val job2 = new StreamingJob(spark, NexusPlan.parse(template), out2, 0, StopMs)
+        job2.processBatch("f144", msgs(0, 2))
+        job2.processBatch("f144", msgs(2, 3))
+        job2.processBatch("f144", msgs(5, 2, beyond = true))
+        job2.finish()
+      } finally spark.conf.unset("spark.graft.stream.fusedPayload")
+      keys.foreach { k =>
+        val a = spark.read.parquet(s"$out/data/$k/data").orderBy("row").collect()
+        val b = spark.read.parquet(s"$out2/data/$k/data").orderBy("row").collect()
+        assert(a.map(_.toString).toSeq == b.map(_.toString).toSeq, s"$k parity")
+      }
+    }
   }
 
   test("fused payload survives a burst after an idle trigger (overflow → distributed path)") {
@@ -502,6 +539,8 @@ class StreamingJobSpec extends SparkSpec {
         s"$c missing from the push-metrics surface")
     }
     assert(byName("kafka-to-nexus.host_example_org.entry.speed.appends_collect") >= 1L)
+    // the wall time of the schema's last processBatch, per stream
+    assert(byName("kafka-to-nexus.host_example_org.entry.speed.last_batch_ms") > 0L)
 
     // values are pulled at report time: a later batch moves the counter
     job.processBatch("ev44", Seq(ev44(1, 10200, Seq(4, 5))).toDF())
