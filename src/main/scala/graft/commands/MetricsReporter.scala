@@ -228,7 +228,7 @@ object MetricsReporter {
       // re-invoke when the job's stream count changes — addMetric rejects
       // duplicates)
       val names = live.getOrElse(stream, Map.empty).keySet ++
-        Set("events_written", "write_errors", "finished", "dedup_slim",
+        Set("events_written", "write_errors", "finished",
           "appends_fused", "appends_collect", "appends_spark", "last_batch_ms")
       // stream keys are output-tree paths (entry/speed): dots flatten like
       // the fqdn, path levels become graphite name segments

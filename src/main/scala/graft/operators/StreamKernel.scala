@@ -42,63 +42,26 @@ object StreamKernel {
     * equal timestamp and silently drop every variable after the first —
     * the previous-message timestamp must come from a RANGE frame over
     * strictly lower offsets, which keeps all rows of a message together).
+    * A null timestamp after a non-null one drops; a null key is a stream
+    * of its own. The window funnels each source's trigger through one
+    * task's sort; an anti-join form that distributed the payload lost to
+    * it 1.2-1.4x in the only A/B (bench_results/stream_ab_r12b.json).
     */
-  private def prevMsgTs(sourceCols: Seq[String], offsetCol: String, tsCol: String) =
-    last(col(tsCol), ignoreNulls = false).over(
-      Window.partitionBy(sourceCols.map(col): _*).orderBy(col(offsetCol))
-        .rangeBetween(Window.unboundedPreceding, -1))
-
   def dedupConsecutive(
       df: DataFrame,
       sourceCols: Seq[String],
       offsetCol: String,
       tsCol: String,
-      acceptRepeats: Boolean = false,
-      slimPayload: Boolean = false
+      acceptRepeats: Boolean = false
   ): DataFrame =
     if (acceptRepeats) df
-    else if (!slimPayload) {
-      val prev = prevMsgTs(sourceCols, offsetCol, tsCol)
+    else {
+      val prev = last(col(tsCol), ignoreNulls = false).over(
+        streamWindow(sourceCols, offsetCol)
+          .rangeBetween(Window.unboundedPreceding, -1))
       df.withColumn("__prev_ts", prev)
         .filter(col("__prev_ts").isNull || col("__prev_ts") =!= col(tsCol))
         .drop("__prev_ts")
-    } else {
-      // Slim-payload form: the per-source window is a ONE-PARTITION funnel
-      // (a stream has one source key), so the default form sorts the whole
-      // batch payload in a single task — a ceiling once a trigger's
-      // per-source payload exceeds one task (GB-scale tensor triggers).
-      // Here only (source, offset, ts) ride the window (~24 B/row); the
-      // drop set (consecutive repeats — rare by construction) anti-joins
-      // back keyed on (source, offset), which hash-distributes the payload
-      // EVENLY instead of funneling it (inside the streaming batch
-      // window AQE is off, so the anti-join is a sort-merge). Below that
-      // ceiling the funnel WINS — measured interleaved 1.2-1.4× at
-      // 160 MB/trigger (the anti-join sort-merges the payload, costing
-      // more than the one-task sort it avoids;
-      // bench_results/stream_ab_r12b.json) — so StreamingJob picks this
-      // form per trigger only once the previous trigger's payload
-      // estimate passes spark.graft.stream.dedup.slimBytes. Kept-row
-      // semantics are IDENTICAL to the default form including the
-      // null-ts corner (drop ⇔ prev non-null ∧ (ts null ∨ prev = ts) —
-      // the exact complement of the keep predicate) and the
-      // multi-row-per-message corner (a dropped key removes the whole
-      // message on both forms); `StreamKernelSpec` pins the two equal.
-      val keyCols = sourceCols :+ offsetCol
-      val prev    = prevMsgTs(sourceCols, offsetCol, tsCol)
-      val drops = df.select((keyCols :+ tsCol).map(col): _*)
-        .withColumn("__prev_ts", prev)
-        .filter(col("__prev_ts").isNotNull &&
-          (col(tsCol).isNull || col("__prev_ts") === col(tsCol)))
-        .select(keyCols.map(k => col(k).as(s"__d_$k")): _*)
-        .dropDuplicates(keyCols.map(k => s"__d_$k"))
-      // NULL-SAFE anti-join: the window form partitions a null source key
-      // into its own stream, so its consecutive repeats DO drop — a plain
-      // USING anti-join would never match the null key's drop rows and
-      // silently keep them, diverging from the default form
-      val joinCond = keyCols
-        .map(k => col(k) <=> col(s"__d_$k"))
-        .reduce(_ && _)
-      df.join(drops, joinCond, "left_anti")
     }
 
   /** F2 + F3 + F6 — time-window filter with last-value-before-start

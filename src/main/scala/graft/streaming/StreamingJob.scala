@@ -60,6 +60,15 @@ class StreamingJob(
   @volatile private var stopMsCur = stopMs
   private def stopNs  = stopMsCur * 1000000L
 
+  /** `spark.graft.stream.localAppend.maxRows` (128): the message bound of
+    * both the fused payload and the bounded driver collect; 0 turns both
+    * off. Clamped to 1<<18 so a huge conf value admits no unbounded
+    * driver-side collect and 4 × the bound never overflows an Int.
+    */
+  private def localAppendMaxRows: Long =
+    math.min(math.max(spark.conf
+      .get("spark.graft.stream.localAppend.maxRows", "128").toLong, 0L), 1L << 18)
+
   /** 6s4t dynamic stop-time update, propagated to every stream filter
     * before the next micro-batch (`Master::setStopTime`
     * `src/Master.cpp:113-124` → `SourceFilter::set_stop_time`). Rejected
@@ -126,7 +135,6 @@ class StreamingJob(
         case "events_written" => st.eventsWritten
         case "write_errors"   => st.writeErrors
         case "finished"       => if (st.finished) 1L else 0L
-        case "dedup_slim"     => if (st.lastDedupSlim) 1L else 0L
         case "appends_fused"   => st.appendsFused
         case "appends_collect" => st.appendsCollect
         case "appends_spark"   => st.appendsSpark
@@ -386,35 +394,10 @@ class StreamingJob(
     def isKey(k: (String, String)): Column =
       col("topic") === k._1 && col("source_name") === k._2
 
-    // Dedup form: the default window form funnels each source's whole
-    // trigger payload through ONE task's sort; the slim form keys only
-    // (source, offset, ts) through the window and anti-joins the drops
-    // back, which distributes the payload but costs a payload sort-merge
-    // — measured interleaved, the funnel WINS 1.2-1.4x at any payload a
-    // task comfortably holds (160 MB/trigger, stream_ab_r12b.json) and
-    // the slim form wins past that ceiling. The form is picked per
-    // trigger from the PREVIOUS trigger's fused element totals — the same
-    // byte-hint mechanism the append renumber (Rows) uses — flipping to
-    // slim once any stream's estimated payload exceeds
-    // spark.graft.stream.dedup.slimBytes (default 512 MB: comfortably
-    // past the measured funnel-wins regime, comfortably before a one-task
-    // sort starts spilling). Kept rows are identical on both forms, so
-    // one decision serves the whole schema. Streams with no history take
-    // the funnel.
-    // !acceptRepeats: dedupConsecutive is a no-op for ev44 — latching a
-    // form choice there would make the dedup_slim counter report a form
-    // that never ran
-    val slim = module.elementCountCol.isDefined && !module.acceptRepeats && {
-      val threshold = spark.conf.get("spark.graft.stream.dedup.slimBytes",
-        StreamingJob.DefaultSlimBytes.toString).toLong
-      openStates.exists(st => StreamingJob.slimDedup(st.lastBytesEst, threshold))
-    }
-    openStates.foreach(_.lastDedupSlim = slim)
     val deduped = StreamKernel
       .dedupConsecutive(batch.filter(keys.map(isKey).reduce(_ || _)),
         Seq("topic", "source_name"), "offset", "ts",
-        acceptRepeats = module.acceptRepeats,
-        slimPayload = slim)
+        acceptRepeats = module.acceptRepeats)
 
     // ONE driver round-trip per schema per batch in steady state: per
     // key, the strict-finish cutoff offset AND every per-stream scalar
@@ -442,15 +425,10 @@ class StreamingJob(
     // null, and that stream takes the distributed path. Scoped to modules
     // whose data table is dense (flat transforms; exploding modules gain
     // nothing from local input).
-    val fuseBound = spark.conf
-      .get("spark.graft.stream.localAppend.maxRows", "128").toLong
-    // 4× hint-lie tolerance, capped so a huge conf value can't overflow
-    // (clamp BEFORE multiplying — a 2^62 conf would wrap the product) or
-    // invite an unbounded driver collect through the aggregate
-    val aggBound =
-      (math.min(math.max(fuseBound, 0L), 1L << 18) * 4).toInt
+    val fuseBound = localAppendMaxRows
+    // 4× hint-lie tolerance, as in the bounded collect
+    val aggBound = (fuseBound * 4).toInt
     val wantPayload = module.denseRowTables.contains("data") &&
-      spark.conf.get("spark.graft.stream.fusedPayload", "on") != "off" &&
       fuseBound > 0 && openStates.exists(st => st.lastMsgs >= 0 && st.lastMsgs <= fuseBound)
     def scalarAggs(liveCond: Column) = (if (wantPayload) Seq(
       graft.functions.BoundedRowsAgg.bounded_rows(
@@ -524,13 +502,6 @@ class StreamingJob(
   ): Unit = {
     val key       = streamKey(s)
     val cutoffOpt = Option(preRow.getAs[java.lang.Long]("cutoff")).map(_.toLong)
-    // byte estimate feeding the NEXT trigger's dedup-form choice: the
-    // fused in-window element total × 8 B (the payloads are numeric
-    // arrays). Transient by design — a restarted stream's first trigger
-    // simply takes the funnel again.
-    if (module.elementCountCol.isDefined)
-      state.lastBytesEst = aggRow.getAs[Long]("ev_window") * 8
-
     // cross-batch consecutive dedup: drop the batch head if it repeats the
     // previous batch's tail timestamp
     val headTs   = aggRow.getAs[Row]("head") match {
@@ -830,12 +801,7 @@ class StreamingJob(
           val schema = out0.schema
           if (!graft.sinks.LocalParquet.supports(schema)) None
           else {
-            // clamp to the same 1<<18 ceiling as the fused aggBound: a
-            // huge conf value must not admit an unbounded driver-side
-            // executeCollect, and 4*maxRows must never overflow negative
-            val maxRows = math.min(math.max(spark.conf
-              .get("spark.graft.stream.localAppend.maxRows", "128").toLong, 0L),
-              1L << 18)
+            val maxRows = localAppendMaxRows
             val rows: Option[(Seq[org.apache.spark.sql.catalyst.InternalRow], String)] =
               out0.queryExecution.optimizedPlan match {
                 case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
@@ -1034,21 +1000,6 @@ object StreamingJob {
     */
   private[streaming] val sessionConfLock = new Object
 
-  /** Auto dedup-form flip point: estimated per-source trigger payload
-    * above which the one-partition funnel gives way to the slim
-    * anti-join form (see applyStream). 512 MB — past the measured
-    * funnel-wins regime (160 MB/trigger, round 12b), below where a
-    * one-task sort starts spilling.
-    */
-  private[streaming] val DefaultSlimBytes: Long = 512L << 20
-
-  /** The dedup-form decision, separated for direct spec coverage: flips
-    * on the previous trigger's byte estimate (−1 = no history yet →
-    * funnel).
-    */
-  private[streaming] def slimDedup(lastBytesEst: Long, thresholdBytes: Long): Boolean =
-    lastBytesEst > thresholdBytes
-
   /** Driver-side pool for concurrent per-table appends (see `write`):
     * one stream writes at most events+index+cue concurrently, so a small
     * fixed pool shared by every job suffices; daemon threads so an
@@ -1085,7 +1036,7 @@ object StreamingJob {
     /** Cumulative append-path counters (observability: at production the
       * difference between the fused/local and distributed paths is the
       * difference between 1 and 5 Spark jobs per trigger, so the band
-      * decision must be visible in x5f2, like `dedup_slim`): appends
+      * decision must be visible in x5f2): appends
       * served from a fused LocalRelation payload (zero jobs), from the
       * bounded driver collect (one light collect), and from a Spark
       * write job (the distributed path).
@@ -1093,19 +1044,11 @@ object StreamingJob {
     var appendsFused: Long = 0L
     var appendsCollect: Long = 0L
     var appendsSpark: Long = 0L
-    /** Previous trigger's in-window payload byte estimate (elements × 8),
-      * feeding the dedup-form choice; −1 = no history. Transient —
-      * deliberately NOT in the state checkpoint (a heuristic hint, and
-      * keeping it out preserves the on-disk state format).
-      */
-    var lastBytesEst: Long = -1L
-    /** Which dedup form the last trigger ran (observability: surfaced as
-      * the `dedup_slim` counter).
-      */
-    var lastDedupSlim: Boolean = false
     /** Previous trigger's in-window message count, gating the fused
       * payload collection. −1 = no history (restart ⇒ one distributed
-      * trigger, then re-arm). Transient like [[lastBytesEst]].
+      * trigger, then re-arm). Transient — deliberately NOT in the state
+      * checkpoint (a heuristic hint, and keeping it out preserves the
+      * on-disk state format).
       */
     var lastMsgs: Long = -1L
   }

@@ -6,9 +6,10 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Knob and tool census of `src/main`: every `spark.graft.*` key the
-  * engine reads is documented in README's "Deployment confs" table (and
-  * nothing else is), and every main builds its session through the one
-  * builder in `Graft.session`. Run from the repository root.
+  * engine reads is documented in README's "Deployment confs" table, every
+  * `SPARK_GRAFT_*` env var in its "Verify / bench" section (and nothing
+  * else is), and every main builds its session through the one builder
+  * in `Graft.session`. Run from the repository root.
   */
 class CensusSpec extends AnyFunSuite {
 
@@ -31,6 +32,20 @@ class CensusSpec extends AnyFunSuite {
     assert(inCode.nonEmpty)
     assert(inCode == inTable,
       s"undocumented: ${inCode -- inTable}; documented but unread: ${inTable -- inCode}")
+  }
+
+  test("the SPARK_GRAFT_* env vars read in src/main are exactly README's list") {
+    val inCode = mainSources.flatMap { case (_, src) =>
+      "\"(SPARK_GRAFT_[A-Z0-9_]+)\"".r.findAllMatchIn(src).map(_.group(1))
+    }.toSet
+    val section = Files.readString(Paths.get("README.md")).linesIterator
+      .dropWhile(!_.startsWith("## Verify / bench"))
+      .drop(1).takeWhile(!_.startsWith("## ")).mkString("\n")
+    val inReadme = "`(SPARK_GRAFT_[A-Z0-9_]+)`".r.findAllMatchIn(section)
+      .map(_.group(1)).toSet
+    assert(inCode.nonEmpty)
+    assert(inCode == inReadme,
+      s"undocumented: ${inCode -- inReadme}; documented but unread: ${inReadme -- inCode}")
   }
 
   test("SparkSession.builder appears in exactly one src/main file") {

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -97,55 +98,45 @@ class StreamKernelSpec extends SparkSpec {
       ("s", 2L, 200L, "v1"), ("s", 2L, 200L, "v2"),   // msg2: new ts → kept, both rows
       ("s", 3L, 100L, "v1")                            // msg3: ts != msg2 → kept
     ).toDF("source", "offset", "ts", "name")
-    for (slim <- Seq(false, true)) {
-      val out = StreamKernel
-        .dedupConsecutive(df, Seq("source"), "offset", "ts", slimPayload = slim)
-        .orderBy("offset", "name").collect()
-      assert(out.map(r => (r.getLong(1), r.getString(3))).toSeq ==
-        Seq((0L, "v1"), (0L, "v2"), (2L, "v1"), (2L, "v2"), (3L, "v1")),
-        s"slim=$slim")
-    }
+    val out = StreamKernel
+      .dedupConsecutive(df, Seq("source"), "offset", "ts")
+      .orderBy("offset", "name").collect()
+    assert(out.map(r => (r.getLong(1), r.getString(3))).toSeq ==
+      Seq((0L, "v1"), (0L, "v2"), (2L, "v1"), (2L, "v2"), (3L, "v1")))
   }
 
-  test("slim-payload dedup keeps IDENTICAL rows to the window form on every corner") {
-    // corners: leading repeat, run of 3 repeats (only adjacent drop),
-    // repeat split across sources, null ts adjacent to non-null (the
-    // original form DROPS a null-ts row whose predecessor is non-null —
-    // the slim form must reproduce that exactly), null-ts leading row
-    val df = Seq(
-      ("s", 0L, Some(100L), 1.0), ("s", 1L, Some(100L), 2.0),
-      ("s", 2L, Some(100L), 3.0), ("s", 3L, Some(200L), 4.0),
-      ("s", 4L, None: Option[Long], 5.0), ("s", 5L, Some(200L), 6.0),
-      ("t", 0L, None: Option[Long], 7.0), ("t", 1L, Some(100L), 8.0),
-      ("t", 2L, Some(100L), 9.0)
-    ).toDF("source", "offset", "ts", "value")
-    val win = StreamKernel
+  test("dedup corners: leading repeat, run of 3, split sources, null ts, null key") {
+    def kept(df: DataFrame) = StreamKernel
       .dedupConsecutive(df, Seq("source"), "offset", "ts")
       .orderBy("source", "offset").collect().toSeq
-    val slim = StreamKernel
-      .dedupConsecutive(df, Seq("source"), "offset", "ts", slimPayload = true)
-      .orderBy("source", "offset").collect().toSeq
-    assert(win == slim, s"window=$win slim=$slim")
-    // and the fixture actually exercises drops (not all-kept)
-    assert(win.size < df.count())
+      .map(r => (Option(r.getString(0)), r.getLong(1),
+        Option(r.get(2)).map(_.asInstanceOf[Long]), r.getDouble(3)))
+    val df = Seq(
+      ("s", 0L, Some(100L), 1.0), ("s", 1L, Some(100L), 2.0), // leading repeat
+      ("s", 2L, Some(100L), 3.0),                             // run of 3: adjacent too
+      ("s", 3L, Some(200L), 4.0),
+      ("s", 4L, None: Option[Long], 5.0), // null after non-null: prev =!= null drops
+      ("s", 5L, Some(200L), 6.0),         // prev is the null: kept
+      ("t", 0L, None: Option[Long], 7.0), // leading null: no prev, kept
+      ("t", 1L, Some(100L), 8.0),         // same ts as s's drops: other stream, kept
+      ("t", 2L, Some(100L), 9.0)          // repeat within t: dropped
+    ).toDF("source", "offset", "ts", "value")
+    assert(kept(df) == Seq(
+      (Some("s"), 0L, Some(100L), 1.0), (Some("s"), 3L, Some(200L), 4.0),
+      (Some("s"), 5L, Some(200L), 6.0), (Some("t"), 0L, None, 7.0),
+      (Some("t"), 1L, Some(100L), 8.0)))
 
-    // a NULL source key is its own stream in the window form (partitionBy
-    // groups nulls): its consecutive repeats must drop in the slim form
-    // too — a plain USING anti-join would never match them
+    // a NULL source key is a stream of its own (partitionBy groups nulls):
+    // its adjacent repeat drops, and it shares no predecessor with "s"
     val nullSrc = Seq(
       (Option.empty[String], 0L, Some(100L), 1.0),
       (Option.empty[String], 1L, Some(100L), 2.0),
       (Option.empty[String], 2L, Some(300L), 3.0),
       (Some("s"), 0L, Some(100L), 4.0)
     ).toDF("source", "offset", "ts", "value")
-    val winN = StreamKernel
-      .dedupConsecutive(nullSrc, Seq("source"), "offset", "ts")
-      .orderBy("source", "offset").collect().toSeq
-    val slimN = StreamKernel
-      .dedupConsecutive(nullSrc, Seq("source"), "offset", "ts", slimPayload = true)
-      .orderBy("source", "offset").collect().toSeq
-    assert(winN == slimN, s"null-source: window=$winN slim=$slimN")
-    assert(winN.size == 3, "the null stream's adjacent repeat must drop")
+    assert(kept(nullSrc) == Seq(
+      (None, 0L, Some(100L), 1.0), (None, 2L, Some(300L), 3.0),
+      (Some("s"), 0L, Some(100L), 4.0)))
   }
 
   test("dedup with acceptRepeats=true (ev44) keeps everything") {

@@ -290,17 +290,18 @@ class MessageGrainFuzzSpec extends SparkSpec {
         "s0 must own more than half the rows")
       assert(batches.forall(b => b.exists(_._1 == null) && b.exists(_._1 == "zz")))
 
-      // both write paths: the fused payload (every trigger after the
-      // first) and the per-key frame it replaces when off
-      for (fused <- Seq("on", "off")) {
+      // both write paths: the default bound (the bounded collect on the
+      // first trigger, the fused payload on every one after it) and the
+      // per-key frame path that maxRows=0 leaves
+      for (maxRows <- Seq("128", "0")) {
         val out = Files.createTempDirectory("graft-fuzz-multi").toString
         val job = new StreamingJob(spark, NexusPlan.parse(template), out, StartMs, StopMs)
-        spark.conf.set("spark.graft.stream.fusedPayload", fused)
+        spark.conf.set("spark.graft.stream.localAppend.maxRows", maxRows)
         try batches.zipWithIndex.foreach { case (b, i) =>
           job.processBatch("f144", b.map { case (s, m) =>
             F144Msg("tp", s, m.offset, m.tsMs, m.tsNs, m.offset + 0.5)
           }.toDF(), i.toLong)
-        } finally spark.conf.unset("spark.graft.stream.fusedPayload")
+        } finally spark.conf.unset("spark.graft.stream.localAppend.maxRows")
         job.finish()
         streams.foreach { case (path, s) =>
           val exp = expectedSurvivors(sub(s), acceptRepeats = false, emitBuffered = true)
@@ -311,7 +312,7 @@ class MessageGrainFuzzSpec extends SparkSpec {
             .select("time", "value").collect()
             .map(r => (r.getLong(0), (r.getDouble(1) - 0.5).toLong)).toSeq
           assert(got == exp,
-            s"$path seed=$seed fusedPayload=$fused: surviving messages diverge\n" +
+            s"$path seed=$seed maxRows=$maxRows: surviving messages diverge\n" +
               s"  timeline: ${sub(s).map(_.map(m => s"${m.offset}@${m.tsMs}"))}\n" +
               s"  expected: $exp\n  got:      $got")
           assert(job.counter(path, "data") == exp.size.toLong, s"$path row counter")

@@ -342,16 +342,10 @@ class StreamingJobSpec extends SparkSpec {
     assert(d.select("value").collect().map(_.getDouble(0)).toSeq == Seq(10.0, 20.0))
   }
 
-  test("dedup form auto-flips to slim on the previous trigger's byte estimate") {
-    // the decision function flips strictly past the threshold
-    assert(!StreamingJob.slimDedup(-1L, 100))  // no history → funnel
-    assert(!StreamingJob.slimDedup(100L, 100)) // at threshold → funnel
-    assert(StreamingJob.slimDedup(101L, 100))  // past it → slim
-
-    // end-to-end with the threshold floored: trigger 1 has no history
-    // (funnel), trigger 2 sees trigger 1's element total and flips —
-    // with kept-row semantics identical (the repeat message still drops
-    // WHOLE under the slim form)
+  test("da00: a two-variable message with a repeated ts drops whole, end to end") {
+    // within a trigger (msg2 repeats msg1) and across triggers (msg3
+    // repeats trigger 2's tail): every variable row of the repeat drops,
+    // every row of a kept message stays
     val template =
       """{ "children": [
         |  { "name": "entry", "type": "group", "children": [
@@ -367,23 +361,21 @@ class StreamingJobSpec extends SparkSpec {
     def msg(off: Long, tsMs: Long, tag: Double) = Seq(
       ("tp", "arr", off, tsMs * 1000000L, "a", "x", Seq(tag, 2.0)),
       ("tp", "arr", off, tsMs * 1000000L, "b", "x", Seq(tag + 100)))
-    spark.conf.set("spark.graft.stream.dedup.slimBytes", "0")
-    try {
-      job.processBatch("da00", msg(0, 1000, 1.0)
-        .toDF("topic", "source_name", "offset", "ts", "name", "axis_name", "data"))
-      assert(job.counter("entry/img", "dedup_slim") == 0L, "first trigger: funnel")
-      job.processBatch("da00", (msg(1, 2000, 2.0) ++ msg(2, 2000, 9.9))
-        .toDF("topic", "source_name", "offset", "ts", "name", "axis_name", "data"))
-      assert(job.counter("entry/img", "dedup_slim") == 1L, "second trigger: slim")
-      job.finish()
-    } finally spark.conf.unset("spark.graft.stream.dedup.slimBytes")
+    def trigger(msgs: Seq[(String, String, Long, Long, String, String, Seq[Double])]) =
+      job.processBatch("da00",
+        msgs.toDF("topic", "source_name", "offset", "ts", "name", "axis_name", "data"))
+    trigger(msg(0, 1000, 1.0))
+    trigger(msg(1, 2000, 2.0) ++ msg(2, 2000, 9.9))
+    trigger(msg(3, 2000, 7.7) ++ msg(4, 3000, 3.0))
+    job.finish()
     val d = spark.read.parquet(s"$out/data/entry/img/data").orderBy("row").collect()
     def arr(r: org.apache.spark.sql.Row, c: String): Seq[Double] =
       r.getSeq[Double](r.fieldIndex(c)).toSeq
-    // msg2 (repeated ts) dropped whole under slim; msg0/msg1 keep both vars
-    assert(d.length == 2)
+    // msg2 and msg3 (repeated ts) dropped whole; msg0/msg1/msg4 keep both vars
+    assert(d.length == 3)
     assert(arr(d(0), "a") == Seq(1.0, 2.0) && arr(d(0), "b") == Seq(101.0))
     assert(arr(d(1), "a") == Seq(2.0, 2.0) && arr(d(1), "b") == Seq(102.0))
+    assert(arr(d(2), "a") == Seq(3.0, 2.0) && arr(d(2), "b") == Seq(103.0))
   }
 
   test("fused payload: a tiny steady-state trigger runs ONE Spark job total") {
@@ -474,16 +466,18 @@ class StreamingJobSpec extends SparkSpec {
           Seq(1L, 3L, 5L))
       }
 
-      // parity: the same streams with the fusion off are byte-identical
+      // parity: the same streams on the per-key frame path (maxRows=0
+      // turns off both the fused payload and the bounded collect) are
+      // byte-identical
       val out2 = Files.createTempDirectory("graft-fusedoff").toString
-      spark.conf.set("spark.graft.stream.fusedPayload", "off")
+      spark.conf.set("spark.graft.stream.localAppend.maxRows", "0")
       try {
         val job2 = new StreamingJob(spark, NexusPlan.parse(template), out2, 0, StopMs)
         job2.processBatch("f144", msgs(0, 2))
         job2.processBatch("f144", msgs(2, 3))
         job2.processBatch("f144", msgs(5, 2, beyond = true))
         job2.finish()
-      } finally spark.conf.unset("spark.graft.stream.fusedPayload")
+      } finally spark.conf.unset("spark.graft.stream.localAppend.maxRows")
       keys.foreach { k =>
         val a = spark.read.parquet(s"$out/data/$k/data").orderBy("row").collect()
         val b = spark.read.parquet(s"$out2/data/$k/data").orderBy("row").collect()
