@@ -2,21 +2,19 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 
-import graft.operators.{StreamKernel, WriterModules}
-import graft.operators.WriterModules.ModuleConfig
 import graft.plans.NexusPlan
-import graft.sinks.NexusSink
 import graft.sources.Fixtures
+import graft.streaming.StreamingJob
 
 /** Batch driver — the Spark analog of `apps/file-maker.cpp:82-149`: a
   * nexus_structure plan + JSON message fixtures → populated output tree, no
-  * Kafka. Drives the identical per-stream pipeline the streaming driver
-  * uses: route (F1) → consecutive dedup (F4) → strict window with pre-start
-  * buffering (F2/F3/F6) → writer-module transform (W1-W8) → sink append →
-  * finals at close.
+  * Kafka. Like file-maker, which loads its fixtures into a stub consumer and
+  * drives the service's own file-writing pipeline, it feeds each schema's
+  * fixture frame to a [[StreamingJob]] as one micro-batch and finishes the
+  * job: route, dedup, window, module transform, append and close-time
+  * aggregates are the streaming service's, not a second copy.
   *
   * Default window [10 s, 15 s] matches file-maker (`apps/file-maker.cpp:131-133`).
   */
@@ -28,60 +26,17 @@ object FileMaker {
       messagesJson: String,
       outDir: String,
       startMs: Long = 10000,
-      stopMs: Long = 15000
+      stopMs: Long = 15000,
+      emitHdf5: Option[String] = None
   ): NexusPlan.Plan = {
-    val plan    = NexusPlan.parse(nexusJson)
-    val frames  = Fixtures.messageFrames(spark, messagesJson)
-    val sink    = new NexusSink(outDir)
-    val startNs = startMs * 1000000L
-    val stopNs  = stopMs * 1000000L
-
-    sink.create(plan)
-
-    val unitsByStream = scala.collection.mutable.Map.empty[String, Map[String, String]]
-    val attrsByStream = scala.collection.mutable.Map.empty[String, Map[String, String]]
-    val finals        = scala.collection.mutable.Map.empty[String, Map[String, DataFrame]]
-
-    plan.streams.foreach { s =>
-      WriterModules.registry.get(s.module).foreach { module =>
-        frames.get(s.module).foreach { df =>
-          val cfg = ModuleConfig(s.config)
-          // F1 route: (topic, source) — schema dispatch is the frame split
-          val routed = StreamKernel.routeSource(df,
-            "topic" -> s.topic, "source_name" -> s.source)
-          // F4 dedup on the extractor timestamp, whole stream, arrival order
-          val deduped = StreamKernel.dedupConsecutive(
-            routed, Seq("source_name"), "offset", "ts",
-            acceptRepeats = module.acceptRepeats)
-          // F2/F3/F6 window + buffering + strict finish
-          val windowed = StreamKernel.windowWithBuffer(
-            deduped, Seq("source_name"), "offset", "ts", startNs, stopNs,
-            emitBuffered = module.emitBuffered)
-          val key = streamKey(s)
-          module.tables(windowed, cfg).foreach { case (table, out) =>
-            sink.append(key, table, out)
-          }
-          // running aggregates include buffered writes — f144's writeImpl
-          // updates min/max/sum regardless of is_buffered (f144_Writer.cpp:259-276)
-          val fin = module.finals(windowed, cfg)
-          if (fin.nonEmpty) finals(key) = fin
-          unitsByStream(key) = module.units(cfg)
-          attrsByStream(key) = module.groupAttrs(cfg)
-        }
-      }
+    val plan = NexusPlan.parse(nexusJson)
+    val job  = new StreamingJob(spark, plan, outDir, startMs, stopMs)
+    Fixtures.messageFrames(spark, messagesJson).foreach { case (schemaId, frame) =>
+      job.processBatch(schemaId, frame)
     }
-
-    sink.close(plan, startMs, stopMs, unitsByStream.toMap, finals.toMap,
-      attrsByStream.toMap)
+    job.finish(emitHdf5)
     plan
   }
-
-  /** Companion (synthesized) streams share the parent's path — suffix them
-    * by module id the way the reference writes companion datasets into the
-    * same group (`src/JobCreator.cpp:162-168`).
-    */
-  private def streamKey(s: NexusPlan.Stream): String =
-    if (s.synthesized) s"${s.path}/${s.module}" else s.path
 
   def main(args: Array[String]): Unit = {
     val Array(nexusPath, messagesPath, outDir) = args.take(3)
@@ -89,9 +44,9 @@ object FileMaker {
     run(spark,
       Files.readString(Paths.get(nexusPath)),
       Files.readString(Paths.get(messagesPath)),
-      outDir)
-    // optional 4th arg: emit a native HDF5 file from the populated tree
-    args.lift(3).foreach(h5 => graft.sinks.Hdf5Export.export(spark, outDir, h5))
+      outDir,
+      // optional 4th arg: emit a native HDF5 file from the populated tree
+      emitHdf5 = args.lift(3))
     spark.stop()
   }
 }

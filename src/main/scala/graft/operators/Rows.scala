@@ -26,16 +26,6 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   */
 object Rows {
 
-  /** Returns `df` with `rowCol` = consecutive ids `start, start+1, …` in
-    * ascending `orderCol` order; replaces `rowCol` if it already exists
-    * (it may equal `orderCol` — renumbering sparse sort keys in place).
-    * Optionally also adds `weight = (weightCol, outCol, wStart)`: `outCol` =
-    * `wStart` + exclusive running sum of `weightCol` in the same order (the
-    * ev44 `EventsWritten` shift, `ev44_Writer.cpp:118-126`).
-    *
-    * Eager: runs the small stats job at call time; the returned frame's
-    * final pass stays lazy and reuses the shuffle output.
-    */
   /** Below this size (when the caller knows it) the global sort runs as
     * `coalesce(1)` + in-partition sort instead of a range exchange — one
     * task, and crucially NO RangePartitioner boundary sampling, which is
@@ -45,12 +35,28 @@ object Rows {
     * single task is BYTES (wide-array rows run ~16 KB — a rows-only bound
     * routed 160 MB triggers into one task, −16% at 20k-msg triggers), so
     * a byte hint, when the caller has one, both relaxes the row bound for
-    * tiny rows and vetoes the small path for wide ones. Overridable via
-    * spark.graft.rows.smallRenumber{,Bytes}.
+    * tiny rows and vetoes the small path for wide ones. The byte bound is
+    * overridable via spark.graft.rows.smallRenumberBytes.
     */
-  private val SmallRenumberDefault      = 65536L
+  private val SmallRenumberRows         = 65536L
   private val SmallRenumberBytesDefault = 32L * 1024 * 1024
 
+  /** Returns `df` with `rowCol` = consecutive ids `start, start+1, …` in
+    * ascending `orderCol` order; replaces `rowCol` if it already exists
+    * (it may equal `orderCol` — renumbering sparse sort keys in place).
+    * Optionally also adds `weight = (weightCol, outCol, wStart)`: `outCol` =
+    * `wStart` + exclusive running sum of `weightCol` in the same order (the
+    * ev44 `EventsWritten` shift, `ev44_Writer.cpp:118-126`).
+    *
+    * `sizeHint` is the caller's row-count estimate (exact or upper bound)
+    * and `byteHint` its byte estimate, used ONLY to shape the exchange —
+    * small batches skip the range sampling entirely, large ones size their
+    * partition count from the hint (~256k rows each) instead of inheriting
+    * the session shuffle width. Ids are exact regardless of hint quality.
+    *
+    * Eager: runs the small stats job at call time; the returned frame's
+    * final pass stays lazy and reuses the shuffle output.
+    */
   def indexed(
       df: DataFrame,
       orderCol: String,
@@ -59,47 +65,8 @@ object Rows {
       weight: Option[(String, String, Long)] = None,
       sizeHint: Long = -1L,
       byteHint: Long = -1L
-  ): DataFrame =
-    core(df, orderCol, rowCol, start, weight, sizeHint, byteHint,
-      needCount = false)._1
-
-  /** [[indexed]] plus the exact total row count — free, because the job-1
-    * prefix-sum stats already hold it. Callers that would otherwise
-    * `count()` the result (one more job over the same data) should use
-    * this instead (the streaming write path does: the count gates
-    * empty-table skips and sizes the append shaping).
-    *
-    * `sizeHint` is the caller's row-count estimate (exact or upper
-    * bound), used ONLY to shape the exchange — small batches skip the
-    * range sampling entirely, large ones size their partition count from
-    * the hint (~256k rows each) instead of inheriting the session shuffle
-    * width. Ids are exact regardless of hint quality.
-    */
-  def indexedCounted(
-      df: DataFrame,
-      orderCol: String,
-      rowCol: String = "row",
-      start: Long = 0L,
-      weight: Option[(String, String, Long)] = None,
-      sizeHint: Long = -1L,
-      byteHint: Long = -1L
-  ): (DataFrame, Long) =
-    core(df, orderCol, rowCol, start, weight, sizeHint, byteHint,
-      needCount = true)
-
-  private def core(
-      df: DataFrame,
-      orderCol: String,
-      rowCol: String,
-      start: Long,
-      weight: Option[(String, String, Long)],
-      sizeHint: Long,
-      byteHint: Long,
-      needCount: Boolean
-  ): (DataFrame, Long) = {
+  ): DataFrame = {
     val conf     = df.sparkSession.conf
-    val rowsMax  = conf
-      .get("spark.graft.rows.smallRenumber", SmallRenumberDefault.toString).toLong
     val bytesMax = conf
       .get("spark.graft.rows.smallRenumberBytes", SmallRenumberBytesDefault.toString).toLong
     // DRIVER fast path: a frame that is already a LocalRelation (buffered
@@ -115,7 +82,7 @@ object Rows {
     type LR = org.apache.spark.sql.catalyst.plans.logical.LocalRelation
     val localRel: Option[LR] = df.queryExecution.analyzed match {
       case l: LR => Some(l)
-      case _ if sizeHint < 0 || sizeHint <= rowsMax =>
+      case _ if sizeHint < 0 || sizeHint <= SmallRenumberRows =>
         df.queryExecution.optimizedPlan match {
           case l: LR => Some(l)
           case _     => None
@@ -127,8 +94,8 @@ object Rows {
     // gates: integral order column; within the small-renumber row bound
     // (a LARGE local frame should re-enter the distributed world here,
     // not anchor a driver-side pipeline); the wide-row byte veto applies
-    // exactly as it does to the distributed small path — same conf keys
-    if (localRows >= 0 && localRows <= rowsMax &&
+    // exactly as it does to the distributed small path — same bounds
+    if (localRows >= 0 && localRows <= SmallRenumberRows &&
       !(byteHint >= 0 && byteHint > bytesMax) &&
       oField.exists(f =>
         f.dataType == LongType || f.dataType == org.apache.spark.sql.types.IntegerType)) {
@@ -143,15 +110,14 @@ object Rows {
         val stampedRows = stampRows(
           ext.sortBy(_.getAs[Number](oIdx).longValue()).iterator,
           rowIdx, wIdx, start, weight.map(_._3).getOrElse(0L)).toSeq
-        return (df.sparkSession.createDataFrame(stampedRows.asJava, outSchema),
-          ext.length.toLong)
+        return df.sparkSession.createDataFrame(stampedRows.asJava, outSchema)
       }
     }
     // with a byte hint the byte bound decides (rows only guard sort CPU);
     // without one, the conservative row bound stands alone
     val small =
       if (byteHint >= 0) sizeHint >= 0 && sizeHint <= (1L << 20) && byteHint <= bytesMax
-      else sizeHint >= 0 && sizeHint <= rowsMax
+      else sizeHint >= 0 && sizeHint <= SmallRenumberRows
     val sorted =
       if (small)
         df.coalesce(1).sortWithinPartitions(col(orderCol))
@@ -170,11 +136,11 @@ object Rows {
     val rdd = sorted.rdd
     // job 1: per-partition counts (+ weight sums) — O(numPartitions) longs.
     // A single-partition frame needs no prefix sums at all: partition 0
-    // stamps from `start`/`wStart` directly, so when the caller doesn't
-    // need the total either, the stats job is skipped entirely (the
-    // streaming per-trigger path: one job saved per renumbered table).
+    // stamps from `start`/`wStart` directly, so the stats job is skipped
+    // entirely (the streaming per-trigger path: one job saved per
+    // renumbered table).
     val stats: Array[(Int, Long, Long)] =
-      if (small && !needCount) Array((0, -1L, -1L))
+      if (small) Array((0, -1L, -1L))
       else rdd
         .mapPartitionsWithIndex { (pid, it) =>
           var n = 0L; var w = 0L
@@ -201,9 +167,7 @@ object Rows {
     val stamped = rdd.mapPartitionsWithIndex { (pid, it) =>
       stampRows(it, rowIdx, wIdx, rowOffsets(pid), wOffsets(pid))
     }
-    val total =
-      if (small && !needCount) -1L else rowOffsets(stats.length) - start
-    (df.sparkSession.createDataFrame(stamped, outSchema), total)
+    df.sparkSession.createDataFrame(stamped, outSchema)
   }
 
   /** Output schema shared by both numbering paths: `rowCol` becomes (or

@@ -61,7 +61,7 @@ object WriterModules {
       lastCue: Long = 0L,
       /** message count of THIS batch (−1 unknown) — an exchange-shaping
         * hint only (small batches skip the range-sampling job in
-        * [[Rows.indexedCounted]]); never feeds row values.
+        * [[Rows.indexed]]); never feeds row values.
         */
       sizeHint: Long = -1L,
       /** total payload elements of THIS batch (−1 unknown), from the
@@ -128,13 +128,9 @@ object WriterModules {
       * fused aggregate carries.
       */
     def multiRowMessages: Boolean = false
-    /** scalar datasets written at job close (running aggregates). */
-    def finals(df: DataFrame, cfg: ModuleConfig): Map[String, DataFrame] = Map.empty
-    /** [[finals]] for the STREAMING close, where no message frame is in
-      * scope — the aggregates derive from the sink's own written tables
-      * instead (`read` loads one by name; every written row came through
-      * the kernel, so the values agree with the batch path's, computed
-      * over the STORED — i.e. dtype-cast — values). Default: none.
+    /** Scalar datasets written at job close (running aggregates), derived
+      * from the sink's own written tables: `read` loads one by name, so the
+      * aggregates describe the STORED (dtype-cast) values. Default: none.
       */
     def sinkFinals(read: String => DataFrame, cfg: ModuleConfig): Map[String, DataFrame] =
       Map.empty
@@ -200,16 +196,6 @@ object WriterModules {
     override def plannedCueCount(cfg: ModuleConfig, cur: Cursor, rows: Long): Option[Long] =
       cfg.long("cue_interval").filter(_ > 0)
         .map(unitGridCueCount(cur.lastCue, cur.rowStart, rows, _))
-    override def finals(df: DataFrame, cfg: ModuleConfig): Map[String, DataFrame] =
-      if (cfg.bool("meta_data").getOrElse(true)) {
-        // aggregate the STORED values (post dtype cast, like tables() and
-        // sinkFinals): with "type": "int" the raw decoded 3.7 is written
-        // as 3 — meta must describe what the file holds
-        val v = col("value").cast(cfg.dtype("double"))
-        Map("meta" -> df.agg(
-          min(v).as("minimum_value"), max(v).as("maximum_value"),
-          avg(v).as("average_value"), count(lit(1)).as("num_values")))
-      } else Map.empty
     override def sinkFinals(read: String => DataFrame, cfg: ModuleConfig): Map[String, DataFrame] =
       if (cfg.bool("meta_data").getOrElse(true))
         Map("meta" -> read("data").agg(
@@ -461,9 +447,6 @@ object WriterModules {
       val cue = hits.toSeq.toDF("row", "cue_index", "cue_timestamp_zero")
       Map("events" -> events, "index" -> index, "cue" -> cue)
     }
-    override def finals(df: DataFrame, cfg: ModuleConfig): Map[String, DataFrame] =
-      Map("meta" -> df.agg(
-        coalesce(sum(size(col("time_of_flight"))), lit(0L)).as("events")))
     /** total events = the exploded events table's row count */
     override def sinkFinals(read: String => DataFrame, cfg: ModuleConfig): Map[String, DataFrame] =
       Map("meta" -> read("events").agg(count(lit(1)).as("events")))

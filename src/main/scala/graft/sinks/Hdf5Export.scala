@@ -261,45 +261,29 @@ object Hdf5Export {
     }
   }
 
-  /** Numeric spill codec: fixed-width little-endian values, chunked. */
-  private final class NumSpiller(spill: Spill, elemBytes: Int) {
-    private var out: java.io.DataOutputStream  = null
-    private var path: java.nio.file.Path       = null
-    private var total = 0L
-    def spilled: Boolean = path != null
-    def write(encode: java.nio.ByteBuffer => Unit, n: Int): Unit = {
-      if (out == null) {
-        path = spill.newFile()
-        out = new java.io.DataOutputStream(
-          new java.io.BufferedOutputStream(Files.newOutputStream(path), 1 << 16))
-      }
-      val bb = java.nio.ByteBuffer.allocate(n * elemBytes)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      encode(bb)
-      out.write(bb.array(), 0, bb.position())
-      total += n
-    }
-    /** Close and return (path, value count) for read-back. */
-    def finish(): (java.nio.file.Path, Long) = { out.close(); (path, total) }
-    /** Chunked read-back of the raw little-endian values. */
-    def readBack(decode: (java.nio.ByteBuffer, Int) => DataValue): Iterator[DataValue] = {
-      val (p, n) = (path, total)
-      new Iterator[DataValue] {
-        private val in = new java.io.DataInputStream(
-          new java.io.BufferedInputStream(Files.newInputStream(p), 1 << 16))
-        private var read = 0L
-        def hasNext: Boolean = { val h = read < n; if (!h) in.close(); h }
-        def next(): DataValue = {
-          val k     = math.min(spillChunkValues.toLong, n - read).toInt
-          val bytes = new Array[Byte](k * elemBytes)
-          in.readFully(bytes)
-          read += k
-          decode(java.nio.ByteBuffer.wrap(bytes)
-            .order(java.nio.ByteOrder.LITTLE_ENDIAN), k)
-        }
-      }
-    }
+  /** Opens a new spill file of the export for sequential writing. */
+  private def spillOut(spill: Spill): (java.nio.file.Path, java.io.DataOutputStream) = {
+    val p = spill.newFile()
+    (p, new java.io.DataOutputStream(
+      new java.io.BufferedOutputStream(Files.newOutputStream(p), 1 << 16)))
   }
+
+  /** Chunked read-back of `n` spilled values: each `next` decodes at most
+    * [[spillChunkValues]] of them from the stream with `read(in, k)`.
+    */
+  private def readChunks(p: java.nio.file.Path, n: Long)(
+      read: (java.io.DataInputStream, Int) => DataValue): Iterator[DataValue] =
+    new Iterator[DataValue] {
+      private val in = new java.io.DataInputStream(
+        new java.io.BufferedInputStream(Files.newInputStream(p), 1 << 16))
+      private var done = 0L
+      def hasNext: Boolean = { val h = done < n; if (!h) in.close(); h }
+      def next(): DataValue = {
+        val k = math.min(spillChunkValues.toLong, n - done).toInt
+        done += k
+        read(in, k)
+      }
+    }
 
   /** Every exportable column of one table from ONE `toLocalIterator`
     * pass: each row is demuxed into per-column builders; string columns
@@ -329,169 +313,106 @@ object Hdf5Export {
       def result(): Option[DataValue]
     }
 
-    /** Fixed-width numeric builders: a primitive chunk array plus the
-      * shared [[NumSpiller]]; at most one chunk resident per column. The
-      * spill path re-reads the temp file chunk-wise at emission (chunk
-      * boundaries need not align to 2-D row widths — the writer
-      * concatenates chunk bytes and derives the dataspace from the TOTAL
-      * value count). Duplicated per type to keep the per-value hot path
-      * box-free.
+    /** Fixed-width numeric column builder for one element type: each
+      * typed put writes straight into a little-endian chunk buffer, so at
+      * most one chunk is resident per column and no value is boxed. A
+      * full chunk spills its bytes as they are; `result()` decodes a chunk
+      * into its typed array with one bulk get, re-reading spilled chunks
+      * at emission. Chunk boundaries need not align to 2-D row widths —
+      * the writer concatenates chunk bytes and derives the dataspace from
+      * the TOTAL value count.
       */
-    class LongBase extends Acc {
+    final class NumAcc(elem: DataType) extends Acc {
+      private val width = elem.defaultSize
       // start small, grow geometrically to the spill ceiling: tiny
       // tables (the common many-stream export) must not pay an 8 MiB
       // allocation floor per column
-      private var buf = new Array[Long](math.min(1024, spillChunkValues))
-      protected var n = 0
-      private val sp  = new NumSpiller(spill, 8)
-      private def enc(bb: java.nio.ByteBuffer): Unit =
-        { var i = 0; while (i < n) { bb.putLong(buf(i)); i += 1 } }
-      final def put(v: Long): Unit = {
-        if (n == buf.length && n < spillChunkValues)
-          buf = java.util.Arrays.copyOf(buf,
-            math.min(spillChunkValues, buf.length * 2))
-        buf(n) = v; n += 1
-        noteResident(n.toLong)
-        if (n == spillChunkValues) { sp.write(enc, n); n = 0 }
+      private var buf = chunk(math.min(1024, spillChunkValues))
+      private var n   = 0
+      private var path: java.nio.file.Path      = null
+      private var out: java.io.DataOutputStream = null
+      private var total = 0L
+      private def chunk(values: Int): java.nio.ByteBuffer =
+        java.nio.ByteBuffer.allocate(values * width).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      private def room(): Unit = if (!buf.hasRemaining) {
+        val grown = chunk(math.min(spillChunkValues, n * 2))
+        buf.flip()
+        buf = grown.put(buf)
       }
-      def add(r: Row, i: Int): Unit = put(if (r.isNullAt(i)) 0L else r.getLong(i))
-      def result(): Option[DataValue] =
-        if (!sp.spilled)
-          Some(streamed(I64Data(Array.empty[Long]),
-            I64Data(java.util.Arrays.copyOf(buf, n))))
-        else {
-          if (n > 0) { sp.write(enc, n); n = 0 }
-          sp.finish()
-          Some(StreamedData(() => Iterator(I64Data(Array.empty[Long])) ++
-            sp.readBack((bb, k) =>
-              { val xs = new Array[Long](k); bb.asLongBuffer().get(xs); I64Data(xs) })))
+      private def filled(): Unit = {
+        n += 1
+        noteResident(n.toLong)
+        if (n == spillChunkValues) spillChunk()
+      }
+      private def spillChunk(): Unit = {
+        if (out == null) { val (p, o) = spillOut(spill); path = p; out = o }
+        out.write(buf.array(), 0, buf.position())
+        total += n
+        buf.clear()
+        n = 0
+      }
+      def putLong(v: Long): Unit     = { room(); buf.putLong(v); filled() }
+      def putInt(v: Int): Unit       = { room(); buf.putInt(v); filled() }
+      def putShort(v: Short): Unit   = { room(); buf.putShort(v); filled() }
+      def putDouble(v: Double): Unit = { room(); buf.putDouble(v); filled() }
+      def putFloat(v: Float): Unit   = { room(); buf.putFloat(v); filled() }
+      /** one element of an array cell (already boxed by `Row.getSeq`) */
+      def putBoxed(x: Any): Unit = elem match {
+        case LongType    => putLong(x.asInstanceOf[Long])
+        case IntegerType => putInt(x.asInstanceOf[Int])
+        case ShortType   => putShort(x.asInstanceOf[Short])
+        case DoubleType  => putDouble(x.asInstanceOf[Double])
+        case FloatType   => putFloat(x.asInstanceOf[Float])
+      }
+      /** fill value of a missing cell: NaN for floating, 0 for integral */
+      def putFill(): Unit = elem match {
+        case LongType    => putLong(0L)
+        case IntegerType => putInt(0)
+        case ShortType   => putShort(0)
+        case DoubleType  => putDouble(Double.NaN)
+        case FloatType   => putFloat(Float.NaN)
+      }
+      /** a scalar cell; NULL is written as 0 */
+      def add(r: Row, i: Int): Unit = {
+        val nul = r.isNullAt(i)
+        elem match {
+          case LongType    => putLong(if (nul) 0L else r.getLong(i))
+          case IntegerType => putInt(if (nul) 0 else r.getInt(i))
+          case ShortType   => putShort(if (nul) 0.toShort else r.getShort(i))
+          case DoubleType  => putDouble(if (nul) 0.0 else r.getDouble(i))
+          case FloatType   => putFloat(if (nul) 0.0f else r.getFloat(i))
         }
-    }
-    class IntBase extends Acc {
-      // start small, grow geometrically to the spill ceiling: tiny
-      // tables (the common many-stream export) must not pay an 8 MiB
-      // allocation floor per column
-      private var buf = new Array[Int](math.min(1024, spillChunkValues))
-      protected var n = 0
-      private val sp  = new NumSpiller(spill, 4)
-      private def enc(bb: java.nio.ByteBuffer): Unit =
-        { var i = 0; while (i < n) { bb.putInt(buf(i)); i += 1 } }
-      final def put(v: Int): Unit = {
-        if (n == buf.length && n < spillChunkValues)
-          buf = java.util.Arrays.copyOf(buf,
-            math.min(spillChunkValues, buf.length * 2))
-        buf(n) = v; n += 1
-        noteResident(n.toLong)
-        if (n == spillChunkValues) { sp.write(enc, n); n = 0 }
       }
-      def add(r: Row, i: Int): Unit = put(if (r.isNullAt(i)) 0 else r.getInt(i))
-      def result(): Option[DataValue] =
-        if (!sp.spilled)
-          Some(streamed(I32Data(Array.empty[Int]),
-            I32Data(java.util.Arrays.copyOf(buf, n))))
+      /** `k` values of a little-endian buffer → one typed array */
+      private def decode(bb: java.nio.ByteBuffer, k: Int): DataValue = elem match {
+        case LongType    => val xs = new Array[Long](k); bb.asLongBuffer().get(xs); I64Data(xs)
+        case IntegerType => val xs = new Array[Int](k); bb.asIntBuffer().get(xs); I32Data(xs)
+        case ShortType   => val xs = new Array[Short](k); bb.asShortBuffer().get(xs); I16Data(xs)
+        case DoubleType  => val xs = new Array[Double](k); bb.asDoubleBuffer().get(xs); F64Data(xs)
+        case FloatType   => val xs = new Array[Float](k); bb.asFloatBuffer().get(xs); F32Data(xs)
+      }
+      def result(): Option[DataValue] = {
+        val seed = decode(chunk(0), 0)
+        if (path == null) { buf.flip(); Some(streamed(seed, decode(buf, n))) }
         else {
-          if (n > 0) { sp.write(enc, n); n = 0 }
-          sp.finish()
-          Some(StreamedData(() => Iterator(I32Data(Array.empty[Int])) ++
-            sp.readBack((bb, k) =>
-              { val xs = new Array[Int](k); bb.asIntBuffer().get(xs); I32Data(xs) })))
+          if (n > 0) spillChunk()
+          out.close()
+          Some(StreamedData(() => Iterator(seed) ++ readChunks(path, total) { (in, m) =>
+            val c = chunk(m)
+            in.readFully(c.array())
+            decode(c, m)
+          }))
         }
-    }
-    class ShortBase extends Acc {
-      // start small, grow geometrically to the spill ceiling: tiny
-      // tables (the common many-stream export) must not pay an 8 MiB
-      // allocation floor per column
-      private var buf = new Array[Short](math.min(1024, spillChunkValues))
-      protected var n = 0
-      private val sp  = new NumSpiller(spill, 2)
-      private def enc(bb: java.nio.ByteBuffer): Unit =
-        { var i = 0; while (i < n) { bb.putShort(buf(i)); i += 1 } }
-      final def put(v: Short): Unit = {
-        if (n == buf.length && n < spillChunkValues)
-          buf = java.util.Arrays.copyOf(buf,
-            math.min(spillChunkValues, buf.length * 2))
-        buf(n) = v; n += 1
-        noteResident(n.toLong)
-        if (n == spillChunkValues) { sp.write(enc, n); n = 0 }
       }
+    }
+    /** Booleans are stored as int16 0/1. */
+    final class BoolAcc extends Acc {
+      private val b = new NumAcc(ShortType)
       def add(r: Row, i: Int): Unit =
-        put(if (r.isNullAt(i)) 0.toShort else r.getShort(i))
-      def result(): Option[DataValue] =
-        if (!sp.spilled)
-          Some(streamed(I16Data(Array.empty[Short]),
-            I16Data(java.util.Arrays.copyOf(buf, n))))
-        else {
-          if (n > 0) { sp.write(enc, n); n = 0 }
-          sp.finish()
-          Some(StreamedData(() => Iterator(I16Data(Array.empty[Short])) ++
-            sp.readBack((bb, k) =>
-              { val xs = new Array[Short](k); bb.asShortBuffer().get(xs); I16Data(xs) })))
-        }
+        b.putShort(if (!r.isNullAt(i) && r.getBoolean(i)) 1.toShort else 0.toShort)
+      def result(): Option[DataValue] = b.result()
     }
-    class DoubleBase extends Acc {
-      // start small, grow geometrically to the spill ceiling: tiny
-      // tables (the common many-stream export) must not pay an 8 MiB
-      // allocation floor per column
-      private var buf = new Array[Double](math.min(1024, spillChunkValues))
-      protected var n = 0
-      private val sp  = new NumSpiller(spill, 8)
-      private def enc(bb: java.nio.ByteBuffer): Unit =
-        { var i = 0; while (i < n) { bb.putDouble(buf(i)); i += 1 } }
-      final def put(v: Double): Unit = {
-        if (n == buf.length && n < spillChunkValues)
-          buf = java.util.Arrays.copyOf(buf,
-            math.min(spillChunkValues, buf.length * 2))
-        buf(n) = v; n += 1
-        noteResident(n.toLong)
-        if (n == spillChunkValues) { sp.write(enc, n); n = 0 }
-      }
-      def add(r: Row, i: Int): Unit = put(if (r.isNullAt(i)) 0.0 else r.getDouble(i))
-      def result(): Option[DataValue] =
-        if (!sp.spilled)
-          Some(streamed(F64Data(Array.empty[Double]),
-            F64Data(java.util.Arrays.copyOf(buf, n))))
-        else {
-          if (n > 0) { sp.write(enc, n); n = 0 }
-          sp.finish()
-          Some(StreamedData(() => Iterator(F64Data(Array.empty[Double])) ++
-            sp.readBack((bb, k) =>
-              { val xs = new Array[Double](k); bb.asDoubleBuffer().get(xs); F64Data(xs) })))
-        }
-    }
-    class FloatBase extends Acc {
-      private var buf = new Array[Float](math.min(1024, spillChunkValues))
-      protected var n = 0
-      private val sp  = new NumSpiller(spill, 4)
-      private def enc(bb: java.nio.ByteBuffer): Unit =
-        { var i = 0; while (i < n) { bb.putFloat(buf(i)); i += 1 } }
-      final def put(v: Float): Unit = {
-        if (n == buf.length && n < spillChunkValues)
-          buf = java.util.Arrays.copyOf(buf,
-            math.min(spillChunkValues, buf.length * 2))
-        buf(n) = v; n += 1
-        noteResident(n.toLong)
-        if (n == spillChunkValues) { sp.write(enc, n); n = 0 }
-      }
-      def add(r: Row, i: Int): Unit = put(if (r.isNullAt(i)) 0.0f else r.getFloat(i))
-      def result(): Option[DataValue] =
-        if (!sp.spilled)
-          Some(streamed(F32Data(Array.empty[Float]),
-            F32Data(java.util.Arrays.copyOf(buf, n))))
-        else {
-          if (n > 0) { sp.write(enc, n); n = 0 }
-          sp.finish()
-          Some(StreamedData(() => Iterator(F32Data(Array.empty[Float])) ++
-            sp.readBack((bb, k) =>
-              { val xs = new Array[Float](k); bb.asFloatBuffer().get(xs); F32Data(xs) })))
-        }
-    }
-    final class BoolAcc extends ShortBase {
-      override def add(r: Row, i: Int): Unit =
-        put(if (!r.isNullAt(i) && r.getBoolean(i)) 1.toShort else 0.toShort)
-    }
-    /** Strings spill as 4-byte length + UTF-8 bytes (variable width —
-      * `NumSpiller` only carries the chunking; width is irrelevant to it).
-      */
+    /** Strings spill as 4-byte length + UTF-8 bytes (variable width). */
     final class StrAcc extends Acc {
       private val b    = mutable.ArrayBuffer.empty[String]
       private var maxW = 1
@@ -506,11 +427,7 @@ object Hdf5Export {
         if (b.length == spillChunkValues) flushChunk()
       }
       private def flushChunk(): Unit = {
-        if (out == null) {
-          path = spill.newFile()
-          out = new java.io.DataOutputStream(
-            new java.io.BufferedOutputStream(Files.newOutputStream(path), 1 << 16))
-        }
+        if (out == null) { val (p, o) = spillOut(spill); path = p; out = o }
         b.foreach { s =>
           val bytes = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
           out.writeInt(bytes.length)
@@ -526,28 +443,18 @@ object Hdf5Export {
         else {
           if (b.nonEmpty) flushChunk()
           out.close()
-          val (p, n, w) = (path, total, maxW)
-          Some(StreamedData({ () =>
-            Iterator(StrData(Array.empty[String])) ++ new Iterator[DataValue] {
-              private val in = new java.io.DataInputStream(
-                new java.io.BufferedInputStream(Files.newInputStream(p), 1 << 16))
-              private var read = 0L
-              def hasNext: Boolean = { val h = read < n; if (!h) in.close(); h }
-              def next(): DataValue = {
-                val k  = math.min(spillChunkValues.toLong, n - read).toInt
-                val xs = new Array[String](k)
-                var i  = 0
-                while (i < k) {
-                  val bytes = new Array[Byte](in.readInt())
-                  in.readFully(bytes)
-                  xs(i) = new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
-                  i += 1
-                }
-                read += k
-                StrData(xs)
+          Some(StreamedData(() => Iterator(StrData(Array.empty[String])) ++
+            readChunks(path, total) { (in, k) =>
+              val xs = new Array[String](k)
+              var i  = 0
+              while (i < k) {
+                val bytes = new Array[Byte](in.readInt())
+                in.readFully(bytes)
+                xs(i) = new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
+                i += 1
               }
-            }
-          }, strWidth = w))
+              StrData(xs)
+            }, strWidth = maxW))
         }
     }
     /** Flat 2-D accumulator; bails out on ragged widths. A NULL cell
@@ -557,34 +464,11 @@ object Hdf5Export {
       * raggedizing the whole dataset away.
       */
     final class ArrAcc(elem: DataType) extends Acc {
-      private var inner: Acc = null
+      private var inner: NumAcc = null // created at the first non-null cell
       private var w       = -1
       private var ragged  = false
       private var pendingNullRows = 0L // nulls seen before the width is known
-      private def mk(): Unit = if (inner == null) inner = elem match {
-        case DoubleType  => new DoubleBase
-        case FloatType   => new FloatBase
-        case LongType    => new LongBase
-        case IntegerType => new IntBase
-        case ShortType   => new ShortBase
-        case _           => null
-      }
-      private def putOne(x: Any): Unit = inner match {
-        case a: DoubleBase => a.put(x.asInstanceOf[Double])
-        case a: FloatBase  => a.put(x.asInstanceOf[Float])
-        case a: LongBase   => a.put(x.asInstanceOf[Long])
-        case a: IntBase    => a.put(x.asInstanceOf[Int])
-        case a: ShortBase  => a.put(x.asInstanceOf[Short])
-        case _             => ragged = true
-      }
-      private def putFillRow(): Unit = inner match {
-        case a: DoubleBase => var j = 0; while (j < w) { a.put(Double.NaN); j += 1 }
-        case a: FloatBase  => var j = 0; while (j < w) { a.put(Float.NaN); j += 1 }
-        case a: LongBase   => var j = 0; while (j < w) { a.put(0L); j += 1 }
-        case a: IntBase    => var j = 0; while (j < w) { a.put(0); j += 1 }
-        case a: ShortBase  => var j = 0; while (j < w) { a.put(0.toShort); j += 1 }
-        case _             => ragged = true
-      }
+      private def putFillRow(): Unit = { var j = 0; while (j < w) { inner.putFill(); j += 1 } }
       def add(r: Row, i: Int): Unit = if (!ragged) {
         if (r.isNullAt(i)) {
           if (w < 0) pendingNullRows += 1
@@ -593,16 +477,15 @@ object Hdf5Export {
           val s = r.getSeq[Any](i)
           if (w < 0) {
             w = s.length
-            mk()
-            if (inner == null) { ragged = true; return }
+            inner = new NumAcc(elem)
             while (pendingNullRows > 0) { putFillRow(); pendingNullRows -= 1 }
           }
           if (s.length != w) ragged = true
-          else s.foreach(putOne)
+          else s.foreach(inner.putBoxed)
         }
       }
       def result(): Option[DataValue] =
-        if (ragged || w <= 0 || inner == null) None
+        if (ragged || w <= 0) None
         else inner.result().map {
           case sd: StreamedData => sd.copy(rowWidth = w)
           case other            => other
@@ -612,11 +495,8 @@ object Hdf5Export {
     val fields = df.schema.fields.filterNot(_.name == "row").toSeq
     val used: Seq[(StructField, Acc)] = fields.flatMap { f =>
       val acc: Option[Acc] = f.dataType match {
-        case LongType    => Some(new LongBase)
-        case IntegerType => Some(new IntBase)
-        case ShortType   => Some(new ShortBase)
-        case DoubleType  => Some(new DoubleBase)
-        case FloatType   => Some(new FloatBase)
+        case LongType | IntegerType | ShortType | DoubleType | FloatType =>
+          Some(new NumAcc(f.dataType))
         case BooleanType => Some(new BoolAcc)
         case StringType  => Some(new StrAcc)
         case ArrayType(et @ (DoubleType | FloatType | LongType | IntegerType |

@@ -272,7 +272,7 @@ class StreamingJob(
       // ~2 ms of empty-task launch per partition per stage. The
       // renumber exchanges — the one per-trigger shuffle whose width
       // should track DATA size — size themselves from the batch hint
-      // (Rows.indexedCounted) and ignore this narrow default.
+      // (Rows.indexed) and ignore this narrow default.
       //
       // The set/restore pair is guarded by a GLOBAL lock, not this job's
       // monitor: two StreamingJobs sharing one session would otherwise
@@ -689,9 +689,8 @@ class StreamingJob(
         streamKey(s) -> m.groupAttrs(ModuleConfig(s.config)))
     }.toMap
     // close-time final aggregates (f144 min/max/mean, ev44 event total —
-    // the reference writer modules emit these at setToIdle; the batch path
-    // computes them from the message frame, FileMaker.scala) derived here
-    // from the sink's own written tables, AFTER seeding so even untouched
+    // the reference writer modules emit these at setToIdle) derived from
+    // the sink's own written tables, AFTER seeding so even untouched
     // streams aggregate over their typed empty table
     val finals = plan.streams.flatMap { s =>
       WriterModules.registry.get(s.module).flatMap { m =>

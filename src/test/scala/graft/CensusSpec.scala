@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Knob and tool census of `src/main`: every `spark.graft.*` key the
   * engine reads is documented in README's "Deployment confs" table, every
   * `SPARK_GRAFT_*` env var in its "Verify / bench" section (and nothing
-  * else is), and every main builds its session through the one builder
-  * in `Graft.session`. Run from the repository root.
+  * else is), every main builds its session through the one builder in
+  * `Graft.session`, and every output tree is written by the one pipeline
+  * in `StreamingJob`. Run from the repository root.
   */
 class CensusSpec extends AnyFunSuite {
 
@@ -53,5 +54,12 @@ class CensusSpec extends AnyFunSuite {
       case (p, src) if src.contains("SparkSession.builder") => p.toString
     }
     assert(builders == Seq("src/main/scala/graft/core/Graft.scala"), builders)
+  }
+
+  test("new NexusSink( appears in exactly one src/main file") {
+    val sinks = mainSources.collect {
+      case (p, src) if src.contains("new NexusSink(") => p.toString
+    }
+    assert(sinks == Seq("src/main/scala/graft/streaming/StreamingJob.scala"), sinks)
   }
 }

@@ -145,6 +145,8 @@ class FileMakerSpec extends SparkSpec {
     assert(longs(idx, "event_time_zero") ==
       Seq(10200000000L, 10210000000L, 10220000000L, 10230000000L))
     assert(longs(idx, "event_index") == Seq(0L, 4L, 8L, 12L))
+    // exploded tables carry dense row ids, as the streaming service writes them
+    assert(longs(ev, "row") == (0L until 16L) && longs(idx, "row") == (0L until 4L))
   }
 
   test("ad00 images: flattened values with shape, times") {
@@ -233,6 +235,8 @@ class FileMakerSpec extends SparkSpec {
     val td = read(dir, "entry/chopper_tdc/data").collect()
     assert(td.map(_.getAs[Long]("time")).toSeq ==
       Seq(13000000000L, 13000000007L, 13000000011L))
+    assert(se.map(_.getAs[Long]("row")).toSeq == (0L until 5L) &&
+      td.map(_.getAs[Long]("row")).toSeq == (0L until 3L))
   }
 
   test("repeated timestamps skipped (test_repeated_messages.py)") {

@@ -50,10 +50,10 @@ class RowsSpec extends SparkSpec {
     // driver fast path — this test pins the DISTRIBUTED small path
     val df = (0 until 2000).map(i => ((i * 7919) % 10007, i))
       .toDF("k", "payload").repartition(5)
-    val (out, n) = Rows.indexedCounted(df, "k", start = 3L, sizeHint = 2000L)
-    assert(n == 2000L)
+    val out = Rows.indexed(df, "k", start = 3L, sizeHint = 2000L)
     assert(out.rdd.getNumPartitions == 1)
     val rows = out.orderBy("row").collect()
+    assert(rows.length == 2000)
     assert(rows.map(_.getAs[Long]("row")).toSeq == (3L until 2003L))
     val ks = rows.map(_.getAs[Int]("k"))
     assert(ks.sameElements(ks.sorted))
@@ -77,14 +77,14 @@ class RowsSpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(l)
     try {
-      val (out, n) = Rows.indexedCounted(df, "k", start = 7L,
+      val out = Rows.indexed(df, "k", start = 7L,
         weight = Some(("w", "acc", 100L)), sizeHint = 3L)
       // the RESULT plan is still a LocalRelation — downstream flat
       // transforms keep folding into driver-side appends
       assert(out.queryExecution.optimizedPlan
         .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
-      assert(n == 3L)
       val rows = out.collect() // LocalTableScan: still no job
+      assert(rows.length == 3)
       // listener delivery is async: wait until the count is stable
       var prev = -1; var stable = 0
       while (stable < 3) {
