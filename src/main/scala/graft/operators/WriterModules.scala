@@ -1,10 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.json4s._
 
 import graft.functions.StableLong.{intDiv, stableLit}
+import graft.sinks.LocalParquet
 
 /** The per-stream transform operators — Spark re-expressions of the
   * reference's writer modules (`src/WriterModule/⋆`, SURVEY §2.5). Each turns
@@ -68,7 +71,9 @@ object WriterModules {
         * module's [[WriterModule.elementCountCol]] via the streaming
         * job's fused aggregate — lets the renumber bound its BYTES, not
         * just its row count (wide-array rows run ~16 KB; a rows-only
-        * bound routed 160 MB triggers into one task).
+        * bound routed 160 MB triggers into one task). When known it is
+        * exact, and ev44's cue chain takes the batch's event total from
+        * it instead of an aggregate job.
         */
       elemHint: Long = -1L) {
     /** crude batch payload bytes: 8 B/element + envelope per message. */
@@ -128,12 +133,40 @@ object WriterModules {
       * fused aggregate carries.
       */
     def multiRowMessages: Boolean = false
-    /** Scalar datasets written at job close (running aggregates), derived
-      * from the sink's own written tables: `read` loads one by name, so the
-      * aggregates describe the STORED (dtype-cast) values. Default: none.
+    /** Scalar datasets written at job close (running aggregates), folded
+      * on the driver over the sink's own written tables: `read` opens one
+      * by name with one row per row id, so the aggregates describe the
+      * STORED (dtype-cast) values once each, replay duplicates included.
+      * Each result is one row under its own schema. Default: none.
       */
-    def sinkFinals(read: String => DataFrame, cfg: ModuleConfig): Map[String, DataFrame] =
+    def sinkFinals(read: String => LocalParquet.Table, cfg: ModuleConfig): Map[String, Row] =
       Map.empty
+  }
+
+  /** Spark's ordering of one stored value type, as `min`/`max` apply it:
+    * floating NaN sorts above everything and -0.0 equals 0.0
+    * (`SQLOrderingUtil`), strings compare by their UTF-8 bytes.
+    */
+  private def sqlCompare(dt: DataType): (Any, Any) => Int = dt match {
+    case DoubleType => (a, b) =>
+      val (x, y) = (a.asInstanceOf[Double], b.asInstanceOf[Double])
+      if (x == y) 0 else java.lang.Double.compare(x, y)
+    case FloatType => (a, b) =>
+      val (x, y) = (a.asInstanceOf[Float], b.asInstanceOf[Float])
+      if (x == y) 0 else java.lang.Float.compare(x, y)
+    case _: StringType => (a, b) =>
+      java.util.Arrays.compareUnsigned(
+        a.asInstanceOf[String].getBytes(java.nio.charset.StandardCharsets.UTF_8),
+        b.asInstanceOf[String].getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    case _ => (a, b) => a.asInstanceOf[Comparable[Any]].compareTo(b)
+  }
+
+  /** A stored value as `avg` sums it: Spark's cast to double (a string
+    * that is no number throws, as the cast does under ANSI).
+    */
+  private def sqlDouble(v: Any): Double = v match {
+    case n: java.lang.Number => n.doubleValue()
+    case s: String           => s.toDouble
   }
 
   /** The one closed form behind every unit-increment cue grid (f144/ad00
@@ -196,12 +229,39 @@ object WriterModules {
     override def plannedCueCount(cfg: ModuleConfig, cur: Cursor, rows: Long): Option[Long] =
       cfg.long("cue_interval").filter(_ > 0)
         .map(unitGridCueCount(cur.lastCue, cur.rowStart, rows, _))
-    override def sinkFinals(read: String => DataFrame, cfg: ModuleConfig): Map[String, DataFrame] =
-      if (cfg.bool("meta_data").getOrElse(true))
-        Map("meta" -> read("data").agg(
-          min("value").as("minimum_value"), max("value").as("maximum_value"),
-          avg("value").as("average_value"), count(lit(1)).as("num_values")))
-      else Map.empty
+    /** min/max/avg/count of the stored values with Spark's aggregate
+      * rules: min and max in the stored dtype ([[sqlCompare]]; of equal
+      * values the first in row order stays), avg a double sum over the
+      * non-null values in row order (null when there are none),
+      * `num_values` every row.
+      */
+    override def sinkFinals(read: String => LocalParquet.Table, cfg: ModuleConfig): Map[String, Row] =
+      if (!cfg.bool("meta_data").getOrElse(true)) Map.empty
+      else {
+        val data = read("data")
+        val vt   = data.schema("value").dataType
+        val cmp  = sqlCompare(vt)
+        var lo, hi: Any = null
+        var sum  = 0.0
+        var nums = 0L
+        var n    = 0L
+        data.foreach(Seq("value")) { r =>
+          n += 1
+          if (!r.isNullAt(0)) {
+            val v = r.get(0)
+            if (lo == null || cmp(v, lo) < 0) lo = v
+            if (hi == null || cmp(v, hi) > 0) hi = v
+            sum += sqlDouble(v)
+            nums += 1
+          }
+        }
+        val schema = StructType(Seq(
+          StructField("minimum_value", vt), StructField("maximum_value", vt),
+          StructField("average_value", DoubleType),
+          StructField("num_values", LongType, nullable = false)))
+        val avg = if (nums == 0) null else sum / nums
+        Map("meta" -> new GenericRowWithSchema(Array(lo, hi, avg, n), schema))
+      }
   }
 
   /** ep01 connection state: (connection_status_time, connection_status)
@@ -323,8 +383,14 @@ object WriterModules {
         (col("events_written") + stableLit(cur.eventsWritten)).as("ea_prev"),
         (element_at(col("reference_time"), -1) +
           element_at(col("time_of_flight"), -1).cast("long")).as("cue_ts"))
+      // the batch's last cumulative event count and its message bound:
+      // from the kernel's exact counts when the cursor carries them
+      // (`elemHint` = the batch's events, 0 = nothing to cue), else one
+      // aggregate job
       val (maxEa, nMsgs) =
-        proj.agg(max("ea"), count(lit(1))).collect().head match {
+        if (cur.elemHint == 0) (Long.MinValue, 0L)
+        else if (cur.elemHint > 0) (cur.eventsWritten + cur.elemHint, cur.sizeHint)
+        else proj.agg(max("ea"), count(lit(1))).collect().head match {
           case r if r.isNullAt(0) => (Long.MinValue, 0L)
           case r                  => (r.getLong(0), r.getLong(1))
         }
@@ -340,10 +406,12 @@ object WriterModules {
       // sorted on the driver: the collect is already bounded by the
       // clamp above, and a Spark orderBy would add a range-sampling job
       // and a shuffle stage to every trigger
-      val cand = proj.filter(
-        intDiv(col("ea") - 1 - stableLit(L0), stableLit(interval)) >
-          intDiv(col("ea_prev") - 1 - stableLit(L0), stableLit(interval)))
-        .collect().sortBy(_.getLong(0)) // column 0 = row
+      val cand =
+        if (maxEa == Long.MinValue) Array.empty[org.apache.spark.sql.Row]
+        else proj.filter(
+          intDiv(col("ea") - 1 - stableLit(L0), stableLit(interval)) >
+            intDiv(col("ea_prev") - 1 - stableLit(L0), stableLit(interval)))
+          .collect().sortBy(_.getLong(0)) // column 0 = row
       Ev44.lastCueCandidates  = cand.length
       Ev44.lastCueFallbacks   = 0
       Ev44.lastWalkPartitions = 0
@@ -448,8 +516,12 @@ object WriterModules {
       Map("events" -> events, "index" -> index, "cue" -> cue)
     }
     /** total events = the exploded events table's row count */
-    override def sinkFinals(read: String => DataFrame, cfg: ModuleConfig): Map[String, DataFrame] =
-      Map("meta" -> read("events").agg(count(lit(1)).as("events")))
+    override def sinkFinals(read: String => LocalParquet.Table, cfg: ModuleConfig): Map[String, Row] = {
+      var n = 0L
+      read("events").foreach(Nil)(_ => n += 1)
+      Map("meta" -> new GenericRowWithSchema(Array(n),
+        StructType(Seq(StructField("events", LongType, nullable = false)))))
+    }
   }
 
   /** ad00 n-D image: flattened element array + shape per message

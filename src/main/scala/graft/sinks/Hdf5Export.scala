@@ -11,10 +11,10 @@ import org.json4s.jackson.JsonMethods
   * (manifest + tables) into one native `.h5` file via [[Hdf5Writer]] — the
   * "custom HDF5 sink" end of the pipeline. Runs driver-side single-writer,
   * exactly the discipline of the reference's writer thread
-  * (`src/Stream/MessageWriter.cpp:31-36`). Each table is scanned in ONE
-  * Spark action: a single `toLocalIterator` pass demuxes every row into
-  * per-column builders (string byte-widths and array-uniformity checks
-  * ride the same pass), so a k-column table costs one job, not k+.
+  * (`src/Stream/MessageWriter.cpp:31-36`). Each table is read once on the
+  * driver by [[LocalParquet]], with no Spark job: a single pass demuxes
+  * every row into per-column builders (string byte-widths and
+  * array-uniformity checks ride the same pass).
   *
   * Peak heap is BOUNDED: the writer streams the file through a
   * FileChannel, and each column builder holds at most [[spillChunkValues]]
@@ -36,14 +36,14 @@ object Hdf5Export {
   @volatile private[sinks] var spillChunkValues: Int = 1 << 20
   @volatile private[sinks] var maxResidentValues: Long = 0L
 
+  /** `spark` is unused: the export runs on the driver alone. */
   def export(spark: SparkSession, outDir: String, h5Path: String): Unit = {
     val spill = new Spill
-    try exportWith(spark, outDir, h5Path, spill)
+    try exportWith(outDir, h5Path, spill)
     finally spill.cleanup()
   }
 
-  private def exportWith(
-      spark: SparkSession, outDir: String, h5Path: String, spill: Spill): Unit = {
+  private def exportWith(outDir: String, h5Path: String, spill: Spill): Unit = {
     val closing =
       if (Files.exists(Paths.get(s"$outDir/closing.json")))
         JsonMethods.parse(Files.readString(Paths.get(s"$outDir/closing.json")))
@@ -62,27 +62,26 @@ object Hdf5Export {
     val dataRoot = Paths.get(s"$outDir/data")
     val tree     = new MutableTree
     if (Files.exists(dataRoot)) {
-      // every directory containing parquet part files is one table; its
-      // non-row columns become sibling datasets in the parent group
+      // every directory holding parquet part files is one table; its
+      // non-row columns become sibling datasets in the parent group.
+      // Hidden names (Spark's rule, see LocalParquet.hidden) are skipped
+      // at every level: a `_temporary/…/part-*.parquet` left by a killed
+      // append is committer scratch, not a table
       val walk = Files.walk(dataRoot)
       try walk.filter(p => Files.isDirectory(p)).forEach { dir =>
-        val hasParquet = Option(dir.toFile.listFiles())
-          .exists(_.exists(_.getName.endsWith(".parquet")))
+        val rel   = dataRoot.relativize(dir).toString.replace('\\', '/')
+        val names = rel.split('/').toSeq
+        val hasParquet = !names.exists(LocalParquet.hidden) &&
+          Option(dir.toFile.listFiles()).exists(_.exists(f =>
+            f.isFile && !LocalParquet.hidden(f.getName) && f.getName.endsWith(".parquet")))
         if (hasParquet) {
-          val rel   = dataRoot.relativize(dir).toString.replace('\\', '/')
-          val par   = rel.split('/').dropRight(1).toSeq // strip table name
-          val table = rel.split('/').last
-          val df    = spark.read.parquet(dir.toString)
-          // at-least-once replay after a crash in the append-committed/
-          // cursor-unsaved window can leave duplicated row ids in the
-          // parquet mirror; finish() dedups them for the meta aggregates,
-          // so the exported datasets must apply the SAME row-id dedup or
-          // the .h5 arrays and num_values/events disagree
-          val sorted =
-            if (df.columns.contains("row")) df.dropDuplicates("row").orderBy("row")
-            else df
+          val par   = names.dropRight(1) // strip table name
+          val table = names.last
           val groupKey = par.mkString("/")
-          tableColumns(sorted, spill).foreach { case (f, dv) =>
+          // read on the driver in `row` order, one row per row id: the
+          // at-least-once replay dedup the close-time finals apply too, so
+          // the .h5 arrays and num_values/events agree
+          tableColumns(LocalParquet.read(dir.toString), spill).foreach { case (f, dv) =>
             val unitAttr = units.get(groupKey).flatMap(_.get(f.name))
               .map(u => Seq("units" -> (StrAttr(u): AttrValue))).getOrElse(Nil)
             val name = if (table == "data" || table == "meta") f.name
@@ -285,8 +284,9 @@ object Hdf5Export {
       }
     }
 
-  /** Every exportable column of one table from ONE `toLocalIterator`
-    * pass: each row is demuxed into per-column builders; string columns
+  /** Every exportable column of one table from ONE driver-side pass
+    * ([[LocalParquet.Table.foreach]]): each row is demuxed into
+    * per-column builders; string columns
     * track their max UTF-8 byte-width and array columns their width
     * uniformity in the same pass (ragged or empty array columns are
     * skipped, as before). A zero-length typed seed chunk pins the dtype
@@ -294,12 +294,10 @@ object Hdf5Export {
     * larger columns spill encoded chunks to a temp file and their
     * [[Hdf5Writer.StreamedData]] re-reads it chunk-wise at emission.
     */
-  private def tableColumns(df: org.apache.spark.sql.DataFrame, spill: Spill)
+  private def tableColumns(table: LocalParquet.Table, spill: Spill)
       : Seq[(StructField, DataValue)] = {
     import scala.collection.mutable
-    import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.Row
-    import org.apache.spark.sql.functions.col
 
     def streamed(seed: DataValue, data: DataValue, strWidth: Int = 0,
         rowWidth: Int = 0): DataValue =
@@ -492,7 +490,7 @@ object Hdf5Export {
         }
     }
 
-    val fields = df.schema.fields.filterNot(_.name == "row").toSeq
+    val fields = table.schema.fields.filterNot(_.name == "row").toSeq
     val used: Seq[(StructField, Acc)] = fields.flatMap { f =>
       val acc: Option[Acc] = f.dataType match {
         case LongType | IntegerType | ShortType | DoubleType | FloatType =>
@@ -507,11 +505,10 @@ object Hdf5Export {
       acc.map(f -> _)
     }
     if (used.nonEmpty) {
-      df.select(used.map { case (f, _) => col(f.name) }: _*)
-        .toLocalIterator().asScala.foreach { r =>
-          var i = 0
-          while (i < used.length) { used(i)._2.add(r, i); i += 1 }
-        }
+      table.foreach(used.map(_._1.name)) { r =>
+        var i = 0
+        while (i < used.length) { used(i)._2.add(r, i); i += 1 }
+      }
     }
     used.flatMap { case (f, a) => a.result().map(f -> _) }
   }

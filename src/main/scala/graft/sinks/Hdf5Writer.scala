@@ -60,8 +60,8 @@ final class Hdf5Writer {
   final case class StrData(xs: Array[String])                        extends DataValue
 
   /** Incrementally-appended dataset: same-typed chunks are encoded into the
-    * file buffer as they are pulled, so the producer (e.g. a Spark
-    * `toLocalIterator`) never holds the whole dataset — peak driver memory
+    * file buffer as they are pulled, so the producer (e.g. the export's
+    * spilled column builders) never holds the whole dataset — peak driver memory
     * is one chunk plus the file bytes, not a second full copy.
     * `chunks` is a THUNK returning a fresh iterator, so one value can back
     * several dataset nodes (link copies re-pull the source).

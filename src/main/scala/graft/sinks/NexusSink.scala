@@ -5,7 +5,9 @@ import java.time.Instant
 import java.time.format.DateTimeFormatter
 import java.time.ZoneOffset
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.unsafe.types.UTF8String
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
@@ -161,7 +163,7 @@ final class NexusSink(outDir: String) {
       streamPath: String,
       table: String,
       schema: org.apache.spark.sql.types.StructType,
-      rows: Seq[org.apache.spark.sql.catalyst.InternalRow]
+      rows: Seq[InternalRow]
   ): Long = {
     require(frozen, "create the structure before appending")
     LocalParquet.write(s"$outDir/data/$streamPath/$table", schema, rows)
@@ -169,22 +171,24 @@ final class NexusSink(outDir: String) {
 
   /** Phase 3 — close: job metadata (mdat start/end ISO strings,
     * `src/WriterModule/mdat/mdat_Writer.cpp:19-97`), per-stream units, and
-    * final scalar aggregates.
+    * final scalar aggregates — one row per table, written on the driver in
+    * place of the table's previous content (a repeated close rewrites it).
     */
   def close(
       plan: NexusPlan.Plan,
       startMs: Long,
       stopMs: Long,
       unitsByStream: Map[String, Map[String, String]],
-      finals: Map[String, Map[String, DataFrame]],
+      finals: Map[String, Map[String, Row]],
       attrsByStream: Map[String, Map[String, String]] = Map.empty
   ): Unit = {
     finals.foreach { case (streamPath, tables) =>
-      tables.foreach { case (name, df) =>
-        df.coalesce(1).write.mode(SaveMode.Overwrite)
-          // same no-marker policy as append (nothing reads _SUCCESS)
-          .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-          .parquet(s"$outDir/data/$streamPath/$name")
+      tables.foreach { case (name, row) =>
+        val internal = InternalRow.fromSeq(row.toSeq.map {
+          case s: String => UTF8String.fromString(s)
+          case v         => v
+        })
+        LocalParquet.overwrite(s"$outDir/data/$streamPath/$name", row.schema, Seq(internal))
       }
     }
     val mdat = JObject(plan.mdats.flatMap { m =>

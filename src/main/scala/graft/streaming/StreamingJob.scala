@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.StructType
 import graft.operators.{StreamKernel, WriterModules}
 import graft.operators.WriterModules.ModuleConfig
 import graft.plans.NexusPlan
-import graft.sinks.NexusSink
+import graft.sinks.{LocalParquet, NexusSink}
 
 /** Streaming execution of a nexus plan — the Spark analog of
   * `StreamController` + per-partition consumers + the single writer thread
@@ -658,7 +658,9 @@ class StreamingJob(
     // declares exists even when no message ever reached it — readers that
     // open datasets by name (as the reference's files always allow) must
     // not hit missing-dataset errors. Typed zero-row seeds are appended
-    // for declared-but-never-written tables only.
+    // for declared-but-never-written tables only. The probe's cursor says
+    // "zero messages, zero elements", so no module runs a job to learn
+    // that, and a flat seed is written on the driver.
     plan.streams.foreach { s =>
       WriterModules.registry.get(s.module).foreach { module =>
         val key = streamKey(s)
@@ -666,12 +668,15 @@ class StreamingJob(
           .getOrElse(Set.empty[String])
         graft.sources.Fixtures.emptyInput(spark, module.id).foreach { empty =>
           val declared =
-            try module.tables(empty, ModuleConfig(s.config), WriterModules.Cursor())
+            try module.tables(empty, ModuleConfig(s.config),
+              WriterModules.Cursor(sizeHint = 0L, elemHint = 0L))
             catch { case _: Exception => Map.empty[String, DataFrame] }
           declared.foreach { case (table, out) =>
             if (!written.contains(table))
-              try sink.append(key, table, out, rows = 0)
-              catch {
+              try {
+                if (LocalParquet.supports(out.schema)) sink.appendLocal(key, table, out.schema, Nil)
+                else sink.append(key, table, out, rows = 0)
+              } catch {
                 case e: Exception => System.err.println(
                   s"[graft] empty-seed append failed for $key/$table: ${e.getMessage}")
               }
@@ -689,28 +694,24 @@ class StreamingJob(
         streamKey(s) -> m.groupAttrs(ModuleConfig(s.config)))
     }.toMap
     // close-time final aggregates (f144 min/max/mean, ev44 event total —
-    // the reference writer modules emit these at setToIdle) derived from
-    // the sink's own written tables, AFTER seeding so even untouched
-    // streams aggregate over their typed empty table
+    // the reference writer modules emit these at setToIdle) folded on the
+    // driver over the sink's own written tables, AFTER seeding so even
+    // untouched streams aggregate over their typed empty table. The
+    // reader yields one row per row id: at-least-once replay (a crash
+    // between an append and its cursor save) leaves byte-identical
+    // duplicate rows at the SAME row ids, and a replayed min/max/MEAN
+    // must count each logical row once
     val finals = plan.streams.flatMap { s =>
       WriterModules.registry.get(s.module).flatMap { m =>
         val key = streamKey(s)
         val f =
-          try m.sinkFinals(
-            t => {
-              // at-least-once replay (crash between an append and its
-              // cursor save) leaves byte-identical duplicate rows at the
-              // SAME row ids; finals must aggregate each logical row once
-              // or a replayed min/max/MEAN would count the dup twice
-              val df = spark.read.parquet(s"$outDir/data/$key/$t")
-              if (df.columns.contains("row")) df.dropDuplicates("row") else df
-            },
+          try m.sinkFinals(t => LocalParquet.read(s"$outDir/data/$key/$t"),
             ModuleConfig(s.config))
           catch {
             case e: Exception =>
               System.err.println(
                 s"[graft] close-time finals failed for $key: ${e.getMessage}")
-              Map.empty[String, DataFrame]
+              Map.empty[String, Row]
           }
         if (f.isEmpty) None else Some(key -> f)
       }
@@ -798,7 +799,7 @@ class StreamingJob(
         if (!module.denseRowTables.contains(table)) None
         else {
           val schema = out0.schema
-          if (!graft.sinks.LocalParquet.supports(schema)) None
+          if (!LocalParquet.supports(schema)) None
           else {
             val maxRows = localAppendMaxRows
             val rows: Option[(Seq[org.apache.spark.sql.catalyst.InternalRow], String)] =

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 
 /** Acceptance suite — the reference's domain tests re-expressed over the
@@ -237,6 +239,50 @@ class FileMakerSpec extends SparkSpec {
       Seq(13000000000L, 13000000007L, 13000000011L))
     assert(se.map(_.getAs[Long]("row")).toSeq == (0L until 5L) &&
       td.map(_.getAs[Long]("row")).toSeq == (0L until 3L))
+  }
+
+  test("every table the eight modules write reads the same on the driver as through Spark") {
+    // the close-time readers (finals, HDF5 export) read the mirror with
+    // LocalParquet: per table, same schema and the rows Spark gives after
+    // the row-id dedup, in row order
+    val seDir = tmp()
+    FileMaker.run(spark,
+      """{ "children": [ { "name": "entry", "type": "group", "children": [
+        |  { "name": "env", "type": "group", "children": [
+        |    { "module": "se00", "config": { "source": "env1", "topic": "t",
+        |      "dtype": "int16" } } ] },
+        |  { "name": "tdc", "type": "group", "children": [
+        |    { "module": "tdct", "config": { "source": "tdc1", "topic": "t" } } ] }
+        |] } ] }""".stripMargin,
+      """[ { "schema": "se00", "topic": "t", "kafka_timestamp": 11000,
+        |    "source_name": "env1", "packet_timestamp": 11000,
+        |    "time_delta": 1000000.0, "values": [7, 8, 9] },
+        |  { "schema": "tdct", "topic": "t", "kafka_timestamp": 13000,
+        |    "source_name": "tdc1", "timestamps": [13000000000, 13000000007] } ]""".stripMargin,
+      seDir)
+    val modules = scala.collection.mutable.Set.empty[String]
+    Seq(out, seDir).foreach { dir =>
+      val root = java.nio.file.Paths.get(dir, "data")
+      val walk = Files.walk(root)
+      val tables =
+        try walk.iterator().asScala.filter(p => Files.isRegularFile(p) &&
+          p.getFileName.toString.endsWith(".parquet")).map(_.getParent).toSet
+        finally walk.close()
+      tables.foreach { t =>
+        modules += root.relativize(t).toString
+        val df   = spark.read.parquet(t.toString)
+        val want = if (df.columns.contains("row")) df.dropDuplicates("row").orderBy("row") else df
+        val got  = graft.sinks.LocalParquet.read(t.toString)
+        val rows = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
+        got.foreach()(rows += _)
+        assert(got.schema == want.schema, s"$t schema")
+        assert(rows.toSeq == want.collect().toSeq, s"$t rows")
+      }
+    }
+    // every module's tables took part (ep01/al00 are f144's companions)
+    Seq("rotation_speed/data", "rotation_speed/meta", "ep01/data", "al00/data",
+      "events/events", "events/index", "events/meta", "image/data", "monitor/data",
+      "env/data", "tdc/data").foreach(t => assert(modules.exists(_.endsWith(t)), t))
   }
 
   test("repeated timestamps skipped (test_repeated_messages.py)") {

@@ -273,6 +273,42 @@ class Ev44ModuleSpec extends SparkSpec {
     } finally Ev44.WalkRowsPerPartition = saved
   }
 
+  test("hinted cursor ≡ Cursor(): the kernel's exact counts replace the maxEa aggregate") {
+    // the streaming job passes the batch's message count (sizeHint) and
+    // its exact event total (elemHint, null arrays counting 0); the cue
+    // chain must come out exactly as the aggregate form computes it
+    def ev(o: Long, tof: Seq[Int]) =
+      Ev44Msg("t", "det", o, o, 100L * (o + 1), Seq(100L * (o + 1)), Seq(0), tof,
+        if (tof == null) null else tof.map(_ + 1))
+    def run(msgs: Seq[Ev44Msg], interval: Long, cur: WriterModules.Cursor) = {
+      val t = Ev44.tables(msgs.toDF(), cfg(interval), cur)
+      (t.toSeq.sortBy(_._1).map { case (n, df) => n -> df.orderBy("row").collect().toSeq },
+        Ev44.lastCueInterval, Ev44.lastCueFallbacks)
+    }
+    def check(name: String, msgs: Seq[Ev44Msg], interval: Long,
+        eventsWritten: Long = 0L, lastCue: Long = 0L): Unit = {
+      val plain = run(msgs, interval,
+        WriterModules.Cursor(eventsWritten = eventsWritten, lastCue = lastCue))
+      val events = msgs.map(m => Option(m.time_of_flight).map(_.size).getOrElse(0)).sum
+      val hinted = run(msgs, interval, WriterModules.Cursor(
+        eventsWritten = eventsWritten, lastCue = lastCue,
+        sizeHint = msgs.size.toLong, elemHint = events.toLong))
+      assert(hinted == plain, name)
+    }
+    val sizes = Seq(15, 8, 3, 7, 3, 7, 3)
+    check("empty and null time_of_flight arrays",
+      Seq(ev(0, 1 to 5), ev(1, Nil), ev(2, null), ev(3, 6 to 12), ev(4, Nil),
+        ev(5, 1 to 4), ev(6, null)), 3)
+    check("only empty and null arrays", Seq(ev(0, Nil), ev(1, null)), 3)
+    check("zero messages", Nil, 3)
+    check("superset-miss chain",
+      sizes.zipWithIndex.map { case (n, i) => ev(i.toLong, 1 to n) }, 10)
+    assert(Ev44.lastCueFallbacks == 3, "the chain must exercise the walk")
+    check("large eventsWritten",
+      sizes.zipWithIndex.map { case (n, i) => ev(i.toLong, 1 to n) }, 4,
+      eventsWritten = 1L << 40, lastCue = (1L << 40) - 3)
+  }
+
   test("sane intervals are untouched by the scale guard") {
     val df = (0 until 5).map(i =>
       msg(i.toLong, Seq(100L * (i + 1)), Seq(0), (1 to 4).toSeq)).toDF()

@@ -2,6 +2,8 @@ package graft.sinks
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
@@ -67,6 +69,121 @@ class LocalParquetSpec extends SparkSpec {
     // arrays are out of scope — the caller must fall back to the Spark path
     assert(!LocalParquet.supports(StructType(Seq(
       StructField("a", ArrayType(LongType), nullable = true)))))
+  }
+
+  /** every row of `dir` through the driver reader, in its order */
+  private def driverRows(dir: String, columns: Seq[String] = Nil): (StructType, Seq[Row]) = {
+    val t   = LocalParquet.read(dir)
+    val out = scala.collection.mutable.ArrayBuffer.empty[Row]
+    if (columns.isEmpty) t.foreach()(out += _) else t.foreach(columns)(out += _)
+    (t.schema, out.toSeq)
+  }
+
+  /** the read-back the driver reader replaces */
+  private def sparkRows(dir: String): (StructType, Seq[Row]) = {
+    val df = spark.read.parquet(dir).dropDuplicates("row").orderBy("row")
+    (df.schema, df.collect().toSeq)
+  }
+
+  test("read ≡ Spark's dropDuplicates(row).orderBy(row): flat columns, " +
+    "Spark range-partitioned and local files, replayed append, 0-row files") {
+    val dir = Files.createTempDirectory("graft-localpq-read").toString + "/t"
+    val schema = StructType(Seq(
+      StructField("row", LongType, nullable = false),
+      StructField("l", LongType),
+      StructField("i", IntegerType),
+      StructField("s", ShortType),
+      StructField("y", ByteType),
+      StructField("f", FloatType),
+      StructField("d", DoubleType),
+      StructField("b", BooleanType),
+      StructField("str", StringType)))
+    def row(r: Long): Row = Row(r,
+      r match {
+        case 3L => Long.MaxValue
+        case 4L => Long.MinValue
+        case 5L => null
+        case _  => r * 1000003L
+      },
+      if (r % 7 == 0) null else (r * 31).toInt,
+      (r % 300 - 150).toShort, (r % 200 - 100).toByte,
+      if (r % 11 == 0) Float.NaN else r / 4.0f,
+      if (r % 13 == 0) null else -r / 8.0,
+      r % 3 == 0,
+      if (r % 5 == 0) null else if (r % 6 == 0) "" else s"é$r")
+    def sparkWrite(rows: Seq[Long], parts: Int): Unit =
+      spark.createDataFrame(java.util.Arrays.asList(rows.map(row): _*), schema)
+        .repartitionByRange(parts, col("row")).sortWithinPartitions("row")
+        .write.mode("append").parquet(dir)
+    def localWrite(rows: Seq[Long]): Unit = {
+      val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters
+        .createToCatalystConverter(schema)
+      LocalParquet.write(dir, schema,
+        rows.map(r => conv(row(r)).asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]))
+    }
+    sparkWrite(0L until 40L, 3)      // three range-partitioned files
+    sparkWrite(20L until 40L, 2)     // a replayed append over the same ids
+    sparkWrite(Nil, 1)               // a 0-row Spark part file
+    localWrite(40L until 43L)        // driver-written appends
+    localWrite(41L until 43L)        // … and a replayed one
+    localWrite(Nil)                  // a 0-row local file
+    sparkWrite(43L until 60L, 2)
+    val (dSchema, dRows) = driverRows(dir)
+    val (sSchema, sRows) = sparkRows(dir)
+    assert(dSchema == sSchema)
+    assert(sRows.map(_.getLong(0)) == (0L until 60L))
+    assert(dRows == sRows)
+    // a projection reads only its columns (plus `row` for the merge)
+    assert(driverRows(dir, Seq("str", "y"))._2 ==
+      sRows.map(r => Row(r.get(8), r.get(4))))
+  }
+
+  test("read ≡ Spark on array columns: null and empty arrays, null elements") {
+    val dir = Files.createTempDirectory("graft-localpq-arr").toString + "/t"
+    def frame(rows: Seq[Long]) = rows.map { r =>
+      (r,
+        if (r % 5 == 0) null else if (r % 5 == 1) Seq.empty[Int]
+        else Seq.tabulate((r % 4).toInt + 1)(k => (r * 10 + k).toInt),
+        if (r % 3 == 0) null else Seq(Some(r / 2.0), None, Some(-0.0)),
+        Seq(Long.MinValue + r, Long.MaxValue - r),
+        Seq(r.toFloat, Float.MinPositiveValue),
+        if (r % 2 == 0) Seq(r.toShort) else Seq.empty[Short],
+        Seq(s"s$r", ""))
+    }.toDF("row", "ints", "doubles", "longs", "floats", "shorts", "strs")
+    frame(0L until 30L).repartitionByRange(3, col("row")).sortWithinPartitions("row")
+      .write.mode("append").parquet(dir)
+    frame(10L until 20L).coalesce(1).sortWithinPartitions("row")
+      .write.mode("append").parquet(dir)
+    frame(Nil).coalesce(1).write.mode("append").parquet(dir)
+    val (dSchema, dRows) = driverRows(dir)
+    val (sSchema, sRows) = sparkRows(dir)
+    assert(dSchema == sSchema)
+    assert(dRows == sRows)
+  }
+
+  test("read skips hidden names: committer scratch and in-progress files") {
+    val dir = Files.createTempDirectory("graft-localpq-hidden").toString + "/t"
+    Seq((0L, 1.0), (1L, 2.0)).toDF("row", "v").coalesce(1).write.parquet(dir)
+    val part = Files.list(Paths.get(dir)).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .find(_.getFileName.toString.startsWith("part-")).get
+    val scratch = Paths.get(dir, "_temporary", "0", "_temporary", "attempt_0")
+    Files.createDirectories(scratch)
+    Files.copy(part, scratch.resolve("part-00000-x.snappy.parquet"))
+    Files.copy(part, Paths.get(dir, ".part-local-x.snappy.parquet"))
+    Files.copy(part, Paths.get(dir, "_part-x.snappy.parquet"))
+    assert(driverRows(dir)._2 == Seq(Row(0L, 1.0), Row(1L, 2.0)))
+    assert(driverRows(dir)._2 == sparkRows(dir)._2)
+  }
+
+  test("overwrite replaces every file of the directory") {
+    val dir = Files.createTempDirectory("graft-localpq-ow").toString + "/meta"
+    Seq((1.0, 2L)).toDF("v", "n").coalesce(1).write.parquet(dir)
+    val schema = StructType(Seq(StructField("v", DoubleType),
+      StructField("n", LongType, nullable = false)))
+    LocalParquet.overwrite(dir, schema,
+      Seq(org.apache.spark.sql.catalyst.InternalRow(3.0, 4L)))
+    assert(spark.read.parquet(dir).collect().toSeq == Seq(Row(3.0, 4L)))
+    assert(Files.list(Paths.get(dir)).count() == 1)
   }
 
   test("streaming ev44 cue rides the driver path: part-local file, exact chain") {
