@@ -20,10 +20,13 @@ table of per-trigger means by layer: jobs and ms for kernel, module,
 renumber, append and other, the driver time, the stages and tasks of the
 batch's jobs, and `processBatch` itself.
 Means are over all triggers and over the steady ones (every trigger but
-the catch-up `c*` ones).
+the catch-up `c*` ones). The steady means are also printed per schema
+(`processBatch.f144`, `processBatch.ev44`): the same table over that
+schema's batches alone, one per trigger.
 
-With two files it also prints the per-layer delta, change − parent, so a
-saving can be placed in the layer that earned it.
+With two files it also prints the per-layer delta, change − parent, both
+for the whole trigger and per schema, so a saving can be placed in the
+layer and the schema that earned it.
 """
 import json
 import sys
@@ -94,12 +97,15 @@ def print_batches(bs):
         print(f"       tail {ms(max(0, b['end_ns'] - at)):5.1f} ms")
 
 
-def layer_means(bs, steady_only):
-    """Per-trigger means: {metric: value}; a trigger is one `op`."""
+def layer_means(bs, steady_only, name=None):
+    """Per-trigger means: {metric: value}; a trigger is one `op`. With
+    `name`, only the batches of that span name (one schema) count."""
     sums = defaultdict(float)
     ops = set()
     for b, jobs in bs:
         if steady_only and b["op"].startswith("c"):
+            continue
+        if name is not None and b["name"] != name:
             continue
         ops.add(b["op"])
         wall = b["end_ns"] - b["start_ns"]
@@ -132,6 +138,21 @@ def print_means(label, means, n):
         print(f"  {k:<16} {means.get(k, 0.0):9.2f}")
 
 
+def print_delta(title, groups):
+    """Per metric, parent / change / delta for each (label, parent means,
+    change means) group, side by side."""
+    print(f"== {title}")
+    print(f"  {'metric':<16}" + "".join(
+        f"   {label[-13:] + ' parent':>20} {'change':>9} {'delta':>9}"
+        for label, _, _ in groups))
+    for k in metric_order():
+        cells = ""
+        for _, p, c in groups:
+            a, b = p.get(k, 0.0), c.get(k, 0.0)
+            cells += f"   {a:20.2f} {b:9.2f} {b - a:+9.2f}"
+        print(f"  {k:<16}{cells}")
+
+
 def main(paths):
     if not 1 <= len(paths) <= 2:
         sys.exit(__doc__)
@@ -145,18 +166,20 @@ def main(paths):
         steady_m = layer_means(bs, steady_only=True)
         print_means("all triggers", *all_m)
         print_means("steady triggers", *steady_m)
+        per_schema = {}
+        for name in sorted({b["name"] for b, _ in bs}):
+            per_schema[name] = layer_means(bs, steady_only=True, name=name)
+            print_means(f"steady triggers, {name}", *per_schema[name])
         print()
-        runs.append((all_m[0], steady_m[0]))
+        runs.append((all_m[0], steady_m[0],
+                     {k: m for k, (m, _) in per_schema.items()}))
     if len(runs) == 2:
-        (pa, ps), (ca, cs) = runs
-        print("== delta, change - parent, per trigger")
-        print(f"  {'metric':<16} {'parent':>9} {'change':>9} {'delta':>9}"
-              f"   {'steady parent':>13} {'change':>9} {'delta':>9}")
-        for k in metric_order():
-            a, b = pa.get(k, 0.0), ca.get(k, 0.0)
-            c, d = ps.get(k, 0.0), cs.get(k, 0.0)
-            print(f"  {k:<16} {a:9.2f} {b:9.2f} {b - a:+9.2f}"
-                  f"   {c:13.2f} {d:9.2f} {d - c:+9.2f}")
+        (pa, ps, pn), (ca, cs, cn) = runs
+        print_delta("delta, change - parent, per trigger",
+                    [("all", pa, ca), ("steady", ps, cs)])
+        print_delta("delta per schema, steady triggers",
+                    [(n.replace("processBatch.", ""), pn.get(n, {}), cn.get(n, {}))
+                     for n in sorted(set(pn) | set(cn))])
 
 
 if __name__ == "__main__":

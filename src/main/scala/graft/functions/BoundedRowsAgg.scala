@@ -11,8 +11,9 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, StructType}
 
 /** Bounded row collection INSIDE an aggregate: up to `bound` non-null
-  * struct values are kept (as serialized UnsafeRow blobs); one more and
-  * the whole aggregate evaluates to NULL.
+  * struct values of at most `maxBytes` serialized bytes in total are kept
+  * (as UnsafeRow blobs); one more row, or one byte more, and the whole
+  * aggregate evaluates to NULL.
   *
   * This is the safety device that lets the streaming job's per-trigger
   * fused aggregate OPTIMISTICALLY carry the trigger's payload back to the
@@ -20,10 +21,12 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, StructType}
   * catch-up or burst trigger can deliver millions of rows right after an
   * idle one — and a plain `collect_list` would then materialize the whole
   * burst in the aggregation buffer. Here the buffer NEVER holds more than
-  * `bound` rows (update and merge both clamp and latch the overflow flag,
-  * dropping the rows already held); the caller sees NULL and takes the
-  * distributed path. The memory ceiling is `bound × row width` per
-  * partial buffer, independent of the batch.
+  * `bound` rows nor more than `maxBytes` of them (update and merge both
+  * clamp and latch the overflow flag, dropping the rows already held);
+  * the caller sees NULL and takes the distributed path. The memory
+  * ceiling is `maxBytes` plus one row per partial buffer, independent of
+  * the batch and of its row width (a row bound alone let a burst of wide
+  * detector images through).
   *
   * Row order is NOT defined across partitions (same as `collect_list`);
   * callers re-sort by their ordering column.
@@ -31,12 +34,14 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, StructType}
 case class BoundedRowsAgg(
     child: Expression,
     bound: Int,
+    maxBytes: Long,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0
 ) extends TypedImperativeAggregate[BoundedRowsAgg.Buf]
     with UnaryLike[Expression] {
 
   require(bound > 0, s"bounded_rows: bound must be positive, got $bound")
+  require(maxBytes >= 0, s"bounded_rows: maxBytes must be non-negative, got $maxBytes")
 
   override def dataType: DataType = ArrayType(BinaryType, containsNull = false)
   override def nullable: Boolean  = true
@@ -45,21 +50,25 @@ case class BoundedRowsAgg(
     UnsafeProjection.create(child.dataType.asInstanceOf[StructType])
 
   override def createAggregationBuffer(): BoundedRowsAgg.Buf =
-    new BoundedRowsAgg.Buf(new java.util.ArrayList[Array[Byte]](), false)
+    new BoundedRowsAgg.Buf(new java.util.ArrayList[Array[Byte]](), 0L, false)
 
   override def update(buf: BoundedRowsAgg.Buf, input: InternalRow): BoundedRowsAgg.Buf = {
     if (buf.overflow) return buf
     val v = child.eval(input)
     if (v == null) return buf
-    if (buf.rows.size >= bound) { buf.overflow = true; buf.rows.clear() }
-    else buf.rows.add(proj(v.asInstanceOf[InternalRow]).copy().getBytes)
+    if (buf.rows.size >= bound) buf.latch()
+    else {
+      val b = proj(v.asInstanceOf[InternalRow]).copy().getBytes
+      if (buf.bytes + b.length > maxBytes) buf.latch()
+      else { buf.rows.add(b); buf.bytes += b.length }
+    }
     buf
   }
 
   override def merge(buf: BoundedRowsAgg.Buf, other: BoundedRowsAgg.Buf): BoundedRowsAgg.Buf = {
-    if (buf.overflow || other.overflow || buf.rows.size + other.rows.size > bound) {
-      buf.overflow = true; buf.rows.clear()
-    } else buf.rows.addAll(other.rows)
+    if (buf.overflow || other.overflow || buf.rows.size + other.rows.size > bound ||
+      buf.bytes + other.bytes > maxBytes) buf.latch()
+    else { buf.rows.addAll(other.rows); buf.bytes += other.bytes }
     buf
   }
 
@@ -84,12 +93,13 @@ case class BoundedRowsAgg(
     val overflow = bb.get() == 1.toByte
     val n = bb.getInt
     val rows = new java.util.ArrayList[Array[Byte]](n)
+    var held = 0L
     var i = 0
     while (i < n) {
       val b = new Array[Byte](bb.getInt)
-      bb.get(b); rows.add(b); i += 1
+      bb.get(b); rows.add(b); held += b.length; i += 1
     }
-    new BoundedRowsAgg.Buf(rows, overflow)
+    new BoundedRowsAgg.Buf(rows, held, overflow)
   }
 
   override def withNewMutableAggBufferOffset(o: Int): BoundedRowsAgg =
@@ -104,14 +114,22 @@ case class BoundedRowsAgg(
 object BoundedRowsAgg {
   import org.apache.spark.sql.GraftBridge.{column, expression}
 
-  /** Mutable aggregation state: the collected blobs + the overflow latch. */
-  final class Buf(val rows: java.util.ArrayList[Array[Byte]], var overflow: Boolean)
+  /** Mutable aggregation state: the collected blobs, their total size and
+    * the overflow latch.
+    */
+  final class Buf(
+      val rows: java.util.ArrayList[Array[Byte]],
+      var bytes: Long,
+      var overflow: Boolean) {
+    def latch(): Unit = { overflow = true; rows.clear(); bytes = 0L }
+  }
 
   /** Column API: array<binary> of the ≤ `bound` serialized rows of the
-    * struct column, or NULL once a (bound+1)-th non-null value is seen.
+    * struct column, or NULL once a (bound+1)-th non-null value is seen or
+    * the rows held would exceed `maxBytes` serialized bytes.
     */
-  def bounded_rows(c: Column, bound: Int): Column =
-    column(BoundedRowsAgg(expression(c), bound).toAggregateExpression())
+  def bounded_rows(c: Column, bound: Int, maxBytes: Long = Long.MaxValue): Column =
+    column(BoundedRowsAgg(expression(c), bound, maxBytes).toAggregateExpression())
 
   /** Driver-side decode of the collected blobs back to external Rows of
     * `schema` (the struct type handed to [[bounded_rows]]).

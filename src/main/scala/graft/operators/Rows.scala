@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -38,8 +39,14 @@ object Rows {
     * tiny rows and vetoes the small path for wide ones. The byte bound is
     * overridable via spark.graft.rows.smallRenumberBytes.
     */
-  private val SmallRenumberRows         = 65536L
-  private val SmallRenumberBytesDefault = 32L * 1024 * 1024
+  private val SmallRenumberRows = 65536L
+
+  /** `spark.graft.rows.smallRenumberBytes` (32 MiB): the byte budget of
+    * the one-task and driver numbering paths, and of the streaming fused
+    * payload that feeds the driver path (BoundedRowsAgg's byte cap).
+    */
+  def smallRenumberBytes(spark: org.apache.spark.sql.SparkSession): Long =
+    spark.conf.get("spark.graft.rows.smallRenumberBytes", (32L * 1024 * 1024).toString).toLong
 
   /** Returns `df` with `rowCol` = consecutive ids `start, start+1, …` in
     * ascending `orderCol` order; replaces `rowCol` if it already exists
@@ -66,44 +73,32 @@ object Rows {
       sizeHint: Long = -1L,
       byteHint: Long = -1L
   ): DataFrame = {
-    val conf     = df.sparkSession.conf
-    val bytesMax = conf
-      .get("spark.graft.rows.smallRenumberBytes", SmallRenumberBytesDefault.toString).toLong
-    // DRIVER fast path: a frame that is already a LocalRelation (buffered
-    // flushes and the streaming fused-payload tiny-trigger path) numbers
-    // on the driver with ZERO jobs — and, crucially, STAYS a
-    // LocalRelation, so downstream flat module transforms keep folding
-    // (ConvertToLocalRelation) all the way into the driver-side parquet
-    // append. Probe the ANALYZED plan first (free — createDataFrame
-    // frames analyze to a bare LocalRelation); pay an optimizer pass only
-    // when the caller's hint says the frame could be small — on a big
-    // distributed frame the result would be discarded driver work (the
-    // same cost provablyEmpty gates in StreamingJob).
-    type LR = org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-    val localRel: Option[LR] = df.queryExecution.analyzed match {
-      case l: LR => Some(l)
-      case _ if sizeHint < 0 || sizeHint <= SmallRenumberRows =>
-        df.queryExecution.optimizedPlan match {
-          case l: LR => Some(l)
-          case _     => None
-        }
-      case _ => None
-    }
-    val localRows = localRel.map(_.data.size.toLong).getOrElse(-1L)
+    val bytesMax = smallRenumberBytes(df.sparkSession)
+    // DRIVER fast path: a frame whose rows are already on the driver (a
+    // buffered flush, the streaming fused payload, and every Project,
+    // Filter or explode over them — see LocalPlan) numbers on the driver
+    // with ZERO jobs and comes back as a LocalRelation, so downstream
+    // module transforms keep evaluating on the driver all the way into
+    // the driver-side parquet append. Gates, as on the distributed small
+    // path: an integral order column; within the small-renumber row bound
+    // (a LARGE local frame should re-enter the distributed world here, not
+    // anchor a driver-side pipeline — a hint above it skips the probe);
+    // the wide-row byte veto.
     val oField = df.schema.fields.find(_.name == orderCol)
-    // gates: integral order column; within the small-renumber row bound
-    // (a LARGE local frame should re-enter the distributed world here,
-    // not anchor a driver-side pipeline); the wide-row byte veto applies
-    // exactly as it does to the distributed small path — same bounds
-    if (localRows >= 0 && localRows <= SmallRenumberRows &&
-      !(byteHint >= 0 && byteHint > bytesMax) &&
-      oField.exists(f =>
-        f.dataType == LongType || f.dataType == org.apache.spark.sql.types.IntegerType)) {
-      val ext  = df.collect() // LocalTableScan executeCollect: no job
-      val oIdx = df.schema.fieldIndex(orderCol)
-      if (ext.forall(!_.isNullAt(oIdx))) {
+    val local =
+      if ((sizeHint >= 0 && sizeHint > SmallRenumberRows) ||
+        (byteHint >= 0 && byteHint > bytesMax) ||
+        !oField.exists(f =>
+          f.dataType == LongType || f.dataType == org.apache.spark.sql.types.IntegerType)) None
+      else LocalPlan.rows(df, SmallRenumberRows)
+    local match {
+      case Some((schema, internal))
+          if internal.forall(!_.isNullAt(schema.fieldIndex(orderCol))) =>
         import scala.jdk.CollectionConverters._
-        val fields = df.schema.fields
+        val oIdx   = schema.fieldIndex(orderCol)
+        val toRow  = CatalystTypeConverters.createToScalaConverter(schema)
+        val ext    = internal.map(r => toRow(r).asInstanceOf[Row])
+        val fields = schema.fields
         val wIdx   = weight.map { case (w, _, _) => fields.indexWhere(_.name == w) }
         wIdx.foreach(i => require(i >= 0, s"weight column not found"))
         val (rowIdx, outSchema) = stampSchema(fields, rowCol, weight)
@@ -111,7 +106,7 @@ object Rows {
           ext.sortBy(_.getAs[Number](oIdx).longValue()).iterator,
           rowIdx, wIdx, start, weight.map(_._3).getOrElse(0L)).toSeq
         return df.sparkSession.createDataFrame(stampedRows.asJava, outSchema)
-      }
+      case _ => ()
     }
     // with a byte hint the byte bound decides (rows only guard sort CPU);
     // without one, the conservative row bound stands alone
@@ -122,7 +117,7 @@ object Rows {
       if (small)
         df.coalesce(1).sortWithinPartitions(col(orderCol))
       else if (sizeHint >= 0) {
-        val width = conf.get("spark.sql.shuffle.partitions", "200").toInt
+        val width = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt
         val byRows  = (sizeHint + 262143) / 262144
         val byBytes = if (byteHint >= 0) (byteHint + (64L << 20) - 1) / (64L << 20) else 0L
         val parts = math.max(width, math.min(4096L, math.max(byRows, byBytes)).toInt)

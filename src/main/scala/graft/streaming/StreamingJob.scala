@@ -32,7 +32,10 @@ import graft.sinks.{LocalParquet, NexusSink}
   * collected to the driver are per-key scalars (boundary timestamp, the
   * strict-finish cutoff offset, append counters) and the rows of the
   * single buffered pre-start message — the same per-stream state the
-  * reference keeps in SourceFilter fields.
+  * reference keeps in SourceFilter fields. The one exception is the
+  * fused-payload band: a trigger after a tiny one brings its in-window
+  * rows back inside the keyed pass, bounded in rows and bytes, and writes
+  * them from the driver (see [[processSchema]]).
   *
   * Cross-batch state ([[StreamingJob.StreamState]]):
   *   - `lastTs` — consecutive-dedup across batch boundaries (F4;
@@ -417,22 +420,24 @@ class StreamingJob(
     // trigger was small for any stream of the schema, each key's
     // in-window payload rides back inside this same aggregate as
     // ≤ 4×maxRows serialized rows — the write path then starts from a
-    // LocalRelation and the dense appends run with ZERO further jobs
-    // (Rows' driver numbering + ConvertToLocalRelation + LocalParquet).
+    // LocalRelation, and the module transform, the renumber of exploded
+    // tables and every append run on the driver with ZERO further jobs
+    // (Rows' driver numbering + LocalPlan + LocalParquet): the keyed pass
+    // is the trigger's only Spark job, flat and exploding modules alike.
     // The gate can be wrong (burst after an idle trigger, or a key
     // busier than the armed one): BoundedRowsAgg's buffer never holds
-    // more than the bound per group — it latches overflow, evaluates to
-    // null, and that stream takes the distributed path. Scoped to modules
-    // whose data table is dense (flat transforms; exploding modules gain
-    // nothing from local input).
+    // more than the bound per group, in rows or in bytes (the byte
+    // budget Rows' driver numbering vetoes on) — it latches overflow,
+    // evaluates to null, and that stream takes the distributed path.
     val fuseBound = localAppendMaxRows
     // 4× hint-lie tolerance, as in the bounded collect
     val aggBound = (fuseBound * 4).toInt
-    val wantPayload = module.denseRowTables.contains("data") &&
+    val wantPayload =
       fuseBound > 0 && openStates.exists(st => st.lastMsgs >= 0 && st.lastMsgs <= fuseBound)
+    lazy val payloadBytes = graft.operators.Rows.smallRenumberBytes(spark)
     def scalarAggs(liveCond: Column) = (if (wantPayload) Seq(
       graft.functions.BoundedRowsAgg.bounded_rows(
-        when(liveCond && inWin, payload), aggBound).as("payload_rows"))
+        when(liveCond && inWin, payload), aggBound, payloadBytes).as("payload_rows"))
       else Nil) ++ (if (module.emitBuffered) Seq(
       // buffered-candidate tracking only for modules that EMIT the buffer
       // (ev44 ignores buffered messages by contract, ev44_Writer.cpp:94-97
@@ -478,8 +483,8 @@ class StreamingJob(
       val state = states(streamKey(s))
       val k     = (s.topic, s.source)
       if (!state.finished) pre.get(k).foreach { preRow =>
-        applyStream(s, module, state, deduped.filter(isKey(k)), preRow, post(k),
-          wantPayload)
+        applyStream(s, module, state, deduped.filter(isKey(k)), deduped.schema,
+          preRow, post(k), wantPayload)
       }
       crashHook(s"batch:stream:${streamKey(s)}") // torn multi-stream batch
     }
@@ -489,13 +494,16 @@ class StreamingJob(
     * keyed pass ([[processSchema]]): `preRow` is the no-cutoff aggregate
     * (carrying `min_off` and `cutoff`), `aggRow` the same scalars with the
     * key's cutoff substituted (the same row when the key did not cross
-    * stop); `frame` is the deduplicated batch of this stream's key.
+    * stop); `frame0` is the deduplicated batch of this stream's key, of
+    * `schema`, analysed only if a path below reads it (the fused path
+    * does not).
     */
   private def applyStream(
       s: NexusPlan.Stream,
       module: WriterModules.WriterModule,
       state: StreamState,
-      frame: DataFrame,
+      frame0: => DataFrame,
+      schema: StructType,
       preRow: Row,
       aggRow: Row,
       wantPayload: Boolean
@@ -516,7 +524,8 @@ class StreamingJob(
       state.lastTs = Some(t.getAs[Long]("ts")))
 
     if (cutoffOpt.isDefined) state.finished = true
-    val live = {
+    lazy val frame = frame0
+    lazy val live = {
       val base = cutoffOpt match {
         case Some(c) => frame.filter(col("offset") < c)
         case None    => frame
@@ -544,7 +553,7 @@ class StreamingJob(
       // row (ClassCastException, or a silently wrong comparison)
       val storedTs = state.buffered.map { b =>
         b.head.getLong(
-          (if (state.schema != null) state.schema else frame.schema)
+          (if (state.schema != null) state.schema else schema)
             .fieldIndex("ts"))
       }
       if (!isBoundaryRow &&
@@ -554,7 +563,7 @@ class StreamingJob(
             frame.filter(col("offset") === cand.getAs[Long]("offset"))
               .collect().toSeq
           else Seq(cand.getAs[Row]("p")))
-        state.schema = frame.schema
+        state.schema = schema
       }
     }
 
@@ -567,7 +576,7 @@ class StreamingJob(
     val localPayload: Option[Seq[Row]] =
       if (!wantPayload) None
       else try Option(aggRow.getAs[scala.collection.Seq[Array[Byte]]]("payload_rows")).map { blobs =>
-        val rows = graft.functions.BoundedRowsAgg.decode(blobs, frame.schema)
+        val rows = graft.functions.BoundedRowsAgg.decode(blobs, schema)
         val kept = if (boundary) rows.filterNot(_.getAs[Long]("offset") == minOff)
                    else rows
         kept.sortBy(_.getAs[Long]("offset"))
@@ -578,7 +587,7 @@ class StreamingJob(
               "taking the distributed path")
           None
       }
-    val inWindow  = live.filter(col("ts") >= startNs && col("ts") <= stopNs)
+    lazy val inWindow = live.filter(col("ts") >= startNs && col("ts") <= stopNs)
     val emitBuffered = module.emitBuffered && state.buffered.nonEmpty &&
       (nInWindow > 0 || state.finished)
     val bufRows = if (emitBuffered) state.buffered.get.size.toLong else 0L
@@ -589,8 +598,8 @@ class StreamingJob(
         localPayload match {
           // schemas must agree exactly to concatenate rows (the frame
           // path tolerates drift via unionByName)
-          case Some(rows) if state.schema == frame.schema =>
-            bufferedDf(b ++ rows, frame.schema)
+          case Some(rows) if state.schema == schema =>
+            bufferedDf(b ++ rows, schema)
           // allowMissingColumns: drift can ADD or REMOVE columns, not just
           // reorder — strict unionByName would crash-loop the query on a
           // buffered message from the pre-drift schema; null-filling the
@@ -599,7 +608,7 @@ class StreamingJob(
             .unionByName(inWindow, allowMissingColumns = true)
         }
       } else localPayload match {
-        case Some(rows) => bufferedDf(rows, frame.schema)
+        case Some(rows) => bufferedDf(rows, schema)
         case None       => inWindow
       }
     if (nInWindow > 0 || emitBuffered) {
@@ -784,58 +793,57 @@ class StreamingJob(
     final case class Outcome(table: String, n: Long, cueMax: Option[Long],
       err: Option[String], path: String = "spark")
     // Driver-side append bypass (see LocalParquet): a Spark write job is
-    // ~160 ms of FIXED cost regardless of payload (round-12b), so dense
-    // tables whose rows are already in driver memory (ev44's collected
-    // cue hits arrive as a LocalRelation — no job at all) or provably
+    // ~160 ms of FIXED cost regardless of payload (round-12b), so tables
+    // whose rows are already in driver memory — every table of a fused
+    // trigger, and ev44's collected cue hits on any trigger: LocalPlan
+    // evaluates their plans with no job — or, for dense tables, provably
     // tiny (the fused hint bounds data at msgs and cue at the planned
     // grid count: 0-3 rows/trigger at production cue intervals — one
     // light executeCollect replaces the write job) are written by the
-    // driver directly. Dense tables only: their rows carry global row
-    // ids already, so no renumber pass sits between transform and write.
-    // Counters come from the rows themselves. The collect bound is
-    // spark.graft.stream.localAppend.maxRows (128).
-    def localAppend(table: String, out0: DataFrame): Option[Outcome] =
+    // driver directly. Rows carry global row ids by then: dense tables as
+    // emitted, sparse exploded ones after the renumber (itself on the
+    // driver for a local frame). Counters come from the rows themselves.
+    // The collect bound is spark.graft.stream.localAppend.maxRows (128).
+    type Local = Option[(StructType, Seq[org.apache.spark.sql.catalyst.InternalRow])]
+    def localAppend(table: String, out: DataFrame, local: Local): Option[Outcome] =
       try {
-        if (!module.denseRowTables.contains(table)) None
+        val schema = out.schema
+        if (!LocalParquet.supports(schema)) None
         else {
-          val schema = out0.schema
-          if (!LocalParquet.supports(schema)) None
-          else {
-            val maxRows = localAppendMaxRows
-            val rows: Option[(Seq[org.apache.spark.sql.catalyst.InternalRow], String)] =
-              out0.queryExecution.optimizedPlan match {
-                case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-                  // fused payload / driver-materialized transform: zero jobs
-                  Some((l.data, "fused"))
-                case _ =>
-                  // planned row bound: exact for cue grids, msgs for data
-                  val bound =
-                    if (table == "cue")
-                      module.plannedCueCount(ModuleConfig(s.config), cursor, msgHint)
-                        .getOrElse(msgHint)
-                    else msgHint
-                  if (bound >= 0 && bound <= maxRows) {
-                    val rs = out0.queryExecution.executedPlan.executeCollect()
-                    // hint lied badly — let Spark shape the files instead
-                    if (rs.length > 4 * maxRows) None else Some((rs.toSeq, "collect"))
-                  } else None
-              }
-            rows.map { case (rs, path) =>
-              val rowIdx = schema.fieldIndex("row")
-              val sorted = rs.sortBy(_.getLong(rowIdx))
-              // the Outcome is FULLY computed before the write commits:
-              // appendLocal's rename is atomic, so a throw after it would
-              // otherwise route these already-visible rows into the Spark
-              // fallback path and append them a second time
-              val mx =
-                if (table == "cue" && sorted.nonEmpty) {
-                  val ci = schema.fieldIndex("cue_index")
-                  Some(sorted.iterator.map(_.getLong(ci)).max)
+          val rows: Option[(Seq[org.apache.spark.sql.catalyst.InternalRow], String)] =
+            local match {
+              // fused payload / driver-materialized transform: zero jobs
+              case Some((_, rs)) => Some((rs, "fused"))
+              case None if module.denseRowTables.contains(table) =>
+                // planned row bound: exact for cue grids, msgs for data
+                val maxRows = localAppendMaxRows
+                val bound =
+                  if (table == "cue")
+                    module.plannedCueCount(ModuleConfig(s.config), cursor, msgHint)
+                      .getOrElse(msgHint)
+                  else msgHint
+                if (bound >= 0 && bound <= maxRows) {
+                  val rs = out.queryExecution.executedPlan.executeCollect()
+                  // hint lied badly — let Spark shape the files instead
+                  if (rs.length > 4 * maxRows) None else Some((rs.toSeq, "collect"))
                 } else None
-              val outcome = Outcome(table, sorted.size.toLong, mx, None, path)
-              sink.appendLocal(key, table, schema, sorted)
-              outcome
+              case None => None
             }
+          rows.map { case (rs, path) =>
+            val rowIdx = schema.fieldIndex("row")
+            val sorted = rs.sortBy(_.getLong(rowIdx))
+            // the Outcome is FULLY computed before the write commits:
+            // appendLocal's rename is atomic, so a throw after it would
+            // otherwise route these already-visible rows into the Spark
+            // fallback path and append them a second time
+            val mx =
+              if (table == "cue" && sorted.nonEmpty) {
+                val ci = schema.fieldIndex("cue_index")
+                Some(sorted.iterator.map(_.getLong(ci)).max)
+              } else None
+            val outcome = Outcome(table, sorted.size.toLong, mx, None, path)
+            sink.appendLocal(key, table, schema, sorted)
+            outcome
           }
         }
       } catch {
@@ -847,14 +855,18 @@ class StreamingJob(
               "falling back to the write-job path")
           None
       }
-    def appendOne(table: String, out0: DataFrame): Outcome =
-      try localAppend(table, out0).getOrElse {
+    // `local0`: the dense table's driver evaluation, made once per trigger
+    // for the emptiness probe below and reused here
+    def appendOne(table: String, out0: DataFrame, local0: Local): Outcome =
+      try {
+        val dense = module.denseRowTables.contains(table)
         // dense tables emit global row keys directly (module numbering
         // started at the cursor); only sparse exploded keys need the
-        // distributed renumber pass — a two-pass prefix sum, never a
-        // single-partition stage, even for the exploded ev44 events table
+        // renumber pass — on the driver for a local frame, else a
+        // distributed two-pass prefix sum, never a single-partition
+        // stage, even for the exploded ev44 events table
         val out1 =
-          if (module.denseRowTables.contains(table)) out0
+          if (dense) out0
           else {
             // sparse rows are per exploded ELEMENT except ev44's index
             // (one per reference_time ≈ one per message); exploded rows
@@ -871,61 +883,60 @@ class StreamingJob(
             out1.withColumn("event_index", col("event_index") +
               graft.functions.StableLong.stableLit(state.eventsWritten))
           else out1
-        // ONE write job per table, no cache churn (old shape: persist →
-        // count → append → cue-max agg → unpersist, 3 jobs/table): row
-        // count and cue-chain max are observed DURING the append, and the
-        // small-batch renumber stamps ids with no prefix-sum job. Side
-        // effect of observing instead of counting first: an append whose
-        // batch slice is empty leaves one 0-row part file (readers and
-        // the finish()-time empty seeding are unaffected; counters only
-        // move when n > 0).
-        val obs = org.apache.spark.sql.Observation()
-        val observed =
-          if (table == "cue")
-            out.observe(obs, count(lit(1)).as("n"), max(col("cue_index")).as("mx"))
-          else out.observe(obs, count(lit(1)).as("n"))
-        // shaping hint: exploded-element total for sparse tables, message
-        // count (≥ actual rows: data ≤ one row per message, cue ≤ data)
-        // for dense ones — sizes the append's file split, never counters
-        val shapeHint =
-          if (module.denseRowTables.contains(table) ||
-            (module.id == "ev44" && table == "index")) msgHint
-          else math.max(elemHint, msgHint)
-        sink.append(key, table, observed, rows = shapeHint)
-        val n = obs.get("n").asInstanceOf[Long]
-        val mx =
-          if (table == "cue" && n > 0) Some(obs.get("mx").asInstanceOf[Long])
-          else None
-        Outcome(table, n, mx, None)
+        val local = if (dense) local0 else graft.operators.LocalPlan.rows(out)
+        localAppend(table, out, local).getOrElse {
+          // ONE write job per table, no cache churn (old shape: persist →
+          // count → append → cue-max agg → unpersist, 3 jobs/table): row
+          // count and cue-chain max are observed DURING the append, and
+          // the small-batch renumber stamps ids with no prefix-sum job.
+          // Side effect of observing instead of counting first: an append
+          // whose batch slice is empty leaves one 0-row part file (readers
+          // and the finish()-time empty seeding are unaffected; counters
+          // only move when n > 0).
+          val obs = org.apache.spark.sql.Observation()
+          val observed =
+            if (table == "cue")
+              out.observe(obs, count(lit(1)).as("n"), max(col("cue_index")).as("mx"))
+            else out.observe(obs, count(lit(1)).as("n"))
+          // shaping hint: exploded-element total for sparse tables,
+          // message count (≥ actual rows: data ≤ one row per message,
+          // cue ≤ data) for dense ones — sizes the append's file split,
+          // never counters
+          val shapeHint =
+            if (dense || (module.id == "ev44" && table == "index")) msgHint
+            else math.max(elemHint, msgHint)
+          sink.append(key, table, observed, rows = shapeHint)
+          val n = obs.get("n").asInstanceOf[Long]
+          val mx =
+            if (table == "cue" && n > 0) Some(obs.get("mx").asInstanceOf[Long])
+            else None
+          Outcome(table, n, mx, None)
+        }
       } catch {
         case e: Exception => Outcome(table, 0L, None, Some(e.getMessage))
       }
-    def provablyEmpty(table: String, out0: DataFrame): Boolean =
-      (table == "cue" &&
-        module.plannedCueCount(ModuleConfig(s.config), cursor, msgHint)
-          .contains(0L)) ||
-      (module.denseRowTables.contains(table) && {
-        // transforms that collect on the driver (ev44 cue hits) hand back
-        // a local relation — emptiness is visible without a job. Match on
-        // the OPTIMIZED plan: `toDF(names)` wraps the relation in a
-        // Project of aliases, which ConvertToLocalRelation collapses —
-        // the raw logical plan never matches. Gated to dense tables (the
-        // only driver-materialized producers): for big distributed plans
-        // the optimizer pass here would be pure discarded driver work.
-        out0.queryExecution.optimizedPlan match {
-          case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-            l.data.isEmpty
-          case _ => false
-        }
-      })
-    val live = tables.toSeq.filter { case (t, out0) => !provablyEmpty(t, out0) }
+    // driver-side skips: cue grids that cursor arithmetic proves fired
+    // zero times, and dense tables that evaluate on the driver to no
+    // rows (ev44's collected cue hits on a trigger without a cue). Dense
+    // tables only: they are the driver-materialized producers, and a
+    // sparse table's evaluation waits for its renumber
+    val evaluated = tables.toSeq.map { case (t, out0) =>
+      val plannedEmpty = t == "cue" &&
+        module.plannedCueCount(ModuleConfig(s.config), cursor, msgHint).contains(0L)
+      val local: Local =
+        if (plannedEmpty || !module.denseRowTables.contains(t) ||
+          !LocalParquet.supports(out0.schema)) None
+        else graft.operators.LocalPlan.rows(out0)
+      (t, out0, local, plannedEmpty || local.exists(_._2.isEmpty))
+    }
+    val live = evaluated.collect { case (t, o, l, false) => (t, o, l) }
     val outcomes: Seq[Outcome] =
       if (live.sizeIs <= 1)
-        live.map { case (t, o) => appendOne(t, o) }
+        live.map { case (t, o, l) => appendOne(t, o, l) }
       else {
         import scala.concurrent.{Await, Promise}
         import scala.concurrent.duration.Duration
-        val ps = live.map { case (t, o) =>
+        val ps = live.map { case (t, o, l) =>
           val p = Promise[Outcome]()
           StreamingJob.appendPool.execute { () =>
             // Pool threads inherit the CREATING thread's Spark job group
@@ -942,7 +953,7 @@ class StreamingJob(
             // job monitor and the global conf-window lock (a plain
             // Future completes on NonFatal only). The fatal rethrows
             // after completion so the JVM's handler still sees it.
-            try p.trySuccess(appendOne(t, o))
+            try p.trySuccess(appendOne(t, o, l))
             catch {
               // appendOne handles Exception itself; only Errors land here
               case th: Throwable =>

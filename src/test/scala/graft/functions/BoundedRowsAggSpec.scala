@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.GraftBridge.expression
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -59,5 +60,36 @@ class BoundedRowsAggSpec extends SparkSpec {
     assert(out(0L).size == 20 && out(1L).size == 20)
     val rows = BoundedRowsAgg.decode(out(0L), schema).map(_.getLong(0)).sorted
     assert(rows == (0L until 40L by 2))
+  }
+
+  test("wide rows overflow the byte cap: on update and on merge") {
+    // ~1 KB rows: a row bound of 64 alone would hold 64 KB of them
+    def wide(n: Int, parts: Int, maxBytes: Long) =
+      spark.range(n).repartition(parts)
+        .select(col("id").as("offset"), repeat(lit("x"), 1000).as("w"))
+        .agg(BoundedRowsAgg.bounded_rows(struct(col("offset"), col("w")), 64, maxBytes)
+          .as("rows"))
+        .collect()(0).getAs[scala.collection.Seq[Array[Byte]]]("rows")
+    // update: one partition, the 6th row crosses 5000 bytes
+    assert(wide(n = 4, parts = 1, maxBytes = 5000).size == 4)
+    assert(wide(n = 6, parts = 1, maxBytes = 5000) == null)
+    // merge: 4 partitions of 2 rows each fit alone, not together
+    assert(wide(n = 8, parts = 4, maxBytes = 5000) == null)
+    assert(wide(n = 8, parts = 4, maxBytes = 20000).size == 8)
+
+    // the same latches on the buffers directly
+    val agg = BoundedRowsAgg(
+      expression(struct(col("offset"), col("w"))), bound = 64, maxBytes = 3000)
+    val bs = Seq.fill(3)(Array.fill[Byte](1000)(1))
+    def buf(n: Int) = {
+      val b = agg.createAggregationBuffer()
+      bs.take(n).foreach { x => b.rows.add(x); b.bytes += x.length }
+      b
+    }
+    assert(!agg.merge(buf(1), buf(1)).overflow)
+    val merged = agg.merge(buf(2), buf(2))
+    assert(merged.overflow && merged.rows.isEmpty && agg.eval(merged) == null)
+    // the byte count survives the shuffle form
+    assert(agg.deserialize(agg.serialize(buf(3))).bytes == 3000L)
   }
 }

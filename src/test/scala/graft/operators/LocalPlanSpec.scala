@@ -1,0 +1,115 @@
+package graft.operators
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import graft.SparkSpec
+
+/** The driver evaluator of local plans against Spark's own execution of
+  * the same frames: every plan it accepts must yield exactly the rows
+  * `collect` does, in the same order, and every plan it cannot evaluate
+  * faithfully must be refused.
+  */
+class LocalPlanSpec extends SparkSpec {
+
+  private val schema = StructType(Seq(
+    StructField("id", LongType, nullable = false),
+    StructField("tag", StringType),
+    StructField("a", ArrayType(LongType)),
+    StructField("b", ArrayType(IntegerType)),
+    StructField("s", ArrayType(StructType(Seq(
+      StructField("x", LongType), StructField("y", StringType)))))))
+
+  /** Null and empty arrays, unequal zip lengths, null elements, null
+    * structs inside an array, Long extremes.
+    */
+  private lazy val frame: DataFrame = {
+    import scala.jdk.CollectionConverters._
+    val rows = Seq(
+      Row(1L, "one", Seq(Long.MinValue, 0L, Long.MaxValue), Seq(1, 2, 3),
+        Seq(Row(Long.MaxValue, "p"), Row(Long.MinValue, null))),
+      Row(2L, null, null, Seq(4), null),
+      Row(3L, "three", Seq.empty[Long], Seq.empty[Int], Seq.empty[Row]),
+      Row(4L, "four", Seq(7L, 8L), null, Seq(null, Row(5L, "q"))),
+      Row(Long.MaxValue, "max", Seq(-1L), Seq(9, 10), Seq(Row(null, null))),
+      Row(Long.MinValue, "min", Seq(null, 5L), Seq(11), Seq(Row(0L, "r"))))
+    spark.createDataFrame(rows.asJava, schema)
+  }
+
+  private def external(df: DataFrame): Option[Seq[Row]] =
+    LocalPlan.rows(df).map { case (sch, rs) =>
+      assert(sch == df.schema)
+      val conv = CatalystTypeConverters.createToScalaConverter(sch)
+      rs.map(r => conv(r).asInstanceOf[Row])
+    }
+
+  private def same(label: String, df: DataFrame): Unit = {
+    val got = external(df)
+    assert(got.isDefined, s"$label: a local plan must evaluate on the driver\n" +
+      df.queryExecution.optimizedPlan)
+    assert(got.get.map(_.toString) == df.collect().toSeq.map(_.toString), label)
+  }
+
+  test("explode, posexplode, inline and arrays_zip, outer and not, equal collect") {
+    val cases: Seq[(String, DataFrame)] = Seq(
+      "explode" -> frame.select(col("id"), explode(col("a"))),
+      "explode_outer" -> frame.select(col("id"), explode_outer(col("a"))),
+      "posexplode" -> frame.select(col("id"), col("tag"), posexplode(col("b"))),
+      "posexplode_outer" -> frame.select(col("id"), posexplode_outer(col("b"))),
+      "inline" -> frame.select(col("id"), inline(col("s"))),
+      "inline_outer" -> frame.select(col("tag"), inline_outer(col("s"))),
+      "posexplode(arrays_zip)" -> frame
+        .select(col("id"), posexplode(arrays_zip(col("a"), col("b"))))
+        .select(col("id"), col("pos"), col("col.a").as("a"), col("col.b").as("b")),
+      "posexplode_outer(arrays_zip)" -> frame
+        .select(col("id"), posexplode_outer(arrays_zip(col("a"), col("b"))))
+        .select((col("pos") * 4294967296L).bitwiseXOR(col("id")).as("k"),
+          col("col.b").as("b")),
+      "explode_outer(arrays_zip)" -> frame
+        .select(col("tag"), explode_outer(arrays_zip(col("b"), col("a")))),
+      // pruned child columns: the Generate keeps only what the top needs
+      "pruned child" -> frame.select(col("id"), col("tag"), col("a"), col("b"),
+          posexplode(col("a")))
+        .select(col("tag"), col("col")),
+      "no child column" -> frame.select(explode(col("b")).as("v")),
+      "filter + project under and over a generate" -> frame
+        .filter(size(col("b")) > 0)
+        .withColumn("n", size(col("a")).cast("long"))
+        .select(col("id"), col("n"), posexplode(col("b")))
+        .filter(col("pos") =!= 1)
+        .select(col("id"), (col("col") + col("n")).as("v")),
+      "stable literal" -> frame.select(col("id"), explode(col("a")))
+        .select(col("col").bitwiseXOR(graft.functions.StableLong.stableLit(Long.MinValue))
+          .as("v")),
+      "empty relation" -> frame.filter(lit(false)).select(col("id"), explode(col("a")))
+    )
+    cases.foreach { case (label, df) => same(label, df) }
+  }
+
+  test("generated rows past maxRows refuse the plan") {
+    val df = frame.select(col("id"), explode(col("a")))
+    val n = df.collect().length
+    assert(LocalPlan.rows(df, maxRows = n).exists(_._2.size == n))
+    assert(LocalPlan.rows(df, maxRows = n - 1).isEmpty)
+  }
+
+  test("nondeterministic, unevaluable and non-local plans are refused") {
+    // over a Generate, which Spark leaves unfolded: a Project or Filter
+    // directly over the relation Spark folds itself, nondeterminism and all
+    val exploded = frame.select(col("id"), explode(col("a")))
+    val refused: Seq[(String, DataFrame)] = Seq(
+      "rand" -> exploded.select(col("id"), rand(7).as("r")),
+      "monotonically_increasing_id" -> exploded.withColumn("m", monotonically_increasing_id()),
+      "nondeterministic filter" -> exploded.filter(rand(3) > 0.5),
+      "scalar subquery" -> exploded.select(col("col"),
+        expr("(SELECT max(id) FROM range(3))").as("m")),
+      "sort" -> exploded.orderBy(col("col")),
+      "distributed leaf" -> spark.range(5).select(col("id"), explode(array(col("id")))))
+    refused.foreach { case (label, df) =>
+      assert(LocalPlan.rows(df).isEmpty, s"$label must not evaluate on the driver")
+      df.collect() // Spark itself still runs it
+    }
+  }
+}

@@ -261,9 +261,58 @@ class MessageGrainFuzzSpec extends SparkSpec {
     }
   }
 
+  private val EvInterval = 10L
+
+  /** ev44's greedy cue chain (`ev44_Writer.cpp:127-134`) over the event
+    * counts of the written messages: the global event index of each cue.
+    */
+  private def greedyCues(counts: Seq[Int]): Seq[Long] = {
+    var last = 0L; var ea = 0L
+    counts.flatMap { n =>
+      ea += n
+      if (n > 0 && ea > last + EvInterval) { last = ea - 1; Some(last) } else None
+    }
+  }
+
+  /** The ev44 source of the multi-source test, four triggers of
+    * (message, event count): a tiny trigger with a pre-start message and
+    * an empty one; a tiny trigger whose first message fires a cue and
+    * whose later ones make a superset miss (a crossing the candidate grid
+    * of the trigger's anchor does not predict) around an empty message; a
+    * 600-message burst, past the fused payload's row bound, right after
+    * it; a tiny trigger that crosses stop, with stragglers.
+    */
+  private def evTimeline(seed: Int): Seq[Seq[(M, Int)]] = {
+    val rnd = new scala.util.Random(seed)
+    var offset = 0L
+    def msg(tsMs: Long, n: Int) = { offset += 1; (M(offset - 1, tsMs), n) }
+    def inWin() = StartMs + 100L * rnd.nextInt(40)
+    val t0 = Seq(msg(StartMs - 500, 3), msg(inWin(), 1 + rnd.nextInt(6)), msg(inWin(), 0),
+      msg(inWin(), 1 + rnd.nextInt(6)))
+    // the chain's state after trigger 0: its events and cue anchor
+    val c0   = t0.filter(_._1.tsMs >= StartMs).map(_._2)
+    val ea0  = c0.sum.toLong
+    val l0   = greedyCues(c0).lastOption.getOrElse(0L)
+    val iv   = EvInterval
+    val n1   = (l0 + iv - ea0 + 5).toInt          // fires: ea = l0 + iv + 5
+    val t1 = Seq(msg(inWin(), n1), msg(inWin(), 0),
+      msg(inWin(), 6),                             // ea = l0 + 2iv + 1: candidate, no cue
+      msg(inWin(), 5),                             // ea = l0 + 2iv + 6: cue, no candidate
+      msg(inWin(), 3), msg(inWin(), 0))
+    val t2 = Seq.fill(600)(msg(inWin(), rnd.nextInt(5)))
+    val crossAt = rnd.nextInt(4)
+    val t3 = (0 until 6).map { i =>
+      if (i < crossAt) msg(inWin(), 1 + rnd.nextInt(4))
+      else if (i == crossAt) msg(StopMs + 300, 2)
+      else msg(inWin(), 2) // straggler: dropped
+    }
+    Seq(t0, t1, t2, t3)
+  }
+
   test("multi-source keyed pass: every stream matches its own sub-timeline") {
     // four streams of one schema: s0..s2 under g/<source>, plus s1 again
-    // under h — two paths on one (topic, source) key
+    // under h — two paths on one (topic, source) key; and an ev44 stream
+    // under ev, whose tiny triggers run the exploding module on the driver
     val streams = MultiSources.map(s => s"g/$s" -> s) :+ ("h" -> "s1")
     def node(s: String) =
       s"""{ "module": "f144", "config": { "source": "$s", "topic": "tp" } }"""
@@ -272,10 +321,24 @@ class MessageGrainFuzzSpec extends SparkSpec {
          |  { "name": "g", "type": "group", "children": [
          |${MultiSources.map(s => s"""{ "name": "$s", "type": "group",
          |  "children": [ ${node(s)} ] }""".stripMargin).mkString(",\n")} ] },
-         |  { "name": "h", "type": "group", "children": [ ${node("s1")} ] }
+         |  { "name": "h", "type": "group", "children": [ ${node("s1")} ] },
+         |  { "name": "ev", "type": "group", "children": [
+         |    { "module": "ev44", "config": { "source": "ev", "topic": "tp",
+         |                                    "cue_interval": $EvInterval } } ] }
          |] }""".stripMargin
     for (seed <- Seq(5, 23, 71, 202)) {
       val batches = multiTimeline(seed)
+      val evBatches = evTimeline(seed)
+      val evCount = evBatches.flatten.map { case (m, n) => m.offset -> n }.toMap
+      val evSurvivors = expectedSurvivors(evBatches.map(_.map(_._1)),
+        acceptRepeats = true, emitBuffered = false)
+      val evCounts = evSurvivors.map(m => evCount(m.offset))
+      def evFrame(b: Seq[(M, Int)]): DataFrame = b.map { case (m, n) =>
+        Ev44Msg("tp", "ev", m.offset, m.tsMs, m.tsNs, Seq(m.tsNs), Seq(0),
+          Seq.tabulate(n)(i => (m.offset * 10 + i).toInt), Seq.tabulate(n)(i => i))
+      }.toDF()
+      val evTables = scala.collection.mutable.Map.empty[String, Seq[Seq[String]]]
+      val h5s = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
       val sub = MultiSources.map(s =>
         s -> batches.map(_.filter(_._1 == s).map(_._2))).toMap
       // the generator covers what it promises
@@ -297,12 +360,34 @@ class MessageGrainFuzzSpec extends SparkSpec {
         val out = Files.createTempDirectory("graft-fuzz-multi").toString
         val job = new StreamingJob(spark, NexusPlan.parse(template), out, StartMs, StopMs)
         spark.conf.set("spark.graft.stream.localAppend.maxRows", maxRows)
-        try batches.zipWithIndex.foreach { case (b, i) =>
+        try batches.zip(evBatches).zipWithIndex.foreach { case ((b, ev), i) =>
           job.processBatch("f144", b.map { case (s, m) =>
             F144Msg("tp", s, m.offset, m.tsMs, m.tsNs, m.offset + 0.5)
           }.toDF(), i.toLong)
+          job.processBatch("ev44", evFrame(ev), i.toLong)
+          if (i == 1) assert(graft.operators.WriterModules.Ev44.lastCueFallbacks >= 1,
+            s"seed=$seed: trigger 1 must exercise a superset miss")
         } finally spark.conf.unset("spark.graft.stream.localAppend.maxRows")
-        job.finish()
+        val h5 = s"$out.h5"
+        job.finish(Some(h5))
+        h5s += Files.readAllBytes(java.nio.file.Paths.get(h5))
+        // ev44 against the message-grain survivors: events whole and in
+        // order, one index row per non-empty message at its cumulative
+        // shift, the greedy cue chain
+        def evRead(t: String) = spark.read.parquet(s"$out/data/ev/$t").orderBy("row").collect()
+        val events = evRead("events")
+        assert(events.map(_.getAs[Int]("event_time_offset")).toSeq ==
+          evSurvivors.flatMap(m => Seq.tabulate(evCount(m.offset))(i => (m.offset * 10 + i).toInt)),
+          s"ev44 seed=$seed maxRows=$maxRows: events")
+        assert(evRead("index").map(_.getAs[Long]("event_index")).toSeq ==
+          evCounts.scanLeft(0L)(_ + _).zip(evCounts).collect { case (c, n) if n > 0 => c },
+          s"ev44 seed=$seed maxRows=$maxRows: index")
+        assert(evRead("cue").map(_.getAs[Long]("cue_index")).toSeq == greedyCues(evCounts),
+          s"ev44 seed=$seed maxRows=$maxRows: cue")
+        assert(job.counter("ev", "events_written") == evCounts.sum.toLong)
+        assert(job.counter("ev", "finished") == 1L, "ev must have finished")
+        evTables(maxRows) = Seq("events", "index", "cue").map(t =>
+          evRead(t).map(_.toString).toSeq)
         streams.foreach { case (path, s) =>
           val exp = expectedSurvivors(sub(s), acceptRepeats = false, emitBuffered = true)
             .map(m => (m.tsNs, m.offset))
@@ -319,6 +404,10 @@ class MessageGrainFuzzSpec extends SparkSpec {
           assert(job.counter(path, "finished") == 1L, s"$path must have finished")
         }
       }
+      // the fused, driver-evaluated arm and the per-key frame arm write
+      // the same mirror and the same file
+      assert(evTables("128") == evTables("0"), s"seed=$seed: ev44 tables differ by arm")
+      assert(java.util.Arrays.equals(h5s(0), h5s(1)), s"seed=$seed: .h5 bytes differ by arm")
     }
   }
 

@@ -484,6 +484,50 @@ class StreamingJobSpec extends SparkSpec {
         assert(a.map(_.toString).toSeq == b.map(_.toString).toSeq, s"$k parity")
       }
     }
+
+    // ev44 rides the same band: the module transform (its numbering and
+    // cue-candidate collect), the renumber of the exploded events and
+    // index tables and all three appends run on the driver, so a steady
+    // trigger is the keyed pass alone. Four events per message against a
+    // cue interval of four fires a cue on every message after the first.
+    val evPlan =
+      """{ "children": [ { "name": "entry", "type": "group", "children": [
+        |  { "name": "det", "type": "group", "children": [
+        |    { "module": "ev44", "config": { "source": "det", "topic": "tp",
+        |                                    "cue_interval": 4 } } ] } ] } ] }""".stripMargin
+    def evMsgs(from: Long, n: Int) = (from until from + n).map { o =>
+      val tsMs = 1000 + o
+      Ev44Msg("tp", "det", o, tsMs, tsMs * 1000000L, Seq(tsMs * 1000000L), Seq(0),
+        Seq.tabulate(4)(i => (o * 10 + i).toInt), Seq.tabulate(4)(i => (o * 100 + i).toInt))
+    }.toDF()
+    def evRun(maxRows: String): (String, Int, Map[String, Long]) = {
+      val out = Files.createTempDirectory("graft-fused-ev44").toString
+      spark.conf.set("spark.graft.stream.localAppend.maxRows", maxRows)
+      try {
+        val job = new StreamingJob(spark, NexusPlan.parse(evPlan), out, 0, StopMs)
+        job.processBatch("ev44", evMsgs(0, 2)) // arms the gate
+        def paths = Seq("appends_fused", "appends_spark")
+          .map(c => c -> job.counter("entry/det", c)).toMap
+        val before = paths
+        val steady = jobsDuring(job.processBatch("ev44", evMsgs(2, 3)))
+        val after = paths
+        job.processBatch("ev44", evMsgs(5, 3))
+        job.finish()
+        (out, steady, after.map { case (c, v) => c -> (v - before(c)) })
+      } finally spark.conf.unset("spark.graft.stream.localAppend.maxRows")
+    }
+    val (evOut, evSteady, evPaths) = evRun("128")
+    assert(evSteady == 1, s"ev44: steady-state tiny trigger should be 1 job, saw $evSteady")
+    assert(evPaths == Map("appends_fused" -> 3L, "appends_spark" -> 0L),
+      s"ev44: events, index and cue must all append on the driver: $evPaths")
+    val (evOff, _, offPaths) = evRun("0")
+    assert(offPaths("appends_spark") == 2L, "maxRows=0: events and index take Spark appends")
+    Seq("events", "index", "cue").foreach { t =>
+      def read(o: String) = spark.read.parquet(s"$o/data/entry/det/$t").orderBy("row")
+        .collect().map(_.toString).toSeq
+      assert(read(evOut) == read(evOff), s"ev44 $t parity")
+    }
+    assert(spark.read.parquet(s"$evOut/data/entry/det/cue").count() == 7L)
   }
 
   test("fused payload survives a burst after an idle trigger (overflow → distributed path)") {
@@ -506,6 +550,74 @@ class StreamingJobSpec extends SparkSpec {
     val d = spark.read.parquet(s"$out/data/entry/speed/data").orderBy("row")
     assert(d.count() == 104)
     assert(d.select("row").collect().map(_.getLong(0)).toSeq == (0L until 104L))
+  }
+
+  test("a wide ad00 burst after a tiny trigger overflows the byte cap: distributed path, same rows") {
+    // a row bound alone (4 × maxRows = 512 messages) carries this burst of
+    // ten 16 KB images back to the driver inside the keyed pass; the byte
+    // cap (spark.graft.rows.smallRenumberBytes) latches it. Observed as the
+    // largest result a task of the burst trigger returns to the driver.
+    val plan = NexusPlan.parse(
+      """{ "children": [ { "name": "entry", "type": "group", "children": [
+        |  { "name": "img", "type": "group", "children": [
+        |    { "module": "ad00", "config": { "source": "cam", "topic": "tp",
+        |                                    "cue_interval": 2 } } ] } ] } ] }""".stripMargin)
+    // random pixels: task results travel compressed
+    def images(from: Long, n: Int, width: Int) = (from until from + n).map { o =>
+      val rnd = new scala.util.Random(o)
+      graft.sources.Fixtures.Ad00Msg("tp", "cam", o, 1000 + o, (1000 + o) * 1000000L,
+        Seq(width.toLong), Seq.fill(width)(rnd.nextDouble()))
+    }.toDF()
+    def maxResultBytes(body: => Unit): Long = {
+      val bytes = new java.util.concurrent.atomic.AtomicLong
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+          if (t.taskMetrics != null) bytes.accumulateAndGet(t.taskMetrics.resultSize, math.max)
+      }
+      spark.sparkContext.addSparkListener(l)
+      try {
+        body
+        // listener delivery is async: wait until the value is stable
+        var prev = -1L; var stable = 0
+        while (stable < 3) {
+          Thread.sleep(100)
+          if (bytes.get == prev) stable += 1 else { prev = bytes.get; stable = 0 }
+        }
+        bytes.get
+      } finally spark.sparkContext.removeSparkListener(l)
+    }
+    def run(maxRows: String, capBytes: Option[Long]): (String, Long, Seq[Long]) = {
+      val out = Files.createTempDirectory("graft-wideburst").toString
+      spark.conf.set("spark.graft.stream.localAppend.maxRows", maxRows)
+      capBytes.foreach(c => spark.conf.set("spark.graft.rows.smallRenumberBytes", c.toString))
+      try {
+        val job = new StreamingJob(spark, plan, out, 0, 1L << 40)
+        def fused = job.counter("entry/img", "appends_fused")
+        job.processBatch("ad00", images(0, 2, 4)) // arms the gate
+        val f1 = fused
+        job.processBatch("ad00", images(2, 2, 4)) // tiny: the cue appends fused
+        val f2 = fused
+        val burst = maxResultBytes(job.processBatch("ad00", images(4, 10, 2000)))
+        job.finish()
+        (out, burst, Seq(f1, f2))
+      } finally {
+        spark.conf.unset("spark.graft.stream.localAppend.maxRows")
+        spark.conf.unset("spark.graft.rows.smallRenumberBytes")
+      }
+    }
+    val (on, burstOn, fusedOn) = run("128", Some(64L * 1024))
+    assert(fusedOn(1) == fusedOn(0) + 1, s"the tiny trigger's cue must append fused: $fusedOn")
+    assert(burstOn < 64L * 1024, s"the burst reached the driver: $burstOn bytes")
+    // under the default 32 MiB cap the same burst does ride the payload
+    val (_, burstDefault, _) = run("128", None)
+    assert(burstDefault > 160L * 1000, s"the payload should carry the burst: $burstDefault")
+    val (off, _, _) = run("0", Some(64L * 1024))
+    Seq("data", "cue").foreach { t =>
+      def read(o: String) = spark.read.parquet(s"$o/data/entry/img/$t").orderBy("row")
+        .collect().map(_.toString).toSeq
+      assert(read(on) == read(off), s"ad00 $t parity")
+    }
+    assert(spark.read.parquet(s"$on/data/entry/img/data").count() == 14L)
   }
 
   test("x5f2 counters ride the push-metrics reporter with live values") {
