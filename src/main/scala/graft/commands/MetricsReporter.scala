@@ -229,7 +229,7 @@ object MetricsReporter {
       // duplicates)
       val names = live.getOrElse(stream, Map.empty).keySet ++
         Set("events_written", "write_errors", "finished",
-          "appends_fused", "appends_collect", "appends_spark", "last_batch_ms")
+          "appends_fused", "appends_spark", "last_batch_ms")
       // stream keys are output-tree paths (entry/speed): dots flatten like
       // the fqdn, path levels become graphite name segments
       val sub = registrar.getNewRegistrar(stream.replace('.', '_').replace('/', '.'))

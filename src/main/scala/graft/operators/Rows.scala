@@ -23,7 +23,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * constrains the OUTPUT order, not the numbering computation: row ids are
   * pure arithmetic over (partition prefix, local position) and need no
   * single-partition stage. `orderCol` must be unique per row (Kafka offsets
-  * and the modules' sparse sort keys are) for deterministic assignment.
+  * are) for deterministic assignment.
   */
 object Rows {
 
@@ -37,9 +37,10 @@ object Rows {
     * routed 160 MB triggers into one task, −16% at 20k-msg triggers), so
     * a byte hint, when the caller has one, both relaxes the row bound for
     * tiny rows and vetoes the small path for wide ones. The byte bound is
-    * overridable via spark.graft.rows.smallRenumberBytes.
+    * overridable via spark.graft.rows.smallRenumberBytes. The same row
+    * bound caps what the streaming write evaluates on the driver.
     */
-  private val SmallRenumberRows = 65536L
+  private[graft] val SmallRenumberRows = 65536L
 
   /** `spark.graft.rows.smallRenumberBytes` (32 MiB): the byte budget of
     * the one-task and driver numbering paths, and of the streaming fused
@@ -50,10 +51,11 @@ object Rows {
 
   /** Returns `df` with `rowCol` = consecutive ids `start, start+1, …` in
     * ascending `orderCol` order; replaces `rowCol` if it already exists
-    * (it may equal `orderCol` — renumbering sparse sort keys in place).
-    * Optionally also adds `weight = (weightCol, outCol, wStart)`: `outCol` =
-    * `wStart` + exclusive running sum of `weightCol` in the same order (the
-    * ev44 `EventsWritten` shift, `ev44_Writer.cpp:118-126`).
+    * (it may equal `orderCol`). Each of `weights` = `(weightCol, outCol,
+    * wStart)` also adds `outCol` = `wStart` + exclusive running sum of
+    * `weightCol` in the same order, a null weight counting 0: the ev44
+    * `EventsWritten` shift (`ev44_Writer.cpp:118-126`) and the first id of
+    * each message's exploded rows.
     *
     * `sizeHint` is the caller's row-count estimate (exact or upper bound)
     * and `byteHint` its byte estimate, used ONLY to shape the exchange —
@@ -69,21 +71,27 @@ object Rows {
       orderCol: String,
       rowCol: String = "row",
       start: Long = 0L,
-      weight: Option[(String, String, Long)] = None,
+      weights: Seq[(String, String, Long)] = Nil,
       sizeHint: Long = -1L,
       byteHint: Long = -1L
   ): DataFrame = {
     val bytesMax = smallRenumberBytes(df.sparkSession)
+    val wStarts  = weights.map(_._3).toArray
+    def weightIdx(fields: Array[StructField]): Array[Int] = weights.map { case (w, _, _) =>
+      val i = fields.indexWhere(_.name == w)
+      require(i >= 0, s"weight column $w not found")
+      i
+    }.toArray
     // DRIVER fast path: a frame whose rows are already on the driver (a
-    // buffered flush, the streaming fused payload, and every Project,
-    // Filter or explode over them — see LocalPlan) numbers on the driver
-    // with ZERO jobs and comes back as a LocalRelation, so downstream
-    // module transforms keep evaluating on the driver all the way into
-    // the driver-side parquet append. Gates, as on the distributed small
-    // path: an integral order column; within the small-renumber row bound
-    // (a LARGE local frame should re-enter the distributed world here, not
-    // anchor a driver-side pipeline — a hint above it skips the probe);
-    // the wide-row byte veto.
+    // buffered flush, the streaming fused payload, and every Project or
+    // Filter over them — see LocalPlan) numbers on the driver with ZERO
+    // jobs and comes back as a LocalRelation, so the module's explodes
+    // and transforms keep evaluating on the driver all the way into the
+    // driver-side parquet append. Gates, as on the distributed small
+    // path: an integral order column; within the row bound (a LARGE local
+    // frame should re-enter the distributed world here, not anchor a
+    // driver-side pipeline — a hint above it skips the probe); the
+    // wide-row byte veto.
     val oField = df.schema.fields.find(_.name == orderCol)
     val local =
       if ((sizeHint >= 0 && sizeHint > SmallRenumberRows) ||
@@ -98,13 +106,10 @@ object Rows {
         val oIdx   = schema.fieldIndex(orderCol)
         val toRow  = CatalystTypeConverters.createToScalaConverter(schema)
         val ext    = internal.map(r => toRow(r).asInstanceOf[Row])
-        val fields = schema.fields
-        val wIdx   = weight.map { case (w, _, _) => fields.indexWhere(_.name == w) }
-        wIdx.foreach(i => require(i >= 0, s"weight column not found"))
-        val (rowIdx, outSchema) = stampSchema(fields, rowCol, weight)
+        val (rowIdx, outSchema) = stampSchema(schema.fields, rowCol, weights)
         val stampedRows = stampRows(
           ext.sortBy(_.getAs[Number](oIdx).longValue()).iterator,
-          rowIdx, wIdx, start, weight.map(_._3).getOrElse(0L)).toSeq
+          rowIdx, weightIdx(schema.fields), start, wStarts).toSeq
         return df.sparkSession.createDataFrame(stampedRows.asJava, outSchema)
       case _ => ()
     }
@@ -125,38 +130,38 @@ object Rows {
       } else
         df.repartitionByRange(col(orderCol)).sortWithinPartitions(col(orderCol))
     val fields = sorted.schema.fields
-    val wIdx   = weight.map { case (w, _, _) => fields.indexWhere(_.name == w) }
-    wIdx.foreach(i => require(i >= 0, s"weight column not found"))
+    val wIdx   = weightIdx(fields)
 
     val rdd = sorted.rdd
-    // job 1: per-partition counts (+ weight sums) — O(numPartitions) longs.
+    // job 1: per-partition counts and weight sums — O(numPartitions) longs.
     // A single-partition frame needs no prefix sums at all: partition 0
-    // stamps from `start`/`wStart` directly, so the stats job is skipped
-    // entirely (the streaming per-trigger path: one job saved per
-    // renumbered table).
-    val stats: Array[(Int, Long, Long)] =
-      if (small) Array((0, -1L, -1L))
+    // stamps from `start` and the weight starts directly, so the stats job
+    // is skipped entirely (the streaming per-trigger path).
+    val stats: Array[(Int, Long, Array[Long])] =
+      if (small) Array((0, -1L, Array.empty[Long]))
       else rdd
         .mapPartitionsWithIndex { (pid, it) =>
-          var n = 0L; var w = 0L
+          var n = 0L
+          val w = new Array[Long](wIdx.length)
           it.foreach { r =>
             n += 1
-            wIdx.foreach(i => if (!r.isNullAt(i)) w += r.getAs[Number](i).longValue())
+            var k = 0
+            while (k < wIdx.length) { w(k) += weightOf(r, wIdx(k)); k += 1 }
           }
           Iterator((pid, n, w))
         }
         .collect()
         .sortBy(_._1)
     val rowOffsets = new Array[Long](stats.length + 1)
-    val wOffsets   = new Array[Long](stats.length + 1)
+    val wOffsets   = new Array[Array[Long]](stats.length + 1)
     rowOffsets(0) = start
-    wOffsets(0) = weight.map(_._3).getOrElse(0L)
+    wOffsets(0) = wStarts
     stats.foreach { case (pid, n, w) =>
       rowOffsets(pid + 1) = rowOffsets(pid) + n
-      wOffsets(pid + 1) = wOffsets(pid) + w
+      wOffsets(pid + 1) = wOffsets(pid).zip(w).map { case (a, b) => a + b }
     }
 
-    val (rowIdx, outSchema) = stampSchema(fields, rowCol, weight)
+    val (rowIdx, outSchema) = stampSchema(fields, rowCol, weights)
 
     // job 2: stamp ids; reuses the job-1 shuffle output
     val stamped = rdd.mapPartitionsWithIndex { (pid, it) =>
@@ -166,51 +171,51 @@ object Rows {
   }
 
   /** Output schema shared by both numbering paths: `rowCol` becomes (or
-    * joins as) a non-null long; the optional weight output appends.
+    * joins as) a non-null long; each weight's output appends in order.
     * Returns the pre-existing index of `rowCol` (−1 = appended).
     */
   private def stampSchema(
       fields: Array[StructField],
       rowCol: String,
-      weight: Option[(String, String, Long)]
+      weights: Seq[(String, String, Long)]
   ): (Int, StructType) = {
     val rowIdx = fields.indexWhere(_.name == rowCol)
     val baseFields =
       if (rowIdx >= 0) fields.updated(rowIdx, StructField(rowCol, LongType, nullable = false))
       else fields :+ StructField(rowCol, LongType, nullable = false)
-    (rowIdx, StructType(weight match {
-      case Some((_, out, _)) => baseFields :+ StructField(out, LongType, nullable = false)
-      case None              => baseFields
-    }))
+    (rowIdx, StructType(baseFields ++
+      weights.map { case (_, out, _) => StructField(out, LongType, nullable = false) }))
   }
 
+  private def weightOf(r: Row, i: Int): Long =
+    if (r.isNullAt(i)) 0L else r.getAs[Number](i).longValue()
+
   /** One stamping pass over already-ordered rows: consecutive ids from
-    * `rowStart`, exclusive weight prefix from `wStart` — THE single
-    * definition the driver fast path and the distributed job-2 mapper
-    * both use (a second copy could drift the two numbering paths).
+    * `rowStart`, each weight's exclusive prefix from its `wStarts` entry —
+    * THE single definition the driver fast path and the distributed job-2
+    * mapper both use (a second copy could drift the two numbering paths).
     */
   private def stampRows(
       it: Iterator[Row],
       rowIdx: Int,
-      wIdx: Option[Int],
+      wIdx: Array[Int],
       rowStart: Long,
-      wStart: Long
+      wStarts: Array[Long]
   ): Iterator[Row] = {
     var rowAcc = rowStart
-    var wAcc   = wStart
+    val wAcc   = wStarts.clone()
     it.map { r =>
       val base =
         if (rowIdx >= 0) r.toSeq.updated(rowIdx, rowAcc) else r.toSeq :+ rowAcc
-      val out = wIdx match {
-        case Some(i) =>
-          val here = if (r.isNullAt(i)) 0L else r.getAs[Number](i).longValue()
-          val withW = base :+ wAcc
-          wAcc += here
-          withW
-        case None => base
+      val ws = new Array[Any](wIdx.length)
+      var k = 0
+      while (k < wIdx.length) {
+        ws(k) = wAcc(k)
+        wAcc(k) += weightOf(r, wIdx(k))
+        k += 1
       }
       rowAcc += 1
-      Row.fromSeq(out)
+      Row.fromSeq(base ++ ws)
     }
   }
 }

@@ -53,13 +53,15 @@ object WriterModules {
 
   /** Cross-batch append cursor — the writer-module member fields the
     * reference carries between writeImpl calls, passed in per batch:
-    * `rowStart` = message rows already written ("NrOfWrites"),
-    * `eventsWritten` = ev44 cumulative events (`ev44_Writer.cpp:118-126`),
-    * `lastCue` = the greedy cue-chain anchor (`LastCueIndex` /
-    * `LastIndexAtWrite`, `ev44_Writer.cpp:127-134`, `f144_Writer.cpp:259-263`).
+    * `rowsWritten` = rows already in each table ("NrOfWrites"; a module
+    * numbers a table's new rows from its count, so every table leaves the
+    * module with its final row ids), `eventsWritten` = ev44 cumulative
+    * events (`ev44_Writer.cpp:118-126`), `lastCue` = the greedy cue-chain
+    * anchor (`LastCueIndex` / `LastIndexAtWrite`, `ev44_Writer.cpp:127-134`,
+    * `f144_Writer.cpp:259-263`).
     */
   final case class Cursor(
-      rowStart: Long = 0L,
+      rowsWritten: Map[String, Long] = Map.empty,
       eventsWritten: Long = 0L,
       lastCue: Long = 0L,
       /** message count of THIS batch (−1 unknown) — an exchange-shaping
@@ -76,6 +78,8 @@ object WriterModules {
         * it instead of an aggregate job.
         */
       elemHint: Long = -1L) {
+    /** the next row id of `table` */
+    def next(table: String): Long = rowsWritten.getOrElse(table, 0L)
     /** crude batch payload bytes: 8 B/element + envelope per message. */
     def byteHint: Long =
       if (sizeHint < 0) -1L
@@ -101,19 +105,12 @@ object WriterModules {
       * vs `ev44_Writer.cpp:133`).
       */
     def nextLastCue(maxCueIndex: Long): Long = maxCueIndex + 1
-    /** Per-message exploded-element count (modules whose data rows explode
-      * the payload array): lets the streaming job fold the batch's exact
-      * element total into its one fused scalar aggregate, so the
-      * append-side renumber and the ev44 event cursor need no extra job.
+    /** Per-message payload-element count (modules with array payloads):
+      * lets the streaming job fold the batch's exact element total into
+      * its one fused scalar aggregate, so the numbering's byte hint, the
+      * append's file split and the ev44 event cursor need no extra job.
       */
     def elementCountCol: Option[org.apache.spark.sql.Column] = None
-    /** Tables whose `row` sort keys are ALREADY globally unique and
-      * monotone as emitted (dense data rows started at `cur.rowStart`;
-      * cue rows reuse their message's global row) — the sink appends them
-      * without a renumber pass. Exploding modules override: their sparse
-      * `row·2³² + pos` keys need the write-side dense renumber.
-      */
-    def denseRowTables: Set[String] = Set("data", "cue")
     /** Exact driver-side cue-row count for this batch, when the module's
       * cue grid is pure cursor arithmetic (unit-increment chains over
       * one-data-row-per-message tables: f144/ad00). `rows` is the exact
@@ -184,19 +181,30 @@ object WriterModules {
     * distributed ([[Rows.indexed]] two-pass prefix sum — no
     * single-partition stage; the reference's single-writer discipline
     * (`src/Stream/MessageWriter.cpp:31-36`) constrains output order, not
-    * the numbering computation). Starts at the cross-batch cursor so
-    * non-exploding tables need no second numbering pass at append time.
+    * the numbering computation). Starts at the data table's cursor, so
+    * the ids are final: the sink appends the table as emitted.
     */
   private def withRow(df: DataFrame, cur: Cursor = Cursor()): DataFrame =
-    Rows.indexed(df, "offset", start = cur.rowStart,
+    Rows.indexed(df, "offset", start = cur.next("data"),
       sizeHint = cur.sizeHint, byteHint = cur.byteHint)
 
-  /** Sparse sort key for exploded rows: message row in the high 32 bits,
-    * element position low — unique and monotone within a batch (renumbered
-    * dense at append; bounds: <2³¹ messages/batch, <2³² elems/message).
+  /** Rows an explode of `arr` emits: its length, null counting 0 (`size`
+    * of null is null under ANSI and −1 without).
     */
-  private def sparseKey: org.apache.spark.sql.Column =
-    (col("row") * lit(4294967296L) + col("pos")).as("row")
+  private def emitted(arr: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    greatest(size(arr).cast("long"), lit(0L))
+
+  /** Messages in arrival order, each with `first` = the id of its first
+    * exploded row in `table`: the table's cursor plus the exclusive
+    * prefix of `n` (the rows each message's explode emits). An exploded
+    * row's final id is then `first + pos`, the reference's running count
+    * (`ev44_Writer.cpp:118-126`), with no second numbering pass.
+    */
+  private def withFirst(df: DataFrame, cur: Cursor, table: String,
+      n: org.apache.spark.sql.Column): DataFrame =
+    Rows.indexed(df.withColumn("__n", n), "offset",
+      weights = Seq(("__n", "first", cur.next(table))),
+      sizeHint = cur.sizeHint, byteHint = cur.byteHint)
 
   /** f144 scalar log: (time, value) + cue index + min/max/mean metadata
     * (`src/WriterModule/f144/f144_Writer.cpp:197-276`).
@@ -228,7 +236,7 @@ object WriterModules {
     }
     override def plannedCueCount(cfg: ModuleConfig, cur: Cursor, rows: Long): Option[Long] =
       cfg.long("cue_interval").filter(_ > 0)
-        .map(unitGridCueCount(cur.lastCue, cur.rowStart, rows, _))
+        .map(unitGridCueCount(cur.lastCue, cur.next("data"), rows, _))
     /** min/max/avg/count of the stored values with Spark's aggregate
       * rules: min and max in the stored dtype ([[sqlCompare]]; of equal
       * values the first in row order stays), avg a double sum over the
@@ -332,34 +340,38 @@ object WriterModules {
       * EventsWritten - 1`, `ev44_Writer.cpp:133`), not the write count.
       */
     override def nextLastCue(maxCueIndex: Long): Long = maxCueIndex
-    /** events/index carry sparse exploded keys → dense renumber at append. */
-    override def denseRowTables: Set[String] = Set("cue")
     override def elementCountCol = Some(size(col("time_of_flight")))
     def tables(df: DataFrame, cfg: ModuleConfig, cur: Cursor): Map[String, DataFrame] = {
-      // one distributed pass assigns both the message row index and the
-      // exclusive running event count (EventsWritten, ev44_Writer.cpp:118-126)
-      val base = Rows.indexed(
-        df.withColumn("__n_ev", size(col("time_of_flight")).cast("long")),
-        "offset", weight = Some(("__n_ev", "events_written", 0L)),
+      // one numbering pass over the messages gives, per message, the
+      // running event count (EventsWritten, ev44_Writer.cpp:118-126) and
+      // the first id of its rows in each exploded table
+      val events0 = arrays_zip(col("time_of_flight"), col("pixel_id"))
+      val index0  = arrays_zip(col("reference_time"), col("reference_time_index"))
+      // empty messages append no ref times (ev44_Writer.cpp:111)
+      val hasEvents = size(col("time_of_flight")) > 0
+      val cum = Rows.indexed(
+        df.withColumn("__n_ev", size(col("time_of_flight")).cast("long"))
+          .withColumn("__n_events", emitted(events0))
+          .withColumn("__n_index", when(hasEvents, emitted(index0)).otherwise(0L)),
+        "offset", weights = Seq(
+          ("__n_ev", "events_written", cur.eventsWritten),
+          ("__n_events", "events_first", cur.next("events")),
+          ("__n_index", "index_first", cur.next("index"))),
         sizeHint = cur.sizeHint, byteHint = cur.byteHint)
-      val cum = base
         .withColumn("events_after", col("events_written") + col("__n_ev"))
-        .drop("__n_ev")
-      // empty messages append no ref times (ev44_Writer.cpp:111); every
-      // reference_time element lands, each index shifted by EventsWritten
-      // (ev44_Writer.cpp:115-125)
-      val nonEmpty = cum.filter(size(col("time_of_flight")) > 0)
+      // every reference_time element lands, each index shifted by
+      // EventsWritten (ev44_Writer.cpp:115-125)
+      val nonEmpty = cum.filter(hasEvents)
       val index = nonEmpty
-        .select(col("row"), col("events_written"),
-          posexplode(arrays_zip(col("reference_time"), col("reference_time_index"))))
+        .select(col("index_first"), col("events_written"), posexplode(index0))
         .select(
-          sparseKey,
+          (col("index_first") + col("pos")).as("row"),
           col("col.reference_time").as("event_time_zero"),
           (col("col.reference_time_index").cast("long") + col("events_written"))
             .as("event_index"))
-      val events = base
-        .select(col("row"), posexplode(arrays_zip(col("time_of_flight"), col("pixel_id"))))
-        .select(sparseKey,
+      val events = cum
+        .select(col("events_first"), posexplode(events0))
+        .select((col("events_first") + col("pos")).as("row"),
           col("col.time_of_flight").as("event_time_offset"),
           col("col.pixel_id").as("event_id"))
       // cue via the EXACT greedy chain of ev44_Writer.cpp:127-134: cue
@@ -379,8 +391,8 @@ object WriterModules {
       val L0 = cur.lastCue
       val proj = nonEmpty.select(
         col("row"),
-        (col("events_after") + stableLit(cur.eventsWritten)).as("ea"),
-        (col("events_written") + stableLit(cur.eventsWritten)).as("ea_prev"),
+        col("events_after").as("ea"),
+        col("events_written").as("ea_prev"),
         (element_at(col("reference_time"), -1) +
           element_at(col("time_of_flight"), -1).cast("long")).as("cue_ts"))
       // the batch's last cumulative event count and its message bound:
@@ -553,7 +565,7 @@ object WriterModules {
     override def plannedCueCount(cfg: ModuleConfig, cur: Cursor, rows: Long): Option[Long] = {
       val n = cfg.long("cue_interval").getOrElse(1000L)
       if (n <= 0) None
-      else Some(unitGridCueCount(cur.lastCue, cur.rowStart, rows, n))
+      else Some(unitGridCueCount(cur.lastCue, cur.next("data"), rows, n))
     }
   }
 
@@ -703,18 +715,17 @@ object WriterModules {
     */
   object Se00 extends WriterModule {
     val id = "se00"
-    /** exploded per-element rows → sparse keys, renumbered at append;
-      * zero-element messages rejected (F8, `se00_Writer.cpp:202-204`).
-      */
-    override def denseRowTables: Set[String] = Set.empty
     override def elementCountCol = Some(size(col("values")))
+    /** one row per element; zero-element messages rejected (F8,
+      * `se00_Writer.cpp:202-204`).
+      */
     def tables(df: DataFrame, cfg: ModuleConfig, cur: Cursor): Map[String, DataFrame] = {
-      val ex = withRow(df.filter(size(col("values")) > 0),
-        Cursor(sizeHint = cur.sizeHint, elemHint = cur.elemHint))
-        .select(col("row"), col("ts"), col("time_delta"), col("timestamps"),
+      val ex = withFirst(df.filter(size(col("values")) > 0), cur, "data",
+        emitted(col("values")))
+        .select(col("first"), col("ts"), col("time_delta"), col("timestamps"),
           posexplode(col("values")).as(Seq("pos", "value")))
       val data = ex.select(
-        sparseKey,
+        (col("first") + col("pos")).as("row"),
         coalesce(
           element_at(col("timestamps"), col("pos") + 1),
           (col("ts") + col("pos") * col("time_delta")).cast("long")
@@ -730,14 +741,12 @@ object WriterModules {
     */
   object Tdct extends WriterModule {
     val id = "tdct"
-    /** exploded rows → sparse keys, renumbered at append. */
-    override def denseRowTables: Set[String] = Set.empty
     override def elementCountCol = Some(size(col("timestamps")))
     def tables(df: DataFrame, cfg: ModuleConfig, cur: Cursor): Map[String, DataFrame] = {
-      val ex = withRow(df.filter(size(col("timestamps")) > 0),
-        Cursor(sizeHint = cur.sizeHint, elemHint = cur.elemHint))
-        .select(col("row"), posexplode(col("timestamps")).as(Seq("pos", "t")))
-      Map("data" -> ex.select(sparseKey, col("t").as("time")))
+      val ex = withFirst(df.filter(size(col("timestamps")) > 0), cur, "data",
+        emitted(col("timestamps")))
+        .select(col("first"), posexplode(col("timestamps")).as(Seq("pos", "t")))
+      Map("data" -> ex.select((col("first") + col("pos")).as("row"), col("t").as("time")))
     }
   }
 

@@ -64,9 +64,9 @@ class StreamingJob(
   private def stopNs  = stopMsCur * 1000000L
 
   /** `spark.graft.stream.localAppend.maxRows` (128): the message bound of
-    * both the fused payload and the bounded driver collect; 0 turns both
-    * off. Clamped to 1<<18 so a huge conf value admits no unbounded
-    * driver-side collect and 4 × the bound never overflows an Int.
+    * the fused payload; 0 turns it off. Clamped to 1<<18 so a huge conf
+    * value admits no unbounded driver-side payload and 4 × the bound
+    * never overflows an Int.
     */
   private def localAppendMaxRows: Long =
     math.min(math.max(spark.conf
@@ -138,9 +138,8 @@ class StreamingJob(
         case "events_written" => st.eventsWritten
         case "write_errors"   => st.writeErrors
         case "finished"       => if (st.finished) 1L else 0L
-        case "appends_fused"   => st.appendsFused
-        case "appends_collect" => st.appendsCollect
-        case "appends_spark"   => st.appendsSpark
+        case "appends_fused"  => st.appendsFused
+        case "appends_spark"  => st.appendsSpark
         case other            => st.rowsWritten.getOrElse(other, 0L)
       }
     }
@@ -273,7 +272,7 @@ class StreamingJob(
       // that exchange and reduce to one row per key — so the session
       // width (sized for corpus analytics) buys nothing here and costs
       // ~2 ms of empty-task launch per partition per stage. The
-      // renumber exchanges — the one per-trigger shuffle whose width
+      // numbering exchanges — the one per-trigger shuffle whose width
       // should track DATA size — size themselves from the batch hint
       // (Rows.indexed) and ignore this narrow default.
       //
@@ -420,8 +419,8 @@ class StreamingJob(
     // trigger was small for any stream of the schema, each key's
     // in-window payload rides back inside this same aggregate as
     // ≤ 4×maxRows serialized rows — the write path then starts from a
-    // LocalRelation, and the module transform, the renumber of exploded
-    // tables and every append run on the driver with ZERO further jobs
+    // LocalRelation, and the module transform (its numbering and
+    // explodes) and every append run on the driver with ZERO further jobs
     // (Rows' driver numbering + LocalPlan + LocalParquet): the keyed pass
     // is the trigger's only Spark job, flat and exploding modules alike.
     // The gate can be wrong (burst after an idle trigger, or a key
@@ -430,7 +429,7 @@ class StreamingJob(
     // budget Rows' driver numbering vetoes on) — it latches overflow,
     // evaluates to null, and that stream takes the distributed path.
     val fuseBound = localAppendMaxRows
-    // 4× hint-lie tolerance, as in the bounded collect
+    // 4× tolerance: the gate reads the previous trigger's count
     val aggBound = (fuseBound * 4).toInt
     val wantPayload =
       fuseBound > 0 && openStates.exists(st => st.lastMsgs >= 0 && st.lastMsgs <= fuseBound)
@@ -451,9 +450,9 @@ class StreamingJob(
       count(when(liveCond && inWin, 1)).as("n_window"),
       // exploded-element total of the batch's written rows — the W2 event
       // cursor for ev44 (exact: ev44 never buffers and accepts repeats,
-      // so live ∩ in-window IS the written set) and the append-renumber
-      // size hint for every exploding module — folded here instead of a
-      // separate per-batch job
+      // so live ∩ in-window IS the written set) and the numbering and
+      // file-split size hint for every array module — folded here
+      // instead of a separate per-batch job
       module.elementCountCol
         .map(c => coalesce(sum(when(liveCond && inWin, c)), lit(0L)))
         .getOrElse(lit(0L)).as("ev_window"))
@@ -758,7 +757,7 @@ class StreamingJob(
     // a failed table append is counted and surfaced in status, the stream
     // keeps running
     val cursor = WriterModules.Cursor(
-      rowStart = state.rowsWritten.getOrElse("data", 0L),
+      rowsWritten = state.rowsWritten.toMap,
       eventsWritten = state.eventsWritten,
       lastCue = state.lastCue,
       sizeHint = msgHint,
@@ -771,81 +770,46 @@ class StreamingJob(
           System.err.println(s"[graft] transform failed for $key: ${e.getMessage}")
           return None
       }
-    // Every table append is an independent output (own directory, own
-    // counters); a write job's cost is dominated by FIXED overhead —
-    // ~160 ms of scheduling + FileFormatWriter + commit for a 500-row
-    // file, measured flat in data size (round 12) — so a module with
-    // data+cue (+index) pays 2-3× that PER TRIGGER sequentially. Two
-    // cuts, both measured on the per-trigger floor:
-    //   1. provably-empty appends are SKIPPED driver-side (cue grids
-    //      that cursor arithmetic proves fired zero times, and tables
-    //      the transform already materialized as an empty local
-    //      relation — ev44's collected cue hits); zero rows means zero
-    //      counter movement, so skipping is observationally identical
-    //      except for the 0-row part file the old shape left behind;
-    //   2. the surviving appends run CONCURRENTLY on a small daemon
-    //      pool — independent Spark jobs overlap their fixed cost (the
-    //      single-MessageWriter serialization the reference needs for
-    //      HDF5 constrains streams, which stay serialized on the job
-    //      monitor; per-table parquet directories have no such coupling).
-    // Counter updates stay deterministic: outcomes apply in table order
-    // AFTER every append returns, under the processBatch monitor.
+    // Every table leaves the module with its final row ids, so the sink
+    // appends it as emitted, in one of two ways:
+    //   1. on the driver (see LocalParquet), when the table's plan
+    //      evaluates there (LocalPlan: every table of a fused trigger,
+    //      and ev44's collected cue hits on any trigger) within the row
+    //      bound — a Spark write job is ~160 ms of FIXED cost regardless
+    //      of payload (round-12b);
+    //   2. otherwise as ONE Spark write job per table.
+    // A table with provably no rows is skipped: a cue grid that cursor
+    // arithmetic proves fired zero times, or a driver evaluation that
+    // yields nothing (ev44's cue hits on a trigger without a cue); zero
+    // rows means zero counter movement, so skipping is observationally
+    // identical except for the 0-row part file a write job leaves. The
+    // surviving appends run CONCURRENTLY on a small daemon pool —
+    // independent Spark jobs overlap their fixed cost (the
+    // single-MessageWriter serialization the reference needs for HDF5
+    // constrains streams, which stay serialized on the job monitor;
+    // per-table parquet directories have no such coupling). Counter
+    // updates stay deterministic: outcomes apply in table order AFTER
+    // every append returns, under the processBatch monitor.
     final case class Outcome(table: String, n: Long, cueMax: Option[Long],
-      err: Option[String], path: String = "spark")
-    // Driver-side append bypass (see LocalParquet): a Spark write job is
-    // ~160 ms of FIXED cost regardless of payload (round-12b), so tables
-    // whose rows are already in driver memory — every table of a fused
-    // trigger, and ev44's collected cue hits on any trigger: LocalPlan
-    // evaluates their plans with no job — or, for dense tables, provably
-    // tiny (the fused hint bounds data at msgs and cue at the planned
-    // grid count: 0-3 rows/trigger at production cue intervals — one
-    // light executeCollect replaces the write job) are written by the
-    // driver directly. Rows carry global row ids by then: dense tables as
-    // emitted, sparse exploded ones after the renumber (itself on the
-    // driver for a local frame). Counters come from the rows themselves.
-    // The collect bound is spark.graft.stream.localAppend.maxRows (128).
+      err: Option[String], fused: Boolean = false)
     type Local = Option[(StructType, Seq[org.apache.spark.sql.catalyst.InternalRow])]
-    def localAppend(table: String, out: DataFrame, local: Local): Option[Outcome] =
+    def appendLocal(table: String, schema: StructType,
+        rs: Seq[org.apache.spark.sql.catalyst.InternalRow]): Option[Outcome] =
       try {
-        val schema = out.schema
-        if (!LocalParquet.supports(schema)) None
-        else {
-          val rows: Option[(Seq[org.apache.spark.sql.catalyst.InternalRow], String)] =
-            local match {
-              // fused payload / driver-materialized transform: zero jobs
-              case Some((_, rs)) => Some((rs, "fused"))
-              case None if module.denseRowTables.contains(table) =>
-                // planned row bound: exact for cue grids, msgs for data
-                val maxRows = localAppendMaxRows
-                val bound =
-                  if (table == "cue")
-                    module.plannedCueCount(ModuleConfig(s.config), cursor, msgHint)
-                      .getOrElse(msgHint)
-                  else msgHint
-                if (bound >= 0 && bound <= maxRows) {
-                  val rs = out.queryExecution.executedPlan.executeCollect()
-                  // hint lied badly — let Spark shape the files instead
-                  if (rs.length > 4 * maxRows) None else Some((rs.toSeq, "collect"))
-                } else None
-              case None => None
-            }
-          rows.map { case (rs, path) =>
-            val rowIdx = schema.fieldIndex("row")
-            val sorted = rs.sortBy(_.getLong(rowIdx))
-            // the Outcome is FULLY computed before the write commits:
-            // appendLocal's rename is atomic, so a throw after it would
-            // otherwise route these already-visible rows into the Spark
-            // fallback path and append them a second time
-            val mx =
-              if (table == "cue" && sorted.nonEmpty) {
-                val ci = schema.fieldIndex("cue_index")
-                Some(sorted.iterator.map(_.getLong(ci)).max)
-              } else None
-            val outcome = Outcome(table, sorted.size.toLong, mx, None, path)
-            sink.appendLocal(key, table, schema, sorted)
-            outcome
-          }
-        }
+        val rowIdx = schema.fieldIndex("row")
+        val sorted = rs.sortBy(_.getLong(rowIdx))
+        // the Outcome is FULLY computed before the write commits:
+        // appendLocal's rename is atomic, so a throw after it would
+        // otherwise route these already-visible rows into the Spark
+        // fallback path and append them a second time
+        val mx =
+          if (table == "cue" && sorted.nonEmpty) {
+            val ci = schema.fieldIndex("cue_index")
+            Some(sorted.iterator.map(_.getLong(ci)).max)
+          } else None
+        val outcome = Outcome(table, sorted.size.toLong, mx, None, fused = true)
+        sink.appendLocal(key, table, schema, sorted)
+        Some(outcome)
       } catch {
         // a failed local write left at most a dot-prefixed temp file no
         // reader sees — the Spark path is a safe, duplicate-free retry
@@ -855,79 +819,40 @@ class StreamingJob(
               "falling back to the write-job path")
           None
       }
-    // `local0`: the dense table's driver evaluation, made once per trigger
-    // for the emptiness probe below and reused here
-    def appendOne(table: String, out0: DataFrame, local0: Local): Outcome =
-      try {
-        val dense = module.denseRowTables.contains(table)
-        // dense tables emit global row keys directly (module numbering
-        // started at the cursor); only sparse exploded keys need the
-        // renumber pass — on the driver for a local frame, else a
-        // distributed two-pass prefix sum, never a single-partition
-        // stage, even for the exploded ev44 events table
-        val out1 =
-          if (dense) out0
-          else {
-            // sparse rows are per exploded ELEMENT except ev44's index
-            // (one per reference_time ≈ one per message); exploded rows
-            // are narrow (~24 B: key + one element + a companion)
-            val hint =
-              if (module.id == "ev44" && table == "index") msgHint else elemHint
-            graft.operators.Rows.indexed(
-              out0, "row", start = state.rowsWritten.getOrElse(table, 0L),
-              sizeHint = hint,
-              byteHint = if (hint < 0) -1L else hint * 24 + msgHint * 24)
-          }
-        val out =
-          if (module.id == "ev44" && table == "index")
-            out1.withColumn("event_index", col("event_index") +
-              graft.functions.StableLong.stableLit(state.eventsWritten))
-          else out1
-        val local = if (dense) local0 else graft.operators.LocalPlan.rows(out)
-        localAppend(table, out, local).getOrElse {
-          // ONE write job per table, no cache churn (old shape: persist →
-          // count → append → cue-max agg → unpersist, 3 jobs/table): row
-          // count and cue-chain max are observed DURING the append, and
-          // the small-batch renumber stamps ids with no prefix-sum job.
-          // Side effect of observing instead of counting first: an append
-          // whose batch slice is empty leaves one 0-row part file (readers
-          // and the finish()-time empty seeding are unaffected; counters
-          // only move when n > 0).
-          val obs = org.apache.spark.sql.Observation()
-          val observed =
-            if (table == "cue")
-              out.observe(obs, count(lit(1)).as("n"), max(col("cue_index")).as("mx"))
-            else out.observe(obs, count(lit(1)).as("n"))
-          // shaping hint: exploded-element total for sparse tables,
-          // message count (≥ actual rows: data ≤ one row per message,
-          // cue ≤ data) for dense ones — sizes the append's file split,
-          // never counters
-          val shapeHint =
-            if (dense || (module.id == "ev44" && table == "index")) msgHint
-            else math.max(elemHint, msgHint)
-          sink.append(key, table, observed, rows = shapeHint)
-          val n = obs.get("n").asInstanceOf[Long]
-          val mx =
-            if (table == "cue" && n > 0) Some(obs.get("mx").asInstanceOf[Long])
-            else None
-          Outcome(table, n, mx, None)
-        }
+    def appendOne(table: String, out: DataFrame, local: Local): Outcome =
+      try local.flatMap { case (schema, rs) => appendLocal(table, schema, rs) }.getOrElse {
+        // ONE write job per table, no cache churn: row count and
+        // cue-chain max are observed DURING the append. Side effect of
+        // observing instead of counting first: an append whose batch
+        // slice is empty leaves one 0-row part file (readers and the
+        // finish()-time empty seeding are unaffected; counters only move
+        // when n > 0).
+        val obs = org.apache.spark.sql.Observation()
+        val observed =
+          if (table == "cue")
+            out.observe(obs, count(lit(1)).as("n"), max(col("cue_index")).as("mx"))
+          else out.observe(obs, count(lit(1)).as("n"))
+        // the file split's row bound: the batch's payload-element total
+        // bounds an exploded table, its message count every other one;
+        // it shapes files only, never counters
+        sink.append(key, table, observed, rows = math.max(elemHint, msgHint))
+        val n = obs.get("n").asInstanceOf[Long]
+        val mx =
+          if (table == "cue" && n > 0) Some(obs.get("mx").asInstanceOf[Long])
+          else None
+        Outcome(table, n, mx, None)
       } catch {
         case e: Exception => Outcome(table, 0L, None, Some(e.getMessage))
       }
-    // driver-side skips: cue grids that cursor arithmetic proves fired
-    // zero times, and dense tables that evaluate on the driver to no
-    // rows (ev44's collected cue hits on a trigger without a cue). Dense
-    // tables only: they are the driver-materialized producers, and a
-    // sparse table's evaluation waits for its renumber
-    val evaluated = tables.toSeq.map { case (t, out0) =>
+    // each table is evaluated on the driver once, within the row bound:
+    // the result serves both the emptiness skip and the driver append
+    val evaluated = tables.toSeq.map { case (t, out) =>
       val plannedEmpty = t == "cue" &&
         module.plannedCueCount(ModuleConfig(s.config), cursor, msgHint).contains(0L)
       val local: Local =
-        if (plannedEmpty || !module.denseRowTables.contains(t) ||
-          !LocalParquet.supports(out0.schema)) None
-        else graft.operators.LocalPlan.rows(out0)
-      (t, out0, local, plannedEmpty || local.exists(_._2.isEmpty))
+        if (plannedEmpty || !LocalParquet.supports(out.schema)) None
+        else graft.operators.LocalPlan.rows(out, graft.operators.Rows.SmallRenumberRows)
+      (t, out, local, plannedEmpty || local.exists(_._2.isEmpty))
     }
     val live = evaluated.collect { case (t, o, l, false) => (t, o, l) }
     val outcomes: Seq[Outcome] =
@@ -967,10 +892,8 @@ class StreamingJob(
         ps.map(Await.result(_, Duration.Inf))
       }
     outcomes.foreach { oc =>
-      if (oc.err.isEmpty) oc.path match {
-        case "fused"   => state.appendsFused += 1
-        case "collect" => state.appendsCollect += 1
-        case _         => state.appendsSpark += 1
+      if (oc.err.isEmpty) {
+        if (oc.fused) state.appendsFused += 1 else state.appendsSpark += 1
       }
       oc.err match {
         case Some(msg) =>
@@ -1047,13 +970,11 @@ object StreamingJob {
     /** Cumulative append-path counters (observability: at production the
       * difference between the fused/local and distributed paths is the
       * difference between 1 and 5 Spark jobs per trigger, so the band
-      * decision must be visible in x5f2): appends
-      * served from a fused LocalRelation payload (zero jobs), from the
-      * bounded driver collect (one light collect), and from a Spark
-      * write job (the distributed path).
+      * decision must be visible in x5f2): appends written on the driver
+      * (zero jobs — a fused LocalRelation payload, or ev44's collected cue
+      * hits) and appends by a Spark write job (the distributed path).
       */
     var appendsFused: Long = 0L
-    var appendsCollect: Long = 0L
     var appendsSpark: Long = 0L
     /** Previous trigger's in-window message count, gating the fused
       * payload collection. −1 = no history (restart ⇒ one distributed

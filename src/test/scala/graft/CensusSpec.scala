@@ -62,4 +62,16 @@ class CensusSpec extends AnyFunSuite {
     }
     assert(sinks == Seq("src/main/scala/graft/streaming/StreamingJob.scala"), sinks)
   }
+
+  test("rows are numbered once, in the writer modules") {
+    // each module emits final row ids; the sink appends tables as emitted
+    val numbering = mainSources.collect {
+      case (p, src) if src.contains("Rows.indexed(") => p.toString
+    }
+    assert(numbering == Seq("src/main/scala/graft/operators/WriterModules.scala"), numbering)
+    val stale = mainSources.collect {
+      case (p, src) if src.contains("denseRowTables") || src.contains("sparseKey") => p.toString
+    }
+    assert(stale.isEmpty, stale)
+  }
 }

@@ -37,7 +37,7 @@ class CueGridSpec extends SparkSpec {
       val df = (0 until rows.toInt)
         .map(i => (rowStart + i, 1000L + i, i.toDouble))
         .toDF("offset", "ts", "value")
-      val cur = Cursor(rowStart = rowStart, lastCue = lastCue,
+      val cur = Cursor(rowsWritten = Map("data" -> rowStart), lastCue = lastCue,
         sizeHint = rows, elemHint = rows)
       val planned = WriterModules.F144
         .plannedCueCount(f144Cfg(n), cur, rows)
@@ -54,7 +54,7 @@ class CueGridSpec extends SparkSpec {
       val df = (0 until rows.toInt)
         .map(i => (rowStart + i, 1000L + i, Seq(1.0, 2.0), Seq(2L)))
         .toDF("offset", "ts", "data", "dimensions")
-      val cur = Cursor(rowStart = rowStart, lastCue = lastCue,
+      val cur = Cursor(rowsWritten = Map("data" -> rowStart), lastCue = lastCue,
         sizeHint = rows, elemHint = rows * 2)
       val planned = WriterModules.Ad00
         .plannedCueCount(ad00Cfg(Some(n)), cur, rows)

@@ -103,8 +103,8 @@ class Ev44ModuleSpec extends SparkSpec {
     // 12 ≤ 12, 16 > 12 → cue at 15 — NOT 11, proving the anchor carried
     val b2 = (2 until 4).map(i =>
       msg(i.toLong, Seq(100L * (i + 1)), Seq(0), (1 to 4).toSeq)).toDF()
-    val c2 = Ev44.tables(b2, cfg(5),
-      Cursor(rowStart = 2, eventsWritten = 8, lastCue = 7))("cue").collect()
+    val c2 = Ev44.tables(b2, cfg(5), Cursor(rowsWritten = Map("events" -> 8L, "index" -> 2L),
+      eventsWritten = 8, lastCue = 7))("cue").collect()
     assert(c2.map(_.getAs[Long]("cue_index")).toSeq == Seq(15L))
   }
 
@@ -164,7 +164,7 @@ class Ev44ModuleSpec extends SparkSpec {
     // at global row 5, i.e. write 6): next cues at writes 9 (row 8)…
     val df = (0 until 4).map(i =>
       F144Msg("t", "s", i.toLong, i.toLong, 2000L + i, i.toDouble)).toDF()
-    val cue = F144.tables(df, cfg(3), Cursor(rowStart = 7, lastCue = 6))("cue")
+    val cue = F144.tables(df, cfg(3), Cursor(rowsWritten = Map("data" -> 7L), lastCue = 6))("cue")
       .orderBy("cue_index").collect()
     assert(cue.map(_.getAs[Long]("cue_index")).toSeq == Seq(8L))
     assert(cue.map(_.getAs[Long]("cue_timestamp_zero")).toSeq == Seq(2001L))
@@ -286,14 +286,16 @@ class Ev44ModuleSpec extends SparkSpec {
         Ev44.lastCueInterval, Ev44.lastCueFallbacks)
     }
     def check(name: String, msgs: Seq[Ev44Msg], interval: Long,
-        eventsWritten: Long = 0L, lastCue: Long = 0L): Unit = {
-      val plain = run(msgs, interval,
-        WriterModules.Cursor(eventsWritten = eventsWritten, lastCue = lastCue))
+        eventsWritten: Long = 0L, lastCue: Long = 0L,
+        rows: Map[String, Long] = Map.empty): Map[String, Seq[org.apache.spark.sql.Row]] = {
+      val plain = run(msgs, interval, WriterModules.Cursor(
+        rowsWritten = rows, eventsWritten = eventsWritten, lastCue = lastCue))
       val events = msgs.map(m => Option(m.time_of_flight).map(_.size).getOrElse(0)).sum
       val hinted = run(msgs, interval, WriterModules.Cursor(
-        eventsWritten = eventsWritten, lastCue = lastCue,
+        rowsWritten = rows, eventsWritten = eventsWritten, lastCue = lastCue,
         sizeHint = msgs.size.toLong, elemHint = events.toLong))
       assert(hinted == plain, name)
+      plain._1.toMap
     }
     val sizes = Seq(15, 8, 3, 7, 3, 7, 3)
     check("empty and null time_of_flight arrays",
@@ -304,9 +306,17 @@ class Ev44ModuleSpec extends SparkSpec {
     check("superset-miss chain",
       sizes.zipWithIndex.map { case (n, i) => ev(i.toLong, 1 to n) }, 10)
     assert(Ev44.lastCueFallbacks == 3, "the chain must exercise the walk")
-    check("large eventsWritten",
+    val big = check("large eventsWritten and row cursors",
       sizes.zipWithIndex.map { case (n, i) => ev(i.toLong, 1 to n) }, 4,
-      eventsWritten = 1L << 40, lastCue = (1L << 40) - 3)
+      eventsWritten = 1L << 40, lastCue = (1L << 40) - 3,
+      rows = Map("events" -> ((1L << 40) - 2), "index" -> ((1L << 40) + 1)))
+    // each table numbers on from its own cursor
+    assert(big("events").map(_.getAs[Long]("row")) ==
+      ((1L << 40) - 2 until (1L << 40) - 2 + sizes.sum))
+    assert(big("index").map(_.getAs[Long]("row")) ==
+      ((1L << 40) + 1 until (1L << 40) + 1 + sizes.size))
+    assert(big("index").map(_.getAs[Long]("event_index")) ==
+      sizes.scanLeft(1L << 40)(_ + _).init)
   }
 
   test("sane intervals are untouched by the scale guard") {

@@ -28,21 +28,49 @@ class RowsSpec extends SparkSpec {
   }
 
   test("weighted exclusive prefix sum matches a sequential scan") {
-    val df = (0 until 5000).map(i => (i.toLong, (i % 13).toLong)).toDF("k", "w")
-    val out = Rows
-      .indexed(df, "k", weight = Some(("w", "acc", 100L)))
-      .orderBy("k").collect()
-    var expect = 100L
-    out.foreach { r =>
-      assert(r.getAs[Long]("acc") == expect)
-      expect += r.getAs[Long]("w")
+    // two weights with different starts, nulls counting 0, on each of the
+    // three numbering paths: the driver (a LocalRelation within the row
+    // bound), one task (a distributed frame under the size hint) and the
+    // range exchange (a byte hint past the one-task budget)
+    val in = (0 until 5000).map { i =>
+      (((i * 7919) % 10007).toLong,
+        if (i % 11 == 0) None else Some((i % 13).toLong),
+        if (i % 7 == 0) None else Some((i % 5).toLong))
+    }
+    val local = in.toDF("k", "w", "v")
+    val paths = Seq(
+      "driver"   -> (local, -1L),
+      "one-task" -> (local.repartition(5), -1L),
+      "range"    -> (local.repartition(5), 1L << 40))
+    val expected = {
+      var (acc, acc2) = (100L, -(1L << 40))
+      in.sortBy(_._1).zipWithIndex.map { case ((k, w, v), i) =>
+        val out = (k, 7L + i, acc, acc2)
+        acc += w.getOrElse(0L); acc2 += v.getOrElse(0L)
+        out
+      }
+    }
+    for ((name, (df, bytes)) <- paths) {
+      val numbered = Rows.indexed(df, "k", start = 7L,
+        weights = Seq(("w", "acc", 100L), ("v", "acc2", -(1L << 40))),
+        sizeHint = 5000L, byteHint = bytes)
+      val shape = numbered.queryExecution.optimizedPlan match {
+        case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => "driver"
+        case _ if numbered.rdd.getNumPartitions == 1                     => "one-task"
+        case _                                                           => "range"
+      }
+      assert(shape == name)
+      val out = numbered.orderBy("k").collect()
+        .map(r => (r.getAs[Long]("k"), r.getAs[Long]("row"), r.getAs[Long]("acc"),
+          r.getAs[Long]("acc2"))).toSeq
+      assert(out == expected, s"$name path")
     }
   }
 
   test("empty frames survive") {
     val df  = Seq.empty[(Long, Long)].toDF("k", "w")
     assert(Rows.indexed(df, "k").count() == 0)
-    assert(Rows.indexed(df, "k", weight = Some(("w", "acc", 0L))).count() == 0)
+    assert(Rows.indexed(df, "k", weights = Seq(("w", "acc", 0L))).count() == 0)
   }
 
   test("small-hint path: same ids, single partition, exact count") {
@@ -60,7 +88,7 @@ class RowsSpec extends SparkSpec {
     // weighted small path: exclusive prefix sum starts at wStart with no
     // stats pass needed by the stamping
     val wdf = (0 until 100).map(i => (i.toLong, (i % 7).toLong)).toDF("k", "w")
-    val wout = Rows.indexed(wdf, "k", weight = Some(("w", "acc", 50L)),
+    val wout = Rows.indexed(wdf, "k", weights = Seq(("w", "acc", 50L)),
       sizeHint = 100L).orderBy("k").collect()
     var expect = 50L
     wout.foreach { r =>
@@ -78,7 +106,7 @@ class RowsSpec extends SparkSpec {
     spark.sparkContext.addSparkListener(l)
     try {
       val out = Rows.indexed(df, "k", start = 7L,
-        weight = Some(("w", "acc", 100L)), sizeHint = 3L)
+        weights = Seq(("w", "acc", 100L)), sizeHint = 3L)
       // the RESULT plan is still a LocalRelation — downstream flat
       // transforms keep folding into driver-side appends
       assert(out.queryExecution.optimizedPlan

@@ -222,9 +222,11 @@ class LocalParquetSpec extends SparkSpec {
 
   test("small triggers ride the bounded-collect driver path; big ones fall back") {
     // production f144 shape: a slow EPICS source lands 1-3 messages per
-    // 10 s trigger — the data append must not pay a write job for them.
-    // A large trigger (> maxRows hint) must keep the Spark path so file
-    // shaping stays distributed. Both file kinds coexist in one table.
+    // 10 s trigger — once a tiny trigger has armed the fused payload, the
+    // data append must not pay a write job for them. A job's first
+    // trigger (no history) and a large trigger (> 4×maxRows messages)
+    // keep the Spark path so file shaping stays distributed. Both file
+    // kinds coexist in one table.
     val template =
       """{ "children": [
         |  { "name": "entry", "type": "group", "children": [
@@ -240,13 +242,14 @@ class LocalParquetSpec extends SparkSpec {
       graft.sources.Fixtures.F144Msg("tp", "speed", o, 1000 + o,
         (1000 + o) * 1000000L, o.toDouble)
     }
-    job.processBatch("f144", msgs(0, 3).toDF())    // tiny → driver path
-    // past BOTH the collect bound and the fused-payload overflow bound
-    // (4×maxRows): must stay on the distributed Spark write path
-    job.processBatch("f144", msgs(3, 600).toDF())
+    job.processBatch("f144", msgs(0, 3).toDF())    // first: Spark path, arms the gate
+    job.processBatch("f144", msgs(3, 2).toDF())    // tiny → driver path
+    // past the fused-payload overflow bound (4×maxRows): must stay on
+    // the distributed Spark write path
+    job.processBatch("f144", msgs(5, 600).toDF())
     // opting out forces the Spark path even for a tiny trigger
     spark.conf.set("spark.graft.stream.localAppend.maxRows", "-1")
-    try job.processBatch("f144", msgs(603, 2).toDF())
+    try job.processBatch("f144", msgs(605, 2).toDF())
     finally spark.conf.unset("spark.graft.stream.localAppend.maxRows")
     job.finish()
     val dir = s"$out/data/entry/speed/data"
@@ -254,12 +257,12 @@ class LocalParquetSpec extends SparkSpec {
       .filter(_.endsWith(".parquet"))
     assert(files.count(_.contains("part-local-")) == 1,
       s"exactly the tiny trigger should be a local file: ${files.mkString(", ")}")
-    assert(files.count(!_.contains("part-local-")) >= 2,
-      "the big and opted-out triggers stay on the Spark path")
+    assert(files.count(!_.contains("part-local-")) >= 3,
+      "the first, big and opted-out triggers stay on the Spark path")
     val back = spark.read.parquet(dir).orderBy("row").collect()
-    assert(back.length == 605)
-    assert(back.map(_.getAs[Long]("row")).toSeq == (0L until 605L))
-    assert(back.map(_.getAs[Double]("value")).toSeq == (0 until 605).map(_.toDouble))
-    assert(job.counter("entry/speed", "data") == 605L)
+    assert(back.length == 607)
+    assert(back.map(_.getAs[Long]("row")).toSeq == (0L until 607L))
+    assert(back.map(_.getAs[Double]("value")).toSeq == (0 until 607).map(_.toDouble))
+    assert(job.counter("entry/speed", "data") == 607L)
   }
 }

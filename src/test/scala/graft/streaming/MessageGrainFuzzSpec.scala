@@ -353,8 +353,8 @@ class MessageGrainFuzzSpec extends SparkSpec {
         "s0 must own more than half the rows")
       assert(batches.forall(b => b.exists(_._1 == null) && b.exists(_._1 == "zz")))
 
-      // both write paths: the default bound (the bounded collect on the
-      // first trigger, the fused payload on every one after it) and the
+      // both write paths: the default bound (Spark appends on the first
+      // trigger, the fused payload on every one after it) and the
       // per-key frame path that maxRows=0 leaves
       for (maxRows <- Seq("128", "0")) {
         val out = Files.createTempDirectory("graft-fuzz-multi").toString
@@ -408,6 +408,180 @@ class MessageGrainFuzzSpec extends SparkSpec {
       // the same mirror and the same file
       assert(evTables("128") == evTables("0"), s"seed=$seed: ev44 tables differ by arm")
       assert(java.util.Arrays.equals(h5s(0), h5s(1)), s"seed=$seed: .h5 bytes differ by arm")
+    }
+  }
+
+  /** Random exploding-module messages at offsets `from until from + n`:
+    * ev44 arrays of random lengths, each sometimes empty or null, with
+    * `time_of_flight`/`pixel_id` and `reference_time`/`reference_time_index`
+    * lengths that sometimes differ; se00 values with provided or generated
+    * timestamps and tdct timestamps, sometimes empty or null. A message
+    * with events keeps at least one reference time, as on the wire: the
+    * envelope decode rejects an ev44 without one (`ZeroTimestamp`).
+    */
+  private def explodingMsgs(rnd: scala.util.Random, from: Long, n: Int)
+      : (Seq[Ev44Msg], Seq[Se00Msg], Seq[TdctMsg]) = {
+    def len(max: Int) = rnd.nextInt(8) match {
+      case 0 => -1
+      case 1 => 0
+      case _ => 1 + rnd.nextInt(max)
+    }
+    def arr[T](n: Int)(f: Int => T): Seq[T] = if (n < 0) null else Seq.tabulate(n)(f)
+    val offsets = (from until from + n).toSeq
+    def tsNs(o: Long) = (1000L + o) * 1000000L
+    val ev = offsets.map { o =>
+      val nt = len(5)
+      val np = if (rnd.nextInt(3) == 0) len(5) else nt
+      val nr = if (nt > 0) 1 + rnd.nextInt(3) else len(3)
+      val ni = if (rnd.nextInt(3) == 0) len(3) else nr
+      Ev44Msg("tp", "det", o, 1000L + o, tsNs(o), arr(nr)(i => tsNs(o) + i),
+        arr(ni)(i => 2 * i), arr(nt)(i => (o * 10 + i).toInt), arr(np)(i => i))
+    }
+    val se = offsets.map { o =>
+      val nv = len(4)
+      val stamps = if (nv > 0 && rnd.nextBoolean()) Some(Seq.tabulate(nv)(i => tsNs(o) + 7 * i))
+                   else None
+      Se00Msg("tp", "env", o, 1000L + o, tsNs(o), (o % 3) * 1000.0, stamps,
+        arr(nv)(i => o * 10.0 + i))
+    }
+    val td = offsets.map(o => TdctMsg("tp", "tdc", o, 1000L + o, tsNs(o),
+      arr(len(4))(i => tsNs(o) + i)))
+    (ev, se, td)
+  }
+
+  /** Plain-Scala message-order oracle of the exploded tables' final rows:
+    * ids from each table's cursor, one per row the reference appends, in
+    * arrival order (`ev44_Writer.cpp:111-126`, `se00_Writer.cpp:202-219`,
+    * `tdct_Writer.cpp:67-83`). ev44 `events` pads the shorter array with
+    * nulls and takes nothing from a null one; `index` skips a message
+    * without events, and `event_index` adds the events before the message.
+    */
+  private final case class ExplodedOracle(
+      events: Seq[(Long, Option[Int], Option[Int])],
+      index: Seq[(Long, Option[Long], Option[Long])],
+      se00: Seq[(Long, Long, Double)],
+      tdct: Seq[(Long, Long)],
+      eventsWritten: Long)
+
+  private def explodedOracle(
+      ev: Seq[Ev44Msg], se: Seq[Se00Msg], td: Seq[TdctMsg],
+      eventsStart: Long = 0L, indexStart: Long = 0L, eventsWritten: Long = 0L,
+      seStart: Long = 0L, tdStart: Long = 0L): ExplodedOracle = {
+    def zipped[A, B](a: Seq[A], b: Seq[B]): Seq[(Option[A], Option[B])] =
+      if (a == null || b == null) Nil
+      else (0 until (a.size max b.size)).map(i => (a.lift(i), b.lift(i)))
+    var ew = eventsWritten
+    val events = scala.collection.mutable.ArrayBuffer.empty[(Option[Int], Option[Int])]
+    val index  = scala.collection.mutable.ArrayBuffer.empty[(Option[Long], Option[Long])]
+    ev.sortBy(_.offset).foreach { m =>
+      events ++= zipped(m.time_of_flight, m.pixel_id)
+      val n = Option(m.time_of_flight).map(_.size).getOrElse(0)
+      if (n > 0) index ++= zipped(m.reference_time, m.reference_time_index)
+        .map { case (t, i) => (t, i.map(_ + ew)) }
+      ew += n
+    }
+    val seRows = se.sortBy(_.offset).filter(m => m.values != null && m.values.nonEmpty)
+      .flatMap(m => m.values.zipWithIndex.map { case (v, i) =>
+        (m.timestamps.map(_(i)).getOrElse((m.ts + i * m.time_delta).toLong), v)
+      })
+    val tdRows = td.sortBy(_.offset).filter(m => m.timestamps != null).flatMap(_.timestamps)
+    def ids[T](start: Long, xs: Seq[T]) = xs.indices.map(start + _)
+    ExplodedOracle(
+      ids(eventsStart, events.toSeq).zip(events).map { case (r, (t, p)) => (r, t, p) },
+      ids(indexStart, index.toSeq).zip(index).map { case (r, (t, i)) => (r, t, i) },
+      ids(seStart, seRows).zip(seRows).map { case (r, (t, v)) => (r, t, v) },
+      ids(tdStart, tdRows).zip(tdRows),
+      ew)
+  }
+
+  private def opt[T](r: org.apache.spark.sql.Row, i: Int): Option[T] =
+    if (r.isNullAt(i)) None else Some(r.get(i).asInstanceOf[T])
+
+  /** The exploded tables as [[explodedOracle]] shapes them. */
+  private def explodedRows(read: String => DataFrame): ExplodedOracle = {
+    def rows(t: String, cols: String*) = read(t).orderBy("row").select("row", cols: _*).collect()
+    ExplodedOracle(
+      rows("det/events", "event_time_offset", "event_id").map(r =>
+        (r.getLong(0), opt[Int](r, 1), opt[Int](r, 2))).toSeq,
+      rows("det/index", "event_time_zero", "event_index").map(r =>
+        (r.getLong(0), opt[Long](r, 1), opt[Long](r, 2))).toSeq,
+      rows("env/data", "time", "value").map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq,
+      rows("tdc/data", "time").map(r => (r.getLong(0), r.getLong(1))).toSeq,
+      -1L)
+  }
+
+  test("exploded tables' final row ids ≡ a message-order oracle on every numbering path") {
+    def node(name: String, module: String, extra: String = "") =
+      s"""{ "name": "$name", "type": "group", "children": [
+         |  { "module": "$module", "config": { "source": "$name", "topic": "tp",
+         |    "enable_epics_con_info": false, "enable_alarm_info": false$extra } } ] }""".stripMargin
+    val seDtype = ", \"dtype\": \"double\""
+    val plan = NexusPlan.parse(
+      s"""{ "children": [ { "name": "entry", "type": "group", "children": [
+         |${node("det", "ev44")}, ${node("env", "se00", seDtype)},
+         |${node("tdc", "tdct")} ] } ] }""".stripMargin)
+    // three triggers, so each arm numbers across two trigger boundaries:
+    // "driver" takes the fused payload after the first trigger (Rows'
+    // driver path), "one-task" has no payload and a batch under the
+    // one-task budget, "range" a one-byte budget (the range exchange)
+    val arms = Seq(
+      "driver"   -> Seq.empty[(String, String)],
+      "one-task" -> Seq("spark.graft.stream.localAppend.maxRows" -> "0"),
+      "range"    -> Seq("spark.graft.rows.smallRenumberBytes" -> "1"))
+    for (seed <- Seq(3, 17)) {
+      val rnd = new scala.util.Random(seed)
+      val triggers = Seq((0L, 9), (9L, 12), (21L, 10)).map { case (from, n) =>
+        explodingMsgs(rnd, from, n)
+      }
+      val all = triggers.reduce((a, b) => (a._1 ++ b._1, a._2 ++ b._2, a._3 ++ b._3))
+      val expected = explodedOracle(all._1, all._2, all._3)
+      // the generator covers what it promises
+      assert(all._1.exists(m => m.time_of_flight != null && m.pixel_id != null &&
+        m.time_of_flight.size != m.pixel_id.size), s"seed=$seed: mismatched lengths")
+      assert(all._1.exists(_.time_of_flight == null) && all._1.exists(m =>
+        m.time_of_flight != null && m.time_of_flight.isEmpty), s"seed=$seed: null/empty")
+      assert(all._1.exists(m => m.reference_time != null && m.reference_time.size > 1 &&
+        m.time_of_flight != null && m.time_of_flight.nonEmpty), s"seed=$seed: multi-pulse")
+      for ((arm, confs) <- arms) {
+        val out = Files.createTempDirectory("graft-final-ids").toString
+        val job = new StreamingJob(spark, plan, out, 0, 1L << 40)
+        confs.foreach { case (k, v) => spark.conf.set(k, v) }
+        try triggers.zipWithIndex.foreach { case ((ev, se, td), i) =>
+          job.processBatch("ev44", ev.toDF(), i.toLong)
+          job.processBatch("se00", se.toDF(), i.toLong)
+          job.processBatch("tdct", td.toDF(), i.toLong)
+        } finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+        val fused = Seq("det", "env", "tdc").map(k => job.counter(s"entry/$k", "appends_fused"))
+        if (arm == "driver") assert(fused.forall(_ >= 2L), s"seed=$seed: $fused")
+        else assert(fused.forall(_ == 0L), s"seed=$seed $arm: $fused")
+        job.finish()
+        val got = explodedRows(t => spark.read.parquet(s"$out/data/entry/$t"))
+        assert(got.copy(eventsWritten = job.counter("entry/det", "events_written")) == expected,
+          s"seed=$seed $arm")
+      }
+    }
+  }
+
+  test("exploding modules number from cursors near 2^40 ≡ the oracle, driver and distributed") {
+    import graft.operators.WriterModules.{Cursor, Ev44, ModuleConfig, Se00, Tdct}
+    val (ev, se, td) = explodingMsgs(new scala.util.Random(5), 0L, 12)
+    val big = 1L << 40
+    val cur = Cursor(
+      rowsWritten = Map("events" -> (big - 3), "index" -> (big + 5), "data" -> (big - 1)),
+      eventsWritten = big + 7)
+    val want = explodedOracle(ev, se, td, eventsStart = big - 3, indexStart = big + 5,
+      eventsWritten = big + 7, seStart = big - 1, tdStart = big - 1)
+    val seCfg = ModuleConfig(Map("dtype" -> org.json4s.JString("double")))
+    // a LocalRelation numbers on the driver, a shuffled frame distributed
+    for (local <- Seq(true, false)) {
+      def frame(df: DataFrame) = if (local) df else df.repartition(3)
+      val e = Ev44.tables(frame(ev.toDF()), ModuleConfig(Map.empty), cur)
+      val tables = Map(
+        "det/events" -> e("events"), "det/index" -> e("index"),
+        "env/data" -> Se00.tables(frame(se.toDF()), seCfg, cur)("data"),
+        "tdc/data" -> Tdct.tables(frame(td.toDF()), ModuleConfig(Map.empty), cur)("data"))
+      assert(explodedRows(tables).copy(eventsWritten = want.eventsWritten) == want,
+        s"local=$local")
     }
   }
 

@@ -440,13 +440,13 @@ class StreamingJobSpec extends SparkSpec {
       val keys = pvs.map(pv => s"entry/$pv")
       // the band decision is observable: trigger 2's data (+ cue) appends
       // were served from the fused LocalRelation payload (x5f2
-      // appends_fused), and the arming trigger (no fused payload yet, but
-      // tiny) by the bounded driver collect
+      // appends_fused), and the arming trigger (no fused payload yet) by
+      // Spark write jobs
       keys.foreach { k =>
         assert(job.counter(k, "appends_fused") == (if (cue.nonEmpty) 2L else 1L),
           s"$k: fused trigger must count its data (and cue) appends as fused")
-        assert(job.counter(k, "appends_collect") >= 1L,
-          s"$k: the arming trigger's appends ran via the bounded collect")
+        assert(job.counter(k, "appends_spark") >= 1L,
+          s"$k: the arming trigger's appends ran as Spark write jobs")
       }
       val crossing = jobsDuring(job.processBatch("f144", msgs(5, 2, beyond = true)))
       assert(crossing == 2,
@@ -467,8 +467,7 @@ class StreamingJobSpec extends SparkSpec {
       }
 
       // parity: the same streams on the per-key frame path (maxRows=0
-      // turns off both the fused payload and the bounded collect) are
-      // byte-identical
+      // turns off the fused payload) are byte-identical
       val out2 = Files.createTempDirectory("graft-fusedoff").toString
       spark.conf.set("spark.graft.stream.localAppend.maxRows", "0")
       try {
@@ -485,9 +484,9 @@ class StreamingJobSpec extends SparkSpec {
       }
     }
 
-    // ev44 rides the same band: the module transform (its numbering and
-    // cue-candidate collect), the renumber of the exploded events and
-    // index tables and all three appends run on the driver, so a steady
+    // ev44 rides the same band: the module transform (its numbering, the
+    // explodes of the events and index tables and the cue-candidate
+    // collect) and all three appends run on the driver, so a steady
     // trigger is the keyed pass alone. Four events per message against a
     // cue interval of four fires a cue on every message after the first.
     val evPlan =
@@ -541,10 +540,10 @@ class StreamingJobSpec extends SparkSpec {
       job.processBatch("f144", msgs(2, 100)) // burst: 100 > 4×4 → overflow
       assert(job.counter("entry/speed", "appends_spark") >= 1L,
         "the 100-row burst (> 4x4 overflow) must count as a distributed append")
-      val collectBefore = job.counter("entry/speed", "appends_collect")
+      val sparkBefore = job.counter("entry/speed", "appends_spark")
       job.processBatch("f144", msgs(102, 2)) // gate off (last was 100) → frame path
-      assert(job.counter("entry/speed", "appends_collect") > collectBefore,
-        "the gate-off tiny trigger is served by the bounded collect")
+      assert(job.counter("entry/speed", "appends_spark") > sparkBefore,
+        "the gate-off tiny trigger is served by a Spark write job")
     } finally spark.conf.unset("spark.graft.stream.localAppend.maxRows")
     job.finish()
     val d = spark.read.parquet(s"$out/data/entry/speed/data").orderBy("row")
@@ -555,24 +554,41 @@ class StreamingJobSpec extends SparkSpec {
   test("a wide ad00 burst after a tiny trigger overflows the byte cap: distributed path, same rows") {
     // a row bound alone (4 × maxRows = 512 messages) carries this burst of
     // ten 16 KB images back to the driver inside the keyed pass; the byte
-    // cap (spark.graft.rows.smallRenumberBytes) latches it. Observed as the
-    // largest result a task of the burst trigger returns to the driver.
-    val plan = NexusPlan.parse(
-      """{ "children": [ { "name": "entry", "type": "group", "children": [
-        |  { "name": "img", "type": "group", "children": [
-        |    { "module": "ad00", "config": { "source": "cam", "topic": "tp",
-        |                                    "cue_interval": 2 } } ] } ] } ] }""".stripMargin)
-    // random pixels: task results travel compressed
+    // cap (spark.graft.rows.smallRenumberBytes) latches it, and no other
+    // step of the trigger brings the rows to the driver either: neither
+    // the images nor, on al00, ten 16 KB alarm messages, whose flat table
+    // a driver-side append could take. Observed as the sum of the results
+    // the tasks of the trigger return to the driver, less that sum for
+    // the same trigger of 1.6 KB rows (every task returns a few KB of
+    // metrics whatever its rows), on a burst after a tiny trigger and on
+    // a job's first trigger.
+    def plan(module: String, extra: String) = NexusPlan.parse(
+      s"""{ "children": [ { "name": "entry", "type": "group", "children": [
+         |  { "name": "img", "type": "group", "children": [
+         |    { "module": "$module", "config": { "source": "cam", "topic": "tp"$extra,
+         |      "enable_epics_con_info": false, "enable_alarm_info": false } } ] } ] } ] }""".stripMargin)
+    val Cap = 4L * 1024
+    // random pixels and text: task results travel compressed
     def images(from: Long, n: Int, width: Int) = (from until from + n).map { o =>
       val rnd = new scala.util.Random(o)
       graft.sources.Fixtures.Ad00Msg("tp", "cam", o, 1000 + o, (1000 + o) * 1000000L,
         Seq(width.toLong), Seq.fill(width)(rnd.nextDouble()))
     }.toDF()
-    def maxResultBytes(body: => Unit): Long = {
-      val bytes = new java.util.concurrent.atomic.AtomicLong
+    def alarms(from: Long, n: Int, width: Int) = (from until from + n).map { o =>
+      val rnd = new scala.util.Random(o)
+      graft.sources.Fixtures.Al00Msg("tp", "cam", o, 1000 + o, (1000 + o) * 1000000L, 1,
+        Seq.fill(width)(java.lang.Long.toString(rnd.nextLong(), 36)).mkString.take(8 * width))
+    }.toDF()
+    // (sum, largest) of the task results of `body`'s jobs
+    def resultBytes(body: => Unit): (Long, Long) = {
+      val sum = new java.util.concurrent.atomic.AtomicLong
+      val top = new java.util.concurrent.atomic.AtomicLong
       val l = new org.apache.spark.scheduler.SparkListener {
         override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (t.taskMetrics != null) bytes.accumulateAndGet(t.taskMetrics.resultSize, math.max)
+          if (t.taskMetrics != null) {
+            sum.addAndGet(t.taskMetrics.resultSize)
+            top.accumulateAndGet(t.taskMetrics.resultSize, math.max)
+          }
       }
       spark.sparkContext.addSparkListener(l)
       try {
@@ -581,43 +597,68 @@ class StreamingJobSpec extends SparkSpec {
         var prev = -1L; var stable = 0
         while (stable < 3) {
           Thread.sleep(100)
-          if (bytes.get == prev) stable += 1 else { prev = bytes.get; stable = 0 }
+          if (sum.get == prev) stable += 1 else { prev = sum.get; stable = 0 }
         }
-        bytes.get
+        (sum.get, top.get)
       } finally spark.sparkContext.removeSparkListener(l)
     }
-    def run(maxRows: String, capBytes: Option[Long]): (String, Long, Seq[Long]) = {
-      val out = Files.createTempDirectory("graft-wideburst").toString
-      spark.conf.set("spark.graft.stream.localAppend.maxRows", maxRows)
-      capBytes.foreach(c => spark.conf.set("spark.graft.rows.smallRenumberBytes", c.toString))
-      try {
-        val job = new StreamingJob(spark, plan, out, 0, 1L << 40)
-        def fused = job.counter("entry/img", "appends_fused")
-        job.processBatch("ad00", images(0, 2, 4)) // arms the gate
-        val f1 = fused
-        job.processBatch("ad00", images(2, 2, 4)) // tiny: the cue appends fused
-        val f2 = fused
-        val burst = maxResultBytes(job.processBatch("ad00", images(4, 10, 2000)))
-        job.finish()
-        (out, burst, Seq(f1, f2))
-      } finally {
-        spark.conf.unset("spark.graft.stream.localAppend.maxRows")
-        spark.conf.unset("spark.graft.rows.smallRenumberBytes")
+    for ((module, extra, frame, tables) <- Seq(
+        ("ad00", """, "cue_interval": 2""", images _, Seq("data", "cue")),
+        ("al00", "", alarms _, Seq("data")))) {
+      def run(maxRows: String, capBytes: Option[Long], width: Int = 2000)
+          : (String, (Long, Long), Seq[Long]) = {
+        val out = Files.createTempDirectory("graft-wideburst").toString
+        spark.conf.set("spark.graft.stream.localAppend.maxRows", maxRows)
+        capBytes.foreach(c => spark.conf.set("spark.graft.rows.smallRenumberBytes", c.toString))
+        try {
+          val job = new StreamingJob(spark, plan(module, extra), out, 0, 1L << 40)
+          def fused = job.counter("entry/img", "appends_fused")
+          job.processBatch(module, frame(0, 2, 4)) // arms the gate
+          val f1 = fused
+          job.processBatch(module, frame(2, 2, 4)) // tiny: a flat table appends fused
+          val f2 = fused
+          val burst = resultBytes(job.processBatch(module, frame(4, 10, width)))
+          job.finish()
+          (out, burst, Seq(f1, f2))
+        } finally {
+          spark.conf.unset("spark.graft.stream.localAppend.maxRows")
+          spark.conf.unset("spark.graft.rows.smallRenumberBytes")
+        }
       }
+      val (on, burstOn, fusedOn) = run("128", Some(Cap))
+      assert(fusedOn(1) == fusedOn(0) + 1, s"$module: the tiny trigger must append fused: $fusedOn")
+      val (_, burstNarrow, _) = run("128", Some(Cap), width = 200)
+      assert(burstOn._1 - burstNarrow._1 < 32L * 1024,
+        s"$module: the burst reached the driver: ${burstOn._1} against ${burstNarrow._1} bytes")
+      // a fresh job's first trigger has no history, so no payload: the
+      // same wide rows must not reach the driver on its write path
+      def first(width: Int): Long = {
+        val fresh = Files.createTempDirectory("graft-widefirst").toString
+        spark.conf.set("spark.graft.rows.smallRenumberBytes", Cap.toString)
+        try {
+          val job = new StreamingJob(spark, plan(module, extra), fresh, 0, 1L << 40)
+          val b = resultBytes(job.processBatch(module, frame(0, 10, width)))
+          job.finish()
+          assert(spark.read.parquet(s"$fresh/data/entry/img/data").count() == 10L)
+          b._1
+        } finally spark.conf.unset("spark.graft.rows.smallRenumberBytes")
+      }
+      val (firstWide, firstNarrow) = (first(2000), first(200))
+      assert(firstWide - firstNarrow < 32L * 1024,
+        s"$module: the first trigger reached the driver: $firstWide against $firstNarrow bytes")
+      // under the default 32 MiB cap the same burst does ride the payload
+      if (module == "ad00") {
+        val (_, burstDefault, _) = run("128", None)
+        assert(burstDefault._2 > 160L * 1000, s"the payload should carry the burst: $burstDefault")
+      }
+      val (off, _, _) = run("0", Some(Cap))
+      tables.foreach { t =>
+        def read(o: String) = spark.read.parquet(s"$o/data/entry/img/$t").orderBy("row")
+          .collect().map(_.toString).toSeq
+        assert(read(on) == read(off), s"$module $t parity")
+      }
+      assert(spark.read.parquet(s"$on/data/entry/img/data").count() == 14L)
     }
-    val (on, burstOn, fusedOn) = run("128", Some(64L * 1024))
-    assert(fusedOn(1) == fusedOn(0) + 1, s"the tiny trigger's cue must append fused: $fusedOn")
-    assert(burstOn < 64L * 1024, s"the burst reached the driver: $burstOn bytes")
-    // under the default 32 MiB cap the same burst does ride the payload
-    val (_, burstDefault, _) = run("128", None)
-    assert(burstDefault > 160L * 1000, s"the payload should carry the burst: $burstDefault")
-    val (off, _, _) = run("0", Some(64L * 1024))
-    Seq("data", "cue").foreach { t =>
-      def read(o: String) = spark.read.parquet(s"$o/data/entry/img/$t").orderBy("row")
-        .collect().map(_.toString).toSeq
-      assert(read(on) == read(off), s"ad00 $t parity")
-    }
-    assert(spark.read.parquet(s"$on/data/entry/img/data").count() == 14L)
   }
 
   test("x5f2 counters ride the push-metrics reporter with live values") {
@@ -637,14 +678,14 @@ class StreamingJobSpec extends SparkSpec {
     assert(byName("kafka-to-nexus.host_example_org.entry.speed.events_written") == 0L)
     assert(byName("kafka-to-nexus.host_example_org.entry.events.events_written") == 3L)
     assert(byName.keys.exists(_.endsWith(".write_errors")))
-    // the append-path band decision rides the same surface (fused /
-    // bounded-collect / distributed — at production the 1-job-vs-5-jobs
-    // difference per trigger)
-    Seq("appends_fused", "appends_collect", "appends_spark").foreach { c =>
+    // the append-path band decision rides the same surface (driver /
+    // distributed — at production the 1-job-vs-5-jobs difference per
+    // trigger)
+    Seq("appends_fused", "appends_spark").foreach { c =>
       assert(byName.contains(s"kafka-to-nexus.host_example_org.entry.speed.$c"),
         s"$c missing from the push-metrics surface")
     }
-    assert(byName("kafka-to-nexus.host_example_org.entry.speed.appends_collect") >= 1L)
+    assert(byName("kafka-to-nexus.host_example_org.entry.speed.appends_spark") >= 1L)
     // the wall time of the schema's last processBatch, per stream
     assert(byName("kafka-to-nexus.host_example_org.entry.speed.last_batch_ms") > 0L)
 
