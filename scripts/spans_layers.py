@@ -17,8 +17,8 @@ For each file, every `processBatch` span is printed with its Spark jobs in
 start order — call site, layer, stages, tasks, ms — and the driver gap
 before each job (time inside the batch not covered by any job), then a
 table of per-trigger means by layer: jobs and ms for kernel, module,
-renumber, append and other, the driver time, the stages and tasks of the
-batch's jobs, and `processBatch` itself.
+renumber, append and other, the driver time, the stages, tasks and shuffle
+bytes written of the batch's jobs, and `processBatch` itself.
 Means are over all triggers and over the steady ones (every trigger but
 the catch-up `c*` ones). The steady means are also printed per schema
 (`processBatch.f144`, `processBatch.ev44`): the same table over that
@@ -123,26 +123,28 @@ def layer_means(bs, steady_only, name=None):
             reach = j["end_ns"] if reach is None else max(reach, j["end_ns"])
         sums["batch.stages"] += sum(j.get("stages", 0) for j in jobs)
         sums["batch.tasks"] += sum(j.get("tasks", 0) for j in jobs)
+        sums["spark.shuffle_bytes"] += sum(j.get("shuffle_bytes", 0) for j in jobs)
     n = max(len(ops), 1)
     return {k: v / n for k, v in sums.items()}, len(ops)
 
 
 def metric_order():
     return ([f"{l}.jobs" for l in LAYERS] + [f"{l}.ms" for l in LAYERS]
-            + ["driver.ms", "batch.stages", "batch.tasks", "processBatch.ms"])
+            + ["driver.ms", "batch.stages", "batch.tasks", "spark.shuffle_bytes",
+               "processBatch.ms"])
 
 
 def print_means(label, means, n):
     print(f"\n{label} ({n} triggers), per trigger:")
     for k in metric_order():
-        print(f"  {k:<16} {means.get(k, 0.0):9.2f}")
+        print(f"  {k:<19} {means.get(k, 0.0):9.2f}")
 
 
 def print_delta(title, groups):
     """Per metric, parent / change / delta for each (label, parent means,
     change means) group, side by side."""
     print(f"== {title}")
-    print(f"  {'metric':<16}" + "".join(
+    print(f"  {'metric':<19}" + "".join(
         f"   {label[-13:] + ' parent':>20} {'change':>9} {'delta':>9}"
         for label, _, _ in groups))
     for k in metric_order():
@@ -150,7 +152,7 @@ def print_delta(title, groups):
         for _, p, c in groups:
             a, b = p.get(k, 0.0), c.get(k, 0.0)
             cells += f"   {a:20.2f} {b:9.2f} {b - a:+9.2f}"
-        print(f"  {k:<16}{cells}")
+        print(f"  {k:<19}{cells}")
 
 
 def main(paths):

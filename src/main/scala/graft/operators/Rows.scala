@@ -43,8 +43,8 @@ object Rows {
   private[graft] val SmallRenumberRows = 65536L
 
   /** `spark.graft.rows.smallRenumberBytes` (32 MiB): the byte budget of
-    * the one-task and driver numbering paths, and of the streaming fused
-    * payload that feeds the driver path (BoundedRowsAgg's byte cap).
+    * the one-task and driver numbering paths, and of the streaming driver
+    * kernel's collect that feeds the driver path (its byte bound).
     */
   def smallRenumberBytes(spark: org.apache.spark.sql.SparkSession): Long =
     spark.conf.get("spark.graft.rows.smallRenumberBytes", (32L * 1024 * 1024).toString).toLong
@@ -83,7 +83,7 @@ object Rows {
       i
     }.toArray
     // DRIVER fast path: a frame whose rows are already on the driver (a
-    // buffered flush, the streaming fused payload, and every Project or
+    // buffered flush, a driver-kernel trigger's rows, and every Project or
     // Filter over them — see LocalPlan) numbers on the driver with ZERO
     // jobs and comes back as a LocalRelation, so the module's explodes
     // and transforms keep evaluating on the driver all the way into the

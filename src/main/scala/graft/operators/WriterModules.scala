@@ -393,8 +393,12 @@ object WriterModules {
         col("row"),
         col("events_after").as("ea"),
         col("events_written").as("ea_prev"),
-        (element_at(col("reference_time"), -1) +
-          element_at(col("time_of_flight"), -1).cast("long")).as("cue_ts"))
+        // try_element_at: a message with events may carry no reference
+        // time (the envelope rejects one on the wire, a hand-built frame
+        // need not), and ANSI element_at would throw for the whole
+        // projection; such a message's cue is stamped from 0
+        (coalesce(try_element_at(col("reference_time"), lit(-1)), lit(0L)) +
+          try_element_at(col("time_of_flight"), lit(-1)).cast("long")).as("cue_ts"))
       // the batch's last cumulative event count and its message bound:
       // from the kernel's exact counts when the cursor carries them
       // (`elemHint` = the batch's events, 0 = nothing to cue), else one

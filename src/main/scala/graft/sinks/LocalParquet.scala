@@ -10,6 +10,7 @@ import org.apache.parquet.ParquetReadOptions
 import org.apache.parquet.column.ColumnReader
 import org.apache.parquet.column.impl.ColumnReadStoreImpl
 import org.apache.parquet.conf.PlainParquetConfiguration
+import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
@@ -20,6 +21,7 @@ import org.apache.parquet.schema.{GroupType, LogicalTypeAnnotation, MessageType,
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.SpecializedGetters
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
@@ -35,13 +37,14 @@ import org.apache.spark.sql.types._
   * through one shared [[PlainParquetConfiguration]] — no Hadoop
   * `Configuration`, no Spark job.
   *
-  * Write scope is deliberately narrow: flat schemas of primitive types
-  * (long/int/short/byte/double/float/boolean/string). [[supports]] gates;
-  * callers fall back to the Spark write path otherwise. Schema
-  * conventions match Spark's parquet writer (INT64/INT32/DOUBLE/FLOAT/
-  * BOOLEAN/BINARY-UTF8, `required` for non-nullable fields), so files
-  * from both paths coexist in one table directory with identical merged
-  * schemas.
+  * Write scope is deliberately narrow: columns of primitive types
+  * (long/int/short/byte/double/float/boolean/string) and one-level arrays
+  * of them — what the reader reads. [[supports]] gates; callers fall back
+  * to the Spark write path otherwise. Schema conventions match Spark's
+  * parquet writer (INT64/INT32/DOUBLE/FLOAT/BOOLEAN/BINARY-UTF8, its
+  * three-level LIST, `required` for non-nullable fields and elements), so
+  * files from both paths coexist in one table directory with identical
+  * merged schemas.
   *
   * Crash safety: a file is written under a dot-prefixed temp name
   * (hidden from every reader, see [[hidden]]) and atomically renamed into
@@ -61,28 +64,41 @@ object LocalParquet {
 
   def supports(schema: StructType): Boolean =
     schema.fields.forall(_.dataType match {
-      case LongType | IntegerType | ShortType | ByteType | DoubleType | FloatType |
-          BooleanType | StringType => true
-      case _ => false
+      case ArrayType(et, _) => primitive(et)
+      case dt               => primitive(dt)
     })
 
-  private def parquetType(f: StructField): Type = {
+  private def primitive(dt: DataType): Boolean = dt match {
+    case LongType | IntegerType | ShortType | ByteType | DoubleType | FloatType |
+        BooleanType | StringType => true
+    case _ => false
+  }
+
+  private def parquetType(name: String, dt: DataType, nullable: Boolean): Type = {
     val rep =
-      if (f.nullable) Type.Repetition.OPTIONAL else Type.Repetition.REQUIRED
-    f.dataType match {
-      case LongType    => Types.primitive(PrimitiveTypeName.INT64, rep).named(f.name)
-      case IntegerType => Types.primitive(PrimitiveTypeName.INT32, rep).named(f.name)
+      if (nullable) Type.Repetition.OPTIONAL else Type.Repetition.REQUIRED
+    dt match {
+      case LongType    => Types.primitive(PrimitiveTypeName.INT64, rep).named(name)
+      case IntegerType => Types.primitive(PrimitiveTypeName.INT32, rep).named(name)
       // Spark writes ShortType/ByteType as INT32 annotated int(16)/int(8) —
       // match it so files from both paths merge schemas cleanly
       case ShortType   => Types.primitive(PrimitiveTypeName.INT32, rep)
-        .as(LogicalTypeAnnotation.intType(16, true)).named(f.name)
+        .as(LogicalTypeAnnotation.intType(16, true)).named(name)
       case ByteType    => Types.primitive(PrimitiveTypeName.INT32, rep)
-        .as(LogicalTypeAnnotation.intType(8, true)).named(f.name)
-      case DoubleType  => Types.primitive(PrimitiveTypeName.DOUBLE, rep).named(f.name)
-      case FloatType   => Types.primitive(PrimitiveTypeName.FLOAT, rep).named(f.name)
-      case BooleanType => Types.primitive(PrimitiveTypeName.BOOLEAN, rep).named(f.name)
+        .as(LogicalTypeAnnotation.intType(8, true)).named(name)
+      case DoubleType  => Types.primitive(PrimitiveTypeName.DOUBLE, rep).named(name)
+      case FloatType   => Types.primitive(PrimitiveTypeName.FLOAT, rep).named(name)
+      case BooleanType => Types.primitive(PrimitiveTypeName.BOOLEAN, rep).named(name)
       case StringType  => Types.primitive(PrimitiveTypeName.BINARY, rep)
-        .as(LogicalTypeAnnotation.stringType()).named(f.name)
+        .as(LogicalTypeAnnotation.stringType()).named(name)
+      // Spark's standard three-level list (`SparkToParquetSchemaConverter`
+      // without the legacy format): a LIST group holding a repeated
+      // `list` group of one `element`
+      case ArrayType(et, containsNull) => Types.buildGroup(rep)
+        .as(LogicalTypeAnnotation.listType())
+        .addField(Types.repeatedGroup()
+          .addField(parquetType("element", et, containsNull)).named("list"))
+        .named(name)
       case other => throw new IllegalArgumentException(s"unsupported: $other")
     }
   }
@@ -106,7 +122,7 @@ object LocalParquet {
     val d = Paths.get(dir)
     Files.createDirectories(d)
     val message = new MessageType("spark_schema",
-      schema.fields.map(parquetType): _*)
+      schema.fields.map(f => parquetType(f.name, f.dataType, f.nullable)): _*)
     val name = s"part-local-${UUID.randomUUID()}.snappy.parquet"
     val tmp  = d.resolve(s".$name.inprogress")
     val writer = ExampleParquetWriter.builder(new LocalOutputFile(tmp))
@@ -118,18 +134,7 @@ object LocalParquet {
     try rows.foreach { r =>
       val g = factory.newGroup()
       schema.fields.zipWithIndex.foreach { case (f, i) =>
-        if (!r.isNullAt(i)) f.dataType match {
-          case LongType    => g.append(f.name, r.getLong(i))
-          case IntegerType => g.append(f.name, r.getInt(i))
-          case ShortType   => g.append(f.name, r.getShort(i).toInt)
-          case ByteType    => g.append(f.name, r.getByte(i).toInt)
-          case DoubleType  => g.append(f.name, r.getDouble(i))
-          case FloatType   => g.append(f.name, r.getFloat(i))
-          case BooleanType => g.append(f.name, r.getBoolean(i))
-          case StringType  => g.append(f.name,
-            Binary.fromString(r.getUTF8String(i).toString))
-          case other => throw new IllegalArgumentException(s"unsupported: $other")
-        }
+        if (!r.isNullAt(i)) putValue(g, f.name, f.dataType, r, i)
       }
       writer.write(g)
     } finally writer.close()
@@ -142,6 +147,31 @@ object LocalParquet {
     Files.move(tmp, d.resolve(name), StandardCopyOption.ATOMIC_MOVE)
     rows.size.toLong
   }
+
+  /** Appends the non-null value `v(i)` of type `dt` to `g` as field `name`. */
+  private def putValue(g: Group, name: String, dt: DataType, v: SpecializedGetters, i: Int): Unit =
+    dt match {
+      case LongType    => g.append(name, v.getLong(i))
+      case IntegerType => g.append(name, v.getInt(i))
+      case ShortType   => g.append(name, v.getShort(i).toInt)
+      case ByteType    => g.append(name, v.getByte(i).toInt)
+      case DoubleType  => g.append(name, v.getDouble(i))
+      case FloatType   => g.append(name, v.getFloat(i))
+      case BooleanType => g.append(name, v.getBoolean(i))
+      case StringType  => g.append(name, Binary.fromString(v.getUTF8String(i).toString))
+      case ArrayType(et, _) =>
+        // an empty list is the LIST group without a `list` entry; a null
+        // element is a `list` entry without its `element`
+        val arr  = v.getArray(i)
+        val list = g.addGroup(name)
+        var j = 0
+        while (j < arr.numElements()) {
+          val e = list.addGroup("list")
+          if (!arr.isNullAt(j)) putValue(e, "element", et, arr, j)
+          j += 1
+        }
+      case other => throw new IllegalArgumentException(s"unsupported: $other")
+    }
 
   // ---- read ----------------------------------------------------------------
 

@@ -88,6 +88,39 @@ class LocalPlanSpec extends SparkSpec {
     cases.foreach { case (label, df) => same(label, df) }
   }
 
+  test("grouped first/last aggregates (da00's pivot) equal collect; other aggregates are refused") {
+    import scala.jdk.CollectionConverters._
+    // per message one row per variable; message 2 lacks `b`, message 3
+    // carries a variable no pivot value names
+    val vars = StructType(Seq(StructField("offset", LongType), StructField("ts", LongType),
+      StructField("name", StringType), StructField("data", ArrayType(DoubleType))))
+    val msgs = spark.createDataFrame(Seq(
+      Row(1L, 10L, "a", Seq(1.0, 2.0)), Row(1L, 10L, "b", Seq(3.0)),
+      Row(2L, 20L, "a", null), Row(3L, 30L, "c", Seq(4.0)), Row(3L, 30L, "b", Seq.empty[Double]),
+      Row(4L, 40L, "b", Seq(5.0)), Row(4L, 40L, "a", Seq(6.0, Double.NaN))).asJava, vars)
+    def sorted(rs: Seq[Row]) = rs.map(_.toString).sorted
+    val cases: Seq[(String, DataFrame)] = Seq(
+      "pivot" -> msgs.groupBy(col("offset"), col("ts")).pivot(col("name"), Seq("a", "b"))
+        .agg(first(col("data"))),
+      "first and last per unique key" -> frame.groupBy(col("id"))
+        .agg(first(col("a")), last(col("tag")), first(col("b"), ignoreNulls = true)),
+      "grouped, then projected" -> frame.groupBy(col("id")).agg(first(col("tag")).as("t"))
+        .select((col("id") % 5).as("i"), concat(col("t"), lit("!")).as("t")))
+    cases.foreach { case (label, df) =>
+      val got = external(df)
+      assert(got.isDefined, s"$label: must evaluate on the driver\n" +
+        df.queryExecution.optimizedPlan)
+      assert(sorted(got.get) == sorted(df.collect().toSeq), label)
+    }
+    val refused: Seq[(String, DataFrame)] = Seq(
+      "count" -> frame.groupBy(col("tag")).agg(count(lit(1))),
+      "global aggregate" -> frame.agg(first(col("a"))),
+      "array key" -> frame.groupBy(col("a")).agg(first(col("id"))))
+    refused.foreach { case (label, df) =>
+      assert(LocalPlan.rows(df).isEmpty, s"$label must not evaluate on the driver")
+    }
+  }
+
   test("generated rows past maxRows refuse the plan") {
     val df = frame.select(col("id"), explode(col("a")))
     val n = df.collect().length

@@ -66,9 +66,14 @@ class LocalParquetSpec extends SparkSpec {
       back(0).getFloat(3) == 1.5f && back(0).getBoolean(4) &&
       back(0).getString(5) == "héllo")
     assert((1 to 5).forall(back(1).isNullAt))
-    // arrays are out of scope — the caller must fall back to the Spark path
-    assert(!LocalParquet.supports(StructType(Seq(
+    // one-level arrays are in scope; nested ones, maps and structs are
+    // not — the caller must fall back to the Spark path
+    assert(LocalParquet.supports(StructType(Seq(
       StructField("a", ArrayType(LongType), nullable = true)))))
+    Seq(ArrayType(ArrayType(LongType)), MapType(StringType, LongType),
+      StructType(Seq(StructField("x", LongType)))).foreach { t =>
+      assert(!LocalParquet.supports(StructType(Seq(StructField("a", t)))), t)
+    }
   }
 
   /** every row of `dir` through the driver reader, in its order */
@@ -159,6 +164,32 @@ class LocalParquetSpec extends SparkSpec {
     val (sSchema, sRows) = sparkRows(dir)
     assert(dSchema == sSchema)
     assert(dRows == sRows)
+  }
+
+  test("arrays written on the driver read as Spark writes them: null and empty arrays, null elements") {
+    val dir = Files.createTempDirectory("graft-localpq-arrw").toString
+    val df = (0L until 12L).map { r =>
+      (r,
+        if (r % 5 == 0) null else if (r % 5 == 1) Seq.empty[Int]
+        else Seq.tabulate((r % 4).toInt + 1)(k => (r * 10 + k).toInt),
+        if (r % 3 == 0) null else Seq(Some(r / 2.0), None, Some(-0.0)),
+        Seq(Long.MinValue + r, Long.MaxValue - r),
+        Seq(r.toFloat, Float.MinPositiveValue),
+        if (r % 2 == 0) Seq(r.toShort, (-r).toShort) else Seq.empty[Short],
+        Seq(Some(s"s$r"), None, Some("")))
+    }.toDF("row", "ints", "doubles", "longs", "floats", "shorts", "strs")
+    val rows = df.queryExecution.toRdd.map(_.copy()).collect().toSeq
+    // the same rows once per writer, and once each into one directory
+    LocalParquet.write(s"$dir/local", df.schema, rows)
+    df.coalesce(1).write.parquet(s"$dir/spark")
+    LocalParquet.write(s"$dir/mixed", df.schema, rows.take(6))
+    df.filter(col("row") >= 6).coalesce(1).write.mode("append").parquet(s"$dir/mixed")
+    val want = sparkRows(s"$dir/spark")
+    Seq("local", "mixed").foreach { t =>
+      assert(sparkRows(s"$dir/$t") == want, s"$t through Spark")
+      assert(driverRows(s"$dir/$t") == want, s"$t on the driver")
+    }
+    assert(spark.read.parquet(s"$dir/local").schema == spark.read.parquet(s"$dir/spark").schema)
   }
 
   test("read skips hidden names: committer scratch and in-progress files") {

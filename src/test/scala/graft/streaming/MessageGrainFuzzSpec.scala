@@ -414,10 +414,10 @@ class MessageGrainFuzzSpec extends SparkSpec {
   /** Random exploding-module messages at offsets `from until from + n`:
     * ev44 arrays of random lengths, each sometimes empty or null, with
     * `time_of_flight`/`pixel_id` and `reference_time`/`reference_time_index`
-    * lengths that sometimes differ; se00 values with provided or generated
-    * timestamps and tdct timestamps, sometimes empty or null. A message
-    * with events keeps at least one reference time, as on the wire: the
-    * envelope decode rejects an ev44 without one (`ZeroTimestamp`).
+    * lengths that sometimes differ (a message with events but no
+    * reference time included, which the wire's envelope decode rejects
+    * but a hand-built frame can carry); se00 values with provided or
+    * generated timestamps and tdct timestamps, sometimes empty or null.
     */
   private def explodingMsgs(rnd: scala.util.Random, from: Long, n: Int)
       : (Seq[Ev44Msg], Seq[Se00Msg], Seq[TdctMsg]) = {
@@ -432,7 +432,7 @@ class MessageGrainFuzzSpec extends SparkSpec {
     val ev = offsets.map { o =>
       val nt = len(5)
       val np = if (rnd.nextInt(3) == 0) len(5) else nt
-      val nr = if (nt > 0) 1 + rnd.nextInt(3) else len(3)
+      val nr = len(3)
       val ni = if (rnd.nextInt(3) == 0) len(3) else nr
       Ev44Msg("tp", "det", o, 1000L + o, tsNs(o), arr(nr)(i => tsNs(o) + i),
         arr(ni)(i => 2 * i), arr(nt)(i => (o * 10 + i).toInt), arr(np)(i => i))
@@ -542,6 +542,8 @@ class MessageGrainFuzzSpec extends SparkSpec {
         m.time_of_flight != null && m.time_of_flight.isEmpty), s"seed=$seed: null/empty")
       assert(all._1.exists(m => m.reference_time != null && m.reference_time.size > 1 &&
         m.time_of_flight != null && m.time_of_flight.nonEmpty), s"seed=$seed: multi-pulse")
+      assert(all._1.exists(m => m.time_of_flight != null && m.time_of_flight.nonEmpty &&
+        (m.reference_time == null || m.reference_time.isEmpty)), s"seed=$seed: events, no pulse")
       for ((arm, confs) <- arms) {
         val out = Files.createTempDirectory("graft-final-ids").toString
         val job = new StreamingJob(spark, plan, out, 0, 1L << 40)
@@ -585,22 +587,48 @@ class MessageGrainFuzzSpec extends SparkSpec {
     }
   }
 
+  /** Hand-made timelines at the kernel's edges, each of three triggers
+    * (the first arms the driver kernel for the next two).
+    */
+  private val adversarial: Seq[(String, Seq[Seq[M]])] = {
+    def ms(from: Long, ts: Long*) = ts.zipWithIndex.map { case (t, i) => M(from + i, t) }
+    val top = Long.MaxValue - 20
+    Seq(
+      // each batch's head repeats the previous batch's tail timestamp
+      "tied head" -> Seq(ms(0, 8000, 10000, 10500), ms(3, 10500, 11000), ms(5, 11000, 16000, 12000)),
+      // a batch wholly before start picks the buffered candidate
+      // (for da00, a two-row message) and the next one emits it
+      "all pre-start" -> Seq(ms(0, 10100), ms(1, 8000, 8500, 8500, 9000), ms(5, 11000, 15001)),
+      // a batch whose first message is past stop finishes the stream
+      // and flushes the buffer; the straggler after it drops
+      "head past stop" -> Seq(ms(0, 9000, 9500), ms(2, 15500, 12000), ms(4, 12000)),
+      // timestamps exactly at start and at stop are in the window
+      "at start and stop" -> Seq(ms(0, 9999, 10000, 12000), ms(3, 15000, 15000, 15001), ms(6, 14000)),
+      // offsets near Long.MaxValue
+      "offsets near Long.MaxValue" -> Seq(ms(top, 9000, 10000), ms(top + 2, 10000, 11000, 11000),
+        ms(top + 5, 12000, 15000, 16000, 13000)))
+  }
+
   test("every module's kernel decisions are message-atomic on fuzzed timelines") {
-    for (seed <- Seq(11, 37, 101); h <- harnesses) {
-      val batches = timeline(seed)
+    // both kernel forms on every timeline: maxRows=0 keeps every trigger
+    // on the keyed pass, the default runs the driver kernel after the
+    // first trigger; both must equal the independent oracle
+    val timelines = Seq(11, 37, 101).map(seed => s"seed=$seed" -> timeline(seed)) ++ adversarial
+    for ((name, batches) <- timelines; h <- harnesses; maxRows <- Seq("128", "0")) {
       val module  = graft.operators.WriterModules.registry(h.module)
       val exp = expectedSurvivors(batches,
         module.acceptRepeats, module.emitBuffered).map(_.tsNs)
       val out = Files.createTempDirectory(s"graft-fuzz-${h.module}").toString
       val job = new StreamingJob(spark, NexusPlan.parse(template(h.module, h.extra)),
         out, StartMs, StopMs)
-      batches.zipWithIndex.foreach { case (b, i) =>
+      spark.conf.set("spark.graft.stream.localAppend.maxRows", maxRows)
+      try batches.zipWithIndex.foreach { case (b, i) =>
         if (b.nonEmpty) job.processBatch(h.module, h.frame(b), i.toLong)
-      }
+      } finally spark.conf.unset("spark.graft.stream.localAppend.maxRows")
       job.finish()
       val got = h.readBack(out)
       assert(got == exp,
-        s"${h.module} seed=$seed: surviving messages diverge\n" +
+        s"${h.module} $name maxRows=$maxRows: surviving messages diverge\n" +
           s"  timeline: ${batches.map(_.map(m => s"${m.offset}@${m.tsMs}"))}\n" +
           s"  expected: $exp\n  got:      $got")
     }
