@@ -23,8 +23,13 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * Deliberately non-foldable so the optimizer can't constant-fold it back
   * into an inline literal. Use ONLY for hot repeated-query parameters —
   * a folded literal is better for scan pushdown and planning elsewhere.
+  *
+  * A named `slot` marks the value as a cursor value of a plan that is
+  * built once and evaluated many times: `LocalPlan` rebinds every named
+  * slot to the value its caller supplies for the evaluation, so a kept
+  * plan needs no rebuild when the cursor moves.
   */
-case class StableLong(value: Long) extends LeafExpression {
+case class StableLong(value: Long, slot: String = "") extends LeafExpression {
   override def nullable: Boolean  = false
   override def dataType: DataType = LongType
   override def foldable: Boolean  = false
@@ -44,6 +49,9 @@ object StableLong {
   import org.apache.spark.sql.GraftBridge.{column, expression}
   /** `lit(v)` that never changes the generated code across values. */
   def stableLit(v: Long): Column = column(StableLong(v))
+
+  /** [[stableLit]] as the named slot `slot` (see [[StableLong]]). */
+  def stableLit(v: Long, slot: String): Column = column(StableLong(v, slot))
 
   /** SQL `div` (integral division, truncating toward zero) as a Column —
     * the `expr(s"a div $b")` sites interpolated per-batch values into the

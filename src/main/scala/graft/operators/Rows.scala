@@ -1,9 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.{DataFrame, GraftBridge, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+
+import graft.functions.StableLong.stableLit
 
 /** Distributed order-preserving row numbering — the scale-safe replacement
   * for `row_number().over(Window.orderBy(...))`, which Spark evaluates by
@@ -63,8 +67,16 @@ object Rows {
     * partition count from the hint (~256k rows each) instead of inheriting
     * the session shuffle width. Ids are exact regardless of hint quality.
     *
-    * Eager: runs the small stats job at call time; the returned frame's
-    * final pass stays lazy and reuses the shuffle output.
+    * `slots` names `start` and then each weight's start as [[StableLong]]
+    * slots on the driver path, so a plan kept across triggers is rebound
+    * to the next trigger's cursor ("" = unnamed).
+    *
+    * A frame that reads local relations only (the driver path) comes back
+    * as a lazy plan with no job: `row_number` and exclusive running sums
+    * over `orderCol` in one unpartitioned Window, which [[LocalPlan]]
+    * evaluates on the driver. Any other frame runs the small stats job at
+    * call time; the returned frame's final pass stays lazy and reuses the
+    * shuffle output.
     */
   def indexed(
       df: DataFrame,
@@ -73,7 +85,8 @@ object Rows {
       start: Long = 0L,
       weights: Seq[(String, String, Long)] = Nil,
       sizeHint: Long = -1L,
-      byteHint: Long = -1L
+      byteHint: Long = -1L,
+      slots: Seq[String] = Nil
   ): DataFrame = {
     val bytesMax = smallRenumberBytes(df.sparkSession)
     val wStarts  = weights.map(_._3).toArray
@@ -82,36 +95,35 @@ object Rows {
       require(i >= 0, s"weight column $w not found")
       i
     }.toArray
-    // DRIVER fast path: a frame whose rows are already on the driver (a
+    // A frame the caller knows is empty (sizeHint 0: the close-time seed's
+    // probe) numbers nothing: a relation of the output schema, no rows.
+    if (sizeHint == 0) return GraftBridge.ofRows(df.sparkSession, LocalRelation(
+      DataTypeUtils.toAttributes(stampSchema(df.schema.fields, rowCol, weights)._2)))
+    // DRIVER path: a frame whose rows are already on the driver (a
     // buffered flush, a driver-kernel trigger's rows, and every Project or
-    // Filter over them — see LocalPlan) numbers on the driver with ZERO
-    // jobs and comes back as a LocalRelation, so the module's explodes
-    // and transforms keep evaluating on the driver all the way into the
-    // driver-side parquet append. Gates, as on the distributed small
-    // path: an integral order column; within the row bound (a LARGE local
-    // frame should re-enter the distributed world here, not anchor a
-    // driver-side pipeline — a hint above it skips the probe); the
-    // wide-row byte veto.
+    // Filter over them) numbers in a Window that LocalPlan evaluates, so
+    // the module's explodes and transforms keep evaluating on the driver
+    // all the way into the driver-side parquet append, and a plan built
+    // once over a placeholder serves every later trigger. Gates, as on the
+    // distributed small path: an integral order column; within the row
+    // bound (a hint above it re-enters the distributed world here instead
+    // of anchoring a driver-side pipeline); the wide-row byte veto.
     val oField = df.schema.fields.find(_.name == orderCol)
-    val local =
-      if ((sizeHint >= 0 && sizeHint > SmallRenumberRows) ||
-        (byteHint >= 0 && byteHint > bytesMax) ||
-        !oField.exists(f =>
-          f.dataType == LongType || f.dataType == org.apache.spark.sql.types.IntegerType)) None
-      else LocalPlan.rows(df, SmallRenumberRows)
-    local match {
-      case Some((schema, internal))
-          if internal.forall(!_.isNullAt(schema.fieldIndex(orderCol))) =>
-        import scala.jdk.CollectionConverters._
-        val oIdx   = schema.fieldIndex(orderCol)
-        val toRow  = CatalystTypeConverters.createToScalaConverter(schema)
-        val ext    = internal.map(r => toRow(r).asInstanceOf[Row])
-        val (rowIdx, outSchema) = stampSchema(schema.fields, rowCol, weights)
-        val stampedRows = stampRows(
-          ext.sortBy(_.getAs[Number](oIdx).longValue()).iterator,
-          rowIdx, weightIdx(schema.fields), start, wStarts).toSeq
-        return df.sparkSession.createDataFrame(stampedRows.asJava, outSchema)
-      case _ => ()
+    if (!(sizeHint >= 0 && sizeHint > SmallRenumberRows) &&
+      !(byteHint >= 0 && byteHint > bytesMax) &&
+      oField.exists(f => f.dataType == LongType || f.dataType == IntegerType) &&
+      LocalPlan.onDriver(df)) {
+      weightIdx(df.schema.fields) // fail fast on a missing weight column
+      def startLit(v: Long, k: Int) = stableLit(v, slots.lift(k).getOrElse(""))
+      val order  = Window.orderBy(col(orderCol))
+      val before = order.rowsBetween(Window.unboundedPreceding, -1)
+      val row = (startLit(start, 0) + row_number().over(order).cast(LongType) - 1).as(rowCol)
+      val sums = weights.zipWithIndex.map { case ((w, out, wStart), k) =>
+        (startLit(wStart, k + 1) +
+          coalesce(sum(col(w).cast(LongType)).over(before), lit(0L))).as(out)
+      }
+      val base = df.columns.toSeq.map(c => if (c == rowCol) row else col(c))
+      return df.select((if (df.columns.contains(rowCol)) base else base :+ row) ++ sums: _*)
     }
     // with a byte hint the byte bound decides (rows only guard sort CPU);
     // without one, the conservative row bound stands alone
@@ -170,8 +182,8 @@ object Rows {
     df.sparkSession.createDataFrame(stamped, outSchema)
   }
 
-  /** Output schema shared by both numbering paths: `rowCol` becomes (or
-    * joins as) a non-null long; each weight's output appends in order.
+  /** Output schema of every path: `rowCol` becomes (or joins as) a
+    * non-null long; each weight's output appends in order.
     * Returns the pre-existing index of `rowCol` (−1 = appended).
     */
   private def stampSchema(
@@ -192,8 +204,7 @@ object Rows {
 
   /** One stamping pass over already-ordered rows: consecutive ids from
     * `rowStart`, each weight's exclusive prefix from its `wStarts` entry —
-    * THE single definition the driver fast path and the distributed job-2
-    * mapper both use (a second copy could drift the two numbering paths).
+    * the distributed job-2 mapper.
     */
   private def stampRows(
       it: Iterator[Row],

@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, GenericRowWithSchema}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.json4s._
@@ -15,6 +18,15 @@ import graft.sinks.LocalParquet
   * columns mirror the module's NeXus datasets; row order is carried by an
   * explicit `row` column (parquet has no intrinsic order), computed from the
   * Kafka arrival offset — the reference's append order.
+  *
+  * A module's tables are lazy plans ([[WriterModule.plans]]): building
+  * them runs no Spark job, and every cursor value they read is a named
+  * slot, so the streaming job builds each stream's plans once and
+  * evaluates them on the driver trigger after trigger, the way the
+  * reference sets a module up once per job (`JobCreator.cpp:170-275`) and
+  * then pays only `writeImpl` per message. [[WriterModule.tables]] is the
+  * other evaluator, Spark's: the same plans as frames, with ev44's cue
+  * walked by jobs.
   */
 object WriterModules {
 
@@ -80,6 +92,19 @@ object WriterModules {
       elemHint: Long = -1L) {
     /** the next row id of `table` */
     def next(table: String): Long = rowsWritten.getOrElse(table, 0L)
+    /** The value of the cursor slot `name`: `rows:<table>` = the table's
+      * next row id, `eventsWritten`, `lastCue`.
+      */
+    def slot(name: String): Long = name match {
+      case "eventsWritten"            => eventsWritten
+      case "lastCue"                  => lastCue
+      case t if t.startsWith("rows:") => next(t.stripPrefix("rows:"))
+      case other => throw new IllegalArgumentException(s"unknown cursor slot $other")
+    }
+    /** Slot `name` as a plan constant: a [[graft.functions.StableLong]]
+      * that a kept plan rebinds to the next trigger's cursor.
+      */
+    def slotLit(name: String): Column = stableLit(slot(name), name)
     /** crude batch payload bytes: 8 B/element + envelope per message. */
     def byteHint: Long =
       if (sizeHint < 0) -1L
@@ -98,8 +123,26 @@ object WriterModules {
     /** computed group-level attributes (NX_class etc.). */
     def groupAttrs(cfg: ModuleConfig): Map[String, String] =
       Map("NX_class" -> nxClass)
-    /** message DF (post route/dedup/window) → named output tables. */
-    def tables(df: DataFrame, cfg: ModuleConfig, cur: Cursor = Cursor()): Map[String, DataFrame]
+    /** message DF (post route/dedup/window) → the module's output as lazy
+      * plans ([[Plans]]). Building them runs no Spark job, and every cursor
+      * value they read goes through [[Cursor.slotLit]] (or a `slots` name
+      * of [[Rows.indexed]]), so plans built once over a placeholder input
+      * evaluate any later trigger once its rows and slot values are bound.
+      */
+    def plans(df: DataFrame, cfg: ModuleConfig, cur: Cursor): Plans
+    /** message DF → named output tables under Spark: the [[plans]] as
+      * frames (ev44 adds the cue its chain walk derives).
+      */
+    def tables(df: DataFrame, cfg: ModuleConfig, cur: Cursor = Cursor()): Map[String, DataFrame] =
+      plans(df, cfg, cur).tables
+    /** The value of the plan slot `name` under `cur`: the cursor's own
+      * slots, plus those a module derives from it (ev44's cue interval).
+      */
+    def slot(cfg: ModuleConfig, cur: Cursor, name: String): Long = cur.slot(name)
+    /** Input rows that each count as one write error, as a lazy plan of one
+      * `name` column (da00's inconsistent constants); None = no check.
+      */
+    def checks(df: DataFrame, cfg: ModuleConfig): Option[DataFrame] = None
     /** next cue-chain anchor after a cue at `maxCueIndex` (f144 family
       * stores the write COUNT, ev44 the event INDEX — `f144_Writer.cpp:260`
       * vs `ev44_Writer.cpp:133`).
@@ -139,6 +182,20 @@ object WriterModules {
     def sinkFinals(read: String => LocalParquet.Table, cfg: ModuleConfig): Map[String, Row] =
       Map.empty
   }
+
+  /** A module's output for one input frame, every plan lazy: its tables by
+    * name and, for a module whose cue chain is data-dependent (ev44), the
+    * chain's input, from which a walk over its rows derives the `cue`
+    * table.
+    */
+  final case class Plans(tables: Map[String, DataFrame], cueChain: Option[CueChain] = None)
+
+  /** ev44's greedy cue chain over the batch's non-empty messages: `proj`
+    * = `(row, ea, ea_prev, cue_ts)` (message ordinal, cumulative events
+    * after and before it, cue timestamp) and `candidates` = its messages
+    * whose count crosses a multiple of the interval past the anchor.
+    */
+  final case class CueChain(proj: DataFrame, candidates: DataFrame)
 
   /** Spark's ordering of one stored value type, as `min`/`max` apply it:
     * floating NaN sorts above everything and -0.0 equals 0.0
@@ -186,7 +243,7 @@ object WriterModules {
     */
   private def withRow(df: DataFrame, cur: Cursor = Cursor()): DataFrame =
     Rows.indexed(df, "offset", start = cur.next("data"),
-      sizeHint = cur.sizeHint, byteHint = cur.byteHint)
+      sizeHint = cur.sizeHint, byteHint = cur.byteHint, slots = Seq("rows:data"))
 
   /** Rows an explode of `arr` emits: its length, null counting 0 (`size`
     * of null is null under ANSI and −1 without).
@@ -204,7 +261,7 @@ object WriterModules {
       n: org.apache.spark.sql.Column): DataFrame =
     Rows.indexed(df.withColumn("__n", n), "offset",
       weights = Seq(("__n", "first", cur.next(table))),
-      sizeHint = cur.sizeHint, byteHint = cur.byteHint)
+      sizeHint = cur.sizeHint, byteHint = cur.byteHint, slots = Seq("", s"rows:$table"))
 
   /** f144 scalar log: (time, value) + cue index + min/max/mean metadata
     * (`src/WriterModule/f144/f144_Writer.cpp:197-276`).
@@ -216,7 +273,7 @@ object WriterModules {
       Map("time" -> "ns", "value" -> u, "minimum_value" -> u,
         "maximum_value" -> u, "average_value" -> u)
     }
-    def tables(df: DataFrame, cfg: ModuleConfig, cur: Cursor): Map[String, DataFrame] = {
+    def plans(df: DataFrame, cfg: ModuleConfig, cur: Cursor): Plans = {
       val data = withRow(df, cur)
         .select(col("row"), col("ts").as("time"),
           col("value").cast(cfg.dtype("double")).as("value"))
@@ -227,12 +284,12 @@ object WriterModules {
           // exactly (`f144_Writer.cpp:259-263`); rows are global already
           val gw = col("row") + 1 // 1-based global write count
           Map("cue" -> data
-            .filter(gw > stableLit(cur.lastCue) && (gw - stableLit(cur.lastCue)) % n === 0)
+            .filter(gw > cur.slotLit("lastCue") && (gw - cur.slotLit("lastCue")) % n === 0)
             .select(col("row"), (gw - 1).as("cue_index"),
               col("time").as("cue_timestamp_zero")))
         case _ => Map.empty[String, DataFrame] // default u32::max ⇒ off (f144_Writer.h:79-80)
       }
-      Map("data" -> data) ++ cue
+      Plans(Map("data" -> data) ++ cue)
     }
     override def plannedCueCount(cfg: ModuleConfig, cur: Cursor, rows: Long): Option[Long] =
       cfg.long("cue_interval").filter(_ > 0)
@@ -277,10 +334,10 @@ object WriterModules {
     */
   object Ep01 extends WriterModule {
     val id = "ep01"
-    def tables(df: DataFrame, cfg: ModuleConfig, cur: Cursor): Map[String, DataFrame] =
-      Map("data" -> withRow(df, cur).select(col("row"),
+    def plans(df: DataFrame, cfg: ModuleConfig, cur: Cursor): Plans =
+      Plans(Map("data" -> withRow(df, cur).select(col("row"),
         col("ts").as("connection_status_time"),
-        col("status").cast("short").as("connection_status")))
+        col("status").cast("short").as("connection_status"))))
   }
 
   /** al00 alarms: severity int16 + message with empty-string default
@@ -288,12 +345,12 @@ object WriterModules {
     */
   object Al00 extends WriterModule {
     val id = "al00"
-    def tables(df: DataFrame, cfg: ModuleConfig, cur: Cursor): Map[String, DataFrame] =
-      Map("data" -> withRow(df, cur).select(col("row"),
+    def plans(df: DataFrame, cfg: ModuleConfig, cur: Cursor): Plans =
+      Plans(Map("data" -> withRow(df, cur).select(col("row"),
         col("ts").as("alarm_time"),
         col("severity").cast("short").as("alarm_severity"),
         when(length(col("message")) === 0, lit("NO ALARM MESSAGE"))
-          .otherwise(col("message")).as("alarm_message")))
+          .otherwise(col("message")).as("alarm_message"))))
   }
 
   /** ev44 events: exploded (event_time_offset, event_id) plus per-message
@@ -341,7 +398,7 @@ object WriterModules {
       */
     override def nextLastCue(maxCueIndex: Long): Long = maxCueIndex
     override def elementCountCol = Some(size(col("time_of_flight")))
-    def tables(df: DataFrame, cfg: ModuleConfig, cur: Cursor): Map[String, DataFrame] = {
+    def plans(df: DataFrame, cfg: ModuleConfig, cur: Cursor): Plans = {
       // one numbering pass over the messages gives, per message, the
       // running event count (EventsWritten, ev44_Writer.cpp:118-126) and
       // the first id of its rows in each exploded table
@@ -357,7 +414,8 @@ object WriterModules {
           ("__n_ev", "events_written", cur.eventsWritten),
           ("__n_events", "events_first", cur.next("events")),
           ("__n_index", "index_first", cur.next("index"))),
-        sizeHint = cur.sizeHint, byteHint = cur.byteHint)
+        sizeHint = cur.sizeHint, byteHint = cur.byteHint,
+        slots = Seq("", "eventsWritten", "rows:events", "rows:index"))
         .withColumn("events_after", col("events_written") + col("__n_ev"))
       // every reference_time element lands, each index shifted by
       // EventsWritten (ev44_Writer.cpp:115-125)
@@ -374,21 +432,6 @@ object WriterModules {
         .select((col("events_first") + col("pos")).as("row"),
           col("col.time_of_flight").as("event_time_offset"),
           col("col.pixel_id").as("event_id"))
-      // cue via the EXACT greedy chain of ev44_Writer.cpp:127-134: cue
-      // when cumulative events exceed lastCue + interval, the new anchor
-      // being that message's last event index. The anchor is
-      // data-dependent and inherently sequential, but the driver no
-      // longer collects every message: it collects only the CANDIDATE
-      // messages whose cumulative count crosses a multiple of the
-      // interval (≈ batchEvents/interval rows — the fire-rate bound —
-      // instead of 24 B × every message). Greedy anchors drift off that
-      // grid, so the walk PROVES each candidate before firing: a
-      // candidate with ea_prev ≤ last+interval < ea is necessarily the
-      // first crossing (its predecessor hadn't crossed and ea is
-      // monotone); when the proof fails — the superset missed the true
-      // first crossing — that single link is fetched with one filtered
-      // limit(1) job, so exactness never depends on the heuristic.
-      val L0 = cur.lastCue
       val proj = nonEmpty.select(
         col("row"),
         col("events_after").as("ea"),
@@ -399,137 +442,225 @@ object WriterModules {
         // projection; such a message's cue is stamped from 0
         (coalesce(try_element_at(col("reference_time"), lit(-1)), lit(0L)) +
           try_element_at(col("time_of_flight"), lit(-1)).cast("long")).as("cue_ts"))
-      // the batch's last cumulative event count and its message bound:
-      // from the kernel's exact counts when the cursor carries them
-      // (`elemHint` = the batch's events, 0 = nothing to cue), else one
-      // aggregate job
-      val (maxEa, nMsgs) =
-        if (cur.elemHint == 0) (Long.MinValue, 0L)
-        else if (cur.elemHint > 0) (cur.eventsWritten + cur.elemHint, cur.sizeHint)
-        else proj.agg(max("ea"), count(lit(1))).collect().head match {
-          case r if r.isNullAt(0) => (Long.MinValue, 0L)
-          case r                  => (r.getLong(0), r.getLong(1))
-        }
-      // effective interval ≥ requested, raised so the candidate collect
-      // stays ≤ MaxCueCandidates rows (see the guard's doc on the object)
+      Plans(Map("events" -> events, "index" -> index), Some(CueChain(proj,
+        candidates(proj, cur, stableLit(cueInterval(cfg, cur), "cueInterval")))))
+    }
+    override def slot(cfg: ModuleConfig, cur: Cursor, name: String): Long =
+      if (name == "cueInterval") cueInterval(cfg, cur) else cur.slot(name)
+
+    /** The effective cue interval: the requested one, raised so the
+      * candidate collect stays ≤ [[MaxCueCandidates]] rows for the
+      * batch's events (the cursor's `elemHint`; see the guard's doc).
+      */
+    private def cueInterval(cfg: ModuleConfig, cur: Cursor): Long = {
       val requested   = cfg.long("cue_interval").getOrElse(100000000L).max(1L)
-      val batchEvents = if (maxEa == Long.MinValue) 0L else (maxEa - cur.eventsWritten).max(0L)
+      val batchEvents = cur.elemHint.max(0L)
       val floor =
         if (batchEvents > 0) (batchEvents + Ev44.MaxCueCandidates - 1) / Ev44.MaxCueCandidates
         else 1L
-      val interval = requested.max(floor)
-      Ev44.lastCueInterval = interval
-      // sorted on the driver: the collect is already bounded by the
-      // clamp above, and a Spark orderBy would add a range-sampling job
-      // and a shuffle stage to every trigger
-      val cand =
-        if (maxEa == Long.MinValue) Array.empty[org.apache.spark.sql.Row]
-        else proj.filter(
-          intDiv(col("ea") - 1 - stableLit(L0), stableLit(interval)) >
-            intDiv(col("ea_prev") - 1 - stableLit(L0), stableLit(interval)))
-          .collect().sortBy(_.getLong(0)) // column 0 = row
-      Ev44.lastCueCandidates  = cand.length
+      requested.max(floor)
+    }
+
+    /** The candidate messages of the chain: cue via the EXACT greedy chain
+      * of ev44_Writer.cpp:127-134 — cue when cumulative events exceed
+      * lastCue + interval, the new anchor being that message's last event
+      * index. The anchor is data-dependent and inherently sequential, but
+      * the walk never reads every message: only the CANDIDATES whose
+      * cumulative count crosses a multiple of the interval (≈
+      * batchEvents/interval rows — the fire-rate bound). Greedy anchors
+      * drift off that grid, so the walk PROVES each candidate before
+      * firing (see [[walk]]).
+      */
+    private def candidates(proj: DataFrame, cur: Cursor, interval: Column): DataFrame =
+      proj.filter(
+        intDiv(col("ea") - 1 - cur.slotLit("lastCue"), interval) >
+          intDiv(col("ea_prev") - 1 - cur.slotLit("lastCue"), interval))
+
+    /** One message of the chain: `(row, ea, ea_prev, cue_ts)` of `proj`. */
+    private final case class Link(row: Long, ea: Long, eaPrev: Long, ts: Long)
+    private def links(rs: Iterator[InternalRow]): Seq[Link] =
+      rs.map(r => Link(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+
+    private[graft] val cueSchema = StructType(Seq("row", "cue_index", "cue_timestamp_zero")
+      .map(StructField(_, LongType, nullable = false)))
+
+    /** The greedy walk over the candidates, from the cursor's anchor: a
+      * candidate with ea_prev ≤ last+interval < ea is necessarily the first
+      * crossing (its predecessor hadn't crossed and ea is monotone); when
+      * that proof fails — the superset missed the true first crossing —
+      * `rest(last)` resolves the WHOLE remaining chain from anchor `last`
+      * (one definition, two evaluators: Scala over the driver's rows, or
+      * the distributed walk). The cue rows, `(row, cue_index,
+      * cue_timestamp_zero)`: sort key = the global event index itself,
+      * monotone and unique across batches with no renumber pass.
+      */
+    private def walk(cand: Seq[Link], l0: Long, interval: Long, maxEa: Long,
+        rest: Long => Seq[Link]): Seq[InternalRow] = {
+      val sorted = cand.sortBy(_.row)
+      Ev44.lastCueInterval    = interval
+      Ev44.lastCueCandidates  = sorted.length
       Ev44.lastCueFallbacks   = 0
       Ev44.lastWalkPartitions = 0
       Ev44.lastWalkPlan       = ""
-      val hits = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-      var last = L0
+      val hits = scala.collection.mutable.ArrayBuffer.empty[Link]
+      var last = l0
       var i    = 0
       var done = false
       while (!done) {
-        while (i < cand.length && cand(i).getAs[Long]("ea") <= last + interval) i += 1
-        if (i < cand.length && cand(i).getAs[Long]("ea_prev") <= last + interval) {
-          val r = cand(i)
-          // sort key = the global event index itself: monotone and
-          // unique across batches with no renumber pass
-          hits += ((r.getAs[Long]("ea") - 1, r.getAs[Long]("ea") - 1,
-            r.getAs[Long]("cue_ts")))
-          last = r.getAs[Long]("ea") - 1
+        while (i < sorted.length && sorted(i).ea <= last + interval) i += 1
+        if (i < sorted.length && sorted(i).eaPrev <= last + interval) {
+          hits += sorted(i)
+          last = sorted(i).ea - 1
           i += 1
         } else if (maxEa > last + interval) {
-          // superset miss: the true first crossing is a non-candidate.
-          // Finish the ENTIRE remaining chain distributed: the greedy
-          // recurrence (ev44_Writer.cpp:127-134) is inherently
-          // sequential in the THRESHOLD, but ea is the monotone
-          // cumulative event count, so after range-partitioning the slim
-          // (row, ea, cue_ts) projection by row the chain sweeps the
-          // partitions strictly left to right, entering each at most
-          // once. The sort is therefore per-partition (parallel — no
-          // coalesce(1) funnel), and the sequential part shrinks to one
-          // driver Long threaded through at most one tiny cached-RDD job
-          // per partition (sc.runJob on exactly that partition). A
-          // partition whose max ea never exceeds the entering
-          // threshold+interval is skipped without a job. Messages with
-          // ea ≤ threshold+interval can never fire later (thresholds
-          // only grow), so the filtered stream is sufficient; output is
-          // one slim row per cue, bounded by batchEvents / interval ≤
-          // MaxCueCandidates — the same clamp that bounds the candidate
-          // collect.
-          val (l0w, iv) = (last, interval)
-          val session0  = df.sparkSession
-          // P from the batch's message bound (same agg as maxEa): small
-          // batches collapse to ONE partition — fallback job count stays
-          // independent of the miss count — while large batches get
-          // parallel local sorts with ~WalkRowsPerPartition rows/task.
-          val p = math.min(32L,
-            (nMsgs + Ev44.WalkRowsPerPartition - 1) / Ev44.WalkRowsPerPartition)
-            .toInt.max(1)
-          val src = proj
-            .filter(col("ea") > l0w + iv)
-            .select(col("row"), col("ea"), col("cue_ts"))
-          val sorted =
-            (if (p == 1) src.coalesce(1)
-             else src.repartitionByRange(p, col("row")))
-              .sortWithinPartitions("row")
-          Ev44.lastWalkPartitions = p
-          Ev44.lastWalkPlan       = sorted.queryExecution.executedPlan.toString
-          import session0.implicits._
-          val rdd = sorted.as[(Long, Long, Long)].rdd
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val walked = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-          try {
-            val sc = session0.sparkContext
-            // materializing pass: per-partition max ea (= last element —
-            // the partition is row-sorted and ea is monotone in row)
-            val partMaxEa: Array[Option[Long]] =
-              sc.runJob(rdd, (it: Iterator[(Long, Long, Long)]) => {
-                var m = Option.empty[Long]
-                it.foreach(r => m = Some(r._2))
-                m
-              })
-            var l   = l0w
-            var pid = 0
-            while (pid < partMaxEa.length) {
-              if (partMaxEa(pid).exists(_ > l + iv)) {
-                val lIn = l
-                val res = sc.runJob(rdd, (it: Iterator[(Long, Long, Long)]) => {
-                  var ll = lIn
-                  val hs = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-                  it.foreach { case (row, ea, ts) =>
-                    if (ea > ll + iv) { ll = ea - 1; hs += ((row, ea, ts)) }
-                  }
-                  (hs.toSeq, ll)
-                }, Seq(pid))
-                walked ++= res(0)._1
-                l = res(0)._2
-              }
-              pid += 1
-            }
-          } finally rdd.unpersist(blocking = false)
           // the metric keeps its meaning — number of superset misses —
-          // they just no longer cost a job each: a TRUE crossing that IS
-          // a candidate is always provable (its ea_prev ≤ last+interval
-          // by firstness), so the misses are exactly the non-candidates
-          val candRows = cand.iterator.map(_.getAs[Long]("row")).toSet
-          Ev44.lastCueFallbacks += walked.count(w => !candRows.contains(w._1))
-          walked.foreach { case (_, ea, ts) => hits += ((ea - 1, ea - 1, ts)) }
+          // they just cost no job each: a TRUE crossing that IS a
+          // candidate is always provable (its ea_prev ≤ last+interval by
+          // firstness), so the misses are exactly the non-candidates
+          val walked = rest(last)
+          val candRows = sorted.iterator.map(_.row).toSet
+          Ev44.lastCueFallbacks += walked.count(w => !candRows.contains(w.row))
+          hits ++= walked
           done = true
         } else done = true
       }
-      val session = df.sparkSession
-      import session.implicits._
-      val cue = hits.toSeq.toDF("row", "cue_index", "cue_timestamp_zero")
-      Map("events" -> events, "index" -> index, "cue" -> cue)
+      hits.toSeq.map(h => new GenericInternalRow(Array[Any](h.ea - 1, h.ea - 1, h.ts)))
+    }
+
+    /** The rest of the chain from anchor `l` over messages in row order:
+      * only messages with ea > l+interval can ever fire (thresholds only
+      * grow), each fired one re-anchors at its last event index.
+      */
+    private def sweep(ordered: Iterator[Link], l: Long, iv: Long): (Seq[Link], Long) = {
+      var ll = l
+      val hs = scala.collection.mutable.ArrayBuffer.empty[Link]
+      ordered.foreach(r => if (r.ea > ll + iv) { ll = r.ea - 1; hs += r })
+      (hs.toSeq, ll)
+    }
+
+    /** The driver evaluator of the cue chain: `rows` evaluates the
+      * chain's plans (the streaming job's kept plans), and a superset miss
+      * sweeps `proj`'s rows in Scala — no job, no persisted RDD. The
+      * cursor must carry the batch's exact event total (`elemHint`, as the
+      * streaming job's does); None when it does not or a plan does not
+      * evaluate.
+      */
+    private[graft] def driverCueWalk(chain: CueChain, cfg: ModuleConfig, cur: Cursor,
+        rows: DataFrame => Option[Seq[InternalRow]]): Option[Seq[InternalRow]] =
+      if (cur.elemHint < 0) None
+      else if (cur.elemHint == 0) Some(walk(Nil, cur.lastCue, cueInterval(cfg, cur), Long.MinValue, _ => Nil))
+      else for {
+        proj <- rows(chain.proj)
+        cand <- rows(chain.candidates)
+      } yield {
+        val iv = cueInterval(cfg, cur)
+        walk(links(cand.iterator), cur.lastCue, iv, cur.eventsWritten + cur.elemHint, l =>
+          sweep(links(proj.iterator).filter(_.ea > l + iv).sortBy(_.row).iterator, l, iv)._1)
+      }
+
+    /** Spark's evaluator of the module: the plans' tables plus the cue its
+      * chain walk derives with Spark jobs ([[distributedCueWalk]]).
+      */
+    override def tables(df: DataFrame, cfg: ModuleConfig, cur: Cursor): Map[String, DataFrame] = {
+      val p = plans(df, cfg, cur)
+      p.tables + ("cue" -> distributedCueWalk(p.cueChain.get, cfg, cur))
+    }
+
+    /** The distributed cue walk — the one place this file runs a Spark
+      * action. The batch's last cumulative event count and its message
+      * bound come from the kernel's exact counts when the cursor carries
+      * them (`elemHint` = the batch's events, 0 = nothing to cue), else
+      * from one aggregate job; the candidates (bounded by the interval
+      * clamp) are collected and sorted on the driver — a Spark orderBy
+      * would add a range-sampling job and a shuffle stage to every
+      * trigger. The cue comes back as a driver-side relation.
+      */
+    private def distributedCueWalk(chain0: CueChain, cfg: ModuleConfig, cur0: Cursor): DataFrame = {
+      val session = chain0.proj.sparkSession
+      def relation(schema: StructType, rows: Seq[InternalRow]) =
+        GraftBridge.ofRows(session, LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+      // a batch on the driver is numbered there once, and the walk's
+      // jobs read those rows: Spark would run the numbering window of a
+      // local relation in one task. A batch without events reads nothing.
+      lazy val chain = LocalPlan.rows(chain0.proj).fold(chain0) { case (schema, rows) =>
+        chain0.copy(proj = relation(schema, rows))
+      }
+      val cur =
+        if (cur0.elemHint >= 0) cur0
+        else chain.proj.agg(max("ea"), count(lit(1))).collect().head match {
+          case r if r.isNullAt(0) => cur0.copy(sizeHint = 0L, elemHint = 0L)
+          case r => cur0.copy(sizeHint = r.getLong(1), elemHint = r.getLong(0) - cur0.eventsWritten)
+        }
+      val (maxEa, nMsgs) =
+        if (cur.elemHint == 0) (Long.MinValue, 0L)
+        else (cur.eventsWritten + cur.elemHint, cur.sizeHint)
+      val interval = cueInterval(cfg, cur)
+      val cand =
+        if (maxEa == Long.MinValue) Nil
+        else candidates(chain.proj, cur, stableLit(interval, "cueInterval")).collect().toSeq
+          .map(r => Link(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      val hits = walk(cand, cur.lastCue, interval, maxEa, { l0w =>
+        // superset miss: finish the ENTIRE remaining chain distributed.
+        // The greedy recurrence is sequential in the THRESHOLD, but ea is
+        // the monotone cumulative event count, so after
+        // range-partitioning the slim (row, ea, cue_ts) projection by row
+        // the chain sweeps the partitions strictly left to right,
+        // entering each at most once. The sort is therefore per-partition
+        // (parallel — no coalesce(1) funnel), and the sequential part
+        // shrinks to one driver Long threaded through at most one tiny
+        // cached-RDD job per partition (sc.runJob on exactly that
+        // partition). A partition whose max ea never exceeds the entering
+        // threshold+interval is skipped without a job. Output is one slim
+        // row per cue, bounded by batchEvents / interval ≤
+        // MaxCueCandidates — the same clamp that bounds the candidate
+        // collect.
+        val iv = interval
+        // P from the batch's message bound: small batches collapse to ONE
+        // partition — fallback job count stays independent of the miss
+        // count — while large batches get parallel local sorts with
+        // ~WalkRowsPerPartition rows/task.
+        val p = math.min(32L,
+          (nMsgs + Ev44.WalkRowsPerPartition - 1) / Ev44.WalkRowsPerPartition)
+          .toInt.max(1)
+        val src = chain.proj
+          .filter(col("ea") > l0w + iv)
+          .select(col("row"), col("ea"), col("ea_prev"), col("cue_ts"))
+        val sorted =
+          (if (p == 1) src.coalesce(1)
+           else src.repartitionByRange(p, col("row")))
+            .sortWithinPartitions("row")
+        Ev44.lastWalkPartitions = p
+        Ev44.lastWalkPlan       = sorted.queryExecution.executedPlan.toString
+        import session.implicits._
+        val rdd = sorted.as[(Long, Long, Long, Long)].rdd
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val walked = scala.collection.mutable.ArrayBuffer.empty[Link]
+        try {
+          val sc = session.sparkContext
+          // materializing pass: per-partition max ea (= last element —
+          // the partition is row-sorted and ea is monotone in row)
+          val partMaxEa: Array[Option[Long]] =
+            sc.runJob(rdd, (it: Iterator[(Long, Long, Long, Long)]) => {
+              var m = Option.empty[Long]
+              it.foreach(r => m = Some(r._2))
+              m
+            })
+          var l   = l0w
+          var pid = 0
+          while (pid < partMaxEa.length) {
+            if (partMaxEa(pid).exists(_ > l + iv)) {
+              val lIn = l
+              val res = sc.runJob(rdd, (it: Iterator[(Long, Long, Long, Long)]) =>
+                sweep(it.map(r => Link(r._1, r._2, r._3, r._4)), lIn, iv), Seq(pid))
+              walked ++= res(0)._1
+              l = res(0)._2
+            }
+            pid += 1
+          }
+        } finally rdd.unpersist(blocking = false)
+        walked.toSeq
+      })
+      relation(cueSchema, hits)
     }
     /** total events = the exploded events table's row count */
     override def sinkFinals(read: String => LocalParquet.Table, cfg: ModuleConfig): Map[String, Row] = {
@@ -548,7 +679,7 @@ object WriterModules {
     override def elementCountCol = Some(size(col("data")))
     override def units(cfg: ModuleConfig): Map[String, String] =
       Map("time" -> "ns", "value" -> "")
-    def tables(df: DataFrame, cfg: ModuleConfig, cur: Cursor): Map[String, DataFrame] = {
+    def plans(df: DataFrame, cfg: ModuleConfig, cur: Cursor): Plans = {
       val data = withRow(df, cur).select(col("row"), col("ts").as("time"),
         transform(col("data"), _.cast(cfg.dtype("double"))).as("value"),
         col("dimensions").as("shape"))
@@ -556,14 +687,15 @@ object WriterModules {
       // unit increments ⇒ anchored grid; rows are global across batches
       val n  = cfg.long("cue_interval").getOrElse(1000L)
       val gw = col("row") + 1
-      // stableLit, not lit: the cursor advances every cue, and an inlined
+      // a slot, not lit: the cursor advances every cue, and an inlined
       // literal would regenerate the whole-stage code each trigger (the
       // Janino-recompile class StableLong exists to remove — NOTES_r12 §1)
+      // and could not be rebound in a kept plan
       val cue = data
-        .filter(gw > stableLit(cur.lastCue) && (gw - stableLit(cur.lastCue)) % n === 0)
+        .filter(gw > cur.slotLit("lastCue") && (gw - cur.slotLit("lastCue")) % n === 0)
         .select(col("row"), (gw - 1).as("cue_index"),
           col("time").as("cue_timestamp_zero"))
-      Map("data" -> data, "cue" -> cue)
+      Plans(Map("data" -> data, "cue" -> cue))
     }
     // same unit-increment grid as f144, with ad00's 1000-message default
     override def plannedCueCount(cfg: ModuleConfig, cur: Cursor, rows: Long): Option[Long] = {
@@ -668,11 +800,13 @@ object WriterModules {
       * constants are written once at structure creation, but later
       * messages may still CARRY a variable of the same name — the
       * reference compares that payload against the declared data and
-      * warns "Data for constant {} is not consistent". Returns the
-      * mismatch count per constant (one distributed aggregate; fed into
-      * the stream's write-error counters).
+      * warns "Data for constant {} is not consistent". The lazy plan of
+      * the input rows that carry a declared constant with other data, one
+      * `name` per row (the streaming job counts them per constant into
+      * the stream's write errors); a constant declared twice is checked
+      * against its last declaration.
       */
-    def constantMismatches(df: DataFrame, cfg: ModuleConfig): Map[String, Long] = {
+    override def checks(df: DataFrame, cfg: ModuleConfig): Option[DataFrame] = {
       def nums(jv: JValue): Seq[Double] = graft.plans.NexusPlan.jsonDoubles(jv)
       val declared: Seq[(String, Seq[Double])] = cfg.fields.get("constants") match {
         case Some(JArray(cs)) =>
@@ -684,19 +818,12 @@ object WriterModules {
           }
         case _ => Nil
       }
-      if (declared.isEmpty) Map.empty
-      else {
-        val checks = declared.map { case (n, xs) =>
-          sum(when(col("name") === n &&
-            !(col("data") <=> typedLit(xs)), 1L).otherwise(0L)).as(n)
-        }
-        val row = df.agg(checks.head, checks.tail: _*).collect()(0)
-        declared.map { case (n, _) =>
-          n -> Option(row.getAs[java.lang.Long](n)).map(_.toLong).getOrElse(0L)
-        }.toMap
-      }
+      if (declared.isEmpty) None
+      else Some(df.filter(declared.reverse.distinctBy(_._1).map { case (n, xs) =>
+        col("name") === n && !(col("data") <=> typedLit(xs))
+      }.reduce(_ || _)).select(col("name")))
     }
-    def tables(df: DataFrame, cfg: ModuleConfig, cur: Cursor): Map[String, DataFrame] = {
+    def plans(df: DataFrame, cfg: ModuleConfig, cur: Cursor): Plans = {
       val vars = {
         val declared = variableNames(cfg)
         if (declared.nonEmpty) declared else Seq("signal")
@@ -709,7 +836,7 @@ object WriterModules {
         .pivot(col("name"), vars)
         .agg(first(col("data")))
       val cols = Seq(col("row"), col("ts").as("time")) ++ vars.map(col)
-      Map("data" -> withRow(pivoted, cur).select(cols: _*))
+      Plans(Map("data" -> withRow(pivoted, cur).select(cols: _*)))
     }
   }
 
@@ -723,7 +850,7 @@ object WriterModules {
     /** one row per element; zero-element messages rejected (F8,
       * `se00_Writer.cpp:202-204`).
       */
-    def tables(df: DataFrame, cfg: ModuleConfig, cur: Cursor): Map[String, DataFrame] = {
+    def plans(df: DataFrame, cfg: ModuleConfig, cur: Cursor): Plans = {
       val ex = withFirst(df.filter(size(col("values")) > 0), cur, "data",
         emitted(col("values")))
         .select(col("first"), col("ts"), col("time_delta"), col("timestamps"),
@@ -735,7 +862,7 @@ object WriterModules {
           (col("ts") + col("pos") * col("time_delta")).cast("long")
         ).as("time"),
         col("value").cast(cfg.dtype("bigint")).as("value"))
-      Map("data" -> data)
+      Plans(Map("data" -> data))
     }
   }
 
@@ -746,11 +873,11 @@ object WriterModules {
   object Tdct extends WriterModule {
     val id = "tdct"
     override def elementCountCol = Some(size(col("timestamps")))
-    def tables(df: DataFrame, cfg: ModuleConfig, cur: Cursor): Map[String, DataFrame] = {
+    def plans(df: DataFrame, cfg: ModuleConfig, cur: Cursor): Plans = {
       val ex = withFirst(df.filter(size(col("timestamps")) > 0), cur, "data",
         emitted(col("timestamps")))
         .select(col("first"), posexplode(col("timestamps")).as(Seq("pos", "t")))
-      Map("data" -> ex.select((col("first") + col("pos")).as("row"), col("t").as("time")))
+      Plans(Map("data" -> ex.select((col("first") + col("pos")).as("row"), col("t").as("time"))))
     }
   }
 

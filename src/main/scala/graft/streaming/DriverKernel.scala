@@ -37,23 +37,31 @@ private[streaming] final case class KeyScalars(
 private[streaming] object DriverKernel {
 
   /** One row of the key: its offset, timestamp, payload-element count (a
-    * null count is 0, as `sum` skips it) and the row itself.
+    * null count is 0, as `sum` skips it) and the row itself (`R` = `Row`,
+    * or the collect's `InternalRow` that the module plans evaluate).
     */
-  final case class In(offset: Long, ts: Long, elems: Long, row: Row)
+  final case class In[+R](offset: Long, ts: Long, elems: Long, row: R)
 
   /** The key's scalars, its live in-window rows in offset order (the rows
     * the stream writes, before the cross-trigger boundary dedup), and its
     * deduplicated rows (where a multi-row candidate message is read from).
     */
-  final case class Out(scalars: KeyScalars, inWindow: Seq[In], kept: Seq[In])
+  final case class Out[R](scalars: KeyScalars, inWindow: Seq[In[R]], kept: Seq[In[R]])
 
-  /** `rows` must be non-empty: a key without rows has no decisions. */
-  def apply(rows: Seq[In], acceptRepeats: Boolean, startNs: Long, stopNs: Long): Out = {
+  def apply(rows: Seq[In[Row]], acceptRepeats: Boolean, startNs: Long, stopNs: Long): Out[Row] =
+    apply[Row](rows, acceptRepeats, startNs, stopNs, identity[Row] _)
+
+  /** `rows` must be non-empty: a key without rows has no decisions.
+    * `toRow` converts the buffered candidate to the `Row` the stream's
+    * state keeps.
+    */
+  def apply[R](rows: Seq[In[R]], acceptRepeats: Boolean, startNs: Long, stopNs: Long,
+      toRow: R => Row): Out[R] = {
     val sorted = rows.sortBy(_.offset) // stable: a message's rows keep their order
     val kept =
       if (acceptRepeats) sorted
       else {
-        val out = Vector.newBuilder[In]
+        val out = Vector.newBuilder[In[R]]
         var prev = Option.empty[Long] // ts of the previous message's last row
         var i = 0
         while (i < sorted.length) {
@@ -79,7 +87,7 @@ private[streaming] object DriverKernel {
       nWindow = inWin.size.toLong,
       evWindow = inWin.iterator.map(_.elems).sum,
       cand = live.filter(_.ts < startNs).maxByOption(r => (r.ts, r.offset))
-        .map(r => (r.ts, r.offset, r.row)))
+        .map(r => (r.ts, r.offset, toRow(r.row))))
     Out(scalars, inWin, kept)
   }
 }

@@ -2,14 +2,17 @@ package graft.streaming
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
-import graft.operators.{StreamKernel, WriterModules}
+import graft.operators.{LocalPlan, Rows, StreamKernel, WriterModules}
 import graft.operators.WriterModules.ModuleConfig
 import graft.plans.NexusPlan
 import graft.sinks.{LocalParquet, NexusSink}
@@ -36,7 +39,11 @@ import graft.sinks.{LocalParquet, NexusSink}
   * reference keeps in SourceFilter fields. The one exception is the
   * tiny-trigger band: a trigger after a tiny one brings its routed rows
   * to the driver, bounded in rows and bytes, runs the kernel there and
-  * writes them from the driver (see [[processSchema]]).
+  * writes them from the driver (see [[processSchema]]). There each stream
+  * evaluates its module's plans, built once per job and input schema
+  * ([[KeptPlans]]), so a steady trigger builds no Dataset for its modules
+  * and runs no analyzer or optimizer pass for them; the keyed pass builds
+  * the module's frames per trigger ([[WriterModules.WriterModule.tables]]).
   *
   * Cross-batch state ([[StreamingJob.StreamState]]):
   *   - `lastTs` — consecutive-dedup across batch boundaries (F4;
@@ -106,6 +113,19 @@ class StreamingJob(
   // wall ms of each schema's last processed batch (observability only:
   // transient, not in the checkpoint or the x5f2 `metrics` snapshot)
   private val lastBatchMs    = mutable.Map.empty[String, Long]
+  // each stream's kept module plans (one entry: rebuilt when the input
+  // schema or the module config changes), how often they were built and
+  // how many triggers they wrote
+  private val kept           = mutable.Map.empty[String, KeptPlans]
+  private val keptBuilds     = mutable.Map.empty[String, Int]
+  private val keptEvals      = mutable.Map.empty[String, Int]
+
+  /** Per stream: times its module plans were built (once unless its input
+    * schema changes) and triggers whose tables they evaluated
+    * (observability of the driver path; Spark's evaluator writes the rest).
+    */
+  private[graft] def planUse: Map[String, (Int, Int)] = synchronized(
+    keptBuilds.toMap.map { case (k, b) => k -> ((b, keptEvals.getOrElse(k, 0))) })
 
   sink.create(plan)
   loadState()
@@ -378,9 +398,11 @@ class StreamingJob(
     *     open stream (at most `localAppend.maxRows` in-window rows): the
     *     key rows come to the driver in one bounded, single-stage collect
     *     (no job at all when the batch is a local relation) and
-    *     [[DriverKernel]] makes every decision there. A burst latches the
-    *     collect's bound and takes the keyed pass instead, so its rows
-    *     never come to the driver ([[driverRows]]);
+    *     [[DriverKernel]] makes every decision there; each stream's
+    *     module then evaluates its kept plans over those rows
+    *     ([[KeptPlans]]). A burst latches the collect's bound and takes
+    *     the keyed pass instead, so its rows never come to the driver
+    *     ([[driverRows]]);
     *   - otherwise the keyed pass, the distributed form: the consecutive
     *     dedup window is partitioned by the key and the aggregate runs as
     *     `groupBy(topic, source_name)` on the same keys, so the plan has
@@ -417,8 +439,10 @@ class StreamingJob(
       }
     (if (armed) driverRows(module, routed, maxRows * 4 * keys.size) else None) match {
       case Some(byKey) =>
+        lazy val toRow = CatalystTypeConverters.createToScalaConverter(routed.schema)
+          .andThen(_.asInstanceOf[Row])
         val kernels = byKey.map { case (k, rows) =>
-          k -> DriverKernel(rows, module.acceptRepeats, startNs, stopNs)
+          k -> DriverKernel(rows, module.acceptRepeats, startNs, stopNs, toRow)
         }
         applyAll((s, state, k) => kernels.get(k).foreach(o =>
           applyStream(s, module, state, o.scalars, routed.schema, null, Some(o))))
@@ -432,33 +456,33 @@ class StreamingJob(
     }
   }
 
-  /** The driver kernel's input: the routed rows of each key, when there
-    * are at most `maxRows` of them in at most `smallRenumberBytes`
-    * (serialized), else None. A local relation is evaluated where it is
-    * (`LocalPlan`); any other batch is ONE job of one stage, a
-    * `mapPartitions` over the plan's rows that gives up at the bound, so a
-    * task returns at most the bound and a burst returns nothing but the
-    * latch. A row with a null offset or timestamp also takes the keyed
-    * pass, which defines what those mean.
+  /** The driver kernel's input: the routed rows of each key (as rows of
+    * `routed`'s schema), when there are at most `maxRows` of them in at
+    * most `smallRenumberBytes` (serialized), else None. A local relation
+    * is evaluated where it is (`LocalPlan`); any other batch is ONE job of
+    * one stage, a `runJob` over the plan's rows whose task gives up at the
+    * bound ([[DriverCollect]]), so a task returns at most the bound and a
+    * burst returns nothing but the latch. A row with a null offset or
+    * timestamp also takes the keyed pass, which defines what those mean.
     */
   private def driverRows(
       module: WriterModules.WriterModule,
       routed: DataFrame,
       maxRows: Long
-  ): Option[Map[(String, String), Seq[DriverKernel.In]]] = {
+  ): Option[Map[(String, String), Seq[DriverKernel.In[InternalRow]]]] = {
     val schema = routed.schema
     val frame = routed.select(col("*"),
       module.elementCountCol.getOrElse(lit(0L)).cast("long").as("__elems"))
     val fields = frame.schema
-    val maxBytes = graft.operators.Rows.smallRenumberBytes(spark)
+    val maxBytes = Rows.smallRenumberBytes(spark)
     val rows: Option[Seq[UnsafeRow]] =
-      if (graft.operators.LocalPlan.isLocal(frame))
-        graft.operators.LocalPlan.rows(frame, maxRows)
+      if (LocalPlan.onDriver(frame))
+        LocalPlan.rows(frame, maxRows)
           .flatMap(l => bounded(l._2.iterator, fields, maxRows, maxBytes).map(_.toSeq))
       else {
-        val parts = frame.queryExecution.toRdd
-          .mapPartitions(it => Iterator.single(bounded(it, fields, maxRows, maxBytes).orNull))
-          .collect()
+        val rdd = frame.queryExecution.toRdd
+        val parts = spark.sparkContext.runJob(rdd,
+          DriverCollect.task(fields, maxRows, maxBytes), rdd.partitions.indices)
         if (parts.contains(null)) None else Some(parts.toSeq.flatten)
       }
     val (topic, source, offset, ts, elems) = (fields.fieldIndex("topic"),
@@ -466,13 +490,11 @@ class StreamingJob(
       fields.fieldIndex("__elems"))
     rows.filter(rs => rs.size <= maxRows && rs.iterator.map(_.getSizeInBytes.toLong).sum <= maxBytes &&
       rs.forall(r => !r.isNullAt(offset) && !r.isNullAt(ts))).map { rs =>
-      val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
-        .createToScalaConverter(schema)
       val types = schema.fields.map(_.dataType)
       rs.groupBy(r => (r.getUTF8String(topic).toString, r.getUTF8String(source).toString))
         .map { case (k, krs) => k -> krs.map { r =>
-          val row = toRow(new GenericInternalRow(Array.tabulate[Any](types.length)(i =>
-            r.get(i, types(i))))).asInstanceOf[Row]
+          val row: InternalRow =
+            new GenericInternalRow(Array.tabulate[Any](types.length)(i => r.get(i, types(i))))
           DriverKernel.In(r.getLong(offset), r.getLong(ts),
             if (r.isNullAt(elems)) 0L else r.getLong(elems), row)
         } }
@@ -565,7 +587,7 @@ class StreamingJob(
       k: KeyScalars,
       schema: StructType,
       frame0: => DataFrame,
-      local: Option[DriverKernel.Out]
+      local: Option[DriverKernel.Out[InternalRow]]
   ): Unit = {
     val key = streamKey(s)
     // cross-batch consecutive dedup: drop the batch head if it repeats the
@@ -609,8 +631,10 @@ class StreamingJob(
         state.buffered = Some(
           if (!module.multiRowMessages) Seq(candRow)
           else local match {
-            case Some(l) => l.kept.filter(_.offset == candOff).map(_.row)
-            case None    => frame.filter(col("offset") === candOff).collect().toSeq
+            case Some(l) =>
+              val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+              l.kept.filter(_.offset == candOff).map(r => toRow(r.row).asInstanceOf[Row])
+            case None => frame.filter(col("offset") === candOff).collect().toSeq
           })
         state.schema = schema
       }
@@ -620,33 +644,36 @@ class StreamingJob(
     state.lastMsgs = nInWindow // arms (or disarms) the NEXT trigger's driver kernel
     // the driver kernel's rows, in offset order, less the boundary
     // duplicate head exactly as the frame path drops it
-    val localRows: Option[Seq[Row]] = local.map(_.inWindow
+    val localRows: Option[Seq[InternalRow]] = local.map(_.inWindow
       .filterNot(r => boundary && r.offset == k.minOff).map(_.row))
     lazy val inWindow = live.filter(col("ts") >= startNs && col("ts") <= stopNs)
     val emitBuffered = module.emitBuffered && state.buffered.nonEmpty &&
       (nInWindow > 0 || state.finished)
     val bufRows = if (emitBuffered) state.buffered.get.size.toLong else 0L
-    val toWrite =
+    val toWrite: Input =
       if (emitBuffered) {
         val b = state.buffered.get
         state.buffered = None
+        // allowMissingColumns: drift can ADD or REMOVE columns, not just
+        // reorder — strict unionByName would crash-loop the query on a
+        // buffered message from the pre-drift schema; null-filling the
+        // gap degrades that one sample instead
         localRows match {
-          // schemas must agree exactly to concatenate rows (the frame
-          // path tolerates drift via unionByName)
           case Some(rows) if state.schema == schema =>
-            bufferedDf(b ++ rows, schema)
-          // allowMissingColumns: drift can ADD or REMOVE columns, not just
-          // reorder — strict unionByName would crash-loop the query on a
-          // buffered message from the pre-drift schema; null-filling the
-          // gap degrades that one sample instead
-          case Some(rows) => bufferedDf(b, state.schema)
-            .unionByName(bufferedDf(rows, schema), allowMissingColumns = true)
-          case None => bufferedDf(b, state.schema)
-            .unionByName(inWindow, allowMissingColumns = true)
+            val toInternal = CatalystTypeConverters.createToCatalystConverter(schema)
+            Right((schema, b.map(toInternal(_).asInstanceOf[InternalRow]) ++ rows))
+          // a drifted schema: the union's rows, of the union's schema,
+          // evaluated on the driver when LocalPlan can
+          case Some(rows) =>
+            val union = bufferedDf(b, state.schema)
+              .unionByName(localDf(schema, rows), allowMissingColumns = true)
+            LocalPlan.rows(union).map(Right(_)).getOrElse(Left(union))
+          case None => Left(bufferedDf(b, state.schema)
+            .unionByName(inWindow, allowMissingColumns = true))
         }
       } else localRows match {
-        case Some(rows) => bufferedDf(rows, schema)
-        case None       => inWindow
+        case Some(rows) => Right((schema, rows))
+        case None       => Left(inWindow)
       }
     if (nInWindow > 0 || emitBuffered) {
       val appended = write(key, module, s, toWrite, state,
@@ -668,6 +695,22 @@ class StreamingJob(
     spark.createDataFrame(rows.asJava, schema)
   }
 
+  /** The stream's kept module plans for input `schema`, built on first
+    * use and again when the schema or the module config changes.
+    */
+  private def keptPlans(key: String, module: WriterModules.WriterModule, cfg: ModuleConfig,
+      schema: StructType): KeptPlans =
+    kept.get(key).filter(k => (k.module eq module) && k.cfg == cfg && k.schema == schema)
+      .getOrElse {
+        val k = new KeptPlans(spark, module, cfg, schema)
+        kept(key) = k
+        keptBuilds(key) = keptBuilds.getOrElse(key, 0) + 1
+        k
+      }
+
+  private def localDf(schema: StructType, rows: Seq[InternalRow]): DataFrame =
+    GraftBridge.ofRows(spark, LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+
   /** Flush buffered messages at job end (the SourceFilter dtor flush), then
     * close the sink with metadata and final aggregates. Pass `emitHdf5` to
     * additionally write a native .h5 of the full tree (the reference's
@@ -683,7 +726,7 @@ class StreamingJob(
           if (module.emitBuffered && state.buffered.nonEmpty) {
             val b = state.buffered.get
             state.buffered = None
-            write(key, module, s, bufferedDf(b, state.schema), state)
+            write(key, module, s, Left(bufferedDf(b, state.schema)), state)
           }
         }
       }
@@ -783,7 +826,7 @@ class StreamingJob(
       key: String,
       module: WriterModules.WriterModule,
       s: NexusPlan.Stream,
-      df: DataFrame,
+      input: Input,
       state: StreamState,
       msgHint: Long = 1L,
       elemHint: Long = -1L
@@ -792,15 +835,37 @@ class StreamingJob(
     // reference's MessageWriter (`src/Stream/MessageWriter.cpp:77-105`):
     // a failed table append is counted and surfaced in status, the stream
     // keeps running
+    val cfg = ModuleConfig(s.config)
     val cursor = WriterModules.Cursor(
       rowsWritten = state.rowsWritten.toMap,
       eventsWritten = state.eventsWritten,
       lastCue = state.lastCue,
       sizeHint = msgHint,
       elemHint = elemHint)
-    val tables =
-      try module.tables(df, ModuleConfig(s.config), cursor)
-      catch {
+    type Local = Option[(StructType, Seq[InternalRow])]
+    lazy val df = input.fold(identity, { case (schema, rows) => localDf(schema, rows) })
+    // the module's tables, each as (name, schema, frame, driver rows), and
+    // its check's counts: driver rows evaluate through the stream's kept
+    // plans; a plan that does not evaluate there, and any distributed
+    // input, take Spark's evaluator, whose tables are evaluated on the
+    // driver below when their plan allows
+    val (tables, checked) =
+      try {
+        val onDriver = input.toOption.flatMap { case (schema, rows) =>
+          keptPlans(key, module, cfg, schema).eval(rows, cursor, Rows.SmallRenumberRows)
+        }
+        onDriver match {
+          case Some((ts, names)) =>
+            keptEvals(key) = keptEvals.getOrElse(key, 0) + 1
+            (ts.toSeq.map { case (t, (schema, rs)) =>
+              (t, schema, () => localDf(schema, rs), Some((schema, rs)): Local)
+            }, () => names.groupMapReduce(identity)(_ => 1L)(_ + _))
+          case None =>
+            (module.tables(df, cfg, cursor).toSeq.map { case (t, out) =>
+              (t, out.schema, () => out, None: Local)
+            }, () => module.checks(df, cfg).fold(Map.empty[String, Long])(checkCounts))
+        }
+      } catch {
         case e: Exception =>
           state.writeErrors += 1
           System.err.println(s"[graft] transform failed for $key: ${e.getMessage}")
@@ -808,11 +873,11 @@ class StreamingJob(
       }
     // Every table leaves the module with its final row ids, so the sink
     // appends it as emitted, in one of two ways:
-    //   1. on the driver (see LocalParquet), when the table's plan
-    //      evaluates there (LocalPlan: every table of a driver-kernel trigger,
-    //      and ev44's collected cue hits on any trigger) within the row
-    //      bound — a Spark write job is ~160 ms of FIXED cost regardless
-    //      of payload (round-12b);
+    //   1. on the driver (see LocalParquet), when the table's rows are
+    //      there: every table of a driver-kernel trigger (the kept plans),
+    //      ev44's walked cue on any trigger, and any other table whose
+    //      plan LocalPlan evaluates within the row bound — a Spark write
+    //      job is ~160 ms of FIXED cost regardless of payload (round-12b);
     //   2. otherwise as ONE Spark write job per table.
     // A table with provably no rows is skipped: a cue grid that cursor
     // arithmetic proves fired zero times, or a driver evaluation that
@@ -828,7 +893,6 @@ class StreamingJob(
     // every append returns, under the processBatch monitor.
     final case class Outcome(table: String, n: Long, cueMax: Option[Long],
       err: Option[String], fused: Boolean = false)
-    type Local = Option[(StructType, Seq[org.apache.spark.sql.catalyst.InternalRow])]
     def appendLocal(table: String, schema: StructType,
         rs: Seq[org.apache.spark.sql.catalyst.InternalRow]): Option[Outcome] =
       try {
@@ -855,7 +919,7 @@ class StreamingJob(
               "falling back to the write-job path")
           None
       }
-    def appendOne(table: String, out: DataFrame, local: Local): Outcome =
+    def appendOne(table: String, out: => DataFrame, local: Local): Outcome =
       try local.flatMap { case (schema, rs) => appendLocal(table, schema, rs) }.getOrElse {
         // ONE write job per table, no cache churn: row count and
         // cue-chain max are observed DURING the append. Side effect of
@@ -882,18 +946,18 @@ class StreamingJob(
       }
     // each table is evaluated on the driver once, within the row bound:
     // the result serves both the emptiness skip and the driver append
-    val evaluated = tables.toSeq.map { case (t, out) =>
+    val evaluated = tables.map { case (t, schema, out, rows) =>
       val plannedEmpty = t == "cue" &&
-        module.plannedCueCount(ModuleConfig(s.config), cursor, msgHint).contains(0L)
+        module.plannedCueCount(cfg, cursor, msgHint).contains(0L)
       val local: Local =
-        if (plannedEmpty || !LocalParquet.supports(out.schema)) None
-        else graft.operators.LocalPlan.rows(out, graft.operators.Rows.SmallRenumberRows)
+        if (plannedEmpty || !LocalParquet.supports(schema)) None
+        else rows.orElse(LocalPlan.rows(out(), Rows.SmallRenumberRows))
       (t, out, local, plannedEmpty || local.exists(_._2.isEmpty))
     }
     val live = evaluated.collect { case (t, o, l, false) => (t, o, l) }
     val outcomes: Seq[Outcome] =
       if (live.sizeIs <= 1)
-        live.map { case (t, o, l) => appendOne(t, o, l) }
+        live.map { case (t, o, l) => appendOne(t, o(), l) }
       else {
         import scala.concurrent.{Await, Promise}
         import scala.concurrent.duration.Duration
@@ -914,7 +978,7 @@ class StreamingJob(
             // job monitor and the global conf-window lock (a plain
             // Future completes on NonFatal only). The fatal rethrows
             // after completion so the JVM's handler still sees it.
-            try p.trySuccess(appendOne(t, o, l))
+            try p.trySuccess(appendOne(t, o(), l))
             catch {
               // appendOne handles Exception itself; only Errors land here
               case th: Throwable =>
@@ -947,22 +1011,36 @@ class StreamingJob(
     // da00 constants-consistency warnings surface as write errors in the
     // x5f2 status (`da00_Writer.cpp:92-118` "Data for constant {} is not
     // consistent")
-    if (module.id == "da00") {
-      val mism = WriterModules.Da00.constantMismatches(df, ModuleConfig(s.config))
-      val total = mism.values.sum
-      if (total > 0) {
-        state.writeErrors += total
-        mism.filter(_._2 > 0).foreach { case (n, c) =>
-          System.err.println(s"[graft] data for constant $n is not consistent ($c msgs)")
-        }
+    val mism = checked()
+    val total = mism.values.sum
+    if (total > 0) {
+      state.writeErrors += total
+      mism.filter(_._2 > 0).foreach { case (n, c) =>
+        System.err.println(s"[graft] data for constant $n is not consistent ($c msgs)")
       }
     }
-    val skipped = tables.keySet -- live.map(_._1).toSet
+    val skipped = tables.map(_._1).toSet -- live.map(_._1).toSet
     Some(skipped ++ outcomes.filter(_.err.isEmpty).map(_.table))
   }
 }
 
 object StreamingJob {
+
+  /** What a stream writes in one trigger: a frame (the keyed pass, a
+    * flush), or rows on the driver under their schema (a driver-kernel
+    * trigger), which the stream's kept plans evaluate.
+    */
+  private[streaming] type Input = Either[DataFrame, (StructType, Seq[InternalRow])]
+
+  /** Rows per `name` of a module's check plan: counted on the driver when
+    * the plan evaluates there, else by one aggregate job.
+    */
+  private[graft] def checkCounts(check: DataFrame): Map[String, Long] =
+    LocalPlan.rows(check) match {
+      case Some((_, rs)) => rs.groupMapReduce(_.getUTF8String(0).toString)(_ => 1L)(_ + _)
+      case None => check.groupBy("name").count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+    }
 
   /** Serializes every job's per-trigger conf window (see
     * [[StreamingJob.withBatchConf]]) — session confs are process-global
@@ -1005,6 +1083,20 @@ object StreamingJob {
           t.setDaemon(true)
           t
         }))
+
+  /** The driver kernel's per-partition collect: a partition's rows as
+    * [[bounded]] copies them, or null past the bound. It lives in this
+    * small object because Spark's `ClosureCleaner` reads and ASM-scans
+    * the class that defines a closure each time it cleans one; the
+    * `(TaskContext, Iterator)` form is cleaned once by `runJob`, where
+    * `mapPartitions` + `collect` clean three closures defined in
+    * `StreamingJob`, `RDD` and `SparkContext`.
+    */
+  private[streaming] object DriverCollect {
+    def task(schema: StructType, maxRows: Long, maxBytes: Long)
+        : (TaskContext, Iterator[InternalRow]) => Array[UnsafeRow] =
+      (_, it) => bounded(it, schema, maxRows, maxBytes).orNull
+  }
 
   /** Mutable per-stream state surviving micro-batch boundaries — the Spark
     * re-homing of SourceFilter/ev44_Writer member fields.

@@ -1,6 +1,7 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Column ↔ catalyst Expression bridge for custom expressions. Spark 4's
   * Column API hides the classic expression behind `private[sql]`
@@ -10,4 +11,8 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 object GraftBridge {
   def column(e: Expression): Column      = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression  = classic.ExpressionUtils.expression(c)
+
+  /** The frame of a logical plan (analysed here, as any Dataset is). */
+  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 }

@@ -74,4 +74,28 @@ class CensusSpec extends AnyFunSuite {
     }
     assert(stale.isEmpty, stale)
   }
+
+  test("writer modules stay lazy: no collect, toDF or createDataFrame outside the distributed cue walk") {
+    // module plans are built once per stream and evaluated per trigger,
+    // so building one must run no Spark action; the Spark evaluator of
+    // ev44's cue chain is the one named exception
+    val src = Files.readString(Paths.get("src/main/scala/graft/operators/WriterModules.scala"))
+    val code = src.linesIterator.map(_.replaceAll("//.*$", "")).mkString("\n")
+    val walk = code.indexOf("private def distributedCueWalk(")
+    assert(walk >= 0, "the distributed cue walk is gone or renamed")
+    // the walk's body: from its first brace to the matching one
+    val open = code.indexOf('{', walk)
+    var depth = 0
+    var end = open
+    do {
+      if (code(end) == '{') depth += 1
+      if (code(end) == '}') depth -= 1
+      end += 1
+    } while (depth > 0)
+    val rest = code.substring(0, walk) + code.substring(end)
+    val eager = Seq("\\.collect\\(\\)", "\\btoDF\\(", "\\bcreateDataFrame\\(").flatMap { p =>
+      p.r.findAllMatchIn(rest).map(m => rest.substring(0, m.start).count(_ == '\n') + 1)
+    }
+    assert(eager.isEmpty, s"eager Spark actions in WriterModules.scala outside the walk, near lines $eager")
+  }
 }

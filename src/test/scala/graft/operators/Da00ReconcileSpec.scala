@@ -68,12 +68,17 @@ class Da00ConstantsSpec extends graft.SparkSpec {
       msg(2, "signal", Seq(5.0)),      // not a constant — ignored
       msg(3, "cal", Seq(1.0, 2.0, 3.0)) // mismatch (shape)
     ).toDF()
-    assert(Da00.constantMismatches(df, c) == Map("cal" -> 2L))
+    // counted on the driver: the input is a local relation
+    assert(graft.streaming.StreamingJob.checkCounts(Da00.checks(df, c).get) == Map("cal" -> 2L))
+    // and by Spark's aggregate for a distributed input
+    val distributed = spark.createDataFrame(df.rdd.repartition(2), df.schema)
+    assert(graft.streaming.StreamingJob.checkCounts(Da00.checks(distributed, c).get) ==
+      Map("cal" -> 2L))
   }
 
   test("no declared constant data ⇒ nothing to check") {
     val c = cfgJ("""{"constants":[{"name":"cal","data_type":"float64"}]}""")
-    assert(Da00.constantMismatches(Seq(msg(0, "cal", Seq(1.0))).toDF(), c).isEmpty)
+    assert(Da00.checks(Seq(msg(0, "cal", Seq(1.0))).toDF(), c).isEmpty)
   }
 
   test("streaming job surfaces constant mismatches as write errors") {

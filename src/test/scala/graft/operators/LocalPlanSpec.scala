@@ -121,6 +121,63 @@ class LocalPlanSpec extends SparkSpec {
     }
   }
 
+  test("the numbering window: row_number and exclusive running sums equal collect; other windows are refused") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.expressions.Window
+    // unsorted offsets, several weights, null weights counting 0, an int
+    // weight, and starts near Long.MaxValue/2
+    val wSchema = StructType(Seq(StructField("offset", LongType), StructField("w1", LongType),
+      StructField("w2", LongType), StructField("w3", IntegerType), StructField("tag", StringType)))
+    val msgs = spark.createDataFrame(Seq(
+      Row(40L, 3L, null, 7, "d"), Row(10L, null, 5L, null, "a"), Row(30L, 1L, 2L, 1, null),
+      Row(20L, 1000000007L, null, -4, "b"), Row(Long.MaxValue / 4, 0L, 9L, 2, "e"),
+      Row(-5L, null, null, null, "z")).asJava, wSchema)
+    val half = Long.MaxValue / 2
+    val cases: Seq[(String, DataFrame)] = Seq(
+      "three weights" -> Rows.indexed(msgs, "offset", start = half,
+        weights = Seq(("w1", "f1", half - 7), ("w2", "f2", -half), ("w3", "f3", 0L))),
+      "in-place row over the order column" -> Rows.indexed(msgs.select(col("offset"), col("tag")),
+        "offset", rowCol = "offset", start = half + 1),
+      "all-null weight" -> Rows.indexed(msgs.filter(col("w1").isNull), "offset",
+        weights = Seq(("w1", "f1", half))),
+      "empty" -> Rows.indexed(msgs.filter(lit(false)), "offset",
+        weights = Seq(("w2", "f2", 1L))),
+      "numbered, then exploded" -> Rows.indexed(msgs, "offset", start = 3L,
+          weights = Seq(("w3", "first", half)))
+        .select(col("row"), col("first"), explode(array(col("tag"), lit("x"))).as("t")))
+    cases.foreach { case (label, df) =>
+      assert(LocalPlan.onDriver(df), label)
+      same(label, df)
+    }
+    val byOffset = Window.orderBy(col("offset"))
+    val refused: Seq[(String, DataFrame)] = Seq(
+      "partitioned" -> msgs.withColumn("r", row_number().over(Window.partitionBy(col("tag"))
+        .orderBy(col("offset")))),
+      "rank" -> msgs.withColumn("r", rank().over(byOffset)),
+      "range frame" -> msgs.withColumn("s", sum(col("w1")).over(byOffset)),
+      "frame to a following row" -> msgs.withColumn("s", sum(col("w1"))
+        .over(byOffset.rowsBetween(Window.unboundedPreceding, 1))),
+      "double sum" -> msgs.withColumn("s", sum(col("w1").cast("double"))
+        .over(byOffset.rowsBetween(Window.unboundedPreceding, -1))),
+      "lag" -> msgs.withColumn("p", lag(col("w1"), 1).over(byOffset)))
+    refused.foreach { case (label, df) =>
+      assert(LocalPlan.rows(df).isEmpty, s"$label must not evaluate on the driver")
+      df.collect() // Spark itself still runs it
+    }
+  }
+
+  test("unions by name (a buffered message under a drifted schema) equal collect") {
+    val narrow = frame.select(col("tag"), col("id"))
+    val cases: Seq[(String, DataFrame)] = Seq(
+      "missing on the right" -> frame.unionByName(narrow, allowMissingColumns = true),
+      "missing on the left" -> narrow.unionByName(frame, allowMissingColumns = true),
+      "coerced types" -> frame.select(col("id")).unionByName(
+        frame.select(try_element_at(col("b"), lit(1)).as("id"))),
+      "then exploded" -> frame.unionByName(narrow, allowMissingColumns = true)
+        .select(col("id"), explode_outer(col("a"))))
+    cases.foreach { case (label, df) => same(label, df) }
+  }
+
   test("generated rows past maxRows refuse the plan") {
     val df = frame.select(col("id"), explode(col("a")))
     val n = df.collect().length

@@ -54,12 +54,21 @@ class RowsSpec extends SparkSpec {
       val numbered = Rows.indexed(df, "k", start = 7L,
         weights = Seq(("w", "acc", 100L), ("v", "acc2", -(1L << 40))),
         sizeHint = 5000L, byteHint = bytes)
-      val shape = numbered.queryExecution.optimizedPlan match {
-        case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => "driver"
-        case _ if numbered.rdd.getNumPartitions == 1                     => "one-task"
-        case _                                                           => "range"
-      }
+      val shape =
+        if (LocalPlan.onDriver(numbered)) "driver"
+        else if (numbered.rdd.getNumPartitions == 1) "one-task"
+        else "range"
       assert(shape == name)
+      if (name == "driver") {
+        // the driver evaluator of the lazy window gives the same rows
+        val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters
+          .createToScalaConverter(numbered.schema)
+        val onDriver = LocalPlan.rows(numbered).get._2
+          .map(r => conv(r).asInstanceOf[org.apache.spark.sql.Row])
+          .map(r => (r.getAs[Long]("k"), r.getAs[Long]("row"), r.getAs[Long]("acc"),
+            r.getAs[Long]("acc2")))
+        assert(onDriver == expected, "LocalPlan on the driver path")
+      }
       val out = numbered.orderBy("k").collect()
         .map(r => (r.getAs[Long]("k"), r.getAs[Long]("row"), r.getAs[Long]("acc"),
           r.getAs[Long]("acc2"))).toSeq
@@ -96,7 +105,7 @@ class RowsSpec extends SparkSpec {
     }
   }
 
-  test("driver fast path: a LocalRelation numbers with zero jobs and STAYS local") {
+  test("driver path: a local frame numbers in a lazy window, zero jobs") {
     val df = Seq((30L, 2L), (10L, 5L), (20L, 3L)).toDF("k", "w")
     var jobs = 0
     val l = new org.apache.spark.scheduler.SparkListener {
@@ -106,13 +115,28 @@ class RowsSpec extends SparkSpec {
     spark.sparkContext.addSparkListener(l)
     try {
       val out = Rows.indexed(df, "k", start = 7L,
-        weights = Seq(("w", "acc", 100L)), sizeHint = 3L)
-      // the RESULT plan is still a LocalRelation — downstream flat
-      // transforms keep folding into driver-side appends
-      assert(out.queryExecution.optimizedPlan
-        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
-      val rows = out.collect() // LocalTableScan: still no job
-      assert(rows.length == 3)
+        weights = Seq(("w", "acc", 100L)), sizeHint = 3L, slots = Seq("start", "acc"))
+      // the RESULT plan still reads the local relation only, so downstream
+      // flat transforms keep evaluating on the driver
+      assert(LocalPlan.onDriver(out))
+      assert(out.queryExecution.analyzed.collectFirst {
+        case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
+      }.isDefined)
+      val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters
+        .createToScalaConverter(out.schema)
+      def onDriver(slots: Option[String => Long]) = {
+        val env = new LocalPlan.Env(Map.empty, slots)
+        LocalPlan.eval(out.queryExecution.analyzed, env, Long.MaxValue).get
+          .map(r => conv(r).asInstanceOf[org.apache.spark.sql.Row])
+          .map(r => (r.getAs[Long]("k"), r.getAs[Long]("row"), r.getAs[Long]("acc")))
+      }
+      // same ids/weights the distributed path assigns, in k order
+      val expected = Seq((10L, 7L, 100L), (20L, 8L, 105L), (30L, 9L, 108L))
+      assert(LocalPlan.rows(out).get._2.size == 3)
+      assert(onDriver(None) == expected)
+      // the starts are named slots: rebinding them renumbers the same plan
+      assert(onDriver(Some(Map("start" -> 70L, "acc" -> 1000L))) ==
+        Seq((10L, 70L, 1000L), (20L, 71L, 1005L), (30L, 72L, 1008L)))
       // listener delivery is async: wait until the count is stable
       var prev = -1; var stable = 0
       while (stable < 3) {
@@ -120,10 +144,9 @@ class RowsSpec extends SparkSpec {
         if (jobs == prev) stable += 1 else { prev = jobs; stable = 0 }
       }
       assert(jobs == 0, s"driver numbering must launch no Spark job, saw $jobs")
-      // same ids/weights the distributed path assigns, in k order
-      assert(rows.map(r => (r.getAs[Long]("k"), r.getAs[Long]("row"),
-        r.getAs[Long]("acc"))).toSeq ==
-        Seq((10L, 7L, 100L), (20L, 8L, 105L), (30L, 9L, 108L)))
+      // and Spark's own execution of the window agrees
+      assert(out.orderBy("k").collect().map(r =>
+        (r.getAs[Long]("k"), r.getAs[Long]("row"), r.getAs[Long]("acc"))).toSeq == expected)
     } finally spark.sparkContext.removeSparkListener(l)
   }
 

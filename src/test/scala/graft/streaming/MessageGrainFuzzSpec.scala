@@ -587,6 +587,89 @@ class MessageGrainFuzzSpec extends SparkSpec {
     }
   }
 
+  test("kept module plans ≡ a fresh build on every trigger: eight modules, cursors near 2^40, moving cue anchors, the ev44 clamp") {
+    import graft.operators.{LocalPlan, Rows}
+    import graft.operators.WriterModules.{Cursor, Ev44, ModuleConfig}
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.functions.{coalesce, lit, sum}
+    val cues = Map("f144" -> """, "cue_interval": 3""", "ad00" -> """, "cue_interval": 2""",
+      "ev44" -> """, "cue_interval": 3""")
+    val big = 1L << 40
+    val savedMax = Ev44.MaxCueCandidates
+    for (h <- harnesses; start <- Seq(0L, big - 2); clamp <- Seq(false, true)
+        if !clamp || h.module == "ev44") {
+      val module = graft.operators.WriterModules.registry(h.module)
+      val cfg = ModuleConfig(NexusPlan.parse(
+        template(h.module, h.extra + cues.getOrElse(h.module, ""))).streams.head.config)
+      val name = s"${h.module} start=$start clamp=$clamp"
+      // the clamp raises ev44's interval with each trigger's event count
+      if (clamp) Ev44.MaxCueCandidates = 2
+      try {
+        val rnd = new scala.util.Random(h.module.hashCode ^ start.toInt)
+        var off = 0L
+        val triggers = (0 until 6).map { _ =>
+          val n = 1 + rnd.nextInt(5)
+          val ms = (off until off + n).map(o => M(o, StartMs + o * 10))
+          off += n
+          ms
+        }
+        var cur = Cursor(rowsWritten = Map("data" -> start, "cue" -> (start + 1),
+          "events" -> start, "index" -> (start + 3)), eventsWritten = start + 5, lastCue = start)
+        val first = cur
+        var kept: KeptPlans = null
+        var stale = 0
+        val fired = scala.collection.mutable.Set.empty[Int]
+        val intervals = scala.collection.mutable.Set.empty[Long]
+        triggers.zipWithIndex.foreach { case (ms, i) =>
+          val df = h.frame(ms)
+          val rows = LocalPlan.rows(df).get._2
+          val elems = module.elementCountCol.fold(-1L)(c =>
+            df.agg(coalesce(sum(c.cast("long")), lit(0L))).head.getLong(0))
+          val c = cur.copy(sizeHint = ms.size.toLong, elemHint = elems)
+          if (kept == null) kept = new KeptPlans(spark, module, cfg, df.schema)
+          def external(ts: Map[String, (org.apache.spark.sql.types.StructType,
+              Seq[org.apache.spark.sql.catalyst.InternalRow])]) = ts.map { case (t, (sc, rs)) =>
+            val conv = CatalystTypeConverters.createToScalaConverter(sc)
+            t -> rs.map(r => conv(r).asInstanceOf[org.apache.spark.sql.Row])
+              .sortBy(_.getAs[Long]("row")).map(_.toString)
+          }
+          val got = external(kept.eval(rows, c, Rows.SmallRenumberRows)
+            .getOrElse(fail(s"$name trigger $i: the kept plans must evaluate on the driver"))._1)
+          // the walk's hooks: a stale anchor or interval in the candidate
+          // plan leaves the cues exact (the walk proves every link) but
+          // changes the candidates and the misses
+          def walkHooks = (Ev44.lastCueInterval, Ev44.lastCueCandidates, Ev44.lastCueFallbacks)
+          val keptWalk = walkHooks
+          val fresh = module.tables(df, cfg, c).map { case (t, f) =>
+            t -> f.orderBy("row").collect().map(_.toString).toSeq
+          }
+          assert(got == fresh, s"$name trigger $i")
+          if (h.module == "ev44") {
+            assert(keptWalk == walkHooks, s"$name trigger $i: (interval, candidates, misses)")
+            intervals += keptWalk._1
+          }
+          // a plan evaluated under the first trigger's slot values (its
+          // input rows and hints current) must not pass for the fresh build
+          val frozen = external(kept.eval(rows,
+            first.copy(sizeHint = c.sizeHint, elemHint = c.elemHint), Rows.SmallRenumberRows).get._1)
+          if (i > 0 && frozen != fresh) stale += 1
+          // advance the cursor as the streaming job does after its appends
+          val written = kept.eval(rows, c, Rows.SmallRenumberRows).get._1
+          written.get("cue").filter(_._2.nonEmpty).foreach { case (_, rs) =>
+            fired += i
+            cur = cur.copy(lastCue = module.nextLastCue(rs.map(_.getLong(1)).max))
+          }
+          cur = cur.copy(
+            rowsWritten = cur.rowsWritten ++ written.map { case (t, (_, rs)) => t -> (cur.next(t) + rs.size) },
+            eventsWritten = cur.eventsWritten + (if (h.module == "ev44") elems else 0L))
+        }
+        assert(stale == triggers.size - 1, s"$name: a stale slot went unnoticed")
+        if (cues.contains(h.module)) assert(fired.size >= 2, s"$name: cues fired on $fired")
+        if (clamp) assert(intervals.size >= 2, s"$name: the clamp never moved: $intervals")
+      } finally Ev44.MaxCueCandidates = savedMax
+    }
+  }
+
   /** Hand-made timelines at the kernel's edges, each of three triggers
     * (the first arms the driver kernel for the next two).
     */

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.{col, lit}
 
 import graft.SparkSpec
 import graft.plans.NexusPlan
@@ -545,15 +546,15 @@ class StreamingJobSpec extends SparkSpec {
     assert(spark.read.parquet(s"$evOut/data/entry/det/cue").count() == 7L)
   }
 
-  test("a steady tiny trigger of each of the eight modules runs one Spark job and appends on the driver") {
+  /** One input per module: (module, config extra, messages at offsets →
+    * the module's input frame, a local relation), every message in the
+    * window of a job started at 0.
+    */
+  private lazy val eightModules: Seq[(String, String, Seq[Long] => DataFrame)] = {
     import graft.sources.Fixtures._
-    // one stream per module, each fed a distributed frame, so the driver
-    // kernel's collect is the trigger's one job: every module transform
-    // (da00's per-message pivot and the array tables of ad00/da00
-    // included) and every append then run on the driver
     val vars = """, "variables": [ {"name": "a", "data_type": "float64"},
                  |                 {"name": "b", "data_type": "float64"} ]""".stripMargin
-    val modules: Seq[(String, String, Seq[Long] => DataFrame)] = Seq(
+    Seq(
       ("f144", "", os => os.map(o => F144Msg("tp", "m", o, 1000 + o, (1000 + o) * 1000000L,
         o.toDouble)).toDF()),
       ("ep01", "", os => os.map(o => Ep01Msg("tp", "m", o, 1000 + o, (1000 + o) * 1000000L,
@@ -571,6 +572,14 @@ class StreamingJobSpec extends SparkSpec {
         (1000 + o) * 1000000L, 1.0, None, Seq(o + 0.1, o + 0.2))).toDF()),
       ("tdct", "", os => os.map(o => TdctMsg("tp", "m", o, 1000 + o, (1000 + o) * 1000000L,
         Seq((1000 + o) * 1000000L + 1))).toDF()))
+  }
+
+  test("a steady tiny trigger of each of the eight modules runs one Spark job and appends on the driver") {
+    // one stream per module, each fed a distributed frame, so the driver
+    // kernel's collect is the trigger's one job: every module transform
+    // (da00's per-message pivot and the array tables of ad00/da00
+    // included) and every append then run on the driver
+    val modules = eightModules
     for ((module, extra, frame) <- modules) {
       val plan = NexusPlan.parse(
         s"""{ "children": [ { "name": "g", "type": "group", "children": [
@@ -588,6 +597,145 @@ class StreamingJobSpec extends SparkSpec {
       assert(job.counter("g", "write_errors") == 0L, s"$module: write errors")
       job.finish()
     }
+  }
+
+  /** Every table of stream `g` under `out`, rows in row order (the
+    * close-time finals have one row).
+    */
+  private def tablesOf(out: String): Map[String, Seq[String]] = {
+    val dir = new java.io.File(s"$out/data/g")
+    dir.listFiles().filter(_.isDirectory).map(_.getName).sorted.map { t =>
+      val df = spark.read.parquet(s"$out/data/g/$t")
+      t -> (if (df.columns.contains("row")) df.orderBy("row") else df).collect().map(_.toString).toSeq
+    }.toMap
+  }
+
+  private def onePlan(module: String, config: String) = NexusPlan.parse(
+    s"""{ "children": [ { "name": "g", "type": "group", "children": [
+       |  { "module": "$module", "config": { "source": "m", "topic": "tp",
+       |    "enable_epics_con_info": false, "enable_alarm_info": false$config } } ] } ] }""".stripMargin)
+
+  test("module plans are built once per stream: six steady triggers of each of the eight modules equal the keyed pass") {
+    // cue grids that fire on consecutive triggers, so the kept plans' cue
+    // anchors move between evaluations
+    val cues = Map("f144" -> """, "cue_interval": 2""", "ad00" -> """, "cue_interval": 2""",
+      "ev44" -> """, "cue_interval": 3""")
+    for ((module, extra, frame) <- eightModules) {
+      val plan = onePlan(module, extra + cues.getOrElse(module, ""))
+      // trigger 0 arms the driver kernel, 1-6 are steady, 7 carries one
+      // more column (a new input schema) and 8 the usual schema again
+      val triggers = (0 until 9).map(t => (t * 3L until t * 3L + 1 + t % 3).toSeq)
+      def input(t: Int) = {
+        val df = distributed(frame(triggers(t)))
+        if (t == 7) df.select(lit("drift").as("note") +: df.columns.toSeq.map(col): _*) else df
+      }
+      def run(maxRows: String): (Map[String, Seq[String]], Seq[Option[(Int, Int)]], Seq[Int]) = {
+        val out = Files.createTempDirectory(s"graft-kept-$module").toString
+        spark.conf.set("spark.graft.stream.localAppend.maxRows", maxRows)
+        try {
+          val job = new StreamingJob(spark, plan, out, 0, 1L << 40)
+          val (use, jobs) = triggers.indices.map { t =>
+            val n = if (t >= 1 && t <= 6) sparkWork(job.processBatch(module, input(t)))._1
+                    else { job.processBatch(module, input(t)); -1 }
+            (job.planUse.get("g"), n)
+          }.unzip
+          assert(job.counter("g", "write_errors") == 0L, s"$module maxRows=$maxRows")
+          job.finish()
+          (tablesOf(out), use, jobs.filter(_ >= 0))
+        } finally spark.conf.unset("spark.graft.stream.localAppend.maxRows")
+      }
+      val (driver, use, jobs) = run("128")
+      // (builds, evaluated triggers) after each trigger: one build serves
+      // triggers 1-6; the new schema builds again, and so does the old one
+      assert(use == Seq(None) ++ (1 to 6).map(i => Some((1, i))) ++ Seq(Some((2, 7)), Some((3, 8))),
+        s"$module: plan use per trigger")
+      assert(jobs == Seq.fill(6)(1), s"$module: each steady trigger is the kernel's one job")
+      val (keyed, keyedUse, _) = run("0")
+      assert(keyedUse.forall(_.isEmpty), s"$module: the keyed pass keeps no plans")
+      assert(driver == keyed, s"$module: kept plans and the keyed pass wrote different tables")
+      cues.get(module).foreach { _ =>
+        assert(driver("cue").size >= 6, s"$module: the cue grid must fire on several triggers")
+      }
+    }
+    // plans are kept per stream: one source under two paths with two
+    // configs builds each stream's plans once
+    val two = NexusPlan.parse(
+      """{ "children": [ { "name": "g", "type": "group", "children": [
+        |  { "name": "a", "type": "group", "children": [ { "module": "f144", "config": {
+        |    "source": "m", "topic": "tp", "cue_interval": 2,
+        |    "enable_epics_con_info": false, "enable_alarm_info": false } } ] },
+        |  { "name": "b", "type": "group", "children": [ { "module": "f144", "config": {
+        |    "source": "m", "topic": "tp", "cue_interval": 3,
+        |    "enable_epics_con_info": false, "enable_alarm_info": false } } ] } ] } ] }""".stripMargin)
+    val job = new StreamingJob(spark, two,
+      Files.createTempDirectory("graft-kept-two").toString, 0, 1L << 40)
+    val f144 = eightModules.head._3
+    (0 until 6).foreach(t => job.processBatch("f144", f144((t * 2L until t * 2L + 2).toSeq)))
+    assert(job.planUse == Map("g/a" -> ((1, 5)), "g/b" -> ((1, 5))))
+    job.finish()
+  }
+
+  test("a buffered message under a drifted schema rebuilds the kept plans; both kernel forms write it") {
+    for ((module, extra, frame) <- eightModules if Set("f144", "da00")(module)) {
+      // the job starts at 1005 ms: offsets below 5 are pre-start. Trigger
+      // 1 carries only a pre-start straggler, with one more column, so the
+      // buffered message keeps that schema; trigger 2 emits it with rows
+      // of the usual schema
+      def noted(df: DataFrame) = df.select(lit("x").as("note") +: df.columns.toSeq.map(col): _*)
+      val triggers = Seq(frame(Seq(5L, 6L)), noted(frame(Seq(2L))), frame(Seq(7L, 8L)),
+        frame(Seq(9L)))
+      def run(maxRows: String) = {
+        val out = Files.createTempDirectory(s"graft-drift-$module").toString
+        spark.conf.set("spark.graft.stream.localAppend.maxRows", maxRows)
+        try {
+          val job = new StreamingJob(spark, onePlan(module, extra), out, 1005, 1L << 40)
+          triggers.foreach(job.processBatch(module, _))
+          val use = job.planUse.get("g")
+          assert(job.counter("g", "write_errors") == 0L, s"$module maxRows=$maxRows")
+          job.finish()
+          (tablesOf(out), use)
+        } finally spark.conf.unset("spark.graft.stream.localAppend.maxRows")
+      }
+      val (driver, use) = run("128")
+      // the buffered message's trigger evaluates plans of the merged
+      // schema; the next trigger's schema builds again
+      assert(use.contains((2, 2)), s"$module: plan use $use")
+      val (keyed, _) = run("0")
+      assert(driver == keyed, s"$module: the kernel forms wrote different tables")
+      assert(driver("data").size == 6, s"$module: ${driver("data")}")
+    }
+  }
+
+  test("ev44: a superset miss on a driver trigger walks on the driver: no Spark job, the keyed pass's cues") {
+    import graft.operators.WriterModules.Ev44
+    // interval 10 from 1 event written: eas 16, 24, 27, 34, 37, 44, 47 —
+    // the greedy chain fires at 16, then at 27, 37 and 47, which are not
+    // grid candidates: three superset misses
+    def msgs(from: Long, sizes: Seq[Int]) = sizes.zipWithIndex.map { case (n, i) =>
+      val o = from + i
+      Ev44Msg("tp", "m", o, 1000 + o, (1000 + o) * 1000000L, Seq((1000 + o) * 1000000L),
+        Seq(0), (1 to n).toSeq, (1 to n).toSeq)
+    }.toDF()
+    def run(maxRows: String): (Seq[Long], Int, Int) = {
+      val out = Files.createTempDirectory("graft-miss").toString
+      spark.conf.set("spark.graft.stream.localAppend.maxRows", maxRows)
+      try {
+        val job = new StreamingJob(spark, onePlan("ev44", """, "cue_interval": 10"""), out, 0,
+          1L << 40)
+        job.processBatch("ev44", msgs(0, Seq(1))) // arms the gate
+        val jobs = sparkWork(job.processBatch("ev44", msgs(1, Seq(15, 8, 3, 7, 3, 7, 3))))._1
+        val misses = Ev44.lastCueFallbacks
+        job.finish()
+        (spark.read.parquet(s"$out/data/g/cue").orderBy("row").collect()
+          .map(_.getAs[Long]("cue_index")).toSeq, misses, jobs)
+      } finally spark.conf.unset("spark.graft.stream.localAppend.maxRows")
+    }
+    val (cues, misses, jobs) = run("128")
+    assert(cues == Seq(15L, 26L, 36L, 46L))
+    assert(misses == 3, s"the chain must miss three times, saw $misses")
+    assert(jobs == 0, s"a local batch's driver trigger must run no Spark job, saw $jobs")
+    val (keyedCues, keyedMisses, keyedJobs) = run("0")
+    assert(keyedCues == cues && keyedMisses == 3 && keyedJobs > 0)
   }
 
   test("ev44: a message with events and no reference time writes under both kernel forms") {
