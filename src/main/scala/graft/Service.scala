@@ -54,11 +54,13 @@ object Service {
     *    files under the checkpoint dir that Spark NEVER deletes by
     *    default — a long-running service leaks a checkpoint's worth of
     *    cluster disk per job without this.
-    *  - `spark.sql.maxPlanStringLength=8m`: composed pipelines measured
-    *    37 minutes of driver CPU inside `TreeNode.generateTreeString`
-    *    on an uncut six-stage plan (round 11, jstack-caught); the
-    *    TrainingDataPipeline stage cuts fix the cause, this bounds the
-    *    blast radius if a caller composes around them. Static SQL conf —
+    *  - `spark.sql.maxPlanStringLength=8m`: every action renders its
+    *    plan for the listener bus, and a chain of operators composed
+    *    without [[graft.operators.Reuse.lineageCut]]s between them
+    *    multiplies the plan's subtrees (round 11, jstack-caught: 37
+    *    minutes of driver CPU inside `TreeNode.generateTreeString` on an
+    *    uncut six-operator chain); cuts fix the cause, this bounds the
+    *    blast radius if a caller composes without them. Static SQL conf —
     *    must ride the context-creating builder, which is why it lives
     *    here and not in a post-hoc `spark.conf.set`.
     *  - `spark.sql.codegen.cache.maxEntries=5000`: the per-trigger

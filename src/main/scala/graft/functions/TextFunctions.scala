@@ -92,27 +92,6 @@ object TextFunctions {
   def fingerprint(text: Column): Column =
     md5(trim(regexp_replace(lower(text), "\\s+", " ")))
 
-  /** JVM-side twin of [[fingerprint]] for keyed-state operators that
-    * group on the fingerprint OUTSIDE a Column expression
-    * ([[graft.streaming.TtlDedup]]). Must stay canonicalization-identical
-    * to the column form, operation by operation: Spark's `trim` strips
-    * ONLY 0x20 spaces — `String.trim` (which strips every char ≤ U+0020,
-    * e.g. control chars that `\\s+` leaves alone) would silently disagree
-    * on crawled text. Equality is spec-pinned on corpus data plus
-    * control-char/unicode adversarial inputs.
-    */
-  def fingerprintOf(text: String): String = {
-    val squashed = text.toLowerCase(java.util.Locale.ROOT).replaceAll("\\s+", " ")
-    var from = 0
-    var to   = squashed.length
-    while (from < to && squashed.charAt(from) == ' ') from += 1
-    while (to > from && squashed.charAt(to - 1) == ' ') to -= 1
-    val canon = squashed.substring(from, to)
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(canon.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-  }
-
   /** Unsigned-64 comparison via the sign-flip trick — the uint64 columns
     * (ev44 reference_time, tdct timestamps) live in signed longs with bit
     * patterns preserved (SURVEY §7.4 #5); ordering them as unsigned means

@@ -176,18 +176,4 @@ object AsofJoin {
     stitched.filter(col("__side") === 1)
       .select(leftCols.map(col) ++ valueCols.map(col): _*)
   }
-
-  /** As-of join keyed by time only (no equality key): same pattern with a
-    * single global ordering — use when the right side is one stream.
-    */
-  def asofJoinGlobal(
-      left: DataFrame,
-      right: DataFrame,
-      tsCol: String,
-      valueCols: Seq[String]
-  ): DataFrame = {
-    val keyed = lit(0)
-    asofJoin(left.withColumn("__k", keyed), right.withColumn("__k", keyed),
-      Seq("__k"), tsCol, valueCols).drop("__k")
-  }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 
 /** Bucketed-layout helpers for shuffle-free co-located joins — the 100 TB
   * answer to repeated fact⋈fact joins on the same key (e.g. lineitem ⋈
@@ -43,15 +43,6 @@ object Bucketing {
       .format("parquet")
       .saveAsTable(table)
   }
-
-  /** Join two same-bucketed tables on their bucket key — zero shuffles. */
-  def colocatedJoin(
-      spark: SparkSession,
-      leftTable: String,
-      rightTable: String,
-      key: String
-  ): DataFrame =
-    spark.table(leftTable).join(spark.table(rightTable), key)
 
   /** True when the physical plan contains no shuffle exchange. */
   def isShuffleFree(df: DataFrame): Boolean =

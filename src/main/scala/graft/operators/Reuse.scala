@@ -35,13 +35,11 @@ import org.apache.spark.storage.StorageLevel
   *
   * Some sites need severed lineage SEMANTICALLY, not just for speed:
   * iterative algorithms (connected components, BPE merge rounds) must
-  * truncate a growing lineage or round N re-evaluates rounds 0..N-1;
-  * read-your-own-writes barriers (incremental dedup's index append) must
-  * pin the result because a recompute after the write would observe the
-  * write; and composed pipelines (TrainingDataPipeline) must cut at stage
-  * boundaries or diamond references multiply plan subtrees
-  * combinatorially (measured: 37 min of driver CPU in
-  * `TreeNode.generateTreeString` on the uncut six-stage plan).
+  * truncate a growing lineage or round N re-evaluates rounds 0..N-1.
+  * Operators composed one after another must likewise cut between them,
+  * or each one's diamond references multiply plan subtrees
+  * combinatorially (measured in round 11: 37 min of driver CPU in
+  * `TreeNode.generateTreeString` on an uncut six-operator chain).
   */
 object Reuse {
 

@@ -1,17 +1,17 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Skew mitigation for joins whose key distribution has hot keys (one
-  * detector source producing 100× the events of the rest): salt the skewed
-  * side into `factor` sub-keys and replicate the other side across all
-  * salts, turning one hot partition into `factor` even ones.
+/** Skew mitigation for aggregations whose key distribution has hot keys
+  * (one detector source producing 100× the events of the rest): salt the
+  * hot key into `factor` sub-keys, aggregate per (key, salt), then merge
+  * per key, turning one hot partition into `factor` even ones
+  * (`events_type_counts_salted`).
   *
   * AQE's skew-join handles this at runtime for sort-merge joins
   * (`spark.sql.adaptive.skewJoin.enabled`, on by default in our sessions);
-  * explicit salting remains the tool for broadcast-ineligible hot-key
-  * aggregations and for engines-level determinism.
+  * explicit salting remains the tool for hot-key aggregations.
   */
 object Salting {
 
@@ -20,36 +20,4 @@ object Salting {
     */
   def salt(uniqueCol: Column, factor: Int): Column =
     pmod(xxhash64(uniqueCol), lit(factor)).cast("int")
-
-  /** Join `skewed ⋈ other` on `key` with the skewed side salted and the
-    * other side replicated across salts.
-    */
-  def saltedJoin(
-      skewed: DataFrame,
-      other: DataFrame,
-      key: String,
-      uniqueCol: String,
-      factor: Int
-  ): DataFrame = {
-    val salted = skewed.withColumn("__salt", salt(col(uniqueCol), factor))
-    val replicated = other
-      .withColumn("__salt", explode(sequence(lit(0), lit(factor - 1))))
-    salted.join(replicated, Seq(key, "__salt")).drop("__salt")
-  }
-
-  /** Two-phase skew-safe aggregation: partial aggregate on (key, salt),
-    * then final merge on key — bounds any single task's group size at
-    * roughly 1/factor of the hot key.
-    */
-  def saltedCount(
-      df: DataFrame,
-      key: String,
-      uniqueCol: String,
-      factor: Int
-  ): DataFrame =
-    df.withColumn("__salt", salt(col(uniqueCol), factor))
-      .groupBy(col(key), col("__salt"))
-      .agg(count(lit(1)).as("__partial"))
-      .groupBy(col(key))
-      .agg(sum("__partial").cast("long").as("n"))
 }

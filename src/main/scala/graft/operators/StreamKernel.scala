@@ -162,22 +162,6 @@ object StreamKernel {
       .groupBy(col("env.error").as("error"))
       .agg(count(lit(1)).as("n"))
 
-  /** A1 — running min/max/mean/count attached as observed metrics: the
-    * aggregates ride along with the real write (no second pass over the
-    * data) and surface per batch/epoch through QueryExecution /
-    * StreamingQueryProgress — the Spark-native home for the reference's
-    * status-JSON aggregates (`src/MetaData/Tracker.cpp:25-31`,
-    * `src/Master.cpp:38-39`).
-    */
-  def observedStats(df: DataFrame, name: String, valueCol: String): DataFrame =
-    df.observe(
-      name,
-      min(col(valueCol)).as("minimum_value"),
-      max(col(valueCol)).as("maximum_value"),
-      avg(col(valueCol)).as("average_value"),
-      count(lit(1)).as("num_values")
-    )
-
   /** §2.7 — cue (sparse time→row) index: every `interval` rows per stream
     * emit `(row index, timestamp)` so a reader can binary-search time → row.
     * Reference: `src/WriterModule/f144/f144_Writer.cpp:259-263` et al.

@@ -2343,9 +2343,7 @@ object DocQueries {
 
   /** The repetition/quality metric expressions over bound `text`, `tk`
     * (token array) and `rs` ([[graft.functions.RepetitionStats]] struct)
-    * columns — shared between the batch metric frame and the streaming
-    * intake gate, which evaluates them inline (no aggregation, so the
-    * whole family is streaming-safe).
+    * columns — pure per-row expressions (no aggregation).
     */
   def repetitionMetrics: Seq[(String, Column)] = {
     def rs(f: String): Column = col("rs").getField(f)
@@ -2371,18 +2369,6 @@ object DocQueries {
       "alpha_word_frac" ->
         round(size(filter(col("tk"), w => w.rlike("[A-Za-z]")))
           .cast("double") / size(col("tk")), 6))
-  }
-
-  /** The Gopher keep predicate over [[repetitionMetrics]], inlined (for
-    * contexts without the metric frame — e.g. a streaming filter).
-    */
-  def repetitionKeep: Column = {
-    val m = repetitionMetrics.toMap
-    m("dup_line_frac") <= 0.30 && m("dup_line_char_frac") <= 0.20 &&
-      m("top2gram_char_frac") <= 0.20 && m("top3gram_char_frac") <= 0.18 &&
-      m("symbol_word_ratio") <= 0.10 &&
-      m("mean_word_len") >= 3.0 && m("mean_word_len") <= 10.0 &&
-      m("alpha_word_frac") >= 0.80
   }
 
   /** Substring-level exact dedup (the public shingle-span approach):

@@ -95,23 +95,6 @@ final class NexusSink(outDir: String) {
     stack.mkString("/")
   }
 
-  /** S6 — template fast-path: initialize from a pre-built structure
-    * instead of walking the plan (the reference copies a ~700 MB HDF
-    * skeleton to skip 10–15 min of structure creation,
-    * `src/HDFFile.cpp:59-74`; `documentation/commands.md:40-43`). Under
-    * the parquet mirror structure cost is just the manifest, but the seam
-    * is preserved for template reuse.
-    */
-  def createFromTemplate(templateDir: String): Unit = {
-    require(!frozen, "structure already frozen")
-    Files.createDirectories(Paths.get(outDir))
-    Files.copy(
-      Paths.get(templateDir).resolve("manifest.json"),
-      Paths.get(outDir).resolve("manifest.json"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    frozen = true
-  }
-
   private def attrsJson(as: Seq[NexusPlan.AttributeSpec]): JValue =
     JArray(as.map(a =>
       JObject(

@@ -1,107 +1,14 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Event-time windowed aggregation over decoded telemetry streams —
-  * capabilities beyond the reference's single job-level window (SURVEY
-  * §2.9: the reference has no tumbling/sliding windows; Spark gives them
-  * for free, and a training-data ingest pipeline uses them for rate/stats
-  * monitoring). Watermark ≙ the reference's straggler leeway
+/** Event-time operators over decoded telemetry streams — capabilities
+  * beyond the reference's single job-level window (SURVEY §2.9).
+  * Watermark ≙ the reference's straggler leeway
   * (`src/StreamerOptions.h:24-25`).
   */
 object StreamAggregates {
-
-  /** Tumbling-window per-source stats: the f144 running min/max/mean
-    * (`f144_Writer.cpp:264-276`) generalized to bounded event-time windows
-    * that can emit incrementally under a watermark.
-    *
-    * `tsCol` is i64 ns (the engine's time model); works on both batch and
-    * streaming frames — on streaming, pair with
-    * `writeStream.outputMode("append")` so only finalized windows emit.
-    */
-  def windowedStats(
-      decoded: DataFrame,
-      sourceCols: Seq[String],
-      tsCol: String,
-      valueCol: String,
-      windowDuration: String,
-      watermarkDelay: String = "10 seconds"
-  ): DataFrame = {
-    val withTime = decoded
-      // integer ns→µs (`div`, not `/`): double division rounds at
-      // epoch-ns magnitudes (ulp 256 ns) and can assign a boundary event
-      // to the wrong window — same fix as intervalJoin below
-      .withColumn("event_time", timestamp_micros(expr(s"`$tsCol` div 1000")))
-    val marked =
-      if (decoded.isStreaming) withTime.withWatermark("event_time", watermarkDelay)
-      else withTime
-    marked
-      .groupBy(window(col("event_time"), windowDuration) +: sourceCols.map(col): _*)
-      .agg(
-        count(lit(1)).as("n"),
-        min(valueCol).as("minimum_value"),
-        max(valueCol).as("maximum_value"),
-        avg(valueCol).as("average_value"))
-      .select(
-        col("window.start").as("window_start") +:
-          col("window.end").as("window_end") +:
-          sourceCols.map(col) :+ col("n") :+ col("minimum_value") :+
-          col("maximum_value") :+ col("average_value"): _*)
-  }
-
-  /** Gap-based sessions via the native session_window — the streaming form
-    * of the batch sessionization query (dynamic-length windows that close
-    * `gapDuration` after the last event; watermark finalizes them).
-    */
-  def sessionStats(
-      decoded: DataFrame,
-      sourceCols: Seq[String],
-      tsCol: String,
-      gapDuration: String,
-      watermarkDelay: String = "10 seconds"
-  ): DataFrame = {
-    val withTime = decoded
-      // integer ns→µs (`div`, not `/`): double division rounds at
-      // epoch-ns magnitudes (ulp 256 ns) and can assign a boundary event
-      // to the wrong window — same fix as intervalJoin below
-      .withColumn("event_time", timestamp_micros(expr(s"`$tsCol` div 1000")))
-    val marked =
-      if (decoded.isStreaming) withTime.withWatermark("event_time", watermarkDelay)
-      else withTime
-    marked
-      .groupBy(session_window(col("event_time"), gapDuration) +: sourceCols.map(col): _*)
-      .agg(count(lit(1)).as("n_events"))
-      .select(
-        col("session_window.start").as("session_start") +:
-          col("session_window.end").as("session_end") +:
-          sourceCols.map(col) :+ col("n_events"): _*)
-  }
-
-  /** Streaming exact dedup by message id within a watermark horizon —
-    * state-bounded (entries expire with the watermark), the standard
-    * ingest-side answer to at-least-once sources double-delivering. The
-    * reference's F4 dedup is consecutive-only; id-dedup is the stronger
-    * form a training-data pipeline wants.
-    */
-  def dedupWithinWatermark(
-      decoded: DataFrame,
-      idCols: Seq[String],
-      tsCol: String,
-      watermarkDelay: String = "10 seconds"
-  ): DataFrame = {
-    val withTime = decoded
-      // integer ns→µs (`div`, not `/`): double division rounds at
-      // epoch-ns magnitudes (ulp 256 ns) and can assign a boundary event
-      // to the wrong window — same fix as intervalJoin below
-      .withColumn("event_time", timestamp_micros(expr(s"`$tsCol` div 1000")))
-    if (withTime.isStreaming)
-      withTime
-        .withWatermark("event_time", watermarkDelay)
-        .dropDuplicatesWithinWatermark(idCols)
-        .drop("event_time")
-    else withTime.dropDuplicates(idCols).drop("event_time")
-  }
 
   /** Stream-stream interval join: pair each left event with the right
     * events of the same key whose event time falls in
@@ -147,32 +54,5 @@ object StreamAggregates {
       keyEq &&
         col("r_time") >= col("l_time") - expr(s"INTERVAL $before") &&
         col("r_time") <= col("l_time") + expr(s"INTERVAL $after"))
-  }
-
-  /** Per-window message rate per topic/source — the Carbon throughput
-    * counters (`src/Stream/MessageWriter.cpp:38-56`) as a declarative
-    * aggregation.
-    */
-  def messageRates(
-      decoded: DataFrame,
-      sourceCols: Seq[String],
-      tsCol: String,
-      windowDuration: String,
-      watermarkDelay: String = "10 seconds"
-  ): DataFrame = {
-    // count-only: piggybacking on windowedStats evaluated three unused
-    // min/max/avg aggregates over the timestamps every trigger
-    val withTime = decoded
-      .withColumn("event_time", timestamp_micros(expr(s"`$tsCol` div 1000")))
-    val marked =
-      if (decoded.isStreaming) withTime.withWatermark("event_time", watermarkDelay)
-      else withTime
-    marked
-      .groupBy(window(col("event_time"), windowDuration) +: sourceCols.map(col): _*)
-      .agg(count(lit(1)).as("n"))
-      .select(
-        col("window.start").as("window_start") +:
-          col("window.end").as("window_end") +:
-          sourceCols.map(col) :+ col("n"): _*)
   }
 }

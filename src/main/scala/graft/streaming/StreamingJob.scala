@@ -98,7 +98,6 @@ class StreamingJob(
   // threads, which stalls the streaming triggers — upstream Kafka
   // consumption halts exactly like the reference's paused consumers.
   @volatile private var paused = false
-  def isPaused: Boolean = paused
   def pause(): Unit     = { paused = true }
   def resume(): Unit    = synchronized { paused = false; notifyAll() }
 
@@ -164,12 +163,6 @@ class StreamingJob(
         case other            => st.rowsWritten.getOrElse(other, 0L)
       }
     }
-  }
-
-  /** All streams of this schema are done (used by stop monitors). */
-  def allFinished(schemaId: String): Boolean = synchronized {
-    val keys = plan.streams.filter(_.module == schemaId).map(streamKey)
-    keys.nonEmpty && keys.forall(k => states.get(k).exists(_.finished))
   }
 
   /** Every configured stream has seen its beyond-stop message — the

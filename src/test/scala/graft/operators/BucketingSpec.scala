@@ -22,7 +22,7 @@ class BucketingSpec extends SparkSpec {
       Bucketing.writeBucketed(
         Graft.orders(spark, dir).withColumnRenamed("o_orderkey", "okey"),
         "ord_b", "okey", 4)
-      val joined = Bucketing.colocatedJoin(spark, "li_b", "ord_b", "okey")
+      val joined = spark.table("li_b").join(spark.table("ord_b"), "okey")
       assert(Bucketing.isShuffleFree(joined),
         s"plan had shuffles:\n${joined.queryExecution.executedPlan}")
       val expected = Graft.lineitem(spark, dir)

@@ -5,34 +5,6 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 class SaltingSpec extends SparkSpec {
-  import spark.implicits._
-
-  // hot key: 90% of rows share key 1
-  private lazy val skewed = ((1 to 900).map(i => (1L, i.toLong)) ++
-    (1 to 100).map(i => (i.toLong % 7 + 2, 900L + i)))
-    .toDF("key", "offset")
-  private lazy val dim = (1L to 10L).map(k => (k, s"name$k")).toDF("key", "name")
-
-  test("salted join equals the plain join") {
-    val plain  = skewed.join(dim, "key")
-    val salted = Salting.saltedJoin(skewed, dim, "key", "offset", 8)
-    assert(salted.count() == plain.count())
-    val a = plain.select("key", "offset", "name").collect().map(_.toSeq).toSet
-    val b = salted.select("key", "offset", "name").collect().map(_.toSeq).toSet
-    assert(a == b)
-  }
-
-  test("salted count equals the plain count and splits the hot key") {
-    val out = Salting.saltedCount(skewed, "key", "offset", 8)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(out(1L) == 900L)
-    assert(out.values.sum == 1000L)
-    // the partial phase must actually split the hot key across salts
-    val partials = skewed
-      .withColumn("__salt", Salting.salt(col("offset"), 8))
-      .filter(col("key") === 1).groupBy("__salt").count().collect()
-    assert(partials.length > 1)
-  }
 
   test("approx_count_distinct stays within the configured error of exact") {
     val ev = graft.core.Graft.events(spark, "/root/testdata/sf0.01")
@@ -41,16 +13,5 @@ class SaltingSpec extends SparkSpec {
     val exact = ev.select(countDistinct(col("user_id"))).collect().head.getLong(0)
     assert(math.abs(approx - exact).toDouble / exact < 0.1,
       s"approx=$approx exact=$exact")
-  }
-
-  test("observed stats ride along a write and report f144 aggregates") {
-    val df = Seq(("s", 1L, 10.0), ("s", 2L, 15.0)).toDF("source", "offset", "value")
-    val observed = StreamKernel.observedStats(df, "f144_stats", "value")
-    observed.collect() // the action the metrics ride along with
-    val metrics = observed.queryExecution.observedMetrics("f144_stats")
-    assert(metrics.getAs[Double]("minimum_value") == 10.0)
-    assert(metrics.getAs[Double]("maximum_value") == 15.0)
-    assert(metrics.getAs[Double]("average_value") == 12.5)
-    assert(metrics.getAs[Long]("num_values") == 2L)
   }
 }

@@ -65,14 +65,4 @@ class ZOrderSpec extends SparkSpec {
     assert(zMaxY <= 31L)       // z-order: y is bounded inside each partition
     assert(zArea <= xArea * 1.5) // and the bounding boxes stay comparable
   }
-
-  test("writeAnalytic round-trips with the layout key dropped") {
-    val grid = (for { x <- 0 until 32; y <- 0 until 32 } yield (x.toLong, y.toLong))
-      .toDF("x", "y")
-    val out = java.nio.file.Files.createTempDirectory("zorder_out").toString
-    graft.pipelines.TrainingDataPipeline.writeAnalytic(grid, out, Seq("x", "y"), bits = 5, numFiles = 8)
-    val back = spark.read.parquet(out)
-    assert(back.columns.toSet == Set("x", "y")) // zval is layout-only
-    assert(back.count() == 32L * 32)
-  }
 }

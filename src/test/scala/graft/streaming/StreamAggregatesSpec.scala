@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.SparkSpec
@@ -11,82 +10,6 @@ class StreamAggregatesSpec extends SparkSpec {
 
   private def f144(offset: Long, tsMs: Long, v: Double) =
     F144Msg("tp", "speed", offset, tsMs, tsMs * 1000000L, v)
-
-  test("batch windowed stats reproduce the f144 aggregates per window") {
-    val df = Seq(
-      f144(0, 10100, 10.0), f144(1, 10110, 15.0), // window [10s,20s)
-      f144(2, 21000, 30.0)                        // window [20s,30s)
-    ).toDF()
-    val out = StreamAggregates
-      .windowedStats(df, Seq("source_name"), "ts", "value", "10 seconds")
-      .orderBy("window_start")
-      .collect()
-    assert(out.length == 2)
-    assert(out(0).getAs[Long]("n") == 2)
-    assert(out(0).getAs[Double]("minimum_value") == 10.0)
-    assert(out(0).getAs[Double]("maximum_value") == 15.0)
-    assert(out(0).getAs[Double]("average_value") == 12.5)
-    assert(out(1).getAs[Long]("n") == 1)
-  }
-
-  test("session windows merge events within the gap and split beyond it") {
-    val df = Seq(
-      f144(0, 10000, 1.0), f144(1, 12000, 1.0), f144(2, 13000, 1.0), // one session
-      f144(3, 30000, 1.0)                                            // new session
-    ).toDF()
-    val out = StreamAggregates
-      .sessionStats(df, Seq("source_name"), "ts", "5 seconds")
-      .orderBy("session_start")
-      .collect()
-    assert(out.length == 2)
-    assert(out(0).getAs[Long]("n_events") == 3)
-    assert(out(1).getAs[Long]("n_events") == 1)
-  }
-
-  test("id-dedup within watermark drops cross-batch redeliveries") {
-    val stream = MemoryStream[F144Msg](spark)
-    val deduped = StreamAggregates.dedupWithinWatermark(
-      stream.toDF(), Seq("offset"), "ts", "60 seconds")
-    val query = deduped.writeStream
-      .format("memory").queryName("dedup_ids").outputMode("append").start()
-    try {
-      stream.addData(f144(0, 10000, 1.0), f144(1, 10100, 2.0))
-      query.processAllAvailable()
-      // batch 2 redelivers offset 1 (at-least-once source) + a new message
-      stream.addData(f144(1, 10100, 2.0), f144(2, 10200, 3.0))
-      query.processAllAvailable()
-      val offs = spark.sql("SELECT offset FROM dedup_ids")
-        .collect().map(_.getLong(0)).sorted.toSeq
-      assert(offs == Seq(0L, 1L, 2L))
-    } finally query.stop()
-  }
-
-  test("streaming append mode emits only watermark-finalized windows") {
-    val stream = MemoryStream[F144Msg](spark)
-    val agg = StreamAggregates.windowedStats(
-      stream.toDF(), Seq("source_name"), "ts", "value",
-      "10 seconds", "5 seconds")
-    val query = agg.writeStream
-      .format("memory")
-      .queryName("win_stats")
-      .outputMode("append")
-      .start()
-    try {
-      stream.addData(f144(0, 10100, 10.0), f144(1, 10110, 15.0))
-      query.processAllAvailable()
-      // watermark hasn't passed 20s yet — nothing finalized
-      assert(spark.sql("SELECT * FROM win_stats").count() == 0)
-      // an event far ahead advances the watermark past the first window
-      stream.addData(f144(2, 60000, 1.0))
-      query.processAllAvailable()
-      stream.addData(f144(3, 61000, 1.0)) // trigger another batch so state flushes
-      query.processAllAvailable()
-      val rows = spark.sql("SELECT * FROM win_stats").collect()
-      assert(rows.length == 1)
-      assert(rows.head.getAs[Long]("n") == 2)
-      assert(rows.head.getAs[Double]("average_value") == 12.5)
-    } finally query.stop()
-  }
 
   test("stream-stream interval join pairs right events inside the key's window") {
     val lhs = MemoryStream[F144Msg](spark)
